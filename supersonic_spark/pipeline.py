@@ -355,6 +355,29 @@ def _prefetched(batches: Iterator[pa.RecordBatch],
         stop.set()
 
 
+def _block_pid(path: str) -> int:
+    """Partition id of a block file (blocks/part-NNNNN.ssb)."""
+    return int(os.path.basename(path)[5:10])
+
+
+def _marker_name(pid: int, fp: str) -> str:
+    return f"part-{pid:05d}.{fp}.json"
+
+
+def _fragment_name(pid: int, fp: str) -> str:
+    return f"part-{pid:05d}.{fp}.parquet"
+
+
+def _write_fragment(path: str, rows: list[dict]) -> None:
+    """One partition's manifest rows as one parquet file, installed by
+    rename from a hidden temp name (Spark's reader skips dot-files)."""
+    import pyarrow.parquet as pq
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(pa.Table.from_batches([_manifest_batch(rows)]), tmp)
+    os.replace(tmp, path)
+
+
 def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                              out_dir: str, cfg_hash: str,
                              overrides: dict[str, str], chunk_rows: int,
@@ -362,24 +385,36 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                              sort_keys: tuple[str, ...] | None,
                              bloom_cols: tuple[str, ...] = (),
                              bloom_bits: int = 16384,
-                             bloom_hashes: int = 5) -> list[dict]:
-    """Encode one partition's batch stream into one block file + resume
-    marker; returns the manifest rows. Shared by the shuffle path
-    (_encoder: pid = Spark partition) and the pre-bucketed path
-    (encode_table_prebucketed: pid = bucket-file index)."""
+                             bloom_hashes: int = 5) -> bool:
+    """Encode one partition's batch stream into one block file, its
+    manifest fragment (manifest/part-NNNNN.<cfg_hash>.parquet) and its
+    resume marker, in that order: the marker commits the other two.
+    Returns False when the marker already existed (resumed, nothing
+    encoded). Shared by the shuffle path (_encoder: pid = Spark
+    partition) and the pre-bucketed path (encode_table_prebucketed:
+    pid = bucket-file index)."""
     ckpt_dir = os.path.join(out_dir, "checkpoints")
     blk_dir = os.path.join(out_dir, "blocks")
-    marker = os.path.join(ckpt_dir, f"part-{pid:05d}.{cfg_hash}.json")
+    man_dir = os.path.join(out_dir, "manifest")
+    marker = os.path.join(ckpt_dir, _marker_name(pid, cfg_hash))
+    fragment = os.path.join(man_dir, _fragment_name(pid, cfg_hash))
 
     if os.path.exists(marker):
-        with open(marker) as f:
-            rows = json.load(f)
-        for r in rows:
-            r["resumed"] = True
-        return rows
+        if not os.path.exists(fragment):
+            # the marker predates manifest fragments (an older encoder
+            # wrote the manifest as one Spark job): rebuild it from the
+            # rows the marker carries
+            with open(marker) as f:
+                rows = json.load(f)
+            for r in rows:
+                r["resumed"] = True
+            os.makedirs(man_dir, exist_ok=True)
+            _write_fragment(fragment, rows)
+        return False
 
     os.makedirs(ckpt_dir, exist_ok=True)
     os.makedirs(blk_dir, exist_ok=True)
+    os.makedirs(man_dir, exist_ok=True)
     blk_path = os.path.join(blk_dir, f"part-{pid:05d}.ssb")
     tmp_path = blk_path + f".tmp.{cfg_hash}"
 
@@ -476,11 +511,25 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
             os.remove(blk_path)
     else:
         os.replace(tmp_path, blk_path)
+    _write_fragment(fragment, manifest_rows)
     mtmp = marker + ".tmp"
     with open(mtmp, "w") as f:
         json.dump(manifest_rows, f)
     os.replace(mtmp, marker)
-    return manifest_rows
+    return True
+
+
+# what an encode task reports per partition: the name of its manifest
+# fragment and whether this call encoded it (False: resumed)
+_REPORT_SCHEMA = "partition_id int, fragment string, encoded boolean"
+
+
+def _report(done: list[tuple[int, str, bool]]) -> pa.RecordBatch:
+    pids, frags, flags = zip(*done) if done else ((), (), ())
+    return pa.RecordBatch.from_pydict({
+        "partition_id": pa.array(pids, pa.int32()),
+        "fragment": pa.array(frags, pa.string()),
+        "encoded": pa.array(flags, pa.bool_())})
 
 
 def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
@@ -497,9 +546,10 @@ def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
         batches = _prefetched(batches, prefetch)
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
-        yield _manifest_batch(_encode_partition_stream(
+        encoded = _encode_partition_stream(
             pid, batches, out_dir, cfg_hash, overrides, chunk_rows,
-            entropy, sort_keys, bloom_cols, bloom_bits, bloom_hashes))
+            entropy, sort_keys, bloom_cols, bloom_bits, bloom_hashes)
+        yield _report([(pid, _fragment_name(pid, cfg_hash), encoded)])
 
     return run
 
@@ -617,16 +667,31 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
                      fingerprint: str,
                      kernel_sort_keys: tuple[str, ...] | None = None,
                      extra_meta: dict | None = None) -> DataFrame:
-    """Shared encode tail: write meta.json, run the chunking/codec kernel
+    """Shuffle-path encode: write meta.json, run the chunking/codec kernel
     over an already-arranged DataFrame (caller controls partitioning and
-    within-partition order), persist + return the manifest."""
-    os.makedirs(out_dir, exist_ok=True)
+    within-partition order), then the shared encode tail."""
     cfg_hash = cfg.config_hash(fingerprint)
-    meta = {
-        "spark_schema": df.schema.jsonValue(),
+    meta = _write_meta(out_dir, _encode_meta(
+        df.schema, cfg, cfg_hash, fingerprint, cfg.n_partitions,
+        **(extra_meta or {})))
+    tasks = arranged.mapInArrow(
+        _encoder(out_dir, cfg_hash, cfg.codec_overrides, cfg.chunk_rows,
+                 entropy=cfg.entropy,
+                 sort_keys=kernel_sort_keys,
+                 prefetch=cfg.prefetch_batches,
+                 bloom_cols=cfg.bloom_cols, bloom_bits=cfg.bloom_bits,
+                 bloom_hashes=cfg.bloom_hashes),
+        schema=_REPORT_SCHEMA)
+    return _encode_tail(spark, out_dir, meta, tasks)
+
+
+def _encode_meta(schema: StructType, cfg: EncodeConfig, cfg_hash: str,
+                 fingerprint: str, n_partitions: int, **extra) -> dict:
+    return {
+        "spark_schema": schema.jsonValue(),
         "config_hash": cfg_hash,
         "fingerprint": fingerprint,
-        "n_partitions": cfg.n_partitions,
+        "n_partitions": n_partitions,
         "chunk_rows": cfg.chunk_rows,
         "sort_keys": list(cfg.sort_keys),
         # zone-map unit contract: >=2 means timestamp zone maps are
@@ -635,46 +700,106 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
         # int64 (µs) — _pruned_chunks must not zone-prune datetime
         # predicates against those
         "stats_version": STATS_VERSION,
+        **extra,
     }
-    meta.update(extra_meta or {})
+
+
+def _write_meta(out_dir: str, meta: dict) -> dict:
+    os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=1)
-
-    manifest = arranged.mapInArrow(
-        _encoder(out_dir, cfg_hash, cfg.codec_overrides, cfg.chunk_rows,
-                 entropy=cfg.entropy,
-                 sort_keys=kernel_sort_keys,
-                 prefetch=cfg.prefetch_batches,
-                 bloom_cols=cfg.bloom_cols, bloom_bits=cfg.bloom_bits,
-                 bloom_hashes=cfg.bloom_hashes),
-        schema=MANIFEST_SCHEMA)
-    manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
-    out = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    _record_manifest_size(spark, out_dir, out, meta)
-    return out
+    return meta
 
 
-def _record_manifest_size(spark: SparkSession, out_dir: str,
-                          manifest: DataFrame, meta: dict) -> None:
-    """Stamp the manifest's row/column counts into meta.json ONCE at
-    encode time, so every predicated decode can pick the set-path vs
-    join-path pruning branch from metadata instead of running its own
-    manifest aggregation job (a fixed Spark-job tax on the point-lookup
-    hot path). Counts come from the parquet footers driver-side — no
-    Spark job: row count is the footer sum, and the distinct `column`
-    count equals the encoded schema's column count (every chunk emits
-    exactly one manifest row per column)."""
+def _encode_tail(spark: SparkSession, out_dir: str, meta: dict,
+                 tasks: DataFrame | None,
+                 resumed_fragments: tuple[str, ...] = ()) -> DataFrame:
+    """Shared encode tail. Runs the encode tasks (each writes the
+    manifest fragment of every partition it encodes, see
+    _encode_partition_stream and _REPORT_SCHEMA), then makes
+    out_dir/manifest hold the current fragments only: the ones the tasks
+    reported plus `resumed_fragments`, the fragments of partitions the
+    driver did not schedule. Everything else there (superseded
+    fragments, a manifest an older encoder wrote) is removed; unlinking
+    leaves hardlinked snapshots their bytes.
+
+    The manifest's row and column counts are stamped into meta.json, so
+    a predicated decode picks the set-path vs join-path pruning branch
+    without a manifest job. Rows come from the fragment footers; every
+    chunk emits one row per encoded column, so a fragment whose rows do
+    not divide by the column count means a kernel skipped a column and
+    raises. The driver handles O(#partitions) names and footers and
+    never manifest rows: at scale the manifest is a big table.
+
+    Returns the manifest read with MANIFEST_SCHEMA (no inference job);
+    `resumed` is true for every partition this call did not encode."""
     import pyarrow.parquet as pq
+    import shutil
+    reports = tasks.collect() if tasks is not None else []
+    current = set(resumed_fragments) | {r["fragment"] for r in reports}
+    encoded = sorted(r["partition_id"] for r in reports if r["encoded"])
     mdir = os.path.join(out_dir, "manifest")
-    n = 0
-    for p in os.listdir(mdir):
-        if p.endswith(".parquet"):
-            n += pq.read_metadata(os.path.join(mdir, p)).num_rows
+    os.makedirs(mdir, exist_ok=True)
+    for name in os.listdir(mdir):
+        if name not in current:
+            p = os.path.join(mdir, name)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
     n_cols = len(meta["spark_schema"].get("fields", [])) or 1
-    meta["manifest_rows"] = int(n)
-    meta["manifest_columns"] = int(n_cols)
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+    n = 0
+    for name in sorted(current):
+        rows = pq.read_metadata(os.path.join(mdir, name)).num_rows
+        if rows % n_cols:
+            raise RuntimeError(
+                f"manifest fragment {name} holds {rows} rows, not a "
+                f"multiple of the {n_cols} encoded columns")
+        n += rows
+    meta["manifest_rows"] = n
+    meta["manifest_columns"] = n_cols
+    _write_meta(out_dir, meta)
+    resumed = (~F.col("partition_id").isin(encoded) if encoded
+               else F.lit(True))
+    return (spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
+            .withColumn("resumed", resumed))
+
+
+def _run_tasks(spark: SparkSession, groups: list, fn, schema: str,
+               arrange=None) -> DataFrame:
+    """The one way to build a task list: one Spark task per entry of
+    `groups`, from spark.range(len(groups)) with the groups closed over
+    (a task list built as an RDD of rows measured about twice the
+    scheduling cost). fn(group, *extra) yields the task's record
+    batches, where `extra` are the columns after `id` that
+    arrange(range_df) may add (decode's join-path pruning joins the
+    surviving chunk ids on). Every task pins the worker's Arrow threads
+    first. `groups` must not be empty."""
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from .runtime import pin_worker_threads
+        pin_worker_threads()
+        for batch in batches:
+            for i, *extra in zip(*(c.to_pylist() for c in batch.columns)):
+                yield from fn(groups[i], *extra)
+
+    frame = spark.range(len(groups), numPartitions=len(groups))
+    if arrange is not None:
+        frame = arrange(frame)
+    return frame.mapInArrow(run, schema=schema)
+
+
+def _pack_by_bytes(items: list, sizes: list[int], n_slots: int) -> list:
+    """Pack items into at most n_slots groups balanced by bytes (longest
+    first onto the lightest group); each group keeps input order."""
+    import heapq
+    k = min(len(items), max(n_slots, 1))
+    heap = [(0, g) for g in range(k)]
+    members: list[list[int]] = [[] for _ in range(k)]
+    for j in sorted(range(len(items)), key=lambda j: (-sizes[j], j)):
+        load, g = heapq.heappop(heap)
+        members[g].append(j)
+        heapq.heappush(heap, (load + sizes[j], g))
+    return [[items[j] for j in sorted(m)] for m in members]
 
 
 def _zorder_long_expr(df: DataFrame, name: str):
@@ -777,12 +902,54 @@ def bucketize_table(spark: SparkSession, df: DataFrame, dest_dir: str,
     The write costs one shuffle, amortized over every subsequent
     shuffle-free encode and bucket-pruned read. Size n_buckets to >= 4x
     the executor-core count so mega-conversation skew evens out across
-    tasks."""
+    tasks. _buckets.json records the bucket count, the key and the
+    Spark schema, so maintenance and encodes need no inference job."""
     (df.repartition(n_buckets, F.col(conv_key))
        .write.mode("overwrite").parquet(dest_dir))
-    with open(os.path.join(dest_dir, "_buckets.json"), "w") as f:
-        json.dump({"n_buckets": n_buckets, "conv_key": conv_key}, f)
+    _write_bucket_meta(dest_dir, n_buckets, conv_key, df.schema)
     return dest_dir
+
+
+def _write_bucket_meta(bucket_dir: str, n_buckets: int, conv_key: str,
+                       schema: StructType) -> None:
+    with open(os.path.join(bucket_dir, "_buckets.json"), "w") as f:
+        json.dump({"n_buckets": n_buckets, "conv_key": conv_key,
+                   "spark_schema": _file_schema(schema)}, f)
+
+
+def _file_schema(schema: StructType) -> dict:
+    """`schema` as Spark reads it back from parquet files (jsonValue
+    form): every field, array element and map value nullable."""
+    def walk(t):
+        if not isinstance(t, dict):
+            return t
+        t = dict(t)
+        if t["type"] == "struct":
+            t["fields"] = [dict(f, nullable=True, type=walk(f["type"]))
+                           for f in t["fields"]]
+        elif t["type"] == "array":
+            t.update(containsNull=True, elementType=walk(t["elementType"]))
+        elif t["type"] == "map":
+            t.update(valueContainsNull=True, keyType=walk(t["keyType"]),
+                     valueType=walk(t["valueType"]))
+        return t
+    return walk(schema.jsonValue())
+
+
+def _bucket_layout(spark: SparkSession,
+                   bucket_dir: str) -> tuple[dict, StructType]:
+    """(_buckets.json, Spark schema) of a bucket layout. The schema is
+    the recorded one; a layout without it (written before it was
+    recorded, or by hand without _buckets.json) falls back to inference,
+    which costs one Spark job."""
+    try:
+        with open(os.path.join(bucket_dir, "_buckets.json")) as f:
+            bmeta = json.load(f)
+    except FileNotFoundError:
+        bmeta = {}
+    if "spark_schema" in bmeta:
+        return bmeta, StructType.fromJson(bmeta["spark_schema"])
+    return bmeta, spark.read.parquet(bucket_dir).schema
 
 
 def upsert_bucketized(spark: SparkSession, updates: DataFrame,
@@ -803,68 +970,11 @@ def upsert_bucketized(spark: SparkSession, updates: DataFrame,
     resume) — the incremental-maintenance path for a 10^12-turn
     transcript table, where an upsert touching k conversations costs
     O(k bucket files), not a table rewrite. File replacement is
-    per-bucket atomic (tmp + rename), same semantics as compaction."""
-    import re as _re
-    import uuid as _uuid
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
-    n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    # hash on the TABLE's key type: murmur3(int32) != murmur3(int64), so
-    # an updates frame whose key column arrived narrower (e.g. literals)
-    # would route to the wrong bucket and silently miss the merge target
-    ktype = spark.read.parquet(bucket_dir).schema[conv_key].dataType
-    updates = updates.withColumn(conv_key, F.col(conv_key).cast(ktype))
-    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
-    affected = sorted(r["b"] for r in
-                      updates.select(bid.alias("b")).distinct().collect())
-    if not affected:
-        return []
-    by_num: dict[int, str] = {}
-    for p in os.listdir(bucket_dir):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_num[int(m.group(1))] = os.path.join(bucket_dir, p)
-    old_files = [by_num[b] for b in affected if b in by_num]
-    upd_keys = updates.select(conv_key).distinct()
-    base = (spark.read.parquet(*old_files)
-            if old_files else updates.limit(0))
-    merged = (base.join(F.broadcast(upd_keys), conv_key, "left_anti")
-              .unionByName(updates.select(*base.columns)))
-    tmp = os.path.join(bucket_dir,
-                       f"_upsert_tmp_{_uuid.uuid4().hex[:8]}")
-    # same repartition → partition i == bucket i == tmp part-{i:05d} file
-    merged.repartition(n, F.col(conv_key)).write.parquet(tmp)
-    stamp = _uuid.uuid4().hex[:8]
-    affected_set = set(affected)
-    replaced = set()
-    for p in os.listdir(tmp):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if not m:
-            continue
-        b = int(m.group(1))
-        # ONLY touched buckets may be replaced: Spark writes a part-00000
-        # file even when partition 0 is EMPTY (it carries the schema), so
-        # installing every tmp file would overwrite bucket 0's data with
-        # an empty file whenever no update hashes there — silent data
-        # loss (caught by review; regression-tested)
-        if b not in affected_set:
-            continue
-        # keep the part-NNNNN prefix so the file holds its sorted
-        # position in encode_table_prebucketed's path list
-        os.replace(os.path.join(tmp, p),
-                   os.path.join(bucket_dir, f"part-{b:05d}-ups{stamp}"
-                                            ".parquet"))
-        old = by_num.get(b)
-        if old and os.path.exists(old):
-            os.remove(old)
-        replaced.add(b)
-    if replaced != affected_set:
-        raise RuntimeError(
-            f"upsert wrote no file for buckets {affected_set - replaced}; "
-            "bucket dir left partially updated")
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
-    return affected
+    per-bucket atomic (tmp + rename), same semantics as compaction.
+    Runs as merge_bucketized with every row an upsert."""
+    return merge_bucketized(
+        spark, updates.withColumn(_MERGE_OP, F.lit("upsert")), bucket_dir,
+        op_col=_MERGE_OP)
 
 
 def delete_bucketized(spark: SparkSession, keys: DataFrame,
@@ -884,62 +994,20 @@ def delete_bucketized(spark: SparkSession, keys: DataFrame,
     unlinked (hardlinked snapshots keep the old bytes — see
     snapshot_table). At 10^12-turn scale this is the GDPR-erasure /
     retention path: deleting k conversations costs O(k bucket files),
-    not a table rewrite."""
-    import re as _re
-    import uuid as _uuid
-    import pyarrow.parquet as pq
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
-    n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    # cast to the TABLE's key type before hashing — murmur3 differs by
-    # byte width, and delete keys often arrive as literals narrower than
-    # the stored column; a mismatch routes to the wrong bucket and the
-    # delete silently misses (caught in review of the upsert twin)
-    ktype = spark.read.parquet(bucket_dir).schema[conv_key].dataType
-    keys = keys.select(F.col(conv_key).cast(ktype).alias(conv_key)).distinct()
-    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
-    routed = sorted(r["b"] for r in
-                    keys.select(bid.alias("b")).distinct().collect())
-    by_num: dict[int, str] = {}
-    for p in os.listdir(bucket_dir):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_num[int(m.group(1))] = os.path.join(bucket_dir, p)
-    # only buckets that exist on disk can hold rows to delete
-    affected = [b for b in routed if b in by_num]
-    if not affected:
-        return []
-    old_files = [by_num[b] for b in affected]
-    remaining = (spark.read.parquet(*old_files)
-                 .join(F.broadcast(keys), conv_key, "left_anti"))
-    tmp = os.path.join(bucket_dir, f"_delete_tmp_{_uuid.uuid4().hex[:8]}")
-    # same repartition -> partition i == bucket i == tmp part-{i:05d} file
-    remaining.repartition(n, F.col(conv_key)).write.parquet(tmp)
-    by_tmp: dict[int, str] = {}
-    for p in os.listdir(tmp):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_tmp[int(m.group(1))] = os.path.join(tmp, p)
-    stamp = _uuid.uuid4().hex[:8]
-    for b in affected:
-        new = os.path.join(bucket_dir, f"part-{b:05d}-del{stamp}.parquet")
-        tf = by_tmp.get(b)
-        # Spark may emit a part file for an EMPTY partition (part-00000
-        # carries the schema) and emits none for other empty partitions —
-        # route on actual row count, not file presence (the upsert
-        # bucket-0 lesson)
-        if tf is not None and pq.ParquetFile(tf).metadata.num_rows > 0:
-            os.replace(tf, new)
-        else:
-            # fully-deleted bucket: keep an empty file so positional
-            # bucket ids stay stable for every OTHER bucket
-            pq.write_table(pq.read_schema(by_num[b]).empty_table(), new)
-        old = by_num[b]
-        if os.path.exists(old):
-            os.remove(old)
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
-    return affected
+    not a table rewrite. Runs as merge_bucketized with every key a
+    delete."""
+    bmeta, schema = _bucket_layout(spark, bucket_dir)
+    # merge reads table-shaped rows: the key plus NULL for every column
+    rows = keys.select(*[
+        F.col(f.name) if f.name == bmeta["conv_key"]
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields])
+    return merge_bucketized(
+        spark, rows.withColumn(_MERGE_OP, F.lit("delete")), bucket_dir,
+        op_col=_MERGE_OP)
+
+
+_MERGE_OP = "__merge_op"
 
 
 def merge_bucketized(spark: SparkSession, changes: DataFrame,
@@ -955,52 +1023,46 @@ def merge_bucketized(spark: SparkSession, changes: DataFrame,
     unit for a transcript table, where 'update' means 'the conversation
     continued / was redacted' and arrives as its full new row set.
 
-    Why one pass instead of delete_bucketized + upsert_bucketized:
-    a bucket receiving both ops would be rewritten twice (two Spark
-    jobs, two file replacements); here every affected bucket file is
-    read once, merged once, installed once (tmp + rename, same
-    atomicity as compaction). Routing is the shared pmod(murmur3, n)
-    invariant; emptied buckets keep an empty schema file so positional
-    bucket ids stay stable (the delete_bucketized lesson); only
-    affected buckets are touched so a k-conversation merge costs O(k
-    bucket files) at 10^12-turn scale, and the following
-    encode_table_prebucketed run re-encodes only those files.
+    upsert_bucketized and delete_bucketized are its one-op cases. One
+    pass: a bucket receiving both ops is read once, merged once,
+    installed once (tmp + rename, same atomicity as compaction), and the
+    plan is one small collect of the (op, bucket) pairs. Routing is the
+    shared pmod(murmur3, n) invariant, on the key type _buckets.json
+    records; emptied buckets keep an empty schema file so positional
+    bucket ids stay stable; only affected buckets are touched so a
+    k-conversation merge costs O(k bucket files) at 10^12-turn scale,
+    and the following encode_table_prebucketed run re-encodes only
+    those files.
     """
     import re as _re
     import uuid as _uuid
     import pyarrow.parquet as pq
-    ops = [r[0] for r in changes.select(op_col).distinct().collect()]
-    bad = set(ops) - {"upsert", "delete"}
-    if bad:
-        raise ValueError(f"unknown merge op(s) {sorted(bad)}; "
-                         "expected 'upsert' or 'delete'")
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
+    bmeta, schema = _bucket_layout(spark, bucket_dir)
     n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    ktype = spark.read.parquet(bucket_dir).schema[conv_key].dataType
-    changes = changes.withColumn(conv_key, F.col(conv_key).cast(ktype))
-    upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
-    del_keys = (changes.filter(F.col(op_col) == "delete")
-                       .select(conv_key).distinct())
+    changes = changes.withColumn(
+        conv_key, F.col(conv_key).cast(schema[conv_key].dataType))
     bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
+    # the whole plan in one job: every (op, bucket) pair
+    plan = changes.select(op_col, bid.alias("b")).distinct().collect()
+    bad = {r[0] for r in plan} - {"upsert", "delete"}
+    if bad:
+        raise ValueError(f"unknown merge op(s) {sorted(bad, key=str)}; "
+                         "expected 'upsert' or 'delete'")
+    upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
     by_num: dict[int, str] = {}
     for p in os.listdir(bucket_dir):
         m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
         if m:
             by_num[int(m.group(1))] = os.path.join(bucket_dir, p)
-    ups_buckets = {r["b"] for r in
-                   upserts.select(bid.alias("b")).distinct().collect()}
     # delete-only buckets matter only if they exist on disk
-    del_buckets = {r["b"] for r in
-                   del_keys.select(bid.alias("b")).distinct().collect()
-                   if r["b"] in by_num}
-    affected = sorted(ups_buckets | del_buckets)
+    affected = sorted({r["b"] for r in plan
+                       if r[0] == "upsert" or r["b"] in by_num})
     if not affected:
         return []
     old_files = [by_num[b] for b in affected if b in by_num]
-    touched_keys = (upserts.select(conv_key).unionByName(del_keys)
-                           .distinct())
-    base = (spark.read.parquet(*old_files)
+    # every key of either op leaves the old file; upserts re-enter below
+    touched_keys = changes.select(conv_key).distinct()
+    base = (spark.read.schema(schema).parquet(*old_files)
             if old_files else upserts.limit(0))
     merged = (base.join(F.broadcast(touched_keys), conv_key, "left_anti")
                   .unionByName(upserts.select(*base.columns)))
@@ -1064,11 +1126,10 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
     import pyarrow.parquet as _pq
     if factor < 2 or int(factor) != factor:
         raise ValueError(f"factor must be an integer >= 2, got {factor}")
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
+    bmeta, schema = _bucket_layout(spark, bucket_dir)
     n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
     m = n * int(factor)
-    df = spark.read.parquet(bucket_dir)
+    df = spark.read.schema(schema).parquet(bucket_dir)
     os.makedirs(dest_dir, exist_ok=True)
     tmp = os.path.join(dest_dir, f"_rebucket_tmp_{_uuid.uuid4().hex[:8]}")
     (df.withColumn("__nb", F.pmod(F.hash(F.col(conv_key)), F.lit(m)))
@@ -1091,8 +1152,7 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
             tabs = [_pq.read_table(os.path.join(tmp, d, p)) for p in files]
             _pq.write_table(pa.concat_tables(tabs), dest)
     shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(dest_dir, "_buckets.json"), "w") as f:
-        json.dump({"n_buckets": m, "conv_key": conv_key}, f)
+    _write_bucket_meta(dest_dir, m, conv_key, schema)
     return dest_dir
 
 
@@ -1101,8 +1161,9 @@ def snapshot_table(out_dir: str, tag: str) -> str:
     every block file and every manifest parquet file, copy meta.json,
     into out_dir/snapshots/<tag>/. Costs O(#files) directory entries and
     zero data bytes. Every mutating path installs NEW inodes — encode
-    and compaction os.replace() block files, Spark's manifest overwrite
-    unlinks-then-writes — so the snapshot's links keep the old bytes:
+    and compaction os.replace() block files, encodes install manifest
+    fragments by rename and unlink superseded ones — so the snapshot's
+    links keep the old bytes:
     filesystem-level copy-on-write, the same snapshot-isolation contract
     an Iceberg table gets from immutable data files + a versioned
     metadata tree. decode_table reads a snapshot dir like any table
@@ -1239,10 +1300,11 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                              out_dir: str, cfg: EncodeConfig | None = None,
                              fingerprint: str = "",
                              per_file_fingerprint: bool = True) -> DataFrame:
-    """Shuffle-free encode over a PRE-BUCKETED parquet layout: one task
-    per bucket file; the kernel reads its file in-process with pyarrow,
-    sorts by sort_keys (Arrow C++ sort_indices), and encodes — no JVM
-    scan, no repartition exchange, no JVM->Python row transfer at all.
+    """Shuffle-free encode over a PRE-BUCKETED parquet layout: each task
+    encodes a group of bucket files; the kernel reads each file
+    in-process with pyarrow, sorts by sort_keys (Arrow C++ sort_indices),
+    and encodes — no JVM scan, no repartition exchange, no JVM->Python
+    row transfer at all.
 
     Rationale: stage profiling (BENCH/BASELINE.md rounds 2-4) shows the
     shuffle-path job's only non-scaling costs are the JVM shuffle/sort
@@ -1253,9 +1315,17 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     equals the kernel-only ceiling. At 10^12-turn scale the bucketed
     layout is also what makes incremental encodes and conversation
     point-reads cheap, so it is the layout a production transcript table
-    would already have. Checkpoint/resume semantics are per bucket file
-    (same markers as the shuffle path); blocks, manifest, zone maps and
-    blooms are byte-compatible with decode_table.
+    would already have. Blocks, manifest, zone maps and blooms are
+    byte-compatible with decode_table.
+
+    The driver plans the tasks. Checkpoint/resume is per bucket file (the
+    same markers as the shuffle path): a file whose marker and manifest
+    fragment both exist is not scheduled at all, so a fully resumed call
+    runs no Spark job for the encode. The remaining files are packed into
+    at most defaultParallelism tasks, balanced by file bytes, which keeps
+    the per-task fixed cost to one wave however many files there are. A
+    task killed partway through its group leaves the files it finished
+    committed; a re-run schedules only the rest.
 
     per_file_fingerprint=True (default) keys each file's resume marker by
     (config, file name, size, mtime) instead of one whole-input
@@ -1270,81 +1340,72 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                    if p.endswith(".parquet"))
     if not paths:
         raise ValueError(f"no .parquet bucket files under {input_dir}")
-    schema = spark.read.parquet(input_dir).schema
+    _, schema = _bucket_layout(spark, input_dir)
     missing = [c for c in (cfg.conv_key, *cfg.sort_keys)
                if c not in schema.names]
     if missing:
         raise ValueError(f"encode keys {missing} not in input columns "
                          f"{schema.names}")
-    os.makedirs(out_dir, exist_ok=True)
     cfg_hash = cfg.config_hash(fingerprint)
-    meta = {
-        "spark_schema": schema.jsonValue(),
-        "config_hash": cfg_hash,
-        "fingerprint": fingerprint,
-        "n_partitions": len(paths),
-        "chunk_rows": cfg.chunk_rows,
-        "sort_keys": list(cfg.sort_keys),
-        "prebucketed": True,
-        "stats_version": STATS_VERSION,
-    }
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+    meta = _write_meta(out_dir, _encode_meta(
+        schema, cfg, cfg_hash, fingerprint, len(paths), prebucketed=True))
 
-    idx = {p: i for i, p in enumerate(paths)}
+    stats = [os.stat(p) for p in paths]
     if per_file_fingerprint:
-        def _ffp(p):
-            st = os.stat(p)
-            # nanosecond mtime: a bucket file rewritten within the same
-            # second with unchanged size (deterministic re-bucketize)
-            # must NOT resume stale blocks
-            blob = (f"{cfg_hash}:{os.path.basename(p)}:{st.st_size}:"
-                    f"{st.st_mtime_ns}").encode()
-            return hashlib.md5(blob).hexdigest()[:12]
-        fps = {p: _ffp(p) for p in paths}
+        # nanosecond mtime: a bucket file rewritten within the same
+        # second with unchanged size (deterministic re-bucketize) must
+        # NOT resume stale blocks
+        fps = [hashlib.md5(f"{cfg_hash}:{os.path.basename(p)}:{st.st_size}:"
+                           f"{st.st_mtime_ns}".encode()).hexdigest()[:12]
+               for p, st in zip(paths, stats)]
     else:
-        fps = {p: cfg_hash for p in paths}
+        fps = [cfg_hash] * len(paths)
+
+    def _listing(sub):
+        d = os.path.join(out_dir, sub)
+        return set(os.listdir(d)) if os.path.isdir(d) else set()
+    markers, fragments = _listing("checkpoints"), _listing("manifest")
+    resumed, todo, todo_sizes = [], [], []
+    for pid, (path, fp) in enumerate(zip(paths, fps)):
+        if (_marker_name(pid, fp) in markers
+                and _fragment_name(pid, fp) in fragments):
+            resumed.append(_fragment_name(pid, fp))
+        else:
+            todo.append((pid, path, fp))
+            todo_sizes.append(stats[pid].st_size)
+    groups = _pack_by_bytes(todo, todo_sizes,
+                            spark.sparkContext.defaultParallelism)
+
     overrides, chunk_rows = cfg.codec_overrides, cfg.chunk_rows
     entropy, sort_keys = cfg.entropy, cfg.sort_keys
     bloom_cols, bloom_bits = cfg.bloom_cols, cfg.bloom_bits
     bloom_hashes = cfg.bloom_hashes
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .runtime import pin_worker_threads
-        pin_worker_threads()
+    def encode_group(group) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         def lazy_batches(path):
             # generator: the parquet read happens only if the marker
-            # check inside _encode_partition_stream does NOT resume —
-            # resumed files cost one stat + one tiny JSON read, not a
-            # table scan. Spark writes INT96 timestamps that pyarrow
-            # reads as ns; normalize to the µs unit Spark's own Arrow
-            # bridge uses so decoded blocks round-trip through
-            # mapInArrow unchanged.
+            # check inside _encode_partition_stream does NOT resume (a
+            # marker can appear after planning). Spark writes INT96
+            # timestamps that pyarrow reads as ns; normalize to the µs
+            # unit Spark's own Arrow bridge uses so decoded blocks
+            # round-trip through mapInArrow unchanged.
             tbl = _normalize_arrow_units(pq.read_table(path))
             yield from tbl.to_batches()
 
-        for batch in batches:
-            for path in batch.column(0).to_pylist():
-                rows = _encode_partition_stream(
-                    idx[path], lazy_batches(path), out_dir, fps[path],
-                    overrides, chunk_rows, entropy, sort_keys,
-                    bloom_cols, bloom_bits, bloom_hashes)
-                yield _manifest_batch(rows)
+        done = []
+        for pid, path, fp in group:
+            encoded = _encode_partition_stream(
+                pid, lazy_batches(path), out_dir, fp, overrides,
+                chunk_rows, entropy, sort_keys, bloom_cols, bloom_bits,
+                bloom_hashes)
+            done.append((pid, _fragment_name(pid, fp), encoded))
+        yield _report(done)
 
-    # exactly ONE file per task: parallelize slices the path list
-    # deterministically (hash-repartition would put 2-3 files on some
-    # tasks and none on others — a straggler tail for free)
-    pdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       numSlices=len(paths)),
-        schema="path string")
-    manifest = pdf.mapInArrow(run, schema=MANIFEST_SCHEMA)
-    manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
-    out = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    _record_manifest_size(spark, out_dir, out, meta)
-    return out
+    tasks = (_run_tasks(spark, groups, encode_group, _REPORT_SCHEMA)
+             if groups else None)
+    return _encode_tail(spark, out_dir, meta, tasks, tuple(resumed))
 
 
 def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
@@ -1397,7 +1458,7 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
                   (man.groupBy("partition_id")
                       .agg((F.max("chunk_id") + 1).alias("n")).collect())}
         for p in sorted(glob.glob(os.path.join(d, "blocks", "*.ssb"))):
-            pid = int(os.path.basename(p)[5:10])
+            pid = _block_pid(p)
             entries.append((d, pid, p, counts.get(pid, 0)))
     if not entries:
         raise ValueError("no block files under src_dirs")
@@ -1417,30 +1478,24 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
 
     blk_dir = os.path.join(out_dir, "blocks")
 
-    def concat(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for gid, paths_json in zip(batch.column(0).to_pylist(),
-                                       batch.column(1).to_pylist()):
-                dst = os.path.join(blk_dir, f"part-{gid:05d}.ssb")
-                tmp = dst + ".tmp"
-                with open(tmp, "wb") as out:
-                    for p in json.loads(paths_json):
-                        with open(p, "rb") as src:
-                            while True:
-                                buf = src.read(1 << 22)
-                                if not buf:
-                                    break
-                                out.write(buf)
-                os.replace(tmp, dst)
-        yield pa.RecordBatch.from_pydict({"done": pa.array([], pa.int32())})
+    def concat(task) -> Iterator[pa.RecordBatch]:
+        gid, srcs = task
+        dst = os.path.join(blk_dir, f"part-{gid:05d}.ssb")
+        tmp = dst + ".tmp"
+        with open(tmp, "wb") as out:
+            for p in srcs:
+                with open(p, "rb") as src:
+                    while True:
+                        buf = src.read(1 << 22)
+                        if not buf:
+                            break
+                        out.write(buf)
+        os.replace(tmp, dst)
+        return iter(())
 
-    rows = [(gid, json.dumps([p for _d, _p, p, _n in grp]))
-            for gid, grp in enumerate(groups)]
-    pdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=len(rows)),
-        schema="gid int, paths string")
-    pdf.mapInArrow(concat, schema="done int").write \
-        .format("noop").mode("overwrite").save()
+    _run_tasks(spark, [(gid, [p for _d, _p, p, _n in grp])
+                       for gid, grp in enumerate(groups)],
+               concat, "done int").collect()
 
     # merged manifest: rewrite (partition_id, chunk_id) via a tiny
     # broadcast mapping (O(#src files) rows)
@@ -1811,6 +1866,45 @@ def _pruned_chunks_df(spark: SparkSession, out_dir: str,
             .agg(F.collect_set("chunk_id").alias("wanted")))
 
 
+def _decode_ranges(spark: SparkSession, out_dir: str, paths: list[str],
+                   keep: dict[int, set] | None) -> list[tuple]:
+    """Decode tasks as (block path, first chunk id, end chunk id). Fewer
+    files than task slots (few big files after compaction, or a pruned
+    read that survives in one file) would serialize decode on one task
+    each, so their chunks split into ranges and every core gets work.
+    Range tasks walk headers to their start (cheap) and whole-file reads
+    dedup through the OS page cache. With set-path pruning the ranges
+    cover only the surviving chunk ids; otherwise the per-file chunk
+    counts come from one manifest job."""
+    par = spark.sparkContext.defaultParallelism
+    whole = [(p, 0, 1 << 30) for p in paths]
+    if len(paths) >= par:
+        return whole
+    if keep is not None:
+        chunk_ids = {pid: sorted(cs) for pid, cs in keep.items()}
+    else:
+        mdir = os.path.join(out_dir, "manifest")
+        if not os.path.isdir(mdir):
+            return whole
+        chunk_ids = {int(r["partition_id"]): range(int(r["n"])) for r in
+                     spark.read.parquet(mdir).groupBy("partition_id")
+                     .agg((F.max("chunk_id") + 1).alias("n")).collect()}
+    total = sum(len(chunk_ids.get(_block_pid(p), ())) for p in paths)
+    if not total:
+        return whole
+    step = max(1, total // max(2 * par, len(paths)))
+    ranges = []
+    for p in paths:
+        ids = chunk_ids.get(_block_pid(p))
+        if not ids:
+            ranges.append((p, 0, 1 << 30))
+            continue
+        for s in range(0, len(ids), step):
+            seg = ids[s:s + step]
+            ranges.append((p, seg[0], seg[-1] + 1))
+    return ranges
+
+
 def decode_table(spark: SparkSession, out_dir: str,
                  columns: list[str] | None = None,
                  predicate: tuple | None = None,
@@ -1891,8 +1985,11 @@ def decode_table(spark: SparkSession, out_dir: str,
         # partition-subset decode (snapshot_diff's CDC path): only the
         # named partitions' block files are read at all
         want_p = set(partitions)
-        paths = [p for p in paths
-                 if int(os.path.basename(p)[5:10]) in want_p]
+        paths = [p for p in paths if _block_pid(p) in want_p]
+    if keep is not None:
+        # set-path pruning: a block file with no surviving chunk is not
+        # scheduled at all
+        paths = [p for p in paths if keep.get(_block_pid(p))]
 
     # kernel-safe predicates: int/string bounds are exact in Arrow (same
     # binary/UTF-8 order as Spark), so they can be evaluated INSIDE the
@@ -1908,9 +2005,10 @@ def decode_table(spark: SparkSession, out_dir: str,
     ksafe = [p for p in predicates if _kernel_safe(p)]
     pred_cols = sorted({p[0] for p in ksafe})
 
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .runtime import pin_worker_threads
-        pin_worker_threads()
+    def decode(task, wanted_ids=None) -> Iterator[pa.RecordBatch]:
+        # task: (block path, first chunk id, end chunk id); join-path
+        # pruning passes the partition's surviving chunk ids, the set
+        # path closes over `keep`
         import pyarrow.compute as pc
         from .codecs import block_span
         from pyspark.sql.pandas.types import to_arrow_type
@@ -1941,101 +2039,69 @@ def decode_table(spark: SparkSession, out_dir: str,
                 m = c if m is None else pc.and_kleene(m, c)
             return pc.fill_null(m, False)
 
-        for batch in batches:
-            # join-path pruning ships each task's surviving chunk ids as a
-            # 4th column; the small-manifest path closes over `keep`
-            wlists = (batch.column(3).to_pylist()
-                      if batch.num_columns > 3 else None)
-            for i, (path, lo_c, hi_c) in enumerate(
-                    zip(batch.column(0).to_pylist(),
-                        batch.column(1).to_pylist(),
-                        batch.column(2).to_pylist())):
-                pid = int(os.path.basename(path)[5:10])
-                if wlists is not None:
-                    wanted = set(wlists[i]) if wlists[i] is not None else None
-                else:
-                    wanted = None if keep is None else keep.get(pid, set())
-                with open(path, "rb") as f:
-                    buf = f.read()
-                off, chunk_id = 0, 0
-                while off < len(buf):
-                    if chunk_id >= hi_c:
-                        break                   # past this task's range
-                    if chunk_id < lo_c or (wanted is not None
-                                           and chunk_id not in wanted):
-                        off += block_span(buf, off)   # pruned: header walk
-                        chunk_id += 1
+        path, lo_c, hi_c = task
+        if wanted_ids is not None:
+            wanted = set(wanted_ids)
+        else:
+            wanted = None if keep is None else keep.get(_block_pid(path),
+                                                        set())
+        with open(path, "rb") as f:
+            buf = f.read()
+        off, chunk_id = 0, 0
+        while off < len(buf):
+            if chunk_id >= hi_c:
+                break                   # past this task's range
+            if chunk_id < lo_c or (wanted is not None
+                                   and chunk_id not in wanted):
+                off += block_span(buf, off)   # pruned: header walk
+                chunk_id += 1
+                continue
+            if ksafe:
+                try:
+                    # phase 1: predicate columns only
+                    ptbl, span = decode_block(buf, off, columns=pred_cols)
+                    mask = kmask(ptbl)
+                    if not pc.any(mask).as_py():
+                        off += span        # chunk has no matches:
+                        chunk_id += 1      # text never decoded
                         continue
-                    if ksafe:
-                        try:
-                            # phase 1: predicate columns only
-                            ptbl, span = decode_block(buf, off,
-                                                      columns=pred_cols)
-                            mask = kmask(ptbl)
-                            if not pc.any(mask).as_py():
-                                off += span        # chunk has no matches:
-                                chunk_id += 1      # text never decoded
-                                continue
-                            full, _ = decode_block(buf, off, columns=columns,
-                                                   missing_ok=True)
-                            off += span
-                            chunk_id += 1
-                            yield from conform(full).filter(mask).to_batches()
-                            continue
-                        except (KeyError, pa.lib.ArrowInvalid,
-                                pa.lib.ArrowNotImplementedError):
-                            pass   # e.g. evolved block lacking the pred
-                            # column, or an uncastable literal: fall back
-                            # to full decode + Spark residual filter
-                    tbl, used = decode_block(buf, off, columns=columns,
-                                             missing_ok=True)
-                    off += used
+                    full, _ = decode_block(buf, off, columns=columns,
+                                           missing_ok=True)
+                    off += span
                     chunk_id += 1
-                    yield from conform(tbl).to_batches()
+                    yield from conform(full).filter(mask).to_batches()
+                    continue
+                except (KeyError, pa.lib.ArrowInvalid,
+                        pa.lib.ArrowNotImplementedError):
+                    pass   # e.g. evolved block lacking the pred
+                    # column, or an uncastable literal: fall back
+                    # to full decode + Spark residual filter
+            tbl, used = decode_block(buf, off, columns=columns,
+                                     missing_ok=True)
+            off += used
+            chunk_id += 1
+            yield from conform(tbl).to_batches()
 
     if not paths:
         out = spark.createDataFrame([], schema)
     else:
-        par = spark.sparkContext.defaultParallelism
-        ranges = [(p, 0, 1 << 30) for p in paths]
-        if len(paths) < par:
-            # few big files (post-compaction) would serialize decode on
-            # one task each — split into chunk ranges so every core gets
-            # work. Range tasks walk headers to their start (cheap) and
-            # whole-file reads dedup through the OS page cache.
-            mdir = os.path.join(out_dir, "manifest")
-            if os.path.isdir(mdir):
-                cnt = {int(r["partition_id"]): int(r["n"]) for r in
-                       spark.read.parquet(mdir).groupBy("partition_id")
-                       .agg((F.max("chunk_id") + 1).alias("n")).collect()}
-                total = sum(cnt.values())
-                if total:
-                    step = max(1, total // max(2 * par, len(paths)))
-                    ranges = []
-                    for p in paths:
-                        n = cnt.get(int(os.path.basename(p)[5:10]))
-                        if not n:
-                            ranges.append((p, 0, 1 << 30))
-                            continue
-                        for s in range(0, n, step):
-                            ranges.append((p, s, min(s + step, n)))
-        pdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(ranges, numSlices=len(ranges)),
-            schema="path string, lo int, hi int")
+        ranges = _decode_ranges(spark, out_dir, paths, keep)
+        arrange = None
         if wanted_df is not None:
             # distributed pruning: inner-join the task list against the
-            # surviving-chunk arrays on the partition id parsed from the
-            # file name — fully-pruned partitions drop out of the task
-            # list here, before any task is scheduled
-            pid_expr = F.substring(
-                F.element_at(F.split(F.col("path"), "/"), -1),
-                6, 5).cast("int")
-            # no forced broadcast: AQE picks one when the survivor side is
-            # small; at extreme chunk counts the arrays stay executor-side
-            pdf = (pdf.withColumn("partition_id", pid_expr)
-                   .join(wanted_df, "partition_id")
-                   .select("path", "lo", "hi", "wanted"))
-        out = pdf.mapInArrow(decode, schema=schema)
+            # surviving-chunk arrays on each task's partition id —
+            # fully-pruned partitions drop out of the task list here,
+            # before any task is scheduled. No forced broadcast: AQE
+            # picks one when the survivor side is small; at extreme
+            # chunk counts the arrays stay executor-side.
+            pids = ",".join(str(_block_pid(p)) for p, _lo, _hi in ranges)
+
+            def arrange(frame):
+                return (frame.withColumn("partition_id", F.expr(
+                            f"element_at(array({pids}), int(id) + 1)"))
+                        .join(wanted_df, "partition_id")
+                        .select("id", "wanted"))
+        out = _run_tasks(spark, ranges, decode, schema, arrange)
     import datetime as _dt
     ntz = {f.name for f in schema.fields
            if f.dataType.typeName() == "timestamp_ntz"}
@@ -2128,41 +2194,33 @@ def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
     paths = (sorted(os.path.join(blk_dir, p) for p in os.listdir(blk_dir)
                     if p.endswith(".ssb")) if os.path.isdir(blk_dir) else [])
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .runtime import pin_worker_threads
-        pin_worker_threads()
+    def scan(path) -> Iterator[pa.RecordBatch]:
         from .codecs import block_span
-        for batch in batches:
-            for path in batch.column(0).to_pylist():
-                pid = int(os.path.basename(path)[5:10])
-                with open(path, "rb") as f:
-                    buf = f.read()
-                off, chunk_id = 0, 0
-                pids, cids, crcs = [], [], []
-                while off < len(buf):
-                    try:
-                        span = block_span(buf, off)
-                    except ValueError:   # corrupt magic: flag and stop
-                        pids.append(pid); cids.append(chunk_id); crcs.append(-1)
-                        break
-                    pids.append(pid)
-                    cids.append(chunk_id)
-                    crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
-                    off += span
-                    chunk_id += 1
-                yield pa.RecordBatch.from_pydict({
-                    "partition_id": pa.array(pids, pa.int32()),
-                    "chunk_id": pa.array(cids, pa.int32()),
-                    "crc_actual": pa.array(crcs, pa.int64()),
-                })
+        pid = _block_pid(path)
+        with open(path, "rb") as f:
+            buf = f.read()
+        off, chunk_id = 0, 0
+        pids, cids, crcs = [], [], []
+        while off < len(buf):
+            try:
+                span = block_span(buf, off)
+            except ValueError:   # corrupt magic: flag and stop
+                pids.append(pid); cids.append(chunk_id); crcs.append(-1)
+                break
+            pids.append(pid)
+            cids.append(chunk_id)
+            crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
+            off += span
+            chunk_id += 1
+        yield pa.RecordBatch.from_pydict({
+            "partition_id": pa.array(pids, pa.int32()),
+            "chunk_id": pa.array(cids, pa.int32()),
+            "crc_actual": pa.array(crcs, pa.int64()),
+        })
 
-    if not paths:
-        actual = spark.createDataFrame(
-            [], "partition_id int, chunk_id int, crc_actual long")
-    else:
-        pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-        actual = pdf.repartition(len(paths), "path").mapInArrow(
-            scan, schema="partition_id int, chunk_id int, crc_actual long")
+    report = "partition_id int, chunk_id int, crc_actual long"
+    actual = (_run_tasks(spark, paths, scan, report) if paths
+              else spark.createDataFrame([], report))
     joined = expected.withColumnRenamed("crc32", "crc_expected") \
         .join(actual, ["partition_id", "chunk_id"], "full_outer")
     return joined.withColumn(

@@ -38,8 +38,9 @@ def main():
     ap.add_argument("--prebucketed", action="store_true",
                     help="input dir is a bucketize_table() layout (one "
                          "bucket file per hash(conv_id) slice): encode "
-                         "shuffle-free, one task per file, parquet read + "
-                         "C++ sort + codecs all inside the Python kernel")
+                         "shuffle-free, files packed into at most one task "
+                         "per core, parquet read + C++ sort + codecs all "
+                         "inside the Python kernel")
     ap.add_argument("--verify", action="store_true",
                     help="decode + full bit-identity check after encode")
     ap.add_argument("--warmup", action="store_true",

@@ -102,8 +102,8 @@ def main():
     ap.add_argument("--high", type=int, default=32)
     ap.add_argument("--prebucketed", action="store_true",
                     help="encode the bucketize_table() layout shuffle-free "
-                         "(one task per bucket file; no JVM scan/shuffle/"
-                         "row IPC)")
+                         "(bucket files packed into at most one task per "
+                         "core; no JVM scan/shuffle/row IPC)")
     ap.add_argument("--workdir", default="/tmp/ss_scaling")
     ap.add_argument("--out", default=None,
                     help="output json (default BENCH/scaling.json; pass "
