@@ -26,6 +26,7 @@ A block (all columns of a chunk of rows) frames as:
 from __future__ import annotations
 
 import struct
+from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -164,6 +165,39 @@ def encode_block(batch: pa.RecordBatch | pa.Table, codecs: dict[str, str],
     return bytes(out)
 
 
+def _block_frames(buf: bytes, offset: int = 0
+                  ) -> tuple[list[tuple[str, int, int]], int]:
+    """The one header walk of the block frame at `offset`: each column's
+    (name, frame offset, frame length) in block order, and the block's
+    total byte span. Reads headers only, never a payload. Raises
+    ValueError on bad magic or when a header or a column frame runs past
+    the end of `buf` (a truncated block)."""
+    end = len(buf)
+
+    def need(at: int, n: int, what: str) -> None:
+        if at + n > end:
+            raise ValueError(f"truncated block: {what} at byte {at} runs "
+                             f"past the end of the buffer ({end} bytes)")
+
+    if buf[offset:offset + 4] != _MAGIC_BLOCK:
+        raise ValueError("bad block magic")
+    need(offset, 14, "block header")
+    n_cols = _U16.unpack_from(buf, offset + 4)[0]
+    off = offset + 14  # skip row_count (redundant with column frames)
+    frames = []
+    for _ in range(n_cols):
+        need(off, 2, "column header")
+        nlen = _U16.unpack_from(buf, off)[0]
+        need(off, 2 + nlen + 8, "column header")
+        name = buf[off + 2:off + 2 + nlen].decode("utf-8")
+        clen = _U64.unpack_from(buf, off + 2 + nlen)[0]
+        off += 2 + nlen + 8
+        need(off, clen, f"column frame {name!r}")
+        frames.append((name, off, clen))
+        off += clen
+    return frames, off - offset
+
+
 def decode_block(buf: bytes, offset: int = 0,
                  columns: list[str] | None = None,
                  missing_ok: bool = False) -> tuple[pa.Table, int]:
@@ -177,60 +211,51 @@ def decode_block(buf: bytes, offset: int = 0,
     the additive-schema-evolution read path (blocks encoded before a
     column existed; the caller fills NULLs). Bytes consumed always
     covers the whole block."""
-    if buf[offset:offset + 4] != _MAGIC_BLOCK:
-        raise ValueError("bad block magic")
-    n_cols = _U16.unpack_from(buf, offset + 4)[0]
-    off = offset + 6 + 8  # skip row_count (redundant with column frames)
+    frames, span = _block_frames(buf, offset)
     wanted = None if columns is None else set(columns)
     names, arrays = [], []
-    for _ in range(n_cols):
-        nlen = _U16.unpack_from(buf, off)[0]
-        off += 2
-        name = buf[off:off + nlen].decode("utf-8")
-        off += nlen
-        clen = _U64.unpack_from(buf, off)[0]
-        off += 8
+    for name, off, clen in frames:
         if wanted is None or name in wanted:
             arr, used = decode_column(buf, off)
-            assert used == clen, f"column frame length mismatch for {name}"
+            if used != clen:
+                raise ValueError(f"column frame length mismatch for {name!r}: "
+                                 f"header says {clen}, frame holds {used}")
             names.append(name)
             arrays.append(arr)
-        off += clen
     if wanted is not None and len(names) < len(wanted) and not missing_ok:
         missing = sorted(wanted - set(names))
         raise KeyError(f"columns {missing} not present in block")
-    return pa.table(dict(zip(names, arrays))), off - offset
+    return pa.table(dict(zip(names, arrays))), span
 
 
 def block_span(buf: bytes, offset: int = 0) -> int:
     """Total byte length of the block frame at `offset`, found by walking
     the per-column length headers only — the cheap skip used by chunk
     pruning (zone maps) and the crc audit."""
-    if buf[offset:offset + 4] != _MAGIC_BLOCK:
-        raise ValueError("bad block magic")
-    n_cols = _U16.unpack_from(buf, offset + 4)[0]
-    off = offset + 14
-    for _ in range(n_cols):
-        nlen = _U16.unpack_from(buf, off)[0]
-        off += 2 + nlen
-        clen = _U64.unpack_from(buf, off)[0]
-        off += 8 + clen
-    return off - offset
+    return _block_frames(buf, offset)[1]
+
+
+def iter_block_spans(buf: bytes) -> Iterator[tuple[int, int]]:
+    """(offset, span) of each block in a block file's bytes, in chunk
+    order — the one walk over a file that decode and the crc audit
+    share. Raises ValueError at the first bad or truncated block."""
+    off = 0
+    while off < len(buf):
+        span = block_span(buf, off)
+        yield off, span
+        off += span
+
+
+def block_column_sizes(buf: bytes, offset: int = 0) -> dict[str, int]:
+    """Encoded byte size of each column frame in the block at `offset`."""
+    return {name: clen for name, _off, clen in _block_frames(buf, offset)[0]}
 
 
 def block_codec_report(buf: bytes, offset: int = 0) -> dict[str, str]:
     """Which codec each column of a block used (for lineage/manifest);
     entropy-staged frames report as e.g. "tokdict+zstd"."""
-    n_cols = _U16.unpack_from(buf, offset + 4)[0]
-    off = offset + 14
     report = {}
-    for _ in range(n_cols):
-        nlen = _U16.unpack_from(buf, off)[0]
-        off += 2
-        name = buf[off:off + nlen].decode("utf-8")
-        off += nlen
-        clen = _U64.unpack_from(buf, off)[0]
-        off += 8
+    for name, off, _clen in _block_frames(buf, offset)[0]:
         codec = CODEC_NAMES[buf[off + 4]]
         flags = buf[off + 5]
         if flags & _FLAG_ENTROPY:
@@ -238,5 +263,4 @@ def block_codec_report(buf: bytes, offset: int = 0) -> dict[str, str]:
             pstart = off + 14 + ((n + 7) // 8 if flags & _FLAG_HAS_NULLS else 0) + 8
             codec = f"{codec}+{ENTROPY_NAMES[buf[pstart]]}"
         report[name] = codec
-        off += clen
     return report

@@ -1,7 +1,7 @@
 """Distributed encode/decode pipeline.
 
 Encode: repartition by (conv_id, salt) — salting splits skewed
-mega-conversations — sort within partitions by (conv_id, turn_idx), then a
+mega-conversations — sort within partitions by the sort keys, then a
 mapInArrow kernel encodes 64k-row chunks per column (selector-chosen codec)
 into block files, emitting lineage/metrics manifest rows and per-partition
 checkpoint markers so a killed job resumes without re-encoding completed
@@ -14,9 +14,9 @@ external sort are the checkpoint precedent (reference:
 supersonic/cursor/core/sort.cc:324-366); Spy/benchmark listeners are the
 per-operator metrics precedent (reference: supersonic/cursor/core/spy.h:36-57).
 
-At 100 TB scale the only shuffles are (1) the per-conversation count used
-for skew detection (map-side partial agg, tiny output) and (2) the single
-repartition by (conv_id, salt). Everything after is partition-local.
+At 100 TB scale the only shuffle is the single repartition by
+(xxhash64(conv_id), salt); the salt is row-local, so skew needs no
+pre-count. Everything after is partition-local.
 """
 
 from __future__ import annotations
@@ -35,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
-from .codecs import (block_codec_report, decode_block, encode_block,
-                     reference_column_size)
+from .codecs import (block_codec_report, block_column_sizes, decode_block,
+                     encode_block, iter_block_spans, reference_column_size)
 from .selector import choose_codecs
 
 MANIFEST_SCHEMA = StructType([
@@ -234,12 +234,6 @@ class EncodeConfig:
     # cost (the saved block I/O pays for the compressor); "zstd" trades ~5%
     # throughput for ~17.5%; None = lightweight codecs only.
     entropy: str | None = "lz4"
-    # sort partitions inside the Arrow kernel (C++ sort_indices, overlaps
-    # the shuffle read and scales with workers) instead of a JVM
-    # sortWithinPartitions — measured: the Tungsten string-key sort is the
-    # dominant non-scaling CPU stage on many-core single-box runs. Costs
-    # one whole-partition buffer in the worker (size partitions to memory).
-    sort_in_kernel: bool = False
     # overlap Arrow IPC with codec compute inside each Python worker: a
     # bounded feeder thread drains the JVM socket into a small queue
     # while the kernel encodes the previous batch. Without it the worker
@@ -247,27 +241,6 @@ class EncodeConfig:
     # transfer was profiled as the largest non-overlapped stage). Value =
     # max queued batches; 0 disables.
     prefetch_batches: int = 2
-    # derive the skew salt row-locally from turn_idx instead of a
-    # pre-count scan: rows with turn_idx < salt_threshold keep salt 0, so
-    # every conversation shorter than the threshold stays contiguous, and
-    # only the TAIL of a mega-conversation splits into salt_block slices —
-    # the same partition-size bound as the pre-count design with zero
-    # extra jobs. The pre-count path (groupBy count + broadcast join) was
-    # profiled as a ~3.5 s job whose cost is FLAT in core count (driver/
-    # scheduling bound), i.e. pure scaling-efficiency loss; it remains
-    # available for A/B as skew_precount=True.
-    skew_precount: bool = False
-    # shuffle + sort on xxhash64(conv_id) (one fixed-width 8-byte key)
-    # instead of the string conv_id itself. The Tungsten string-key sort
-    # was measured as the dominant non-scaling stage (BENCH/BASELINE.md
-    # round-2 profile: 0.74 at 2v8, memory-bus-bound); a long key sorts
-    # via the 8-byte prefix with no record-payload comparisons. A 64-bit
-    # hash collision only interleaves two conversations' rows inside one
-    # partition — decode order is restored from (conv_id, turn_idx) keys,
-    # never from block order, so collisions degrade RLE run lengths for
-    # those two conversations (a few bytes), NEVER correctness. Expected
-    # collisions at 10^12 turns / ~10^10 convs: ~3 pairs.
-    fixed_width_shuffle_key: bool = True
     # bloom-filter chunk stats for point lookups on NON-sort columns.
     # Zone maps only prune on sorted/clustered columns (min/max of an
     # unsorted column spans everything); a small per-(chunk, column)
@@ -285,9 +258,11 @@ class EncodeConfig:
 
     def config_hash(self, fingerprint: str) -> str:
         blob = json.dumps({
-            "sort_in_kernel": self.sort_in_kernel,
-            "fixed_width_shuffle_key": self.fixed_width_shuffle_key,
-            "skew_precount": self.skew_precount,
+            # retired knobs, pinned to their last defaults so the hash
+            # (and every resume marker keyed by it) stays byte-stable
+            "sort_in_kernel": False,
+            "fixed_width_shuffle_key": True,
+            "skew_precount": False,
             "n_partitions": self.n_partitions, "chunk_rows": self.chunk_rows,
             "salt_threshold": self.salt_threshold, "salt_block": self.salt_block,
             "sort_keys": list(self.sort_keys),
@@ -391,8 +366,9 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
     resume marker, in that order: the marker commits the other two.
     Returns False when the marker already existed (resumed, nothing
     encoded). Shared by the shuffle path (_encoder: pid = Spark
-    partition) and the pre-bucketed path (encode_table_prebucketed:
-    pid = bucket-file index)."""
+    partition, rows arrive sorted) and the pre-bucketed path
+    (encode_table_prebucketed: pid = bucket-file index, the whole file
+    is sorted here by `sort_keys`)."""
     ckpt_dir = os.path.join(out_dir, "checkpoints")
     blk_dir = os.path.join(out_dir, "blocks")
     man_dir = os.path.join(out_dir, "manifest")
@@ -452,7 +428,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                 # actual per-frame codec incl. "+zstd" suffix where the
                 # outer stage was kept (it self-disables per frame)
                 applied = block_codec_report(buf)
-                per_col_out = _per_column_sizes(buf, chunk.schema.names)
+                per_col_out = block_column_sizes(buf)
                 for name in chunk.schema.names:
                     col = chunk.column(name).combine_chunks()
                     (zmin, zmax, zmin_s, zmax_s,
@@ -477,8 +453,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                 chunk_id += 1
 
         if sort_keys:
-            # buffer the whole partition, one C++ sort, then chunk —
-            # replaces the JVM sortWithinPartitions
+            # buffer the whole bucket file, one C++ sort, then chunk
             buffered = list(batches)
             if buffered:
                 tbl = pa.Table.from_batches(buffered)
@@ -534,7 +509,6 @@ def _report(done: list[tuple[int, str, bool]]) -> pa.RecordBatch:
 
 def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
              chunk_rows: int, entropy: str | None = None,
-             sort_keys: tuple[str, ...] | None = None,
              prefetch: int = 2,
              bloom_cols: tuple[str, ...] = (),
              bloom_bits: int = 16384, bloom_hashes: int = 5):
@@ -546,29 +520,13 @@ def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
         batches = _prefetched(batches, prefetch)
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
+        # sort_keys=None: salted_repartition already sorted the rows
         encoded = _encode_partition_stream(
             pid, batches, out_dir, cfg_hash, overrides, chunk_rows,
-            entropy, sort_keys, bloom_cols, bloom_bits, bloom_hashes)
+            entropy, None, bloom_cols, bloom_bits, bloom_hashes)
         yield _report([(pid, _fragment_name(pid, cfg_hash), encoded)])
 
     return run
-
-
-def _per_column_sizes(block_buf: bytes, names: list[str]) -> dict[str, int]:
-    """Encoded byte size per column inside one block frame."""
-    import struct
-    n_cols = struct.unpack_from("<H", block_buf, 4)[0]
-    off = 14
-    out = {}
-    for _ in range(n_cols):
-        nlen = struct.unpack_from("<H", block_buf, off)[0]
-        off += 2
-        name = block_buf[off:off + nlen].decode("utf-8")
-        off += nlen
-        clen = struct.unpack_from("<Q", block_buf, off)[0]
-        off += 8 + clen
-        out[name] = clen
-    return out
 
 
 def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
@@ -597,50 +555,37 @@ def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
     return pa.RecordBatch.from_pydict(arrays)
 
 
-def salted_repartition(df: DataFrame, cfg: EncodeConfig,
-                       sort_within: bool = True) -> DataFrame:
-    """Explicit skew handling: conversations larger than salt_threshold get
-    a secondary split key so one mega-conversation spreads over multiple
-    partitions; everyone else keeps salt 0. Decode order is restored from
-    (conv_id, turn_idx), never from partition order."""
+def salted_repartition(df: DataFrame, cfg: EncodeConfig) -> DataFrame:
+    """The shuffle-encode plan: one exchange, then a sort within each
+    partition by cfg.sort_keys. Decode order is restored from the keys,
+    never from partition order.
+
+    Skew: the salt is row-local. Rows with order_key < salt_threshold
+    keep salt 0, so every conversation shorter than the threshold stays
+    in one partition; only the tail of a mega-conversation splits into
+    salt_block slices. No pre-count scan, no join.
+
+    The exchange and the sort run on xxhash64(conv_key), one 8-byte key,
+    instead of the (string) key itself; conv_key in sort_keys sorts by
+    that hash too. The Tungsten string-key sort was measured as the
+    dominant non-scaling stage (BENCH/BASELINE.md round-2 profile); a
+    long key sorts by its 8-byte prefix with no payload comparisons. A
+    64-bit collision only interleaves two conversations' rows inside one
+    partition, which costs RLE run length, never correctness. Expected
+    collisions at 10^12 turns / ~10^10 convs: ~3 pairs."""
     conv, order = cfg.conv_key, cfg.order_key
     if order not in df.columns:
         # no secondary order column -> skew salting unavailable; single key
-        out = df.repartition(cfg.n_partitions, F.col(conv))
-        return out.sortWithinPartitions(*cfg.sort_keys) if sort_within else out
-    if cfg.skew_precount:
-        counts = df.groupBy(conv).count()
-        skewed = counts.filter(F.col("count") > cfg.salt_threshold).select(conv)
-        df2 = df.join(F.broadcast(skewed.withColumn("_skew", F.lit(True))),
-                      on=conv, how="left")
-        df2 = df2.withColumn(
-            "_salt",
-            F.when(F.col("_skew").isNotNull(),
-                   (F.col(order) / F.lit(cfg.salt_block)).cast("int"))
-             .otherwise(F.lit(0)))
-    else:
-        # row-local salt (see EncodeConfig.skew_precount): head of every
-        # conversation -> salt 0; tail beyond the threshold -> one salt
-        # per salt_block slice. No pre-count scan, no broadcast join.
-        df2 = df.withColumn(
-            "_salt",
-            F.when(F.col(order) < F.lit(cfg.salt_threshold), F.lit(0))
-             .otherwise(
-                 (F.floor((F.col(order) - F.lit(cfg.salt_threshold))
-                          / F.lit(cfg.salt_block)) + 1).cast("int")))
-    if cfg.fixed_width_shuffle_key and sort_within:
-        # exchange + Tungsten sort on an 8-byte key: the sort prefix IS
-        # the whole primary key, so ordering never touches the string
-        # payload (see EncodeConfig.fixed_width_shuffle_key). Conversations
-        # stay contiguous (64-bit hash); decode order comes from the keys.
-        df2 = df2.withColumn("_ck", F.xxhash64(F.col(conv)))
-        out = df2.repartition(cfg.n_partitions, F.col("_ck"), F.col("_salt"))
-        out = out.sortWithinPartitions(F.col("_ck"), F.col(order))
-        return out.drop("_skew", "_salt", "_ck")
-    out = df2.repartition(cfg.n_partitions, F.col(conv), F.col("_salt"))
-    if sort_within:
-        out = out.sortWithinPartitions(*cfg.sort_keys)
-    return out.drop("_skew", "_salt")
+        return (df.repartition(cfg.n_partitions, F.col(conv))
+                .sortWithinPartitions(*cfg.sort_keys))
+    salt = (F.when(F.col(order) < F.lit(cfg.salt_threshold), F.lit(0))
+             .otherwise((F.floor((F.col(order) - F.lit(cfg.salt_threshold))
+                                 / F.lit(cfg.salt_block)) + 1).cast("int")))
+    arranged = (df.withColumn("_salt", salt)
+                  .withColumn("_ck", F.xxhash64(F.col(conv)))
+                  .repartition(cfg.n_partitions, F.col("_ck"), F.col("_salt")))
+    keys = [F.col("_ck") if k == conv else F.col(k) for k in cfg.sort_keys]
+    return arranged.sortWithinPartitions(*keys).drop("_salt", "_ck")
 
 
 def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -655,17 +600,13 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
         raise ValueError(
             f"encode keys {missing} not in input columns {df.columns}; "
             "set conv_key/sort_keys/order_key in EncodeConfig")
-    arranged = salted_repartition(df, cfg,
-                                  sort_within=not cfg.sort_in_kernel)
-    return _encode_arranged(
-        spark, df, arranged, out_dir, cfg, fingerprint,
-        kernel_sort_keys=cfg.sort_keys if cfg.sort_in_kernel else None)
+    return _encode_arranged(spark, df, salted_repartition(df, cfg), out_dir,
+                            cfg, fingerprint)
 
 
 def _encode_arranged(spark: SparkSession, df: DataFrame,
                      arranged: DataFrame, out_dir: str, cfg: EncodeConfig,
                      fingerprint: str,
-                     kernel_sort_keys: tuple[str, ...] | None = None,
                      extra_meta: dict | None = None) -> DataFrame:
     """Shuffle-path encode: write meta.json, run the chunking/codec kernel
     over an already-arranged DataFrame (caller controls partitioning and
@@ -677,7 +618,6 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
     tasks = arranged.mapInArrow(
         _encoder(out_dir, cfg_hash, cfg.codec_overrides, cfg.chunk_rows,
                  entropy=cfg.entropy,
-                 sort_keys=kernel_sort_keys,
                  prefetch=cfg.prefetch_batches,
                  bloom_cols=cfg.bloom_cols, bloom_bits=cfg.bloom_bits,
                  bloom_hashes=cfg.bloom_hashes),
@@ -1298,8 +1238,7 @@ def _normalize_arrow_units(tbl: pa.Table) -> pa.Table:
 
 def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                              out_dir: str, cfg: EncodeConfig | None = None,
-                             fingerprint: str = "",
-                             per_file_fingerprint: bool = True) -> DataFrame:
+                             fingerprint: str = "") -> DataFrame:
     """Shuffle-free encode over a PRE-BUCKETED parquet layout: each task
     encodes a group of bucket files; the kernel reads each file
     in-process with pyarrow, sorts by sort_keys (Arrow C++ sort_indices),
@@ -1327,9 +1266,8 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     task killed partway through its group leaves the files it finished
     committed; a re-run schedules only the rest.
 
-    per_file_fingerprint=True (default) keys each file's resume marker by
-    (config, file name, size, mtime) instead of one whole-input
-    fingerprint — INCREMENTAL ENCODE: when the bucketed table grows,
+    Each file's resume marker is keyed by (config, file name, size,
+    mtime) — INCREMENTAL ENCODE: when the bucketed table grows,
     re-running encodes only the new/changed bucket files and resumes
     every untouched one. Assumes an append-only layout (existing files
     keep their sorted position; new files sort after them, as Spark
@@ -1351,15 +1289,12 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
         schema, cfg, cfg_hash, fingerprint, len(paths), prebucketed=True))
 
     stats = [os.stat(p) for p in paths]
-    if per_file_fingerprint:
-        # nanosecond mtime: a bucket file rewritten within the same
-        # second with unchanged size (deterministic re-bucketize) must
-        # NOT resume stale blocks
-        fps = [hashlib.md5(f"{cfg_hash}:{os.path.basename(p)}:{st.st_size}:"
-                           f"{st.st_mtime_ns}".encode()).hexdigest()[:12]
-               for p, st in zip(paths, stats)]
-    else:
-        fps = [cfg_hash] * len(paths)
+    # nanosecond mtime: a bucket file rewritten within the same second
+    # with unchanged size (deterministic re-bucketize) must NOT resume
+    # stale blocks
+    fps = [hashlib.md5(f"{cfg_hash}:{os.path.basename(p)}:{st.st_size}:"
+                       f"{st.st_mtime_ns}".encode()).hexdigest()[:12]
+           for p, st in zip(paths, stats)]
 
     def _listing(sub):
         d = os.path.join(out_dir, sub)
@@ -2010,7 +1945,6 @@ def decode_table(spark: SparkSession, out_dir: str,
         # pruning passes the partition's surviving chunk ids, the set
         # path closes over `keep`
         import pyarrow.compute as pc
-        from .codecs import block_span
         from pyspark.sql.pandas.types import to_arrow_type
         target = [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
 
@@ -2047,28 +1981,23 @@ def decode_table(spark: SparkSession, out_dir: str,
                                                         set())
         with open(path, "rb") as f:
             buf = f.read()
-        off, chunk_id = 0, 0
-        while off < len(buf):
+        # pruned chunks cost a header walk; a truncated or corrupt
+        # header raises, failing the task rather than dropping rows
+        for chunk_id, (off, _span) in enumerate(iter_block_spans(buf)):
             if chunk_id >= hi_c:
                 break                   # past this task's range
             if chunk_id < lo_c or (wanted is not None
                                    and chunk_id not in wanted):
-                off += block_span(buf, off)   # pruned: header walk
-                chunk_id += 1
                 continue
             if ksafe:
                 try:
                     # phase 1: predicate columns only
-                    ptbl, span = decode_block(buf, off, columns=pred_cols)
+                    ptbl, _ = decode_block(buf, off, columns=pred_cols)
                     mask = kmask(ptbl)
                     if not pc.any(mask).as_py():
-                        off += span        # chunk has no matches:
-                        chunk_id += 1      # text never decoded
-                        continue
+                        continue   # no matches: text never decoded
                     full, _ = decode_block(buf, off, columns=columns,
                                            missing_ok=True)
-                    off += span
-                    chunk_id += 1
                     yield from conform(full).filter(mask).to_batches()
                     continue
                 except (KeyError, pa.lib.ArrowInvalid,
@@ -2076,10 +2005,8 @@ def decode_table(spark: SparkSession, out_dir: str,
                     pass   # e.g. evolved block lacking the pred
                     # column, or an uncastable literal: fall back
                     # to full decode + Spark residual filter
-            tbl, used = decode_block(buf, off, columns=columns,
-                                     missing_ok=True)
-            off += used
-            chunk_id += 1
+            tbl, _ = decode_block(buf, off, columns=columns,
+                                  missing_ok=True)
             yield from conform(tbl).to_batches()
 
     if not paths:
@@ -2185,8 +2112,10 @@ def manifest_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
     """Integrity audit: recompute each chunk's crc32 from the block files
     and compare against the lineage manifest. Returns a DataFrame of
-    (partition_id, chunk_id, ok, crc_actual, crc_expected); corrupt or
-    missing chunks have ok = false. Distributed: one task per block file."""
+    (partition_id, chunk_id, ok, crc_actual, crc_expected); corrupt,
+    truncated or missing chunks have ok = false (the walk stops at the
+    first bad block header, which reports crc -1). Distributed: one task
+    per block file."""
     manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
     expected = (manifest.select("partition_id", "chunk_id", "crc32")
                 .distinct())
@@ -2195,26 +2124,18 @@ def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
                     if p.endswith(".ssb")) if os.path.isdir(blk_dir) else [])
 
     def scan(path) -> Iterator[pa.RecordBatch]:
-        from .codecs import block_span
-        pid = _block_pid(path)
         with open(path, "rb") as f:
             buf = f.read()
-        off, chunk_id = 0, 0
-        pids, cids, crcs = [], [], []
-        while off < len(buf):
-            try:
-                span = block_span(buf, off)
-            except ValueError:   # corrupt magic: flag and stop
-                pids.append(pid); cids.append(chunk_id); crcs.append(-1)
-                break
-            pids.append(pid)
-            cids.append(chunk_id)
-            crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
-            off += span
-            chunk_id += 1
+        crcs = []
+        try:
+            for off, span in iter_block_spans(buf):
+                crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
+        except ValueError:   # bad magic or truncated: flag and stop
+            crcs.append(-1)
         yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array(pids, pa.int32()),
-            "chunk_id": pa.array(cids, pa.int32()),
+            "partition_id": pa.array([_block_pid(path)] * len(crcs),
+                                     pa.int32()),
+            "chunk_id": pa.array(range(len(crcs)), pa.int32()),
             "crc_actual": pa.array(crcs, pa.int64()),
         })
 

@@ -253,6 +253,35 @@ def test_block_roundtrip():
     assert out.equals(tbl)
 
 
+def test_truncated_block_raises_value_error():
+    """Every cut of a block, inside a header or inside a payload, is a
+    ValueError from the header walk (never a struct.error, never a span
+    past the end of the buffer)."""
+    from supersonic_spark.codecs import block_span, iter_block_spans
+    tbl = pa.table({"k": list(range(200)),
+                    "s": [f"row {i % 13}" for i in range(200)]})
+    buf = encode_block(tbl, choose_codecs(tbl), entropy="lz4")
+    assert list(iter_block_spans(buf + buf)) == [(0, len(buf)),
+                                                 (len(buf), len(buf))]
+    for cut in range(1, len(buf)):
+        with pytest.raises(ValueError):
+            block_span(buf[:cut])
+        with pytest.raises(ValueError):
+            decode_block(buf[:cut])
+        with pytest.raises(ValueError):
+            list(iter_block_spans(buf + buf[:cut]))
+
+
+def test_frame_length_mismatch_raises_value_error():
+    tbl = pa.table({"k": list(range(50))})
+    buf = bytearray(encode_block(tbl, choose_codecs(tbl)))
+    at = 14 + 2 + len("k")                  # the column's u64 frame length
+    clen = int.from_bytes(buf[at:at + 8], "little")
+    buf[at:at + 8] = (clen - 1).to_bytes(8, "little")
+    with pytest.raises(ValueError, match="length mismatch"):
+        decode_block(bytes(buf))
+
+
 # --- tokdict ------------------------------------------------------------------
 
 @pytest.mark.parametrize("n", SWEEP_SIZES)

@@ -207,3 +207,36 @@ def test_point_lookup_schedules_only_surviving_files(spark, tmp_path):
     dec = decode_table(spark, out, predicate=("conv_id", key, key))
     assert dec.rdd.getNumPartitions() == 1
     assert _same_rows(dec, src.filter(F.col("conv_id") == key))
+
+
+def test_shuffle_encode_honours_sort_keys(spark, tmp_path):
+    """The shuffle plan sorts each partition by EncodeConfig.sort_keys,
+    not by (conv_key, order_key): with a leading non-key sort column the
+    zone maps on it rise chunk by chunk inside every partition."""
+    from supersonic_spark.pipeline import EncodeConfig, encode_table
+    rows = [(f"u{i % 37}", i // 37, i, (i * 7919) % 5003)
+            for i in range(3000)]
+    df = spark.createDataFrame(
+        rows, "user_id string, turn_idx int, event_id long, t long")
+    out = str(tmp_path / "enc")
+    man = encode_table(spark, df, out, EncodeConfig(
+        n_partitions=3, chunk_rows=100, conv_key="user_id",
+        sort_keys=("t", "event_id")))
+    zones: dict[int, list] = {}
+    for r in (man.filter(F.col("column") == "t")
+              .select("partition_id", "chunk_id", "vmin_num", "vmax_num")
+              .collect()):
+        zones.setdefault(r["partition_id"], []).append(
+            (r["chunk_id"], r["vmin_num"], r["vmax_num"]))
+    assert sum(len(z) for z in zones.values()) > 3 * len(zones)
+    for z in zones.values():
+        z.sort()
+        assert all(lo <= hi for _c, lo, hi in z)
+        assert all(a[2] <= b[1] for a, b in zip(z, z[1:])), z
+
+
+def test_default_config_hash_is_pinned():
+    """Deleting knobs must not move the hash that keys resume markers:
+    tables encoded before stay resumable."""
+    from supersonic_spark.pipeline import EncodeConfig
+    assert EncodeConfig().config_hash("fp") == "9b570d3af25a"

@@ -158,6 +158,36 @@ def test_validate_blocks_detects_corruption(spark, small_df, tmp_path):
     assert bad >= 1
 
 
+def test_truncated_block_file_fails_audit_and_decode(spark, tmp_path):
+    """A block file cut inside a block header or inside a column payload
+    is reported by validate_blocks (ok = false, not a failed job) and
+    makes decode_table raise instead of returning rows."""
+    from supersonic_spark.codecs import iter_block_spans
+    from supersonic_spark.codecs.framing import _block_frames
+    from supersonic_spark.pipeline import validate_blocks
+    df = generate_transcripts(spark, n_convs=60, seed=5, mega_every=0)
+    out = str(tmp_path / "enc")
+    encode_table(spark, df, out, EncodeConfig(n_partitions=2,
+                                              chunk_rows=256))
+    blk = os.path.join(out, "blocks",
+                       sorted(os.listdir(os.path.join(out, "blocks")))[0])
+    whole = open(blk, "rb").read()
+    spans = list(iter_block_spans(whole))
+    last_off = spans[-1][0]
+    frames, _ = _block_frames(whole, last_off)
+    _name, foff, flen = frames[-1]
+    for cut in (last_off + 16, foff + flen // 2):   # header, payload
+        with open(blk, "wb") as f:
+            f.write(whole[:cut])
+        audit = {(r["partition_id"], r["chunk_id"]): r["ok"]
+                 for r in validate_blocks(spark, out).collect()}
+        pid = int(os.path.basename(blk)[5:10])
+        assert audit[(pid, len(spans) - 1)] is False
+        assert sum(not ok for ok in audit.values()) == 1
+        with pytest.raises(Exception, match="truncated block"):
+            decode_table(spark, out).collect()
+
+
 def test_manifest_summary(spark, small_df, tmp_path):
     from supersonic_spark.pipeline import manifest_summary
     out = str(tmp_path / "enc7")

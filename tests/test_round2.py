@@ -220,19 +220,6 @@ def test_connected_components_shapes(spark):
     assert reps == {1: 4, 10: 2}
 
 
-def test_sort_in_kernel_roundtrip(spark, tmp_path):
-    from supersonic_spark.datagen import generate_transcripts
-    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
-                                           encode_table,
-                                           roundtrip_mismatch_count)
-    df = generate_transcripts(spark, n_convs=60, seed=9, mega_every=0)
-    d = str(tmp_path / "enc_sik")
-    encode_table(spark, df, d,
-                 EncodeConfig(n_partitions=4, sort_in_kernel=True),
-                 fingerprint="sik-test")
-    assert roundtrip_mismatch_count(df, decode_table(spark, d)) == 0
-
-
 def test_pack_sequences_ungrouped_scalable_path(spark):
     from supersonic_spark.text.curate import pack_sequences
     docs = [(i, " ".join(["w"] * (5 + i % 7))) for i in range(200)]

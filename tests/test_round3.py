@@ -536,19 +536,6 @@ def test_decode_stream_reads_new_blocks_incrementally(spark, tmp_path):
     assert got == want
 
 
-# --- DOT plan renderer ------------------------------------------------------
-
-def test_plan_dot_renders_tree(spark, tmp_path):
-    from supersonic_spark.plans.dot import plan_dot, write_plan_dot
-    df = (spark.range(100).groupBy((F.col("id") % 5).alias("k"))
-          .agg(F.sum("id").alias("s")))
-    dot = plan_dot(df, title="agg")
-    assert dot.startswith('digraph "agg"')
-    assert "HashAggregate" in dot and "->" in dot
-    p = write_plan_dot(df, str(tmp_path / "p.dot"), title="agg")
-    assert open(p).read() == dot
-
-
 # --- row-local skew salt ----------------------------------------------------
 
 def test_row_local_salt_splits_only_mega_tails(spark):
@@ -557,7 +544,6 @@ def test_row_local_salt_splits_only_mega_tails(spark):
     rows += [("mega", i, f"m{i}") for i in range(300)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     cfg = EncodeConfig(n_partitions=4, salt_threshold=100, salt_block=64)
-    assert cfg.skew_precount is False
     arr = salted_repartition(df, cfg)
     pid = (arr.withColumn("_p", F.spark_partition_id())
            .groupBy("conv_id").agg(F.countDistinct("_p").alias("np")))

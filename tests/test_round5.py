@@ -349,7 +349,11 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
     encode_table_zordered(spark, df, z_out, cfg,
                           zorder_keys=("user_id", "t"), fingerprint="z5")
     s_out = str(tmp_path / "enc_s")
-    encode_table(spark, df, s_out, cfg, fingerprint="s5")
+    # the conv-clustered layout compared against below
+    s_cfg = EncodeConfig(n_partitions=4, chunk_rows=512, conv_key="user_id",
+                         order_key="event_id",
+                         sort_keys=("user_id", "event_id"))
+    encode_table(spark, df, s_out, s_cfg, fingerprint="s5")
 
     def kept(out, preds):
         keep = _pruned_chunks(spark, out, preds)
@@ -677,7 +681,7 @@ def test_ntz_datetime_pruning_non_utc_session(spark, tmp_path):
     out = str(tmp_path / "enc_ntz")
     cfg = EncodeConfig(n_partitions=2, chunk_rows=128,
                        conv_key="event_id", order_key="event_id",
-                       sort_keys=("ts", "event_id"), sort_in_kernel=True)
+                       sort_keys=("ts", "event_id"))
     encode_table(spark, df, out, cfg, fingerprint="ntz")
 
     lo = dt.datetime(2024, 1, 5, 0, 0, 0)

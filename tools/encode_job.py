@@ -26,12 +26,6 @@ def main():
                          "(changed input invalidates checkpoints)")
     ap.add_argument("--n-partitions", type=int, default=None)
     ap.add_argument("--chunk-rows", type=int, default=65536)
-    ap.add_argument("--sort-in-kernel", action="store_true",
-                    help="partition sort inside the Arrow kernel instead of "
-                         "JVM sortWithinPartitions (see EncodeConfig)")
-    ap.add_argument("--string-sort-key", action="store_true",
-                    help="disable the fixed-width xxhash64 shuffle/sort key "
-                         "(A/B baseline: sort on the string conv_id)")
     ap.add_argument("--no-prefetch", action="store_true",
                     help="disable the IPC/compute prefetch overlap in the "
                          "encode kernel (A/B baseline)")
@@ -72,8 +66,6 @@ def main():
 
     cfg = EncodeConfig(n_partitions=args.n_partitions or 2 * cores,
                        chunk_rows=args.chunk_rows,
-                       sort_in_kernel=args.sort_in_kernel,
-                       fixed_width_shuffle_key=not args.string_sort_key,
                        prefetch_batches=0 if args.no_prefetch else 2)
     def encode(dest, fp):
         if args.prebucketed:
