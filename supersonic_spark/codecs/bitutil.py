@@ -134,6 +134,26 @@ def unpack_uints_sliced(buf: bytes, n: int, width: int) -> np.ndarray:
     return ob.view("<u8").ravel()
 
 
+_SLICED = 0x80   # width-byte flag: the payload is byte-sliced
+
+
+def pack_uints_tagged(vals: np.ndarray, width: int) -> tuple[int, bytes]:
+    """(width byte, payload): the one packing decision of the integer
+    codecs. Width >= 8 uses the byte-sliced layout (same size, far less
+    memory traffic) and sets the width byte's high bit, so frames from
+    before the sliced layout stay self-describing and decodable."""
+    if width >= 8:
+        return width | _SLICED, pack_uints_sliced(vals, width)
+    return width, pack_uints(vals, width)
+
+
+def unpack_uints_tagged(buf: bytes, n: int, wbyte: int) -> np.ndarray:
+    """Inverse of pack_uints_tagged; returns uint64 array of length n.
+    Both layouts hold n * width bits, ceil(n * width / 8) bytes."""
+    un = unpack_uints_sliced if wbyte & _SLICED else unpack_uints
+    return un(buf, n, wbyte & ~_SLICED)
+
+
 def zigzag_encode(vals: np.ndarray) -> np.ndarray:
     """Map signed int64 -> uint64 so small-magnitude values stay small."""
     v = np.ascontiguousarray(vals, dtype=np.int64)
@@ -152,11 +172,7 @@ def pack_ints_block(vals: np.ndarray) -> bytes:
     dict/rle/fsst/tokdict payloads for index and length arrays. Keeps the
     input's narrow dtype through the subtraction when the range allows —
     int64 promotion of multi-million-token index arrays was a top
-    memory-bandwidth consumer.
-
-    width >= 8 payloads use the byte-sliced layout (same size, far less
-    memory traffic) and mark it with the width byte's high bit so old
-    blocks remain self-describing and decodable.
+    memory-bandwidth consumer. The width byte is pack_uints_tagged's.
     """
     v = np.ascontiguousarray(vals)
     n = len(v)
@@ -171,10 +187,8 @@ def pack_ints_block(vals: np.ndarray) -> bytes:
         deltas = (v - np.int64(ref)).view(np.uint64)
     else:
         deltas = (v.astype(np.int64) - ref).view(np.uint64)
-    if width >= 8:
-        return (_I64.pack(ref) + _U64.pack(n) + bytes([width | 0x80])
-                + pack_uints_sliced(deltas, width))
-    return _I64.pack(ref) + _U64.pack(n) + bytes([width]) + pack_uints(deltas, width)
+    wbyte, payload = pack_uints_tagged(deltas, width)
+    return _I64.pack(ref) + _U64.pack(n) + bytes([wbyte]) + payload
 
 
 def unpack_ints_block(buf: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
@@ -182,13 +196,7 @@ def unpack_ints_block(buf: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
     ref = _I64.unpack_from(buf, offset)[0]
     n = _U64.unpack_from(buf, offset + 8)[0]
     wbyte = buf[offset + 16]
-    sliced = bool(wbyte & 0x80)
-    width = wbyte & 0x7F
-    nbytes = (n * width + 7) // 8
-    if sliced:
-        k, r = divmod(width, 8)
-        nbytes = k * n + (n * r + 7) // 8
+    nbytes = (n * (wbyte & ~_SLICED) + 7) // 8
     payload = buf[offset + 17 : offset + 17 + nbytes]
-    un = unpack_uints_sliced if sliced else unpack_uints
-    vals = un(payload, n, width).view(np.int64) + ref
+    vals = unpack_uints_tagged(payload, n, wbyte).view(np.int64) + ref
     return vals.astype(np.int64), 17 + nbytes

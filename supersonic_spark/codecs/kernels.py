@@ -22,9 +22,8 @@ import struct
 import numpy as np
 import pyarrow as pa
 
-from .bitutil import (pack_ints_block, unpack_ints_block, zigzag_decode,
-                      zigzag_encode, bit_width, pack_uints, unpack_uints,
-                      pack_uints_sliced, unpack_uints_sliced)
+from .bitutil import (pack_ints_block, pack_uints_tagged, unpack_ints_block,
+                      unpack_uints_tagged, zigzag_decode, zigzag_encode)
 from .reference_layout import _concat_data, _varlen_lengths
 
 _U64 = struct.Struct("<Q")
@@ -295,15 +294,7 @@ def encode_pfor_delta(arr: pa.Array, typecode: int) -> bytes:
     exc_pos = np.nonzero(exc)[0].astype(np.int64)
     exc_val = zz[exc].view(np.int64)
     packed_vals = np.where(exc, np.uint64(0), zz)
-    # width byte's high bit marks the byte-sliced layout (same size,
-    # far less memory traffic; see bitutil.pack_uints_sliced) — old
-    # frames keep decoding through the container path
-    if width >= 8:
-        payload = pack_uints_sliced(packed_vals, width)
-        wbyte = width | 0x80
-    else:
-        payload = pack_uints(packed_vals, width)
-        wbyte = width
+    wbyte, payload = pack_uints_tagged(packed_vals, width)
     pos_block = pack_ints_block(exc_pos)
     val_block = pack_ints_block(exc_val)
     return (_I64.pack(int(v[0])) + _U64.pack(n) + bytes([wbyte])
@@ -319,12 +310,10 @@ def decode_pfor_delta(buf: bytes, n: int, typecode: int) -> pa.Array:
     if n_stored == 1:
         return _from_numpy(np.array([first], dtype=np.int64), typecode)
     wbyte = buf[16]
-    width = wbyte & 0x7F
     off = 17
     plen = _U64.unpack_from(buf, off)[0]
     off += 8
-    un = unpack_uints_sliced if (wbyte & 0x80) else unpack_uints
-    zz = un(buf[off:off + plen], n_stored - 1, width)
+    zz = unpack_uints_tagged(buf[off:off + plen], n_stored - 1, wbyte)
     off += plen
     pos_len = _U64.unpack_from(buf, off)[0]
     off += 8

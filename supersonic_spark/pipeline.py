@@ -105,6 +105,8 @@ def _bloom_hash2(v) -> tuple[int, int]:
     return h1, h2
 
 
+_BLOOM_BITS = 16384                 # minimum bitset: 2 KiB/chunk-column
+_BLOOM_HASHES = 5
 _BLOOM_MAX_BITS = 1 << 20           # 128 KiB/chunk-column hard cap
 _BLOOM_BITS_PER_KEY = 12            # ~0.3% FPR at the sized load
 
@@ -234,23 +236,15 @@ class EncodeConfig:
     # cost (the saved block I/O pays for the compressor); "zstd" trades ~5%
     # throughput for ~17.5%; None = lightweight codecs only.
     entropy: str | None = "lz4"
-    # overlap Arrow IPC with codec compute inside each Python worker: a
-    # bounded feeder thread drains the JVM socket into a small queue
-    # while the kernel encodes the previous batch. Without it the worker
-    # alternates read-then-encode, serializing the two (the JVM->Python
-    # transfer was profiled as the largest non-overlapped stage). Value =
-    # max queued batches; 0 disables.
-    prefetch_batches: int = 2
     # bloom-filter chunk stats for point lookups on NON-sort columns.
     # Zone maps only prune on sorted/clustered columns (min/max of an
     # unsorted column spans everything); a small per-(chunk, column)
     # bloom prunes equality predicates anywhere — the "fetch one user's
-    # turns out of 10^12" path. Cost: bloom_bits/8 bytes per chunk per
-    # listed column in the manifest; membership is probed distributed
-    # (mapInArrow over the manifest), never driver-side blob collection.
+    # turns out of 10^12" path. Cost: at least _BLOOM_BITS/8 bytes per
+    # chunk per listed column in the manifest; membership is probed
+    # distributed (mapInArrow over the manifest), never driver-side blob
+    # collection.
     bloom_cols: tuple[str, ...] = ()
-    bloom_bits: int = 16384          # 2 KiB per chunk-column
-    bloom_hashes: int = 5
 
     def __post_init__(self) -> None:
         from .codecs.framing import validate_entropy
@@ -268,8 +262,7 @@ class EncodeConfig:
             "sort_keys": list(self.sort_keys),
             "codec_overrides": sorted(self.codec_overrides.items()),
             "entropy": self.entropy,
-            "bloom": [list(self.bloom_cols), self.bloom_bits,
-                      self.bloom_hashes],
+            "bloom": [list(self.bloom_cols), 16384, 5],  # retired: bits, k
             # resume markers carry manifest rows (incl. bloom blobs);
             # a stats-contract bump must invalidate them or a resume
             # would restore old-format stats under a new-version meta
@@ -279,18 +272,20 @@ class EncodeConfig:
         return hashlib.md5(blob).hexdigest()[:12]
 
 
-def _prefetched(batches: Iterator[pa.RecordBatch],
-                depth: int) -> Iterator[pa.RecordBatch]:
+# batches _prefetched queues ahead of the kernel; depths 0, 1 and 4
+# each measured slower (BENCH/BASELINE.md round 3, OPTIMIZATION_r06.md)
+_PREFETCH_DEPTH = 2
+
+
+def _prefetched(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Drain `batches` through a bounded queue fed by a daemon thread so
     the JVM->Python Arrow transfer of batch N+1 overlaps the encode of
-    batch N (socket reads release the GIL). depth bounds worker memory to
-    depth extra transfer batches."""
-    if depth <= 0:
-        yield from batches
-        return
+    batch N (socket reads release the GIL; without it the worker
+    alternates read-then-encode). Worker memory grows by at most
+    _PREFETCH_DEPTH transfer batches."""
     import queue
     import threading
-    q: "queue.Queue" = queue.Queue(maxsize=depth)
+    q: "queue.Queue" = queue.Queue(maxsize=_PREFETCH_DEPTH)
     _END = object()
     stop = threading.Event()  # set when the consumer abandons the generator
 
@@ -354,21 +349,17 @@ def _write_fragment(path: str, rows: list[dict]) -> None:
 
 
 def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
-                             out_dir: str, cfg_hash: str,
-                             overrides: dict[str, str], chunk_rows: int,
-                             entropy: str | None,
-                             sort_keys: tuple[str, ...] | None,
-                             bloom_cols: tuple[str, ...] = (),
-                             bloom_bits: int = 16384,
-                             bloom_hashes: int = 5) -> bool:
+                             out_dir: str, cfg_hash: str, cfg: EncodeConfig,
+                             sort: bool = False) -> bool:
     """Encode one partition's batch stream into one block file, its
     manifest fragment (manifest/part-NNNNN.<cfg_hash>.parquet) and its
     resume marker, in that order: the marker commits the other two.
     Returns False when the marker already existed (resumed, nothing
     encoded). Shared by the shuffle path (_encoder: pid = Spark
     partition, rows arrive sorted) and the pre-bucketed path
-    (encode_table_prebucketed: pid = bucket-file index, the whole file
-    is sorted here by `sort_keys`)."""
+    (encode_table_prebucketed: pid = bucket-file index, sort=True: the
+    whole file is sorted here by cfg.sort_keys)."""
+    chunk_rows, entropy = cfg.chunk_rows, cfg.entropy
     ckpt_dir = os.path.join(out_dir, "checkpoints")
     blk_dir = os.path.join(out_dir, "blocks")
     man_dir = os.path.join(out_dir, "manifest")
@@ -414,7 +405,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                 if chunk.num_rows == 0:
                     continue
                 t0 = time.perf_counter()
-                eff_overrides = dict(overrides)
+                eff_overrides = dict(cfg.codec_overrides)
                 for name, codec in sticky.items():
                     if name not in eff_overrides:
                         eff_overrides[name] = codec
@@ -446,19 +437,19 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                         "vmin_str": zmin_s, "vmax_str": zmax_s,
                         "vsum_int": zsum, "n_nulls": znulls,
                         # base64 string: JSON-safe in resume markers
-                        "bloom_b64": (_bloom_build(col, bloom_bits,
-                                                   bloom_hashes)
-                                      if name in bloom_cols else None),
+                        "bloom_b64": (_bloom_build(col, _BLOOM_BITS,
+                                                   _BLOOM_HASHES)
+                                      if name in cfg.bloom_cols else None),
                     })
                 chunk_id += 1
 
-        if sort_keys:
+        if sort:
             # buffer the whole bucket file, one C++ sort, then chunk
             buffered = list(batches)
             if buffered:
                 tbl = pa.Table.from_batches(buffered)
                 del buffered
-                tbl = tbl.sort_by([(k, "ascending") for k in sort_keys])
+                tbl = tbl.sort_by([(k, "ascending") for k in cfg.sort_keys])
                 flush(tbl)
         else:
             for batch in batches:
@@ -507,23 +498,17 @@ def _report(done: list[tuple[int, str, bool]]) -> pa.RecordBatch:
         "encoded": pa.array(flags, pa.bool_())})
 
 
-def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
-             chunk_rows: int, entropy: str | None = None,
-             prefetch: int = 2,
-             bloom_cols: tuple[str, ...] = (),
-             bloom_bits: int = 16384, bloom_hashes: int = 5):
+def _encoder(out_dir: str, cfg_hash: str, cfg: EncodeConfig):
     """mapInArrow kernel: encode this partition's rows into one block file."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .runtime import pin_worker_threads
         pin_worker_threads()
-        batches = _prefetched(batches, prefetch)
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
-        # sort_keys=None: salted_repartition already sorted the rows
+        # no sort: salted_repartition already sorted the rows
         encoded = _encode_partition_stream(
-            pid, batches, out_dir, cfg_hash, overrides, chunk_rows,
-            entropy, None, bloom_cols, bloom_bits, bloom_hashes)
+            pid, _prefetched(batches), out_dir, cfg_hash, cfg)
         yield _report([(pid, _fragment_name(pid, cfg_hash), encoded)])
 
     return run
@@ -615,13 +600,8 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
     meta = _write_meta(out_dir, _encode_meta(
         df.schema, cfg, cfg_hash, fingerprint, cfg.n_partitions,
         **(extra_meta or {})))
-    tasks = arranged.mapInArrow(
-        _encoder(out_dir, cfg_hash, cfg.codec_overrides, cfg.chunk_rows,
-                 entropy=cfg.entropy,
-                 prefetch=cfg.prefetch_batches,
-                 bloom_cols=cfg.bloom_cols, bloom_bits=cfg.bloom_bits,
-                 bloom_hashes=cfg.bloom_hashes),
-        schema=_REPORT_SCHEMA)
+    tasks = arranged.mapInArrow(_encoder(out_dir, cfg_hash, cfg),
+                                schema=_REPORT_SCHEMA)
     return _encode_tail(spark, out_dir, meta, tasks)
 
 
@@ -663,17 +643,12 @@ def _encode_tail(spark: SparkSession, out_dir: str, meta: dict,
     fragments, a manifest an older encoder wrote) is removed; unlinking
     leaves hardlinked snapshots their bytes.
 
-    The manifest's row and column counts are stamped into meta.json, so
-    a predicated decode picks the set-path vs join-path pruning branch
-    without a manifest job. Rows come from the fragment footers; every
-    chunk emits one row per encoded column, so a fragment whose rows do
-    not divide by the column count means a kernel skipped a column and
-    raises. The driver handles O(#partitions) names and footers and
-    never manifest rows: at scale the manifest is a big table.
+    The manifest's size is stamped into meta.json (_stamp_manifest).
+    The driver handles O(#partitions) names and footers and never
+    manifest rows: at scale the manifest is a big table.
 
     Returns the manifest read with MANIFEST_SCHEMA (no inference job);
     `resumed` is true for every partition this call did not encode."""
-    import pyarrow.parquet as pq
     import shutil
     reports = tasks.collect() if tasks is not None else []
     current = set(resumed_fragments) | {r["fragment"] for r in reports}
@@ -687,11 +662,31 @@ def _encode_tail(spark: SparkSession, out_dir: str, meta: dict,
                 shutil.rmtree(p)
             else:
                 os.remove(p)
+    _stamp_manifest(out_dir, meta, current)
+    resumed = (~F.col("partition_id").isin(encoded) if encoded
+               else F.lit(True))
+    return (spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
+            .withColumn("resumed", resumed))
+
+
+def _stamp_manifest(out_dir: str, meta: dict, fragments: list | set,
+                    whole_chunks: bool = True) -> None:
+    """Write meta.json with the manifest's row count, summed from the
+    footers of `fragments` (names under out_dir/manifest), and its
+    column count, the schema width. decode_table picks the set-path vs
+    join-path pruning branch from them without a manifest job.
+
+    An encode writes one row per column of every chunk, so with
+    whole_chunks a fragment whose rows do not divide by the width means
+    a kernel skipped a column, and raises. Compaction passes False: its
+    chunks from pre-evolution sources have fewer columns."""
+    import pyarrow.parquet as pq
+    mdir = os.path.join(out_dir, "manifest")
     n_cols = len(meta["spark_schema"].get("fields", [])) or 1
     n = 0
-    for name in sorted(current):
+    for name in sorted(fragments):
         rows = pq.read_metadata(os.path.join(mdir, name)).num_rows
-        if rows % n_cols:
+        if whole_chunks and rows % n_cols:
             raise RuntimeError(
                 f"manifest fragment {name} holds {rows} rows, not a "
                 f"multiple of the {n_cols} encoded columns")
@@ -699,10 +694,6 @@ def _encode_tail(spark: SparkSession, out_dir: str, meta: dict,
     meta["manifest_rows"] = n
     meta["manifest_columns"] = n_cols
     _write_meta(out_dir, meta)
-    resumed = (~F.col("partition_id").isin(encoded) if encoded
-               else F.lit(True))
-    return (spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
-            .withColumn("resumed", resumed))
 
 
 def _run_tasks(spark: SparkSession, groups: list, fn, schema: str,
@@ -1311,11 +1302,6 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     groups = _pack_by_bytes(todo, todo_sizes,
                             spark.sparkContext.defaultParallelism)
 
-    overrides, chunk_rows = cfg.codec_overrides, cfg.chunk_rows
-    entropy, sort_keys = cfg.entropy, cfg.sort_keys
-    bloom_cols, bloom_bits = cfg.bloom_cols, cfg.bloom_bits
-    bloom_hashes = cfg.bloom_hashes
-
     def encode_group(group) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
@@ -1332,9 +1318,7 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
         done = []
         for pid, path, fp in group:
             encoded = _encode_partition_stream(
-                pid, lazy_batches(path), out_dir, fp, overrides,
-                chunk_rows, entropy, sort_keys, bloom_cols, bloom_bits,
-                bloom_hashes)
+                pid, lazy_batches(path), out_dir, fp, cfg, sort=True)
             done.append((pid, _fragment_name(pid, fp), encoded))
         yield _report(done)
 
@@ -1360,102 +1344,96 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     their type) — the merged meta carries the union schema and blocks
     from pre-evolution epochs decode the new columns as NULLs. The
     merged table reads through decode_table like any encode_table
-    output. Distributed: one task per output file; the driver only
-    handles the O(#files) grouping metadata."""
+    output. One Spark job: a task per output file concatenates its
+    group's blocks and writes the group's manifest fragment from the
+    sources' manifest rows (fragment or older Spark-written manifests,
+    read with pyarrow); the driver handles O(#files) metadata only."""
     import glob
+    import shutil
     metas = []
     for d in src_dirs:
         with open(os.path.join(d, "meta.json")) as f:
             metas.append(json.load(f))
     # ADDITIVE schema merge (Iceberg-style evolution): later epochs may
     # add columns; same-named fields must keep their type. Blocks from
-    # epochs that predate a column decode it as NULL (decode_table's
-    # missing_ok + conform path).
+    # epochs that predate a column decode it as NULL (the decode
+    # kernel's conform), so such a column is nullable in the merge.
+    src_names = [{fld["name"] for fld in m["spark_schema"]["fields"]}
+                 for m in metas]
     merged_fields: list = []
     seen: dict[str, dict] = {}
     for d, m in zip(src_dirs, metas):
         for fld in m["spark_schema"]["fields"]:
             prev = seen.get(fld["name"])
             if prev is None:
-                seen[fld["name"]] = fld
-                merged_fields.append(fld)
+                lacking = any(fld["name"] not in n for n in src_names)
+                seen[fld["name"]] = dict(
+                    fld, nullable=fld["nullable"] or lacking)
+                merged_fields.append(seen[fld["name"]])
             elif prev["type"] != fld["type"]:
                 raise ValueError(
                     f"type conflict for column {fld['name']!r}: "
                     f"{prev['type']} vs {fld['type']} ({d})")
-    merged_schema = dict(metas[0]["spark_schema"], fields=merged_fields)
+            else:
+                prev["nullable"] = prev["nullable"] or fld["nullable"]
 
-    # deterministic (src file -> output group) assignment + chunk offsets
-    entries = []  # (path, chunk_count)
-    for d in src_dirs:
-        man = spark.read.parquet(os.path.join(d, "manifest"))
-        counts = {int(r["partition_id"]): int(r["n"]) for r in
-                  (man.groupBy("partition_id")
-                      .agg((F.max("chunk_id") + 1).alias("n")).collect())}
-        for p in sorted(glob.glob(os.path.join(d, "blocks", "*.ssb"))):
-            pid = _block_pid(p)
-            entries.append((d, pid, p, counts.get(pid, 0)))
+    # deterministic (src file -> output group) assignment
+    entries = [(d, _block_pid(p), p) for d in src_dirs
+               for p in sorted(glob.glob(os.path.join(d, "blocks", "*.ssb")))]
     if not entries:
         raise ValueError("no block files under src_dirs")
-
     groups: list[list] = [entries[i:i + group_size]
                           for i in range(0, len(entries), group_size)]
-    os.makedirs(os.path.join(out_dir, "blocks"), exist_ok=True)
     meta = dict(metas[0])
-    meta["spark_schema"] = merged_schema
+    meta["spark_schema"] = dict(metas[0]["spark_schema"],
+                                fields=merged_fields)
     meta["n_partitions"] = len(groups)
     meta["compacted_from"] = len(entries)
     # a compaction mixing any pre-upgrade source inherits the weakest
     # stats contract — datetime zone pruning then stays disabled for it
     meta["stats_version"] = min(m.get("stats_version", 0) for m in metas)
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
-
+    fp = hashlib.md5(json.dumps([src_dirs, group_size]).encode()
+                     ).hexdigest()[:12]
     blk_dir = os.path.join(out_dir, "blocks")
+    mdir = os.path.join(out_dir, "manifest")
+    shutil.rmtree(mdir, ignore_errors=True)
+    os.makedirs(blk_dir, exist_ok=True)
+    os.makedirs(mdir)
 
     def concat(task) -> Iterator[pa.RecordBatch]:
+        import pyarrow.parquet as pq
         gid, srcs = task
         dst = os.path.join(blk_dir, f"part-{gid:05d}.ssb")
         tmp = dst + ".tmp"
         with open(tmp, "wb") as out:
-            for p in srcs:
+            for _d, _pid, p in srcs:
                 with open(p, "rb") as src:
-                    while True:
-                        buf = src.read(1 << 22)
-                        if not buf:
-                            break
-                        out.write(buf)
+                    shutil.copyfileobj(src, out, 1 << 22)
         os.replace(tmp, dst)
+        # this group's manifest rows, one read per source dir
+        by_src: dict[tuple, list] = {}
+        for d in dict.fromkeys(d for d, _pid, _p in srcs):
+            pids = [pid for sd, pid, _p in srcs if sd == d]
+            tbl = pq.read_table(os.path.join(d, "manifest"),
+                                filters=[("partition_id", "in", pids)])
+            for r in tbl.to_pylist():
+                by_src.setdefault((d, r["partition_id"]), []).append(r)
+        rows, off = [], 0
+        for d, pid, _p in srcs:
+            src_rows = by_src.get((d, pid), [])
+            n_chunks = max((r["chunk_id"] for r in src_rows), default=-1) + 1
+            for r in src_rows:
+                r["partition_id"], r["chunk_id"] = gid, r["chunk_id"] + off
+            rows += src_rows
+            off += n_chunks
+        _write_fragment(os.path.join(mdir, _fragment_name(gid, fp)), rows)
         return iter(())
 
-    _run_tasks(spark, [(gid, [p for _d, _p, p, _n in grp])
-                       for gid, grp in enumerate(groups)],
-               concat, "done int").collect()
-
-    # merged manifest: rewrite (partition_id, chunk_id) via a tiny
-    # broadcast mapping (O(#src files) rows)
-    map_rows = []
-    for gid, grp in enumerate(groups):
-        off = 0
-        for d, pid, _p, n_chunks in grp:
-            map_rows.append((d, pid, gid, off))
-            off += n_chunks
-    mdf = F.broadcast(spark.createDataFrame(
-        map_rows, "src_dir string, partition_id int, new_pid int, "
-                  "chunk_off int"))
-    merged = None
-    for d in src_dirs:
-        man = (spark.read.parquet(os.path.join(d, "manifest"))
-               .withColumn("src_dir", F.lit(d)))
-        merged = (man if merged is None
-                  else merged.unionByName(man, allowMissingColumns=True))
-    out_man = (merged.join(mdf, ["src_dir", "partition_id"], "inner")
-               .withColumn("partition_id", F.col("new_pid"))
-               .withColumn("chunk_id", F.col("chunk_id")
-                           + F.col("chunk_off"))
-               .drop("src_dir", "new_pid", "chunk_off"))
-    out_man.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
-    return spark.read.parquet(os.path.join(out_dir, "manifest"))
+    _run_tasks(spark, list(enumerate(groups)), concat, "done int").collect()
+    _stamp_manifest(out_dir, meta,
+                    [_fragment_name(gid, fp) for gid in range(len(groups))],
+                    whole_chunks=False)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
 
 
 def _normalize_predicates(predicate) -> list[tuple]:
@@ -1720,8 +1698,10 @@ def _pred_survivor_dfs(spark: SparkSession, out_dir: str,
             _meta = json.load(f)
     except OSError:
         _meta = {}
-    ns_stats = (_meta.get("stats_version", 0) >= 2
-                or "vsum_int" in man.columns or "n_nulls" in man.columns)
+    # a stamped version is authoritative: compaction writes every
+    # manifest column, null-filled for a pre-upgrade source
+    ns_stats = (_meta["stats_version"] >= 2 if "stats_version" in _meta
+                else "vsum_int" in man.columns or "n_nulls" in man.columns)
     # bloom blobs are only probeable if they were built with the CURRENT
     # hash family (stats_version >= 3): probing an older blob with a
     # different hash produces false NEGATIVES — silently dropped rows —
@@ -1840,10 +1820,89 @@ def _decode_ranges(spark: SparkSession, out_dir: str, paths: list[str],
     return ranges
 
 
+# decode_table prunes through the driver-side set path up to this many
+# chunks and through the survivor join above it
+_JOIN_PRUNE_CHUNKS = 200_000
+
+
+def _decode_blocks(buf: bytes, schema: StructType, predicates=(),
+                   lo_c: int = 0, hi_c: int = 1 << 30,
+                   wanted: set | None = None) -> Iterator[pa.RecordBatch]:
+    """The one block-file decode kernel, run by decode_table's tasks and
+    decode_stream's: decode the chunks of one block file's bytes whose
+    ids are in [lo_c, hi_c) and in `wanted` (None: all), as record
+    batches of `schema`.
+
+    Only the schema's column frames are decoded; the rest are skipped
+    by length arithmetic. Blocks encoded before a schema column existed
+    (additive evolution) yield it as NULLs, and output columns always
+    follow the schema's order. Int/string predicates are evaluated here
+    — late materialization: the predicate columns decode first, a chunk
+    with zero matches never decodes the rest, and non-matching rows
+    never cross the Python->JVM boundary. Pruned chunks cost a header
+    walk; a truncated or corrupt header raises, failing the task rather
+    than dropping rows."""
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+    target = [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+    names = [n for n, _t in target]
+    # int/string bounds are exact in Arrow (same binary/UTF-8 order as
+    # Spark); float and datetime predicates stay with the Spark residual
+    # filter, so semantics are always Spark's
+    ksafe = [p for p in predicates
+             if all(isinstance(v, (int, str)) and not isinstance(v, bool)
+                    for v in (p[1] if len(p) == 2 else p[1:]))]
+    pred_cols = sorted({p[0] for p in ksafe})
+
+    def conform(tbl: pa.Table) -> pa.Table:
+        if tbl.column_names == names:
+            return tbl
+        cols = [tbl.column(n) if n in tbl.column_names
+                else pa.nulls(tbl.num_rows, t) for n, t in target]
+        return pa.table(dict(zip(names, cols)))
+
+    def kmask(ptbl: pa.Table):
+        m = None
+        for p in ksafe:
+            col = ptbl.column(p[0])
+            if len(p) == 2:
+                c = pc.is_in(col, value_set=pa.array(p[1]).cast(col.type))
+            else:
+                c = pc.and_kleene(
+                    pc.greater_equal(col, pa.scalar(p[1]).cast(col.type)),
+                    pc.less_equal(col, pa.scalar(p[2]).cast(col.type)))
+            m = c if m is None else pc.and_kleene(m, c)
+        return pc.fill_null(m, False)
+
+    for chunk_id, (off, _span) in enumerate(iter_block_spans(buf)):
+        if chunk_id >= hi_c:
+            break                       # past this task's range
+        if chunk_id < lo_c or (wanted is not None
+                               and chunk_id not in wanted):
+            continue
+        if ksafe:
+            try:
+                # phase 1: predicate columns only
+                ptbl, _ = decode_block(buf, off, columns=pred_cols)
+                mask = kmask(ptbl)
+                if not pc.any(mask).as_py():
+                    continue   # no matches: the rest is never decoded
+                full, _ = decode_block(buf, off, columns=names,
+                                       missing_ok=True)
+                yield from conform(full).filter(mask).to_batches()
+                continue
+            except (KeyError, pa.lib.ArrowInvalid,
+                    pa.lib.ArrowNotImplementedError):
+                pass   # e.g. evolved block lacking the pred column, or
+                # an uncastable literal: fall back to full decode +
+                # Spark residual filter
+        tbl, _ = decode_block(buf, off, columns=names, missing_ok=True)
+        yield from conform(tbl).to_batches()
+
+
 def decode_table(spark: SparkSession, out_dir: str,
                  columns: list[str] | None = None,
                  predicate: tuple | None = None,
-                 join_prune_threshold: int = 200_000,
                  partitions: list[int] | None = None) -> DataFrame:
     """Stream block files back into a DataFrame (schema from meta.json).
 
@@ -1886,7 +1945,7 @@ def decode_table(spark: SparkSession, out_dir: str,
                            f"{schema.names}")
         schema = StructType([f for f in schema.fields
                              if f.name in set(columns)])
-    # chunk pruning: below join_prune_threshold estimated chunks the
+    # chunk pruning: up to _JOIN_PRUNE_CHUNKS estimated chunks the
     # surviving ids collect to the driver as tiny sets (one closure, no
     # extra join); above it they stay distributed — the survivor DF joins
     # against the decode task list so the driver never materializes
@@ -1901,13 +1960,13 @@ def decode_table(spark: SparkSession, out_dir: str,
                 # stamped at encode time: no Spark job on the hot path
                 big = (meta["manifest_rows"]
                        // max(meta.get("manifest_columns", 1), 1)
-                       ) > join_prune_threshold
+                       ) > _JOIN_PRUNE_CHUNKS
             else:  # pre-stamp manifest: measure once per decode
                 r = (spark.read.parquet(mdir)
                      .agg(F.count("*").alias("n"),
                           F.countDistinct("column").alias("c"))
                      .collect()[0])
-                big = (r["n"] // max(r["c"], 1)) > join_prune_threshold
+                big = (r["n"] // max(r["c"], 1)) > _JOIN_PRUNE_CHUNKS
         if big:
             wanted_df = _pruned_chunks_df(spark, out_dir, predicates)
         else:
@@ -1926,53 +1985,10 @@ def decode_table(spark: SparkSession, out_dir: str,
         # scheduled at all
         paths = [p for p in paths if keep.get(_block_pid(p))]
 
-    # kernel-safe predicates: int/string bounds are exact in Arrow (same
-    # binary/UTF-8 order as Spark), so they can be evaluated INSIDE the
-    # decode kernel — late materialization: the cheap predicate columns
-    # decode first, chunks with zero matches never decode their text, and
-    # non-matching rows never cross the Python->JVM boundary. Float and
-    # datetime predicates stay Spark-side only (residual filter), so
-    # semantics are always Spark's.
-    def _kernel_safe(p):
-        vals = p[1] if len(p) == 2 else p[1:]
-        return all(isinstance(v, (int, str)) and not isinstance(v, bool)
-                   for v in vals)
-    ksafe = [p for p in predicates if _kernel_safe(p)]
-    pred_cols = sorted({p[0] for p in ksafe})
-
     def decode(task, wanted_ids=None) -> Iterator[pa.RecordBatch]:
         # task: (block path, first chunk id, end chunk id); join-path
         # pruning passes the partition's surviving chunk ids, the set
         # path closes over `keep`
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_type
-        target = [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
-
-        def conform(tbl: pa.Table) -> pa.Table:
-            # additive schema evolution + stable column order: blocks
-            # encoded before a column existed fill it with NULLs; output
-            # always matches the declared schema order
-            if tbl.column_names == [n for n, _t in target]:
-                return tbl
-            cols = [tbl.column(n) if n in tbl.column_names
-                    else pa.nulls(tbl.num_rows, t) for n, t in target]
-            return pa.table(dict(zip([n for n, _t in target], cols)))
-
-        def kmask(ptbl: pa.Table):
-            m = None
-            for p in ksafe:
-                col = ptbl.column(p[0])
-                if len(p) == 2:
-                    c = pc.is_in(col, value_set=pa.array(p[1])
-                                 .cast(col.type))
-                else:
-                    c = pc.and_kleene(
-                        pc.greater_equal(col, pa.scalar(p[1])
-                                         .cast(col.type)),
-                        pc.less_equal(col, pa.scalar(p[2]).cast(col.type)))
-                m = c if m is None else pc.and_kleene(m, c)
-            return pc.fill_null(m, False)
-
         path, lo_c, hi_c = task
         if wanted_ids is not None:
             wanted = set(wanted_ids)
@@ -1981,33 +1997,7 @@ def decode_table(spark: SparkSession, out_dir: str,
                                                         set())
         with open(path, "rb") as f:
             buf = f.read()
-        # pruned chunks cost a header walk; a truncated or corrupt
-        # header raises, failing the task rather than dropping rows
-        for chunk_id, (off, _span) in enumerate(iter_block_spans(buf)):
-            if chunk_id >= hi_c:
-                break                   # past this task's range
-            if chunk_id < lo_c or (wanted is not None
-                                   and chunk_id not in wanted):
-                continue
-            if ksafe:
-                try:
-                    # phase 1: predicate columns only
-                    ptbl, _ = decode_block(buf, off, columns=pred_cols)
-                    mask = kmask(ptbl)
-                    if not pc.any(mask).as_py():
-                        continue   # no matches: text never decoded
-                    full, _ = decode_block(buf, off, columns=columns,
-                                           missing_ok=True)
-                    yield from conform(full).filter(mask).to_batches()
-                    continue
-                except (KeyError, pa.lib.ArrowInvalid,
-                        pa.lib.ArrowNotImplementedError):
-                    pass   # e.g. evolved block lacking the pred
-                    # column, or an uncastable literal: fall back
-                    # to full decode + Spark residual filter
-            tbl, _ = decode_block(buf, off, columns=columns,
-                                  missing_ok=True)
-            yield from conform(tbl).to_batches()
+        yield from _decode_blocks(buf, schema, predicates, lo_c, hi_c, wanted)
 
     if not paths:
         out = spark.createDataFrame([], schema)

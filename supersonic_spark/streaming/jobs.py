@@ -61,16 +61,19 @@ def decode_stream(spark: SparkSession, out_dir: str,
     sink's epoch=N/blocks dirs) for new .ssb block files and decode
     each exactly once as it lands. Built on the binaryFile file source,
     so Structured Streaming's own file tracking provides the
-    exactly-once-per-file guarantee; decoding stays in the same Arrow
-    kernel as batch decode_table. Pass `schema` (StructType or DDL) or
-    let it load from the first epoch's meta.json. `columns` projects at
-    the BLOCK layer, same as batch decode_table — unneeded column frames
-    (text, typically) are skipped by length arithmetic in the streaming
-    reader too."""
+    exactly-once-per-file guarantee; each file decodes through batch
+    decode_table's kernel (pipeline._decode_blocks). Pass `schema`
+    (StructType or DDL) or let it load from the first epoch's meta.json.
+    Blocks from epochs that lack a schema column yield it as NULLs, and
+    columns the schema does not declare are dropped. `columns` projects
+    at the BLOCK layer, same as batch decode_table — unneeded column
+    frames (text, typically) are skipped by length arithmetic in the
+    streaming reader too."""
     import glob as _glob
     import json as _json
     import os as _os
     from pyspark.sql.types import StructType
+    from ..pipeline import _decode_blocks
     if schema is None:
         metas = sorted(_glob.glob(_os.path.join(out_dir, "**", "meta.json"),
                                   recursive=True))
@@ -101,18 +104,9 @@ def decode_stream(spark: SparkSession, out_dir: str,
     def dec(batches):
         from ..runtime import pin_worker_threads
         pin_worker_threads()
-        from ..codecs import decode_block as _db
         for batch in batches:
             for blob in batch.column(0):
-                buf = blob.as_py()
-                off = 0
-                while off < len(buf):
-                    # strict (no missing_ok): a block lacking a projected
-                    # column should fail as a clean KeyError, not a
-                    # schema-arity mismatch deep in the Arrow bridge
-                    t, used = _db(buf, off, columns=columns)
-                    off += used
-                    yield from t.to_batches()
+                yield from _decode_blocks(blob.as_py(), schema)
 
     return src.select("content").mapInArrow(dec, schema=schema)
 

@@ -438,3 +438,20 @@ def test_selector_float_trial_with_entropy():
     assert out.equals(smooth)
     # without an entropy backend the selector keeps plain
     assert choose_codec(smooth)[0] == "plain"
+
+
+def test_tagged_packing_flags_the_sliced_layout():
+    """One packing decision: width >= 8 is byte-sliced and flagged in the
+    width byte's high bit, narrower widths are not; both round-trip and
+    hold ceil(n * width / 8) bytes."""
+    from supersonic_spark.codecs.bitutil import (pack_uints_tagged,
+                                                 unpack_uints_tagged)
+    rng = np.random.default_rng(3)
+    for width in range(0, 40):
+        vals = rng.integers(0, 1 << width, size=1001,
+                            dtype=np.uint64) if width else \
+            np.zeros(1001, dtype=np.uint64)
+        wbyte, payload = pack_uints_tagged(vals, width)
+        assert wbyte == (width | 0x80 if width >= 8 else width)
+        assert len(payload) == (1001 * width + 7) // 8
+        assert np.array_equal(unpack_uints_tagged(payload, 1001, wbyte), vals)

@@ -342,22 +342,11 @@ def test_decode_table_string_predicate(spark, tmp_path):
 
 # --- encode prefetch --------------------------------------------------------
 
-def test_prefetch_encode_identical_output(spark, tmp_path):
-    import glob
-    from supersonic_spark.datagen import generate_transcripts
-    from supersonic_spark.pipeline import EncodeConfig, encode_table
-    df = generate_transcripts(spark, n_convs=40, seed=5)
-    outs = {}
-    for depth in (0, 2):
-        d = str(tmp_path / f"p{depth}")
-        encode_table(spark, df, d,
-                     EncodeConfig(n_partitions=3, prefetch_batches=depth),
-                     fingerprint=f"pf{depth}")
-        outs[depth] = {
-            # same block bytes regardless of prefetch: order-preserving
-            os.path.basename(p): open(p, "rb").read()
-            for p in glob.glob(d + "/blocks/*.ssb")}
-    assert outs[0] == outs[2] and outs[0]
+def test_prefetched_yields_input_unchanged():
+    from supersonic_spark.pipeline import _prefetched
+    items = [object() for _ in range(25)]
+    assert list(_prefetched(iter(items))) == items   # same objects, order
+    assert list(_prefetched(iter(()))) == []
 
 
 def test_prefetched_propagates_reader_errors():
@@ -367,7 +356,7 @@ def test_prefetched_propagates_reader_errors():
         yield "a"
         raise RuntimeError("reader died")
 
-    it = _prefetched(boom(), depth=2)
+    it = _prefetched(boom())
     assert next(it) == "a"
     with pytest.raises(RuntimeError, match="reader died"):
         list(it)

@@ -84,10 +84,12 @@ def _encode_fixture(spark, tmp_path, name, bloom=()):
     return src, out
 
 
-def test_join_prune_branch_matches_driver_path(spark, tmp_path):
-    """join_prune_threshold=0 forces the distributed survivor-join path;
-    results must match the driver-set path bit-for-bit, including bloom
-    point-lookup pruning."""
+def test_join_prune_branch_matches_driver_path(spark, tmp_path,
+                                               monkeypatch):
+    """A zero _JOIN_PRUNE_CHUNKS forces the distributed survivor-join
+    path; results must match the driver-set path bit-for-bit, including
+    bloom point-lookup pruning."""
+    from supersonic_spark import pipeline
     from supersonic_spark.pipeline import decode_table
     src, out = _encode_fixture(spark, tmp_path, "join_prune",
                                bloom=("conv_id",))
@@ -95,8 +97,8 @@ def test_join_prune_branch_matches_driver_path(spark, tmp_path):
             src.select("conv_id").distinct().limit(3).collect()]
     pred = ("conv_id", some)
     a = decode_table(spark, out, predicate=pred)                  # driver
-    b = decode_table(spark, out, predicate=pred,
-                     join_prune_threshold=0)                      # join
+    monkeypatch.setattr(pipeline, "_JOIN_PRUNE_CHUNKS", 0)
+    b = decode_table(spark, out, predicate=pred)                  # join
     key = ["conv_id", "turn_idx"]
     rows_a = sorted(map(tuple, a.select(*key, "text").collect()))
     rows_b = sorted(map(tuple, b.select(*key, "text").collect()))
@@ -106,12 +108,14 @@ def test_join_prune_branch_matches_driver_path(spark, tmp_path):
     assert rows_a == want
 
 
-def test_join_prune_range_predicate(spark, tmp_path):
+def test_join_prune_range_predicate(spark, tmp_path, monkeypatch):
     """Join path with a numeric range predicate (no blooms involved)."""
+    from supersonic_spark import pipeline
     from supersonic_spark.pipeline import decode_table
     src, out = _encode_fixture(spark, tmp_path, "join_prune_rng")
     pred = ("turn_idx", 0, 2)
-    b = decode_table(spark, out, predicate=pred, join_prune_threshold=0)
+    monkeypatch.setattr(pipeline, "_JOIN_PRUNE_CHUNKS", 0)
+    b = decode_table(spark, out, predicate=pred)
     want = src.filter((F.col("turn_idx") >= 0) & (F.col("turn_idx") <= 2))
     assert b.count() == want.count() > 0
 
@@ -163,6 +167,14 @@ def test_datetime_predicate_on_pre_upgrade_manifest(spark, tmp_path):
     got2 = decode_table(spark, out, predicate=("turn_idx", 0, 1))
     want2 = src.filter(F.col("turn_idx") <= 1)
     assert got2.count() == want2.count() > 0
+
+    # compaction writes every manifest column (null-filled here); the
+    # stamped stats_version still keeps the µs zone maps unpruned
+    from supersonic_spark.pipeline import compact_blocks
+    merged = str(tmp_path / "old_manifest_compacted")
+    compact_blocks(spark, [out], merged)
+    got3 = decode_table(spark, merged, predicate=("ts", lo, mid))
+    assert got3.count() == want.count()
 
 
 def test_datetime_predicate_current_manifest_prunes(spark, tmp_path):

@@ -26,9 +26,6 @@ def main():
                          "(changed input invalidates checkpoints)")
     ap.add_argument("--n-partitions", type=int, default=None)
     ap.add_argument("--chunk-rows", type=int, default=65536)
-    ap.add_argument("--no-prefetch", action="store_true",
-                    help="disable the IPC/compute prefetch overlap in the "
-                         "encode kernel (A/B baseline)")
     ap.add_argument("--prebucketed", action="store_true",
                     help="input dir is a bucketize_table() layout (one "
                          "bucket file per hash(conv_id) slice): encode "
@@ -65,8 +62,7 @@ def main():
         args.fingerprint = table_fingerprint(spark, args.input)
 
     cfg = EncodeConfig(n_partitions=args.n_partitions or 2 * cores,
-                       chunk_rows=args.chunk_rows,
-                       prefetch_batches=0 if args.no_prefetch else 2)
+                       chunk_rows=args.chunk_rows)
     def encode(dest, fp):
         if args.prebucketed:
             return encode_table_prebucketed(spark, args.input, dest, cfg,
