@@ -11,10 +11,13 @@ Re-expresses the capabilities of the Supersonic C++ columnar query executor
                   file_io.cc:16-29, supersonic/base/infrastructure/block.h).
 - ``selector``  — per-(partition, column) codec auto-selection from sampled
                   cardinality / run-length / byte-entropy statistics.
-- ``pipeline``  — distributed encode/decode over Spark: repartition by
-                  hash(conv_id) with salted skew splitting, in-partition
-                  (conv_id, turn_idx) sort, mapInArrow codec kernels,
-                  per-partition checkpoint/resume and a lineage manifest.
+- ``store``     — distributed encode/decode over Spark, one module per
+                  decision: ``stats`` (manifest schema, zone maps, blooms),
+                  ``layout`` (on-disk names, which files are live),
+                  ``encode`` (salted shuffle, z-order and prebucketed
+                  encodes with per-partition checkpoint/resume), ``read``
+                  (pruned decode), ``maintain`` (bucket layouts,
+                  snapshots, compaction). ``pipeline`` re-exports its API.
 - ``datagen``   — deterministic synthetic multi-turn transcript generator.
 - ``operators`` — Spark-first re-expressions of the reference operator
                   inventory (SURVEY.md §2).

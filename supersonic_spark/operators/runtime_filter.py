@@ -18,7 +18,7 @@ composable.
 
 The filter is a double-hash bloom over the engine-portable 60-bit md5
 hash family (same bloom shape as the block manifests' storage blooms,
-pipeline._bloom_build — reference semantics: supersonic/utils/
+store.stats._bloom_build — reference semantics: supersonic/utils/
 bloom_filter.h, re-derived, not ported; md5 instead of splitmix so the
 PROBE is a plain relational expression both engines evaluate
 identically), embedded in the plan as an array<long> literal probed

@@ -1,0 +1,354 @@
+"""The on-disk contracts of block tables and bucket layouts. This is the
+only module that spells their file names, and the only one that decides
+which files are live.
+
+A block table (the output of an encode or a compaction) is a directory:
+
+    meta.json                          schema, config, stamped manifest size
+    blocks/part-NNNNN.ssb              one block file per partition
+    manifest/part-NNNNN.<fp>.parquet   that partition's manifest rows
+    checkpoints/part-NNNNN.<fp>.json   its resume marker (the same rows)
+    snapshots/<tag>/                   hardlinked copies (snapshot_table)
+
+A file is live when the current manifest names it, as in Iceberg, where
+a data file is live only if metadata names it. Every successful write
+ends in install_current, which keeps the fragments that write produced
+or resumed, the block files of their partitions and the markers named
+after them, and unlinks everything else. A killed write never gets
+there, so its markers still resume.
+
+A bucket layout (bucketize_table) is a directory of exactly n_buckets
+parquet files, part-BBBBB-*.parquet, plus _buckets.json.
+"""
+
+from __future__ import annotations
+
+import glob
+import json
+import os
+import re
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .stats import _manifest_batch
+
+BLOCK_GLOB = "*.ssb"
+_BUCKET_FILE = re.compile(r"part-(\d{5})-.*\.parquet$")
+
+
+def meta_path(table: str) -> str:
+    return os.path.join(table, "meta.json")
+
+
+def blocks_dir(table: str) -> str:
+    return os.path.join(table, "blocks")
+
+
+def manifest_dir(table: str) -> str:
+    return os.path.join(table, "manifest")
+
+
+def checkpoints_dir(table: str) -> str:
+    return os.path.join(table, "checkpoints")
+
+
+def snapshot_dir(table: str, tag: str | None = None) -> str:
+    """The table's snapshots directory, or one snapshot's."""
+    root = os.path.join(table, "snapshots")
+    return root if tag is None else os.path.join(root, tag)
+
+
+def _block_pid(path: str) -> int:
+    """Partition id of a block file (blocks/part-NNNNN.ssb) or of a
+    manifest fragment."""
+    return int(os.path.basename(path)[5:10])
+
+
+def _block_name(pid: int) -> str:
+    return f"part-{pid:05d}.ssb"
+
+
+def _fragment_name(pid: int, fp: str) -> str:
+    return f"part-{pid:05d}.{fp}.parquet"
+
+
+def _marker_of(fragment: str) -> str:
+    """The resume marker named after a fragment (same pid and fp)."""
+    return fragment.rsplit(".", 1)[0] + ".json"
+
+
+def _partition_files(table: str, pid: int, fp: str) -> tuple[str, str, str]:
+    """(block file, manifest fragment, resume marker) paths of partition
+    pid written under fingerprint fp. The block and manifest directories
+    exist afterwards."""
+    for d in (blocks_dir(table), manifest_dir(table)):
+        os.makedirs(d, exist_ok=True)
+    return (os.path.join(blocks_dir(table), _block_name(pid)),
+            os.path.join(manifest_dir(table), _fragment_name(pid, fp)),
+            os.path.join(checkpoints_dir(table),
+                         _marker_of(_fragment_name(pid, fp))))
+
+
+def _write_fragment(path: str, rows: list[dict]) -> None:
+    """One partition's manifest rows as one parquet file, installed by
+    rename from a hidden temp name (Spark's reader skips dot-files)."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(pa.Table.from_batches([_manifest_batch(rows)]), tmp)
+    os.replace(tmp, path)
+
+
+def _commit_partition(fragment: str, marker: str, rows: list[dict]) -> None:
+    """Install a partition's manifest fragment, then its resume marker
+    (the same rows as JSON). The marker commits the block file and the
+    fragment."""
+    _write_fragment(fragment, rows)
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(rows, f)
+    os.replace(tmp, marker)
+
+
+def _resumed(fragment: str, marker: str) -> bool:
+    """Whether the partition's marker exists (its block file and fragment
+    are committed). A marker written before manifest fragments existed
+    (an older encoder wrote the manifest as one Spark job) gets its
+    fragment rebuilt from the rows it carries, all flagged resumed."""
+    if not os.path.exists(marker):
+        return False
+    if not os.path.exists(fragment):
+        with open(marker) as f:
+            rows = json.load(f)
+        for r in rows:
+            r["resumed"] = True
+        _write_fragment(fragment, rows)
+    return True
+
+
+def _listing(d: str) -> set[str]:
+    return set(os.listdir(d)) if os.path.isdir(d) else set()
+
+
+def committed(table: str) -> set[str]:
+    """Names of the fragments whose resume marker exists: partitions a
+    re-run does not schedule."""
+    markers = _listing(checkpoints_dir(table))
+    return {f for f in _listing(manifest_dir(table))
+            if _marker_of(f) in markers}
+
+
+def _write_meta(out_dir: str, meta: dict) -> dict:
+    os.makedirs(out_dir, exist_ok=True)
+    with open(meta_path(out_dir), "w") as f:
+        json.dump(meta, f, indent=1)
+    return meta
+
+
+def read_meta(table: str) -> dict:
+    with open(meta_path(table)) as f:
+        return json.load(f)
+
+
+def first_meta(root: str) -> dict | None:
+    """meta.json of the first table (in path order) anywhere under root,
+    e.g. the epoch=N tables a streaming encode sink writes."""
+    found = sorted(glob.glob(os.path.join(root, "**", "meta.json"),
+                             recursive=True))
+    return read_meta(os.path.dirname(found[0])) if found else None
+
+
+def _footer_rows(table: str, names) -> dict[str, int]:
+    """Row count of each named manifest file, from its parquet footer."""
+    mdir = manifest_dir(table)
+    return {n: pq.read_metadata(os.path.join(mdir, n)).num_rows
+            for n in sorted(names)}
+
+
+def _stamp_manifest(out_dir: str, meta: dict, fragments: list | set,
+                    whole_chunks: bool = True) -> None:
+    """Write meta.json with the manifest's row count, summed from the
+    footers of `fragments` (names under out_dir/manifest), and its
+    column count, the schema width. decode_table picks the set-path vs
+    join-path pruning branch from them without a manifest job.
+
+    An encode writes one row per column of every chunk, so with
+    whole_chunks a fragment whose rows do not divide by the width means
+    a kernel skipped a column, and raises. Compaction passes False: its
+    chunks from pre-evolution sources have fewer columns."""
+    n_cols = len(meta["spark_schema"].get("fields", [])) or 1
+    rows = _footer_rows(out_dir, fragments)
+    for name, n in rows.items():
+        if whole_chunks and n % n_cols:
+            raise RuntimeError(
+                f"manifest fragment {name} holds {n} rows, not a "
+                f"multiple of the {n_cols} encoded columns")
+    meta["manifest_rows"] = sum(rows.values())
+    meta["manifest_columns"] = n_cols
+    _write_meta(out_dir, meta)
+
+
+def install_current(table: str, meta: dict, fragments,
+                    whole_chunks: bool = True) -> None:
+    """The last step of every successful encode and compaction: make
+    `fragments` (names under manifest/) the table's live set, then stamp
+    the manifest size into meta.json (_stamp_manifest).
+
+    Afterwards manifest/ holds exactly `fragments`, blocks/ holds only
+    the block files of their partitions, and checkpoints/ holds only the
+    markers named after them. Everything else goes: superseded fragments
+    and a manifest an older encoder wrote, block files of partitions the
+    write no longer has, markers of other configs, leftover temp files.
+    Unlinking leaves hardlinked snapshots their bytes."""
+    live = set(fragments)
+    keep = {manifest_dir(table): live,
+            blocks_dir(table): {_block_name(_block_pid(f)) for f in live},
+            checkpoints_dir(table): {_marker_of(f) for f in live}}
+    for d, names in keep.items():
+        for name in _listing(d) - names:
+            p = os.path.join(d, name)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+    os.makedirs(manifest_dir(table), exist_ok=True)
+    _stamp_manifest(table, meta, live, whole_chunks)
+
+
+def list_blocks(table: str) -> list[str]:
+    """Paths of the table's block files, sorted."""
+    d = blocks_dir(table)
+    return (sorted(os.path.join(d, p) for p in os.listdir(d)
+                   if p.endswith(".ssb")) if os.path.isdir(d) else [])
+
+
+def has_manifest(table: str) -> bool:
+    return os.path.isdir(manifest_dir(table))
+
+
+def read_manifest(spark: SparkSession, table: str,
+                  schema: StructType | None = None) -> DataFrame:
+    """The table's manifest as a DataFrame; `schema` skips inference."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(manifest_dir(table))
+
+
+def manifest_chunks(table: str, meta: dict) -> int:
+    """Chunks in the table's manifest: the stamped row count over the
+    column count, or, for a manifest written before the size was
+    stamped, the rows summed from its file footers over the schema
+    width (0 without a manifest). Neither runs a Spark job."""
+    rows = meta.get("manifest_rows")
+    if rows is None:
+        rows = sum(_footer_rows(table, [
+            n for n in _listing(manifest_dir(table))
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        ]).values())
+    cols = meta.get("manifest_columns") or len(meta["spark_schema"]["fields"])
+    return rows // max(cols, 1)
+
+
+def _link_table(src: str, dst: str) -> None:
+    """Create dst as a copy of table src that costs no data bytes:
+    hardlink its block and manifest files, copy meta.json. Files are
+    copied where hardlinks fail. Raises ValueError, creating nothing,
+    when src is not a table."""
+    if not (has_manifest(src) and os.path.exists(meta_path(src))):
+        raise ValueError(f"{src} is not an encoded table "
+                         "(missing manifest/ or meta.json)")
+    os.makedirs(dst)
+    for sub in (blocks_dir, manifest_dir):
+        if not os.path.isdir(sub(src)):
+            continue
+        os.makedirs(sub(dst))
+        for name in os.listdir(sub(src)):
+            s, d = os.path.join(sub(src), name), os.path.join(sub(dst), name)
+            if not os.path.isfile(s):
+                continue
+            try:
+                os.link(s, d)
+            except OSError:
+                shutil.copy2(s, d)
+    shutil.copy2(meta_path(src), meta_path(dst))
+
+
+def parquet_files(d: str) -> list[str]:
+    """Paths of the .parquet files directly under d, sorted."""
+    return sorted(os.path.join(d, p) for p in os.listdir(d)
+                  if p.endswith(".parquet"))
+
+
+def bucket_files(bucket_dir: str) -> dict[int, str]:
+    """{bucket id: path} of a bucket layout's part-BBBBB-*.parquet files."""
+    out = {}
+    for p in os.listdir(bucket_dir):
+        m = _BUCKET_FILE.match(p)
+        if m:
+            out[int(m.group(1))] = os.path.join(bucket_dir, p)
+    return out
+
+
+def bucket_file(bucket_dir: str, b: int, tag: str) -> str:
+    return os.path.join(bucket_dir, f"part-{b:05d}-{tag}.parquet")
+
+
+def complete_buckets(bucket_dir: str, n: int) -> dict[int, str]:
+    """The one bucket-id rule: a layout holds exactly one file per bucket
+    id below n, so a file's sorted position is its bucket id. Spark
+    writes no file for an empty bucket other than bucket 0; each missing
+    one gets an empty file with the layout's schema here. Returns
+    bucket_files()."""
+    files = bucket_files(bucket_dir)
+    missing = [b for b in range(n) if b not in files]
+    if missing and files:
+        empty = pq.read_schema(next(iter(files.values()))).empty_table()
+        for b in missing:
+            files[b] = bucket_file(bucket_dir, b, "empty")
+            pq.write_table(empty, files[b])
+    return files
+
+
+def _write_bucket_meta(bucket_dir: str, n_buckets: int, conv_key: str,
+                       schema: StructType) -> None:
+    with open(os.path.join(bucket_dir, "_buckets.json"), "w") as f:
+        json.dump({"n_buckets": n_buckets, "conv_key": conv_key,
+                   "spark_schema": _file_schema(schema)}, f)
+
+
+def _file_schema(schema: StructType) -> dict:
+    """`schema` as Spark reads it back from parquet files (jsonValue
+    form): every field, array element and map value nullable."""
+    def walk(t):
+        if not isinstance(t, dict):
+            return t
+        t = dict(t)
+        if t["type"] == "struct":
+            t["fields"] = [dict(f, nullable=True, type=walk(f["type"]))
+                           for f in t["fields"]]
+        elif t["type"] == "array":
+            t.update(containsNull=True, elementType=walk(t["elementType"]))
+        elif t["type"] == "map":
+            t.update(valueContainsNull=True, keyType=walk(t["keyType"]),
+                     valueType=walk(t["valueType"]))
+        return t
+    return walk(schema.jsonValue())
+
+
+def _bucket_layout(spark: SparkSession,
+                   bucket_dir: str) -> tuple[dict, StructType]:
+    """(_buckets.json, Spark schema) of a bucket layout. The schema is
+    the recorded one; a layout without it (written before it was
+    recorded, or by hand without _buckets.json) falls back to inference,
+    which costs one Spark job."""
+    try:
+        with open(os.path.join(bucket_dir, "_buckets.json")) as f:
+            bmeta = json.load(f)
+    except FileNotFoundError:
+        bmeta = {}
+    if "spark_schema" in bmeta:
+        return bmeta, StructType.fromJson(bmeta["spark_schema"])
+    return bmeta, spark.read.parquet(bucket_dir).schema

@@ -1,0 +1,557 @@
+"""Read: predicate normalization, chunk pruning (zone maps and blooms,
+through a driver-side id set or, at extreme chunk counts, a survivor
+join), the one block-file decode kernel, decode_table, the
+metadata-only manifest_stats, and the integrity and round-trip audits.
+"""
+
+from __future__ import annotations
+
+import datetime as _dt
+import zlib
+from functools import reduce
+from typing import Iterator
+from zoneinfo import ZoneInfo
+
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
+
+from ..codecs import decode_block, iter_block_spans
+from ..runtime import pin_worker_threads, run_tasks
+from .layout import (_block_pid, has_manifest, list_blocks, manifest_chunks,
+                     read_manifest, read_meta)
+from .stats import _bound_ns, bloom_probe_b64
+
+
+def _normalize_predicates(predicate) -> list[tuple]:
+    """Predicates, ANDed: each is a range (col, lo, hi) or a membership
+    (col, [v1, v2, ...]) — the 2-tuple form prunes like the union of
+    point lookups (zone range over min/max of the set, bloom OR over the
+    members) and filters with IN. Bounds/members must be
+    int/float/str/datetime/date — anything else raises instead of
+    silently mispruning (zone-map comparison against an unexpected
+    literal type could drop chunks the residual filter can never
+    restore)."""
+    def check(pcol, v):
+        if not isinstance(v, (int, float, str, _dt.date, _dt.datetime)):
+            raise TypeError(
+                f"predicate bound for {pcol!r} must be int/float/str/"
+                f"datetime/date, got {type(v).__name__}")
+
+    if predicate is None:
+        return []
+    preds = [predicate] if isinstance(predicate, tuple) else list(predicate)
+    out = []
+    for p in preds:
+        if len(p) == 2:
+            pcol, values = p
+            values = sorted(set(values))
+            if not values:
+                raise ValueError(f"empty IN-list for {pcol!r}")
+            for v in values:
+                check(pcol, v)
+            if len({isinstance(v, str) for v in values}) > 1:
+                raise TypeError(f"IN-list for {pcol!r} mixes string and "
+                                f"non-string types")
+            out.append((pcol, values))
+            continue
+        pcol, lo, hi = p
+        check(pcol, lo)
+        check(pcol, hi)
+        if isinstance(lo, str) != isinstance(hi, str):
+            raise TypeError(f"predicate bounds for {pcol!r} mix string and "
+                            f"non-string types")
+        out.append((pcol, lo, hi))
+    return out
+
+
+def _session_tz(spark: SparkSession):
+    """The Spark session timezone as a tzinfo, or None if unresolvable
+    (callers then widen naive bounds by the full offset envelope)."""
+    try:
+        name = spark.conf.get("spark.sql.session.timeZone")
+        return ZoneInfo(name) if name else None
+    except Exception:
+        return None
+
+
+def _bloom_filter_chunks(man_sel: DataFrame, values: list) -> DataFrame:
+    """Keep manifest rows whose chunk bloom may contain ANY of `values`
+    (NULL bloom = no stats = always kept). Runs as mapInArrow over the
+    manifest so blobs are probed executor-side — at 10^12-turn scale the
+    manifest is itself a big table and the blobs must never be
+    collected. The probe itself is bloom_probe_b64: batched base64-text
+    gathers, no per-row Python, no blob materialization."""
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pin_worker_threads()
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            keep_mask = bloom_probe_b64(tbl.column("bloom_b64"), values)
+            sel = pa.array(keep_mask)
+            yield pa.RecordBatch.from_arrays(
+                [tbl.column("partition_id").filter(sel).combine_chunks()
+                 .cast(pa.int32()),
+                 tbl.column("chunk_id").filter(sel).combine_chunks()
+                 .cast(pa.int32())],
+                ["partition_id", "chunk_id"])
+
+    return (man_sel.select("partition_id", "chunk_id", "bloom_b64")
+            .mapInArrow(run, schema="partition_id int, chunk_id int"))
+
+
+def _pruned_chunks(spark: SparkSession, out_dir: str,
+                   predicates: list[tuple],
+                   meta: dict | None = None) -> dict[int, set] | None:
+    """Chunks whose zone maps can satisfy EVERY (col, lo, hi) range
+    (inclusive bounds, conjunction): {partition_id: set(chunk_id)}.
+    Chunks without stats (old manifests, unsupported types) are always
+    kept — pruning is only ever an optimization, never a correctness
+    gate. Returns None when no manifest exists. Driver-side: O(#chunks)
+    tiny rows; for extreme chunk counts push the same overlap filter
+    into a join against the block scan instead. `meta` is the table's
+    meta.json when the caller already read it."""
+    sels = _pred_survivor_dfs(spark, out_dir, predicates,
+                              read_meta(out_dir) if meta is None else meta)
+    if sels is None:
+        return None
+    keep: dict[int, set] | None = None
+    for sel in sels:
+        rows = sel.select("partition_id", "chunk_id").distinct().collect()
+        this: dict[int, set] = {}
+        for r in rows:
+            this.setdefault(r["partition_id"], set()).add(r["chunk_id"])
+        if keep is None:
+            keep = this
+        else:  # conjunction: a chunk survives only if every range allows it
+            keep = {pid: keep[pid] & cs for pid, cs in this.items()
+                    if pid in keep}
+            keep = {pid: cs for pid, cs in keep.items() if cs}
+    # None = no predicate could use stats (e.g. datetime predicates on a
+    # pre-upgrade manifest): decode everything. {} = stats genuinely rule
+    # out every chunk.
+    return keep
+
+
+def _pred_survivor_dfs(spark: SparkSession, out_dir: str,
+                       predicates: list[tuple],
+                       meta: dict) -> list[DataFrame] | None:
+    """One (partition_id, chunk_id) survivor DataFrame per usable
+    predicate — shared by the driver-side set path (_pruned_chunks) and
+    the join path (_pruned_chunks_df). `meta` is the table's meta.json.
+    None when there is no manifest or no predicate can use the stats."""
+    if not has_manifest(out_dir):
+        return None
+    man = read_manifest(spark, out_dir)
+    tz = _session_tz(spark)
+    # pre-upgrade manifests (no stats_version marker and none of the
+    # columns that shipped with the ns normalization) store datetime zone
+    # maps in raw Arrow units (µs) — comparing ns bounds against them
+    # would prune EVERY chunk and silently return zero rows, so datetime
+    # predicates simply don't prune there (residual filter stays exact)
+    # a stamped version is authoritative: compaction writes every
+    # manifest column, null-filled for a pre-upgrade source
+    ns_stats = (meta["stats_version"] >= 2 if "stats_version" in meta
+                else "vsum_int" in man.columns or "n_nulls" in man.columns)
+    # bloom blobs are only probeable if they were built with the CURRENT
+    # hash family (stats_version >= 3): probing an older blob with a
+    # different hash produces false NEGATIVES — silently dropped rows —
+    # the one failure mode pruning must never have
+    blooms_ok = meta.get("stats_version", 0) >= 3
+    # TIMESTAMP_NTZ zone maps hold WALL-CLOCK ns (no instant semantics):
+    # naive bounds must convert as-if-UTC — resolving them in a non-UTC
+    # session tz would shift bounds by the offset and prune chunks the
+    # residual filter keeps. Aware bounds against NTZ can't prune safely.
+    ntz_cols = {f["name"] for f in meta["spark_schema"]["fields"]
+                if f["type"] == "timestamp_ntz"}
+    sels: list[DataFrame] = []
+    for pred in predicates:
+        bound0 = pred[1][0] if len(pred) == 2 else pred[1]
+        if isinstance(bound0, (_dt.date, _dt.datetime)) and not ns_stats:
+            continue
+        pred_tz = tz
+        if pred[0] in ntz_cols and isinstance(bound0, _dt.datetime):
+            if bound0.tzinfo is not None:
+                continue          # aware bound vs wall-clock stats: skip
+            pred_tz = _dt.timezone.utc      # naive == wall-clock ns
+        if len(pred) == 2:      # membership: union of point lookups
+            pcol, values = pred
+            lo, hi = values[0], values[-1]          # sorted by normalize
+            bloom_values = [v for v in values
+                            if isinstance(v, (int, str))
+                            and not isinstance(v, bool)]
+            bloomable = len(bloom_values) == len(values)
+        else:
+            pcol, lo, hi = pred
+            bloom_values = [lo]
+            bloomable = (lo == hi and isinstance(lo, (int, str))
+                         and not isinstance(lo, bool))
+        is_str = isinstance(lo, str)
+        # datetime/date bounds -> the ns-since-epoch unit _zone_stats
+        # normalizes timestamp zone maps to, widened outward (a raw
+        # timestamp literal would compare in epoch SECONDS and silently
+        # prune every chunk); naive bounds resolve in the SESSION tz —
+        # the same clock the residual filter compares under
+        lo, hi = _bound_ns(lo, -1, pred_tz), _bound_ns(hi, +1, pred_tz)
+        vmin = F.col("vmin_str") if is_str else F.col("vmin_num")
+        vmax = F.col("vmax_str") if is_str else F.col("vmax_num")
+        keep_cond = (vmin.isNull() | vmax.isNull()
+                     | ((vmax >= F.lit(lo)) & (vmin <= F.lit(hi))))
+        sel = man.filter(F.col("column") == pcol).filter(keep_cond)
+        if bloomable and blooms_ok and "bloom_b64" in man.columns:
+            # point lookup(s): probe the per-chunk blooms DISTRIBUTED (the
+            # blobs never reach the driver — only surviving ids do); a
+            # chunk survives if ANY member may be present
+            sel = _bloom_filter_chunks(sel, bloom_values)
+        sels.append(sel.select("partition_id", "chunk_id").distinct())
+    return sels or None
+
+
+def _pruned_chunks_df(spark: SparkSession, out_dir: str,
+                      predicates: list[tuple],
+                      meta: dict) -> DataFrame | None:
+    """JOIN-path twin of _pruned_chunks for EXTREME chunk counts: the
+    surviving (partition_id, chunk_id) ids never reach the driver.
+    Per-predicate survivor sets intersect via inner joins (conjunction),
+    then collapse to one row per partition carrying its surviving chunk
+    ids as an array — the decode task list joins against this on
+    partition_id, so a partition pruned to zero chunks never even
+    schedules a task. Returns (partition_id int, wanted array<int>), or
+    None when stats are unusable (decode everything)."""
+    sels = _pred_survivor_dfs(spark, out_dir, predicates, meta)
+    if sels is None:
+        return None
+    surv = reduce(lambda a, b: a.join(b, ["partition_id", "chunk_id"]), sels)
+    return (surv.groupBy("partition_id")
+            .agg(F.collect_set("chunk_id").alias("wanted")))
+
+
+def _decode_ranges(spark: SparkSession, out_dir: str, paths: list[str],
+                   keep: dict[int, set] | None) -> list[tuple]:
+    """Decode tasks as (block path, first chunk id, end chunk id). Fewer
+    files than task slots (few big files after compaction, or a pruned
+    read that survives in one file) would serialize decode on one task
+    each, so their chunks split into ranges and every core gets work.
+    Range tasks walk headers to their start (cheap) and whole-file reads
+    dedup through the OS page cache. With set-path pruning the ranges
+    cover only the surviving chunk ids; otherwise the per-file chunk
+    counts come from one manifest job."""
+    par = spark.sparkContext.defaultParallelism
+    whole = [(p, 0, 1 << 30) for p in paths]
+    if len(paths) >= par:
+        return whole
+    if keep is not None:
+        chunk_ids = {pid: sorted(cs) for pid, cs in keep.items()}
+    else:
+        if not has_manifest(out_dir):
+            return whole
+        chunk_ids = {int(r["partition_id"]): range(int(r["n"])) for r in
+                     read_manifest(spark, out_dir).groupBy("partition_id")
+                     .agg((F.max("chunk_id") + 1).alias("n")).collect()}
+    total = sum(len(chunk_ids.get(_block_pid(p), ())) for p in paths)
+    if not total:
+        return whole
+    step = max(1, total // max(2 * par, len(paths)))
+    ranges = []
+    for p in paths:
+        ids = chunk_ids.get(_block_pid(p))
+        if not ids:
+            ranges.append((p, 0, 1 << 30))
+            continue
+        for s in range(0, len(ids), step):
+            seg = ids[s:s + step]
+            ranges.append((p, seg[0], seg[-1] + 1))
+    return ranges
+
+
+# decode_table prunes through the driver-side set path up to this many
+# chunks and through the survivor join above it
+_JOIN_PRUNE_CHUNKS = 200_000
+
+
+def _decode_blocks(buf: bytes, schema: StructType, predicates=(),
+                   lo_c: int = 0, hi_c: int = 1 << 30,
+                   wanted: set | None = None) -> Iterator[pa.RecordBatch]:
+    """The one block-file decode kernel, run by decode_table's tasks and
+    decode_stream's: decode the chunks of one block file's bytes whose
+    ids are in [lo_c, hi_c) and in `wanted` (None: all), as record
+    batches of `schema`.
+
+    Only the schema's column frames are decoded; the rest are skipped
+    by length arithmetic. Blocks encoded before a schema column existed
+    (additive evolution) yield it as NULLs, and output columns always
+    follow the schema's order. Int/string predicates are evaluated here
+    — late materialization: the predicate columns decode first, a chunk
+    with zero matches never decodes the rest, and non-matching rows
+    never cross the Python->JVM boundary. Pruned chunks cost a header
+    walk; a truncated or corrupt header raises, failing the task rather
+    than dropping rows."""
+    target = [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+    names = [n for n, _t in target]
+    # int/string bounds are exact in Arrow (same binary/UTF-8 order as
+    # Spark); float and datetime predicates stay with the Spark residual
+    # filter, so semantics are always Spark's
+    ksafe = [p for p in predicates
+             if all(isinstance(v, (int, str)) and not isinstance(v, bool)
+                    for v in (p[1] if len(p) == 2 else p[1:]))]
+    pred_cols = sorted({p[0] for p in ksafe})
+
+    def conform(tbl: pa.Table) -> pa.Table:
+        if tbl.column_names == names:
+            return tbl
+        cols = [tbl.column(n) if n in tbl.column_names
+                else pa.nulls(tbl.num_rows, t) for n, t in target]
+        return pa.table(dict(zip(names, cols)))
+
+    def kmask(ptbl: pa.Table):
+        m = None
+        for p in ksafe:
+            col = ptbl.column(p[0])
+            if len(p) == 2:
+                c = pc.is_in(col, value_set=pa.array(p[1]).cast(col.type))
+            else:
+                c = pc.and_kleene(
+                    pc.greater_equal(col, pa.scalar(p[1]).cast(col.type)),
+                    pc.less_equal(col, pa.scalar(p[2]).cast(col.type)))
+            m = c if m is None else pc.and_kleene(m, c)
+        return pc.fill_null(m, False)
+
+    for chunk_id, (off, _span) in enumerate(iter_block_spans(buf)):
+        if chunk_id >= hi_c:
+            break                       # past this task's range
+        if chunk_id < lo_c or (wanted is not None
+                               and chunk_id not in wanted):
+            continue
+        if ksafe:
+            try:
+                # phase 1: predicate columns only
+                ptbl, _ = decode_block(buf, off, columns=pred_cols)
+                mask = kmask(ptbl)
+                if not pc.any(mask).as_py():
+                    continue   # no matches: the rest is never decoded
+                full, _ = decode_block(buf, off, columns=names,
+                                       missing_ok=True)
+                yield from conform(full).filter(mask).to_batches()
+                continue
+            except (KeyError, pa.lib.ArrowInvalid,
+                    pa.lib.ArrowNotImplementedError):
+                pass   # e.g. evolved block lacking the pred column, or
+                # an uncastable literal: fall back to full decode +
+                # Spark residual filter
+        tbl, _ = decode_block(buf, off, columns=names, missing_ok=True)
+        yield from conform(tbl).to_batches()
+
+
+def decode_table(spark: SparkSession, out_dir: str,
+                 columns: list[str] | None = None,
+                 predicate: tuple | None = None,
+                 partitions: list[int] | None = None) -> DataFrame:
+    """Stream block files back into a DataFrame (schema from meta.json).
+
+    columns: project at the BLOCK layer — unneeded column frames are
+    skipped by length arithmetic, their payloads never touched (the
+    engine-side analogue of parquet column pruning).
+    predicate: one (col, lo, hi) inclusive range or (col, [v1, v2, ...])
+    membership, or a list of them (conjunction) — whole chunks whose
+    zone maps can't overlap every predicate are skipped without decoding
+    (manifest min/max, the row-group-stats analogue), then the exact
+    filters (range / IN) are re-applied to decoded rows so results are
+    precise regardless of stats. Bounds may be numeric, string, or
+    datetime/date (converted to the zone maps' ns-since-epoch unit,
+    widened outward). An equality lookup is the (col, v, v) range; when
+    the table was encoded with that column in EncodeConfig.bloom_cols,
+    per-chunk bloom filters additionally prune chunks whose min/max span
+    the value(s) — the point/IN-lookup path for non-sort columns.
+    Int/string predicates are additionally evaluated INSIDE the decode
+    kernel (late materialization): predicate columns decode first, a
+    chunk with zero matches never decodes its remaining columns, and
+    non-matching rows never cross the Python->JVM boundary; float/
+    datetime predicates rely on the Spark residual filter only.
+    partitions: decode only these partition ids' block files (the
+    snapshot_diff CDC path reads only changed partitions)."""
+    meta = read_meta(out_dir)
+    schema = StructType.fromJson(meta["spark_schema"])
+    predicates = _normalize_predicates(predicate)
+    extra_pred_cols: list[str] = []  # decoded only to evaluate predicates
+    if columns is not None:
+        for pred in predicates:
+            pcol = pred[0]
+            if pcol not in columns:
+                columns = list(columns) + [pcol]
+                extra_pred_cols.append(pcol)
+    if columns is not None:
+        missing = [c for c in columns if c not in schema.names]
+        if missing:
+            raise KeyError(f"columns {missing} not in encoded schema "
+                           f"{schema.names}")
+        schema = StructType([f for f in schema.fields
+                             if f.name in set(columns)])
+    # chunk pruning: up to _JOIN_PRUNE_CHUNKS estimated chunks the
+    # surviving ids collect to the driver as tiny sets (one closure, no
+    # extra join); above it they stay distributed — the survivor DF joins
+    # against the decode task list so the driver never materializes
+    # O(#chunks) state (at 10^12-turn scale the manifest itself is big)
+    keep: dict[int, set] | None = None
+    wanted_df = None
+    if predicates:
+        # no Spark job on the hot path: the size is stamped at write time
+        # (or summed from the manifest's footers)
+        if manifest_chunks(out_dir, meta) > _JOIN_PRUNE_CHUNKS:
+            wanted_df = _pruned_chunks_df(spark, out_dir, predicates, meta)
+        else:
+            keep = _pruned_chunks(spark, out_dir, predicates, meta)
+    paths = list_blocks(out_dir)
+    if partitions is not None:
+        # partition-subset decode (snapshot_diff's CDC path): only the
+        # named partitions' block files are read at all
+        want_p = set(partitions)
+        paths = [p for p in paths if _block_pid(p) in want_p]
+    if keep is not None:
+        # set-path pruning: a block file with no surviving chunk is not
+        # scheduled at all
+        paths = [p for p in paths if keep.get(_block_pid(p))]
+
+    def decode(task, wanted_ids=None) -> Iterator[pa.RecordBatch]:
+        # task: (block path, first chunk id, end chunk id); join-path
+        # pruning passes the partition's surviving chunk ids, the set
+        # path closes over `keep`
+        path, lo_c, hi_c = task
+        if wanted_ids is not None:
+            wanted = set(wanted_ids)
+        else:
+            wanted = None if keep is None else keep.get(_block_pid(path),
+                                                        set())
+        with open(path, "rb") as f:
+            buf = f.read()
+        yield from _decode_blocks(buf, schema, predicates, lo_c, hi_c, wanted)
+
+    if not paths:
+        out = spark.createDataFrame([], schema)
+    else:
+        ranges = _decode_ranges(spark, out_dir, paths, keep)
+        arrange = None
+        if wanted_df is not None:
+            # distributed pruning: inner-join the task list against the
+            # surviving-chunk arrays on each task's partition id —
+            # fully-pruned partitions drop out of the task list here,
+            # before any task is scheduled. No forced broadcast: AQE
+            # picks one when the survivor side is small; at extreme
+            # chunk counts the arrays stay executor-side.
+            pids = ",".join(str(_block_pid(p)) for p, _lo, _hi in ranges)
+
+            def arrange(frame):
+                return (frame.withColumn("partition_id", F.expr(
+                            f"element_at(array({pids}), int(id) + 1)"))
+                        .join(wanted_df, "partition_id")
+                        .select("id", "wanted"))
+        out = run_tasks(spark, ranges, decode, schema, arrange)
+    ntz = {f.name for f in schema.fields
+           if f.dataType.typeName() == "timestamp_ntz"}
+
+    def _plit(pcol, v):
+        # a naive datetime bound against a TIMESTAMP_NTZ column must
+        # compare WALL-CLOCK (F.lit alone builds an LTZ literal, making
+        # the comparison session-tz-dependent — and the zone-map pruning
+        # already resolved the same bound as wall-clock ns)
+        if (pcol in ntz and isinstance(v, _dt.datetime)
+                and v.tzinfo is None):
+            # via the wall-clock STRING: string->NTZ parsing is
+            # session-independent, while lit(datetime) builds its
+            # instant under a tz the later LTZ->NTZ cast may not match
+            return F.lit(v.isoformat(sep=" ")).cast("timestamp_ntz")
+        return F.lit(v)
+
+    for pred in predicates:
+        if len(pred) == 2:
+            out = out.filter(F.col(pred[0]).isin(*pred[1]))
+        else:
+            pcol, lo, hi = pred
+            out = out.filter((F.col(pcol) >= _plit(pcol, lo))
+                             & (F.col(pcol) <= _plit(pcol, hi)))
+    if extra_pred_cols:   # callers asked for columns=, not the predicate col
+        out = out.drop(*extra_pred_cols)
+    return out
+
+
+def manifest_stats(spark: SparkSession, out_dir: str) -> DataFrame:
+    """METADATA-ONLY aggregation: per-column COUNT / COUNT(col) / MIN /
+    MAX / SUM computed purely from the manifest — zero block payloads
+    touched. The Iceberg/Snowflake stats-only query path: at 10^12 turns
+    a `SELECT count(*), min(ts), max(ts), sum(n_tokens)` costs one
+    manifest scan, not a table decode.
+
+    Exactness: counts are exact (n_rows/n_nulls per chunk); SUM is exact
+    for integer/boolean columns (per-chunk int64 sums, NULL when any
+    chunk lacked one — overflow, float column, or pre-upgrade manifest);
+    MIN/MAX come from the zone maps, exact for numerics up to 2^53
+    (conservatively widened beyond — consumers needing certainty beyond
+    that must decode), string bounds exact. Timestamp bounds are in
+    ns-since-epoch. Whole-table only: stats of a FILTERED read must go
+    through decode_table (pruned chunk supersets would overcount)."""
+    man = read_manifest(spark, out_dir)
+    has_sum = "vsum_int" in man.columns
+    vsum = (F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
+                   F.sum("vsum_int"))
+            if has_sum else F.lit(None).cast("long"))
+    n_nulls = (F.sum("n_nulls") if "n_nulls" in man.columns
+               else F.lit(None).cast("long"))
+    return (man.groupBy("column")
+            .agg(F.sum("n_rows").alias("n_rows"),
+                 n_nulls.alias("n_nulls"),
+                 F.min("vmin_num").alias("min_num"),
+                 F.max("vmax_num").alias("max_num"),
+                 F.min("vmin_str").alias("min_str"),
+                 F.max("vmax_str").alias("max_str"),
+                 vsum.alias("sum_int"))
+            .withColumn("n_values", F.col("n_rows") - F.coalesce(
+                F.col("n_nulls"), F.lit(0))))
+
+
+def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Integrity audit: recompute each chunk's crc32 from the block files
+    and compare against the lineage manifest. Returns a DataFrame of
+    (partition_id, chunk_id, ok, crc_actual, crc_expected); corrupt,
+    truncated or missing chunks have ok = false (the walk stops at the
+    first bad block header, which reports crc -1). Distributed: one task
+    per block file."""
+    expected = (read_manifest(spark, out_dir)
+                .select("partition_id", "chunk_id", "crc32").distinct())
+    paths = list_blocks(out_dir)
+
+    def scan(path) -> Iterator[pa.RecordBatch]:
+        with open(path, "rb") as f:
+            buf = f.read()
+        crcs = []
+        try:
+            for off, span in iter_block_spans(buf):
+                crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
+        except ValueError:   # bad magic or truncated: flag and stop
+            crcs.append(-1)
+        yield pa.RecordBatch.from_pydict({
+            "partition_id": pa.array([_block_pid(path)] * len(crcs),
+                                     pa.int32()),
+            "chunk_id": pa.array(range(len(crcs)), pa.int32()),
+            "crc_actual": pa.array(crcs, pa.int64()),
+        })
+
+    report = "partition_id int, chunk_id int, crc_actual long"
+    actual = (run_tasks(spark, paths, scan, report) if paths
+              else spark.createDataFrame([], report))
+    joined = expected.withColumnRenamed("crc32", "crc_expected") \
+        .join(actual, ["partition_id", "chunk_id"], "full_outer")
+    return joined.withColumn(
+        "ok", F.col("crc_actual").eqNullSafe(F.col("crc_expected")))
+
+
+def roundtrip_mismatch_count(src: DataFrame, decoded: DataFrame,
+                             keys: tuple[str, ...] = ("conv_id", "turn_idx"),
+                             value_col: str = "text") -> int:
+    """Distributed bit-identity check under stable key ordering: full outer
+    join on keys; count rows missing on either side or differing in value."""
+    k = list(keys)
+    a = src.select(*k, F.col(value_col).alias("_va"))
+    b = decoded.select(*k, F.col(value_col).alias("_vb"))
+    j = a.join(b, on=k, how="full_outer")
+    bad = j.filter(~F.col("_va").eqNullSafe(F.col("_vb")))
+    return bad.count()

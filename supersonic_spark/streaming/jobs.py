@@ -62,25 +62,21 @@ def decode_stream(spark: SparkSession, out_dir: str,
     each exactly once as it lands. Built on the binaryFile file source,
     so Structured Streaming's own file tracking provides the
     exactly-once-per-file guarantee; each file decodes through batch
-    decode_table's kernel (pipeline._decode_blocks). Pass `schema`
+    decode_table's kernel (store.read._decode_blocks). Pass `schema`
     (StructType or DDL) or let it load from the first epoch's meta.json.
     Blocks from epochs that lack a schema column yield it as NULLs, and
     columns the schema does not declare are dropped. `columns` projects
     at the BLOCK layer, same as batch decode_table — unneeded column
     frames (text, typically) are skipped by length arithmetic in the
     streaming reader too."""
-    import glob as _glob
-    import json as _json
-    import os as _os
     from pyspark.sql.types import StructType
-    from ..pipeline import _decode_blocks
+    from ..store.layout import BLOCK_GLOB, first_meta
+    from ..store.read import _decode_blocks
     if schema is None:
-        metas = sorted(_glob.glob(_os.path.join(out_dir, "**", "meta.json"),
-                                  recursive=True))
-        if not metas:
+        meta = first_meta(out_dir)
+        if meta is None:
             raise ValueError("no meta.json under out_dir yet; pass schema=")
-        with open(metas[0]) as f:
-            schema = StructType.fromJson(_json.load(f)["spark_schema"])
+        schema = StructType.fromJson(meta["spark_schema"])
     if isinstance(schema, str):
         from pyspark.sql.types import _parse_datatype_string
         schema = _parse_datatype_string(schema)
@@ -97,7 +93,7 @@ def decode_stream(spark: SparkSession, out_dir: str,
            # is fixed by the format
            .schema("path string, modificationTime timestamp, "
                    "length long, content binary")
-           .option("pathGlobFilter", "*.ssb")
+           .option("pathGlobFilter", BLOCK_GLOB)
            .option("recursiveFileLookup", "true")
            .load(out_dir))
 

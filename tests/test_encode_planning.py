@@ -168,7 +168,8 @@ def test_fragment_rows_must_divide_by_columns(spark, tmp_path):
 
 def test_bucket_layout_records_the_read_schema(spark, tmp_path):
     from pyspark.sql.types import StructType
-    from supersonic_spark.pipeline import _bucket_layout, rebucket_table
+    from supersonic_spark.pipeline import rebucket_table
+    from supersonic_spark.store.layout import _bucket_layout
     _src, bdir = _bucketed(spark, tmp_path)
     with open(os.path.join(bdir, "_buckets.json")) as f:
         recorded = StructType.fromJson(json.load(f)["spark_schema"])
@@ -182,7 +183,7 @@ def test_bucket_layout_records_the_read_schema(spark, tmp_path):
 
 
 def test_pack_by_bytes_balances_into_slots():
-    from supersonic_spark.pipeline import _pack_by_bytes
+    from supersonic_spark.store.encode import _pack_by_bytes
     items = list("abcdefg")
     sizes = [70, 10, 40, 30, 20, 50, 60]
     groups = _pack_by_bytes(items, sizes, 3)

@@ -271,8 +271,9 @@ def test_decode_block_projection(spark):
 
 def test_decode_table_projection_and_pruning(spark, tmp_path):
     from supersonic_spark.datagen import generate_transcripts
-    from supersonic_spark.pipeline import (EncodeConfig, _pruned_chunks,
-                                           decode_table, encode_table)
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table)
+    from supersonic_spark.store.read import _pruned_chunks
     # mega conversations guarantee chunks whose turn_idx min is high, so
     # a low-range predicate genuinely prunes
     df = generate_transcripts(spark, n_convs=60, seed=3,
@@ -343,14 +344,14 @@ def test_decode_table_string_predicate(spark, tmp_path):
 # --- encode prefetch --------------------------------------------------------
 
 def test_prefetched_yields_input_unchanged():
-    from supersonic_spark.pipeline import _prefetched
+    from supersonic_spark.store.encode import _prefetched
     items = [object() for _ in range(25)]
     assert list(_prefetched(iter(items))) == items   # same objects, order
     assert list(_prefetched(iter(()))) == []
 
 
 def test_prefetched_propagates_reader_errors():
-    from supersonic_spark.pipeline import _prefetched
+    from supersonic_spark.store.encode import _prefetched
 
     def boom():
         yield "a"
@@ -463,7 +464,7 @@ def test_pfor_delta_old_width_byte_decodes():
 def test_manifest_batch_accepts_pre_zonemap_rows():
     # resume markers written before zone maps existed lack the stats
     # keys; they must still load (their chunks simply can't be pruned)
-    from supersonic_spark.pipeline import _manifest_batch
+    from supersonic_spark.store.stats import _manifest_batch
     row = {"partition_id": 0, "chunk_id": 0, "column": "c", "codec": "rle",
            "n_rows": 10, "bytes_in": 100, "bytes_out": 50,
            "encode_sec": 0.1, "crc32": 123, "resumed": True}

@@ -87,7 +87,7 @@ def test_decode_table_datetime_predicate(spark, tmp_path):
 
 
 def test_decode_table_predicate_type_validation(spark, tmp_path):
-    from supersonic_spark.pipeline import _normalize_predicates
+    from supersonic_spark.store.read import _normalize_predicates
     with pytest.raises(TypeError):
         _normalize_predicates(("turn_idx", [1, 2], 5))
     with pytest.raises(TypeError):
@@ -99,7 +99,7 @@ def test_decode_table_predicate_type_validation(spark, tmp_path):
 
 
 def test_bound_ns_widen_directions():
-    from supersonic_spark.pipeline import _bound_ns
+    from supersonic_spark.store.stats import _bound_ns
     d = dt.date(1970, 1, 2)
     assert _bound_ns(d, -1) == 0                       # one day outward
     assert _bound_ns(d, +1) == 3 * 86_400 * 10 ** 9    # end of day + 1 day
@@ -132,8 +132,9 @@ def test_bloom_point_lookup_prunes_beyond_zone_maps(spark, tmp_path):
     """Time-sorted encode means user_id min/max spans every chunk (zone
     maps prune nothing); the per-chunk bloom must prune chunks AND keep
     the result exact."""
-    from supersonic_spark.pipeline import (EncodeConfig, _pruned_chunks,
-                                           decode_table, encode_table)
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table)
+    from supersonic_spark.store.read import _pruned_chunks
     rows = [(i, i * 1000, i % 97, f"e{i % 5}") for i in range(4000)]
     df = spark.createDataFrame(
         rows, "event_id long, t long, user_id long, etype string")
@@ -161,9 +162,9 @@ def test_bloom_point_lookup_prunes_beyond_zone_maps(spark, tmp_path):
 def test_in_list_predicate_with_bloom(spark, tmp_path):
     """(col, [values]) membership: exact IN results, bloom-pruned, and
     bad member types / empty lists rejected."""
-    from supersonic_spark.pipeline import (EncodeConfig,
-                                           _normalize_predicates,
-                                           decode_table, encode_table)
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table)
+    from supersonic_spark.store.read import _normalize_predicates
     rows = [(i, i * 1000, i % 97, f"e{i % 5}") for i in range(3000)]
     df = spark.createDataFrame(
         rows, "event_id long, t long, user_id long, etype string")
@@ -187,7 +188,7 @@ def test_in_list_predicate_with_bloom(spark, tmp_path):
 
 
 def test_bloom_roundtrip_membership():
-    from supersonic_spark.pipeline import _bloom_build, _bloom_member
+    from supersonic_spark.store.stats import _bloom_build, _bloom_member
     import base64
     import pyarrow as pa
     col = pa.chunked_array([pa.array([1, 5, 7, 900000, None], pa.int64())])
@@ -437,7 +438,7 @@ def test_compact_blocks_preserves_rows_and_pruning(spark, tmp_path):
     assert got == list(range(2600))             # union, nothing lost
 
     # point lookup still prunes via the merged manifest's blooms
-    from supersonic_spark.pipeline import _pruned_chunks
+    from supersonic_spark.store.read import _pruned_chunks
     target = 7
     one = decode_table(spark, out, columns=["event_id"],
                        predicate=("user_id", target, target))

@@ -89,15 +89,15 @@ def test_join_prune_branch_matches_driver_path(spark, tmp_path,
     """A zero _JOIN_PRUNE_CHUNKS forces the distributed survivor-join
     path; results must match the driver-set path bit-for-bit, including
     bloom point-lookup pruning."""
-    from supersonic_spark import pipeline
     from supersonic_spark.pipeline import decode_table
+    from supersonic_spark.store import read
     src, out = _encode_fixture(spark, tmp_path, "join_prune",
                                bloom=("conv_id",))
     some = [r["conv_id"] for r in
             src.select("conv_id").distinct().limit(3).collect()]
     pred = ("conv_id", some)
     a = decode_table(spark, out, predicate=pred)                  # driver
-    monkeypatch.setattr(pipeline, "_JOIN_PRUNE_CHUNKS", 0)
+    monkeypatch.setattr(read, "_JOIN_PRUNE_CHUNKS", 0)
     b = decode_table(spark, out, predicate=pred)                  # join
     key = ["conv_id", "turn_idx"]
     rows_a = sorted(map(tuple, a.select(*key, "text").collect()))
@@ -110,11 +110,11 @@ def test_join_prune_branch_matches_driver_path(spark, tmp_path,
 
 def test_join_prune_range_predicate(spark, tmp_path, monkeypatch):
     """Join path with a numeric range predicate (no blooms involved)."""
-    from supersonic_spark import pipeline
     from supersonic_spark.pipeline import decode_table
+    from supersonic_spark.store import read
     src, out = _encode_fixture(spark, tmp_path, "join_prune_rng")
     pred = ("turn_idx", 0, 2)
-    monkeypatch.setattr(pipeline, "_JOIN_PRUNE_CHUNKS", 0)
+    monkeypatch.setattr(read, "_JOIN_PRUNE_CHUNKS", 0)
     b = decode_table(spark, out, predicate=pred)
     want = src.filter((F.col("turn_idx") >= 0) & (F.col("turn_idx") <= 2))
     assert b.count() == want.count() > 0
@@ -192,7 +192,7 @@ def test_bound_ns_session_tz():
     """Naive datetime bounds resolve in the given session tz; unknown tz
     widens by the full offset envelope (conservative, never over-prunes)."""
     from zoneinfo import ZoneInfo
-    from supersonic_spark.pipeline import _bound_ns
+    from supersonic_spark.store.stats import _bound_ns
     naive = dt.datetime(2024, 6, 1, 12, 0, 0)
     utc = ZoneInfo("UTC")
     ny = ZoneInfo("America/New_York")
@@ -249,8 +249,8 @@ def test_bloom_probe_b64_matches_scalar():
     import numpy as np
     import pyarrow as pa
 
-    from supersonic_spark.pipeline import (_bloom_build, _bloom_member,
-                                           bloom_probe_b64)
+    from supersonic_spark.pipeline import bloom_probe_b64
+    from supersonic_spark.store.stats import _bloom_build, _bloom_member
 
     blobs = []
     for i in range(300):
@@ -346,9 +346,9 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
     """Morton-layout encode: zone maps must prune chunks for a range
     predicate on EITHER z key, where the single-sort layout only prunes
     its leading sort column; results stay exact."""
-    from supersonic_spark.pipeline import (EncodeConfig, _pruned_chunks,
-                                           decode_table, encode_table,
-                                           encode_table_zordered)
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table, encode_table_zordered)
+    from supersonic_spark.store.read import _pruned_chunks
 
     n = 32768
     df = spark.range(n).select(
@@ -466,7 +466,8 @@ def test_bloom_pruning_version_guard(spark, tmp_path):
     such manifests (exact results, zone-only pruning) and use them on
     current ones."""
     import json
-    from supersonic_spark.pipeline import (_pruned_chunks, decode_table)
+    from supersonic_spark.pipeline import decode_table
+    from supersonic_spark.store.read import _pruned_chunks
     src, out = _encode_fixture(spark, tmp_path, "bloomver",
                                bloom=("conv_id",))
     target = src.select("conv_id").distinct().limit(1).collect()[0][0]
@@ -683,8 +684,9 @@ def test_ntz_datetime_pruning_non_utc_session(spark, tmp_path):
     must NOT be shifted by a non-UTC session timezone (they'd prune
     chunks the residual filter keeps). Exactness + pruning both hold
     under Asia/Tokyo."""
-    from supersonic_spark.pipeline import (EncodeConfig, _pruned_chunks,
-                                           decode_table, encode_table)
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table)
+    from supersonic_spark.store.read import _pruned_chunks
     rows = [(i, f"2024-01-{1 + i // 100:02d} {i % 24:02d}:00:00")
             for i in range(2000)]
     df = (spark.createDataFrame(rows, "event_id long, s string")

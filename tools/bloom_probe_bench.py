@@ -33,8 +33,8 @@ import pyarrow as pa
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from supersonic_spark.pipeline import (_bloom_build,  # noqa: E402
-                                       _bloom_member, bloom_probe_b64)
+from supersonic_spark.store.stats import (_bloom_build,  # noqa: E402
+                                          _bloom_member, bloom_probe_b64)
 
 
 def build_manifest_blobs(n_rows: int, seed: int = 7) -> list[str]:
