@@ -30,13 +30,15 @@ import re
 import shutil
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .stats import _manifest_batch
+from .stats import MANIFEST_SCHEMA, _manifest_batch
 
 BLOCK_GLOB = "*.ssb"
+_FRAGMENT_SCHEMA = _manifest_batch([]).schema
 _BUCKET_FILE = re.compile(r"part-(\d{5})-.*\.parquet$")
 
 
@@ -162,11 +164,9 @@ def first_meta(root: str) -> dict | None:
     return read_meta(os.path.dirname(found[0])) if found else None
 
 
-def _footer_rows(table: str, names) -> dict[str, int]:
-    """Row count of each named manifest file, from its parquet footer."""
-    mdir = manifest_dir(table)
-    return {n: pq.read_metadata(os.path.join(mdir, n)).num_rows
-            for n in sorted(names)}
+def _footer_rows(files) -> dict[str, int]:
+    """Row count of each manifest file (a path), from its parquet footer."""
+    return {f: pq.read_metadata(f).num_rows for f in sorted(files)}
 
 
 def _stamp_manifest(out_dir: str, meta: dict, fragments: list | set,
@@ -181,12 +181,13 @@ def _stamp_manifest(out_dir: str, meta: dict, fragments: list | set,
     a kernel skipped a column, and raises. Compaction passes False: its
     chunks from pre-evolution sources have fewer columns."""
     n_cols = len(meta["spark_schema"].get("fields", [])) or 1
-    rows = _footer_rows(out_dir, fragments)
-    for name, n in rows.items():
+    rows = _footer_rows(os.path.join(manifest_dir(out_dir), n)
+                        for n in fragments)
+    for path, n in rows.items():
         if whole_chunks and n % n_cols:
             raise RuntimeError(
-                f"manifest fragment {name} holds {n} rows, not a "
-                f"multiple of the {n_cols} encoded columns")
+                f"manifest fragment {os.path.basename(path)} holds {n} "
+                f"rows, not a multiple of the {n_cols} encoded columns")
     meta["manifest_rows"] = sum(rows.values())
     meta["manifest_columns"] = n_cols
     _write_meta(out_dir, meta)
@@ -230,9 +231,69 @@ def has_manifest(table: str) -> bool:
     return os.path.isdir(manifest_dir(table))
 
 
+def manifest_files(table: str) -> list[str]:
+    """Paths of the manifest's parquet files, sorted: the fragments, or
+    the part files of a manifest an older encoder wrote as one Spark job.
+    Dot and underscore files (temp names, Spark's _SUCCESS) are not."""
+    return [os.path.join(manifest_dir(table), n)
+            for n in sorted(_listing(manifest_dir(table)))
+            if n.endswith(".parquet") and not n.startswith((".", "_"))]
+
+
+def manifest_schema(files: list[str]) -> pa.Schema:
+    """The union of the files' Arrow schemas, read from their footers;
+    the fragment schema when there are no files."""
+    if not files:
+        return _FRAGMENT_SCHEMA
+    return pa.unify_schemas([pq.read_schema(f) for f in files])
+
+
+def read_fragments(files: list[str], schema: pa.Schema,
+                   columns: list[str] | None = None,
+                   of_columns=None) -> pa.Table:
+    """Manifest rows of `files` as one Arrow table with `schema` (their
+    union, manifest_schema) projected to `columns` (None: all): a column
+    a file lacks reads as null, typed as in fragments when no file has
+    it. `of_columns` keeps only the rows describing those table columns.
+    Runs on the driver and in tasks."""
+    names = schema.names if columns is None else list(columns)
+    out = pa.schema([(schema if n in schema.names else _FRAGMENT_SCHEMA)
+                     .field(n) for n in names])
+    parts = []
+    for f in files:
+        pf = pq.ParquetFile(f)
+        have = set(pf.schema_arrow.names)
+        need = [n for n in names if n in have]
+        if of_columns is not None and "column" not in need:
+            need.append("column")
+        tbl = pf.read(columns=need)
+        if of_columns is not None:
+            tbl = tbl.filter(pc.is_in(tbl.column("column"),
+                                      value_set=pa.array(list(of_columns),
+                                                         pa.string())))
+        parts.append(pa.table(
+            [tbl.column(n).cast(out.field(n).type) if n in have
+             else pa.nulls(tbl.num_rows, out.field(n).type) for n in names],
+            schema=out))
+    return pa.concat_tables(parts) if parts else out.empty_table()
+
+
+def manifest_table(table: str, columns: list[str] | None = None,
+                   of_columns=None) -> pa.Table:
+    """The driver-side manifest reader: the table's manifest rows as an
+    Arrow table, without a Spark job (read_fragments over every manifest
+    file). An empty or missing manifest/ gives an empty table."""
+    files = manifest_files(table)
+    return read_fragments(files, manifest_schema(files), columns, of_columns)
+
+
 def read_manifest(spark: SparkSession, table: str,
                   schema: StructType | None = None) -> DataFrame:
-    """The table's manifest as a DataFrame; `schema` skips inference."""
+    """The table's manifest as a DataFrame; `schema` skips inference,
+    which an empty manifest/ (an encoded empty input) cannot run, so it
+    reads with MANIFEST_SCHEMA."""
+    if schema is None and not manifest_files(table):
+        schema = MANIFEST_SCHEMA
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(manifest_dir(table))
 
@@ -244,10 +305,7 @@ def manifest_chunks(table: str, meta: dict) -> int:
     width (0 without a manifest). Neither runs a Spark job."""
     rows = meta.get("manifest_rows")
     if rows is None:
-        rows = sum(_footer_rows(table, [
-            n for n in _listing(manifest_dir(table))
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        ]).values())
+        rows = sum(_footer_rows(manifest_files(table)).values())
     cols = meta.get("manifest_columns") or len(meta["spark_schema"]["fields"])
     return rows // max(cols, 1)
 

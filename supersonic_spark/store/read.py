@@ -1,15 +1,20 @@
-"""Read: predicate normalization, chunk pruning (zone maps and blooms,
-through a driver-side id set or, at extreme chunk counts, a survivor
-join), the one block-file decode kernel, decode_table, the
-metadata-only manifest_stats, and the integrity and round-trip audits.
+"""Read: predicate normalization, chunk pruning, the one block-file
+decode kernel, decode_table, the metadata-only manifest_stats, and the
+integrity and round-trip audits.
+
+Pruning is one Arrow kernel over the manifest files (_prune_plans, then
+_survivors: zone-map overlap, then bloom probes). decode_table runs it
+on the driver, so planning a predicated read runs no Spark job; at
+extreme chunk counts it runs in tasks and the survivors join the decode
+task list instead of reaching the driver.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import math
 import zlib
-from functools import reduce
-from typing import Iterator
+from typing import Iterator, NamedTuple
 from zoneinfo import ZoneInfo
 
 import pyarrow as pa
@@ -19,9 +24,10 @@ from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from ..codecs import decode_block, iter_block_spans
-from ..runtime import pin_worker_threads, run_tasks
+from ..runtime import run_tasks
 from .layout import (_block_pid, has_manifest, list_blocks, manifest_chunks,
-                     read_manifest, read_meta)
+                     manifest_files, manifest_schema, manifest_table,
+                     read_fragments, read_manifest, read_meta)
 from .stats import _bound_ns, bloom_probe_b64
 
 
@@ -77,74 +83,22 @@ def _session_tz(spark: SparkSession):
         return None
 
 
-def _bloom_filter_chunks(man_sel: DataFrame, values: list) -> DataFrame:
-    """Keep manifest rows whose chunk bloom may contain ANY of `values`
-    (NULL bloom = no stats = always kept). Runs as mapInArrow over the
-    manifest so blobs are probed executor-side — at 10^12-turn scale the
-    manifest is itself a big table and the blobs must never be
-    collected. The probe itself is bloom_probe_b64: batched base64-text
-    gathers, no per-row Python, no blob materialization."""
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pin_worker_threads()
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            keep_mask = bloom_probe_b64(tbl.column("bloom_b64"), values)
-            sel = pa.array(keep_mask)
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column("partition_id").filter(sel).combine_chunks()
-                 .cast(pa.int32()),
-                 tbl.column("chunk_id").filter(sel).combine_chunks()
-                 .cast(pa.int32())],
-                ["partition_id", "chunk_id"])
-
-    return (man_sel.select("partition_id", "chunk_id", "bloom_b64")
-            .mapInArrow(run, schema="partition_id int, chunk_id int"))
+class _Plan(NamedTuple):
+    """How one predicate prunes: chunks of `column` whose zone map
+    overlaps [lo, hi] (str, or float64 for numbers) survive, and of those
+    only the chunks whose bloom may hold one of `bloom` (None: no probe)."""
+    column: str
+    is_str: bool
+    lo: object
+    hi: object
+    bloom: list | None
 
 
-def _pruned_chunks(spark: SparkSession, out_dir: str,
-                   predicates: list[tuple],
-                   meta: dict | None = None) -> dict[int, set] | None:
-    """Chunks whose zone maps can satisfy EVERY (col, lo, hi) range
-    (inclusive bounds, conjunction): {partition_id: set(chunk_id)}.
-    Chunks without stats (old manifests, unsupported types) are always
-    kept — pruning is only ever an optimization, never a correctness
-    gate. Returns None when no manifest exists. Driver-side: O(#chunks)
-    tiny rows; for extreme chunk counts push the same overlap filter
-    into a join against the block scan instead. `meta` is the table's
-    meta.json when the caller already read it."""
-    sels = _pred_survivor_dfs(spark, out_dir, predicates,
-                              read_meta(out_dir) if meta is None else meta)
-    if sels is None:
-        return None
-    keep: dict[int, set] | None = None
-    for sel in sels:
-        rows = sel.select("partition_id", "chunk_id").distinct().collect()
-        this: dict[int, set] = {}
-        for r in rows:
-            this.setdefault(r["partition_id"], set()).add(r["chunk_id"])
-        if keep is None:
-            keep = this
-        else:  # conjunction: a chunk survives only if every range allows it
-            keep = {pid: keep[pid] & cs for pid, cs in this.items()
-                    if pid in keep}
-            keep = {pid: cs for pid, cs in keep.items() if cs}
-    # None = no predicate could use stats (e.g. datetime predicates on a
-    # pre-upgrade manifest): decode everything. {} = stats genuinely rule
-    # out every chunk.
-    return keep
-
-
-def _pred_survivor_dfs(spark: SparkSession, out_dir: str,
-                       predicates: list[tuple],
-                       meta: dict) -> list[DataFrame] | None:
-    """One (partition_id, chunk_id) survivor DataFrame per usable
-    predicate — shared by the driver-side set path (_pruned_chunks) and
-    the join path (_pruned_chunks_df). `meta` is the table's meta.json.
-    None when there is no manifest or no predicate can use the stats."""
-    if not has_manifest(out_dir):
-        return None
-    man = read_manifest(spark, out_dir)
-    tz = _session_tz(spark)
+def _prune_plans(predicates: list[tuple], meta: dict, manifest_columns,
+                 tz) -> list[_Plan]:
+    """One _Plan per predicate the manifest's stats can prune with.
+    `meta` is the table's meta.json, `manifest_columns` the names in the
+    union of its manifest files' schemas, `tz` the session timezone."""
     # pre-upgrade manifests (no stats_version marker and none of the
     # columns that shipped with the ns normalization) store datetime zone
     # maps in raw Arrow units (µs) — comparing ns bounds against them
@@ -153,77 +107,171 @@ def _pred_survivor_dfs(spark: SparkSession, out_dir: str,
     # a stamped version is authoritative: compaction writes every
     # manifest column, null-filled for a pre-upgrade source
     ns_stats = (meta["stats_version"] >= 2 if "stats_version" in meta
-                else "vsum_int" in man.columns or "n_nulls" in man.columns)
+                else "vsum_int" in manifest_columns
+                or "n_nulls" in manifest_columns)
     # bloom blobs are only probeable if they were built with the CURRENT
     # hash family (stats_version >= 3): probing an older blob with a
     # different hash produces false NEGATIVES — silently dropped rows —
     # the one failure mode pruning must never have
-    blooms_ok = meta.get("stats_version", 0) >= 3
+    blooms_ok = (meta.get("stats_version", 0) >= 3
+                 and "bloom_b64" in manifest_columns)
     # TIMESTAMP_NTZ zone maps hold WALL-CLOCK ns (no instant semantics):
     # naive bounds must convert as-if-UTC — resolving them in a non-UTC
     # session tz would shift bounds by the offset and prune chunks the
     # residual filter keeps. Aware bounds against NTZ can't prune safely.
     ntz_cols = {f["name"] for f in meta["spark_schema"]["fields"]
                 if f["type"] == "timestamp_ntz"}
-    sels: list[DataFrame] = []
+    plans = []
     for pred in predicates:
-        bound0 = pred[1][0] if len(pred) == 2 else pred[1]
-        if isinstance(bound0, (_dt.date, _dt.datetime)) and not ns_stats:
+        pcol = pred[0]
+        if len(pred) == 2:      # membership: union of point lookups
+            values = pred[1]
+            lo, hi = values[0], values[-1]          # sorted by normalize
+        else:
+            lo, hi = pred[1:]
+            values = [lo] if lo == hi else []
+        if isinstance(lo, (_dt.date, _dt.datetime)) and not ns_stats:
             continue
         pred_tz = tz
-        if pred[0] in ntz_cols and isinstance(bound0, _dt.datetime):
-            if bound0.tzinfo is not None:
+        if pcol in ntz_cols and isinstance(lo, _dt.datetime):
+            if lo.tzinfo is not None:
                 continue          # aware bound vs wall-clock stats: skip
             pred_tz = _dt.timezone.utc      # naive == wall-clock ns
-        if len(pred) == 2:      # membership: union of point lookups
-            pcol, values = pred
-            lo, hi = values[0], values[-1]          # sorted by normalize
-            bloom_values = [v for v in values
-                            if isinstance(v, (int, str))
-                            and not isinstance(v, bool)]
-            bloomable = len(bloom_values) == len(values)
-        else:
-            pcol, lo, hi = pred
-            bloom_values = [lo]
-            bloomable = (lo == hi and isinstance(lo, (int, str))
-                         and not isinstance(lo, bool))
+        bloomable = blooms_ok and values and all(
+            isinstance(v, (int, str)) and not isinstance(v, bool)
+            for v in values)
         is_str = isinstance(lo, str)
         # datetime/date bounds -> the ns-since-epoch unit _zone_stats
-        # normalizes timestamp zone maps to, widened outward (a raw
-        # timestamp literal would compare in epoch SECONDS and silently
-        # prune every chunk); naive bounds resolve in the SESSION tz —
-        # the same clock the residual filter compares under
+        # normalizes timestamp zone maps to, widened outward; naive bounds
+        # resolve in the SESSION tz — the same clock the residual filter
+        # compares under
         lo, hi = _bound_ns(lo, -1, pred_tz), _bound_ns(hi, +1, pred_tz)
-        vmin = F.col("vmin_str") if is_str else F.col("vmin_num")
-        vmax = F.col("vmax_str") if is_str else F.col("vmax_num")
-        keep_cond = (vmin.isNull() | vmax.isNull()
-                     | ((vmax >= F.lit(lo)) & (vmin <= F.lit(hi))))
-        sel = man.filter(F.col("column") == pcol).filter(keep_cond)
-        if bloomable and blooms_ok and "bloom_b64" in man.columns:
-            # point lookup(s): probe the per-chunk blooms DISTRIBUTED (the
-            # blobs never reach the driver — only surviving ids do); a
-            # chunk survives if ANY member may be present
-            sel = _bloom_filter_chunks(sel, bloom_values)
-        sels.append(sel.select("partition_id", "chunk_id").distinct())
-    return sels or None
+        if not is_str:
+            # Spark compares the double zone maps against an int or ns
+            # bound as double (NaN handled in _survivors)
+            lo, hi = float(lo), float(hi)
+        plans.append(_Plan(pcol, is_str, lo, hi,
+                           values if bloomable else None))
+    return plans
+
+
+def _spark_ge(a, b):
+    """a >= b over doubles (one side an Arrow array, the other a float)
+    the way Spark orders them: NaN equals NaN and is above every other
+    value, where IEEE (Arrow) compares NaN false both ways."""
+    def nan(x):
+        return (math.isnan(x) if isinstance(x, float)
+                else pc.fill_null(pc.is_nan(x), False))
+    # a NaN `a` is >= anything; a NaN `b` only when `a` is NaN too
+    return pc.if_else(nan(b), nan(a),
+                      pc.or_(nan(a), pc.greater_equal(a, b)))
+
+
+def _survivors(tbl: pa.Table, plans: list[_Plan]) -> Iterator[pa.RecordBatch]:
+    """The prune kernel, run on the driver (set path) and in tasks (join
+    path): for each plan, in order, one batch of (pred_idx, partition_id,
+    chunk_id) for the chunks of `tbl` (manifest rows) it keeps. A chunk
+    without a zone map (null vmin or vmax) or without a bloom is kept:
+    pruning is only ever an optimization, never a correctness gate."""
+    for i, p in enumerate(plans):
+        t = tbl.filter(pc.equal(tbl.column("column"), p.column))
+        suffix = "str" if p.is_str else "num"
+        vmin, vmax = t.column(f"vmin_{suffix}"), t.column(f"vmax_{suffix}")
+        if p.is_str:
+            above = pc.greater_equal(vmax, p.lo)
+            below = pc.less_equal(vmin, p.hi)
+        else:
+            above = _spark_ge(vmax, p.lo)
+            below = _spark_ge(p.hi, vmin)
+        overlap = pc.fill_null(pc.and_(above, below), False)
+        t = t.filter(pc.or_(pc.or_(pc.is_null(vmin), pc.is_null(vmax)),
+                            overlap))
+        if p.bloom is not None:
+            t = t.filter(pa.array(bloom_probe_b64(t.column("bloom_b64"),
+                                                  p.bloom)))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([i] * t.num_rows, pa.int32()),
+             t.column("partition_id").combine_chunks().cast(pa.int32()),
+             t.column("chunk_id").combine_chunks().cast(pa.int32())],
+            ["pred_idx", "partition_id", "chunk_id"])
+
+
+def _manifest_plans(spark: SparkSession, out_dir: str,
+                    predicates: list[tuple], meta: dict):
+    """(manifest files, their union schema, prune plans), or None when
+    there is no manifest or no predicate can use its stats (e.g.
+    datetime predicates on a pre-upgrade manifest): decode everything."""
+    if not has_manifest(out_dir):
+        return None
+    files = manifest_files(out_dir)
+    schema = manifest_schema(files)
+    plans = _prune_plans(predicates, meta, set(schema.names),
+                         _session_tz(spark))
+    return (files, schema, plans) if plans else None
+
+
+def _prune_files(files: list[str], schema: pa.Schema,
+                 plans: list[_Plan]) -> Iterator[pa.RecordBatch]:
+    """_survivors over the manifest rows of `files` that the plans read."""
+    cols = ["partition_id", "chunk_id", "column", "vmin_num", "vmax_num",
+            "vmin_str", "vmax_str"]
+    if any(p.bloom is not None for p in plans):
+        cols.append("bloom_b64")
+    tbl = read_fragments(files, schema, cols, {p.column for p in plans})
+    return _survivors(tbl, plans)
+
+
+def _pruned_chunks(spark: SparkSession, out_dir: str,
+                   predicates: list[tuple],
+                   meta: dict | None = None) -> dict[int, set] | None:
+    """Chunks whose stats can satisfy EVERY predicate (conjunction):
+    {partition_id: set(chunk_id)}, planned on the driver from the
+    manifest files without a Spark job. None means no predicate could use
+    stats: decode everything; {} means stats rule out every chunk. `meta`
+    is the table's meta.json when the caller already read it."""
+    planned = _manifest_plans(spark, out_dir, predicates,
+                              read_meta(out_dir) if meta is None else meta)
+    if planned is None:
+        return None
+    # conjunction over (pid, cid) across all files: a manifest an older
+    # encoder wrote can spread one partition over several files
+    both = set.intersection(*(
+        set(zip(b.column("partition_id").to_pylist(),
+                b.column("chunk_id").to_pylist()))
+        for b in _prune_files(*planned)))
+    keep: dict[int, set] = {}
+    for pid, cid in both:
+        keep.setdefault(pid, set()).add(cid)
+    return keep
 
 
 def _pruned_chunks_df(spark: SparkSession, out_dir: str,
                       predicates: list[tuple],
                       meta: dict) -> DataFrame | None:
     """JOIN-path twin of _pruned_chunks for EXTREME chunk counts: the
-    surviving (partition_id, chunk_id) ids never reach the driver.
-    Per-predicate survivor sets intersect via inner joins (conjunction),
-    then collapse to one row per partition carrying its surviving chunk
-    ids as an array — the decode task list joins against this on
-    partition_id, so a partition pruned to zero chunks never even
-    schedules a task. Returns (partition_id int, wanted array<int>), or
-    None when stats are unusable (decode everything)."""
-    sels = _pred_survivor_dfs(spark, out_dir, predicates, meta)
-    if sels is None:
+    same kernel runs in tasks over the manifest files, so surviving ids
+    never reach the driver. A chunk every plan keeps survives, and the
+    survivors collapse to (partition_id int, wanted array<int>) rows the
+    decode task list joins on: a partition pruned to zero chunks never
+    schedules a task. None when stats are unusable (decode everything)."""
+    planned = _manifest_plans(spark, out_dir, predicates, meta)
+    if planned is None:
         return None
-    surv = reduce(lambda a, b: a.join(b, ["partition_id", "chunk_id"]), sels)
-    return (surv.groupBy("partition_id")
+    files, schema, plans = planned
+    n = max(1, min(spark.sparkContext.defaultParallelism, len(files)))
+
+    def prune(group: list[str]) -> Iterator[pa.RecordBatch]:
+        # one file at a time: a task holds one fragment's rows, not its
+        # group's (the groupBy below conjoins plans across files)
+        for f in group:
+            yield from _prune_files([f], schema, plans)
+
+    surv = run_tasks(spark, [files[g::n] for g in range(n)], prune,
+                     "pred_idx int, partition_id int, chunk_id int")
+    return (surv.groupBy("partition_id", "chunk_id")
+            .agg(F.countDistinct("pred_idx").alias("n_plans"))
+            .filter(F.col("n_plans") == len(plans))
+            .groupBy("partition_id")
             .agg(F.collect_set("chunk_id").alias("wanted")))
 
 
@@ -236,7 +284,7 @@ def _decode_ranges(spark: SparkSession, out_dir: str, paths: list[str],
     Range tasks walk headers to their start (cheap) and whole-file reads
     dedup through the OS page cache. With set-path pruning the ranges
     cover only the surviving chunk ids; otherwise the per-file chunk
-    counts come from one manifest job."""
+    counts come from the manifest files (no Spark job)."""
     par = spark.sparkContext.defaultParallelism
     whole = [(p, 0, 1 << 30) for p in paths]
     if len(paths) >= par:
@@ -244,11 +292,11 @@ def _decode_ranges(spark: SparkSession, out_dir: str, paths: list[str],
     if keep is not None:
         chunk_ids = {pid: sorted(cs) for pid, cs in keep.items()}
     else:
-        if not has_manifest(out_dir):
-            return whole
-        chunk_ids = {int(r["partition_id"]): range(int(r["n"])) for r in
-                     read_manifest(spark, out_dir).groupBy("partition_id")
-                     .agg((F.max("chunk_id") + 1).alias("n")).collect()}
+        n = (manifest_table(out_dir, ["partition_id", "chunk_id"])
+             .group_by("partition_id").aggregate([("chunk_id", "max")]))
+        chunk_ids = {pid: range(m + 1) for pid, m in
+                     zip(n.column("partition_id").to_pylist(),
+                         n.column("chunk_id_max").to_pylist())}
     total = sum(len(chunk_ids.get(_block_pid(p), ())) for p in paths)
     if not total:
         return whole
@@ -387,11 +435,11 @@ def decode_table(spark: SparkSession, out_dir: str,
                            f"{schema.names}")
         schema = StructType([f for f in schema.fields
                              if f.name in set(columns)])
-    # chunk pruning: up to _JOIN_PRUNE_CHUNKS estimated chunks the
-    # surviving ids collect to the driver as tiny sets (one closure, no
-    # extra join); above it they stay distributed — the survivor DF joins
-    # against the decode task list so the driver never materializes
-    # O(#chunks) state (at 10^12-turn scale the manifest itself is big)
+    # chunk pruning: up to _JOIN_PRUNE_CHUNKS estimated chunks the driver
+    # prunes the manifest files itself and the surviving ids are tiny sets
+    # (one closure, no Spark job); above it the same kernel runs in tasks
+    # and the survivor DF joins against the decode task list, so the
+    # driver never materializes O(#chunks) state
     keep: dict[int, set] | None = None
     wanted_df = None
     if predicates:
@@ -427,7 +475,9 @@ def decode_table(spark: SparkSession, out_dir: str,
         yield from _decode_blocks(buf, schema, predicates, lo_c, hi_c, wanted)
 
     if not paths:
-        out = spark.createDataFrame([], schema)
+        # limit(0) plans as an empty local relation: collecting a fully
+        # pruned read runs no Spark job
+        out = spark.createDataFrame([], schema).limit(0)
     else:
         ranges = _decode_ranges(spark, out_dir, paths, keep)
         arrange = None

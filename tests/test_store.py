@@ -6,11 +6,17 @@ bucket-id rule for bucket layouts."""
 from __future__ import annotations
 
 import ast
+import base64
+import datetime as dt
 import importlib
+import math
 import os
+import shutil
 import subprocess
 import sys
 
+import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -240,3 +246,338 @@ def test_merge_completes_a_layout_missing_buckets(spark, tmp_path):
     assert sorted(bucket_files(bdir)) == list(range(8))
     got = sorted(tuple(r) for r in spark.read.parquet(bdir).collect())
     assert got == sorted(rows + [(99, 1, "x")])
+
+
+# --- reads planned on the driver --------------------------------------------
+
+def _run_counted(spark, fn):
+    """(fn(), jobs, tasks): the Spark jobs and tasks fn ran, counted
+    through a StatusTracker job group once the listener bus drained."""
+    sc = spark.sparkContext
+    group = f"counted-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s) for j in jobs
+              for s in st.getJobInfo(j).stageIds]
+    return out, len(jobs), sum(s.numCompletedTasks for s in stages if s)
+
+
+@pytest.fixture(scope="module")
+def empty_table(spark, tmp_path_factory):
+    """An encoded empty DataFrame: its manifest/ holds no fragment."""
+    from supersonic_spark.pipeline import EncodeConfig, encode_table
+    out = str(tmp_path_factory.mktemp("empty") / "t")
+    encode_table(spark, spark.createDataFrame([], _SCHEMA), out,
+                 EncodeConfig(n_partitions=4, **_CFG))
+    return out
+
+
+@pytest.mark.parametrize("call, kwargs", [
+    ("decode_table", {"predicate": ("cid", "a", "a")}),
+    ("manifest_stats", {}), ("validate_blocks", {})])
+def test_readers_of_an_empty_table_return_nothing(spark, empty_table, call,
+                                                  kwargs):
+    import supersonic_spark.pipeline as pipeline
+    assert getattr(pipeline, call)(spark, empty_table, **kwargs).count() == 0
+
+
+def test_manifest_table_reads_every_manifest_shape(spark, tmp_path):
+    from supersonic_spark.pipeline import (MANIFEST_SCHEMA, EncodeConfig,
+                                           encode_table)
+    from supersonic_spark.store.layout import manifest_dir, manifest_table
+    out = str(tmp_path / "t")
+    man = encode_table(spark, spark.createDataFrame(_rows("a", 1000),
+                                                    _SCHEMA),
+                       out, EncodeConfig(n_partitions=4, **_CFG))
+    want = sorted((r["partition_id"], r["chunk_id"], r["crc32"])
+                  for r in man.filter(F.col("column") == "cid").collect())
+
+    def got(tbl):
+        return sorted(zip(*(tbl.column(c).to_pylist() for c in
+                            ("partition_id", "chunk_id", "crc32"))))
+    tbl = manifest_table(out, ["partition_id", "chunk_id", "crc32"], {"cid"})
+    assert tbl.column_names == ["partition_id", "chunk_id", "crc32"]
+    assert got(tbl) == want
+    # a manifest an older encoder wrote as one Spark job, with a column
+    # only some of its files have: part-*-<uuid> files, _SUCCESS and
+    # .crc files, and the missing column read as null
+    old = str(tmp_path / "old")
+    full = spark.read.parquet(manifest_dir(out))
+    full.filter("partition_id < 2").drop("vmin_str").coalesce(1) \
+        .write.parquet(manifest_dir(old))
+    full.filter("partition_id >= 2").coalesce(1) \
+        .write.mode("append").parquet(manifest_dir(old))
+    tbl = manifest_table(old, ["partition_id", "chunk_id", "crc32",
+                               "vmin_str"], {"cid"})
+    assert got(tbl) == want
+    assert [pid < 2 for pid in tbl.column("partition_id").to_pylist()] \
+        == tbl.column("vmin_str").is_null().to_pylist()
+    os.makedirs(manifest_dir(str(tmp_path / "empty")))
+    empty = manifest_table(str(tmp_path / "empty"))
+    assert empty.num_rows == 0
+    assert empty.schema.names == [f.name for f in MANIFEST_SCHEMA.fields]
+
+
+def test_unpredicated_read_of_a_compacted_table_plans_without_a_job(
+        spark, tmp_path):
+    from supersonic_spark.pipeline import (EncodeConfig, compact_blocks,
+                                           decode_table, encode_table)
+    from supersonic_spark.store.layout import list_blocks
+    src, out = str(tmp_path / "src"), str(tmp_path / "compacted")
+    rows = _rows("a", 2000)
+    encode_table(spark, spark.createDataFrame(rows, _SCHEMA), src,
+                 EncodeConfig(n_partitions=4, **_CFG))
+    compact_blocks(spark, [src], out, group_size=8)
+    assert len(list_blocks(out)) < spark.sparkContext.defaultParallelism
+    df, jobs, _ = _run_counted(spark, lambda: decode_table(spark, out))
+    assert jobs == 0
+    assert df.rdd.getNumPartitions() > 1        # chunk ranges split
+    assert _decoded(spark, out) == sorted(rows)
+
+
+@pytest.fixture(scope="module")
+def lookup_table(spark, tmp_path_factory):
+    """Four partitions of one chunk each, with blooms on cid."""
+    from supersonic_spark.pipeline import EncodeConfig, encode_table
+    out = str(tmp_path_factory.mktemp("lookup") / "t")
+    rows = _rows("a", 2000)
+    cfg = EncodeConfig(n_partitions=4, bloom_cols=("cid",),
+                       **dict(_CFG, chunk_rows=4096))
+    encode_table(spark, spark.createDataFrame(rows, _SCHEMA), out, cfg)
+    return out, rows
+
+
+@pytest.mark.parametrize("predicate", [
+    ("cid", "a7", "a7"), ("cid", "zz", "zz"), ("cid", ["a1", "a9", "b"]),
+    ("i", 10, 20), [("cid", "a1", "a3"), ("i", 0, 500)]])
+def test_decode_table_call_runs_no_job(spark, lookup_table, predicate):
+    from supersonic_spark.pipeline import decode_table
+    out, _rows_ = lookup_table
+    _, jobs, _ = _run_counted(
+        spark, lambda: decode_table(spark, out, predicate=predicate))
+    assert jobs == 0
+
+
+def test_present_key_lookup_is_one_job_of_one_task(spark, lookup_table):
+    from supersonic_spark.pipeline import decode_table
+    out, rows = lookup_table
+    got, jobs, tasks = _run_counted(spark, lambda: decode_table(
+        spark, out, predicate=("cid", "a7", "a7")).collect())
+    assert (jobs, tasks) == (1, 1)
+    assert sorted(tuple(r) for r in got) == sorted(
+        r for r in rows if r[0] == "a7")
+
+
+@pytest.mark.parametrize("key, pruned_by", [("zz", "zone maps"),
+                                            ("a25x", "blooms")])
+def test_absent_key_lookup_runs_no_job(spark, lookup_table, key, pruned_by):
+    from supersonic_spark.pipeline import decode_table
+    from supersonic_spark.store.layout import manifest_table
+    out, _rows_ = lookup_table
+    zones = manifest_table(out, ["vmin_str", "vmax_str"], {"cid"})
+    inside = any(lo <= key <= hi for lo, hi in zip(
+        zones.column("vmin_str").to_pylist(),
+        zones.column("vmax_str").to_pylist()))
+    assert inside == (pruned_by == "blooms")
+    got, jobs, _ = _run_counted(spark, lambda: decode_table(
+        spark, out, predicate=("cid", key, key)).collect())
+    assert (got, jobs) == ([], 0)
+
+
+# --- the driver set path, the join path and the parent's Spark filter agree
+
+_BASE = dt.datetime(2024, 1, 1)
+_KEYS = [f"c{k:03d}" for k in range(60)]
+
+
+@pytest.fixture(scope="module")
+def prune_tables(spark, tmp_path_factory):
+    """name -> table: a current table (blooms on cid and i, ts a
+    TIMESTAMP_NTZ, f a double with NaN), the same declared
+    stats_version 2, the same with a pre-upgrade manifest, the same with
+    some f zone maps NaN..NaN, and its compaction with a
+    table whose schema adds a column."""
+    import json
+    from test_round5 import _emulate_pre_upgrade_manifest
+    from supersonic_spark.pipeline import (EncodeConfig, compact_blocks,
+                                           encode_table)
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from supersonic_spark.store.layout import manifest_files, meta_path
+    root = tmp_path_factory.mktemp("prune")
+    cfg = EncodeConfig(n_partitions=4, chunk_rows=128, conv_key="cid",
+                       order_key="i", sort_keys=("cid", "i"),
+                       bloom_cols=("cid", "i"))
+
+    def rows(n, first):
+        return spark.range(first, first + n).select(
+            F.format_string("c%03d", F.col("id") % 60).alias("cid"),
+            F.col("id").cast("int").alias("i"),
+            F.expr("timestamp_ntz'2024-01-01 00:00:00' "
+                   "+ make_dt_interval(0, 0, id, 0)").alias("ts"),
+            F.when(F.col("id") % 60 < 24, F.lit(float("nan")))
+            .otherwise(F.col("id") * 0.5).alias("f"))
+
+    t = {name: str(root / name) for name in
+         ("current", "stats_v2", "pre_upgrade", "nan_stats", "evolved",
+          "compacted")}
+    encode_table(spark, rows(3000, 0), t["current"], cfg)
+    for name in ("stats_v2", "pre_upgrade", "nan_stats"):
+        shutil.copytree(t["current"], t[name])
+    # the zone maps a writer whose min/max propagate NaN records: NaN..NaN
+    # for f in the even chunks (Arrow's min_max skips NaN)
+    for path in manifest_files(t["nan_stats"]):
+        man = pq.read_table(path)
+        nan = pc.and_(pc.equal(man.column("column"), "f"),
+                      pc.equal(pc.bit_wise_and(man.column("chunk_id"), 1), 0))
+        for c in ("vmin_num", "vmax_num"):
+            man = man.set_column(
+                man.schema.get_field_index(c), c,
+                pc.if_else(nan, math.nan, man.column(c)))
+        pq.write_table(man, path)
+    with open(meta_path(t["stats_v2"])) as f:
+        meta = json.load(f)
+    with open(meta_path(t["stats_v2"]), "w") as f:
+        json.dump(dict(meta, stats_version=2), f)
+    _emulate_pre_upgrade_manifest(spark, t["pre_upgrade"])
+    encode_table(spark, rows(600, 3000).withColumn("extra", F.lit(7)),
+                 t["evolved"], cfg)
+    compact_blocks(spark, [t["current"], t["evolved"]], t["compacted"])
+    del t["evolved"]
+    return t
+
+
+@st.composite
+def _predicate(draw):
+    kind = draw(st.sampled_from(["int", "str", "in_str", "in_int",
+                                 "float", "in_float", "naive", "aware"]))
+    key = st.one_of(st.sampled_from(_KEYS),
+                    st.text("cz0123456789", min_size=1, max_size=5))
+    if kind == "int":
+        lo = draw(st.integers(-50, 3700))
+        return ("i", lo, draw(st.integers(lo, 3700)))
+    if kind == "str":
+        k = draw(key)
+        return ("cid", k, k)
+    if kind == "in_str":
+        return ("cid", draw(st.lists(key, min_size=1, max_size=4)))
+    if kind == "in_int":
+        return ("i", draw(st.lists(st.integers(-5, 3700), min_size=1,
+                                   max_size=4)))
+    num = st.one_of(st.sampled_from([math.nan, math.inf, -math.inf]),
+                    st.floats(-10, 2000))
+    if kind == "float":
+        return ("f", draw(num), draw(num))
+    if kind == "in_float":
+        return ("f", draw(st.lists(num, min_size=1, max_size=3)))
+    a = draw(st.integers(-100, 3700))
+    lo, hi = (_BASE + dt.timedelta(minutes=m)
+              for m in (a, draw(st.integers(a, 3800))))
+    if kind == "aware":
+        lo, hi = lo.replace(tzinfo=dt.timezone.utc), \
+            hi.replace(tzinfo=dt.timezone.utc)
+    return ("ts", lo, hi)
+
+
+def _oracle_chunks(spark, out, predicates, meta):
+    """The pruning the engine did as Spark jobs before it planned on the
+    driver: zone maps as a Spark filter over the manifest, blooms probed
+    row by row with the scalar _bloom_member."""
+    from supersonic_spark.store.layout import manifest_dir
+    from supersonic_spark.store.read import _session_tz
+    from supersonic_spark.store.stats import _bloom_member, _bound_ns
+    man = spark.read.parquet(manifest_dir(out))
+    ns_stats = (meta["stats_version"] >= 2 if "stats_version" in meta
+                else "vsum_int" in man.columns or "n_nulls" in man.columns)
+    blooms_ok = (meta.get("stats_version", 0) >= 3
+                 and "bloom_b64" in man.columns)
+    ntz = {f["name"] for f in meta["spark_schema"]["fields"]
+           if f["type"] == "timestamp_ntz"}
+    keep = None
+    for pred in predicates:
+        values = pred[1] if len(pred) == 2 else [pred[1]]
+        lo, hi = (values[0], values[-1]) if len(pred) == 2 else pred[1:]
+        if isinstance(lo, (dt.date, dt.datetime)) and not ns_stats:
+            continue
+        tz = _session_tz(spark)
+        if pred[0] in ntz and isinstance(lo, dt.datetime):
+            if lo.tzinfo is not None:
+                continue
+            tz = dt.timezone.utc
+        kind = "str" if isinstance(lo, str) else "num"
+        vmin, vmax = F.col(f"vmin_{kind}"), F.col(f"vmax_{kind}")
+        cond = (vmin.isNull() | vmax.isNull()
+                | ((vmax >= F.lit(_bound_ns(lo, -1, tz)))
+                   & (vmin <= F.lit(_bound_ns(hi, +1, tz)))))
+        probe = (blooms_ok and (len(pred) == 2 or lo == hi)
+                 and all(isinstance(v, (int, str)) for v in values))
+        this = {(r["partition_id"], r["chunk_id"]) for r in
+                man.filter((F.col("column") == pred[0]) & cond).collect()
+                if not probe or r["bloom_b64"] is None
+                or any(_bloom_member(v, base64.b64decode(r["bloom_b64"]))
+                       for v in values)}
+        keep = this if keep is None else keep & this
+    return keep
+
+
+@pytest.mark.parametrize("name", ["current", "stats_v2", "pre_upgrade",
+                                  "nan_stats", "compacted"])
+@settings(max_examples=15, deadline=None)
+@given(drawn=st.lists(_predicate(), min_size=1, max_size=2))
+@example(drawn=[("f", 100.0, math.nan)])
+@example(drawn=[("f", [math.nan])])
+def test_prune_paths_agree_with_the_spark_filter(spark, prune_tables, name,
+                                                 drawn):
+    from supersonic_spark.store.layout import read_meta
+    from supersonic_spark.store.read import (_normalize_predicates,
+                                             _pruned_chunks,
+                                             _pruned_chunks_df)
+    out = prune_tables[name]
+    preds = _normalize_predicates(drawn)
+    meta = read_meta(out)
+    keep = _pruned_chunks(spark, out, preds, meta)
+    driver = (None if keep is None else
+              {(pid, cid) for pid, cs in keep.items() for cid in cs})
+    df = _pruned_chunks_df(spark, out, preds, meta)
+    join = (None if df is None else
+            {(r["partition_id"], c) for r in df.collect()
+             for c in r["wanted"]})
+    assert driver == join == _oracle_chunks(spark, out, preds, meta)
+
+
+def test_join_path_with_several_manifest_files_per_task(spark, tmp_path,
+                                                        monkeypatch):
+    """The join path groups the manifest files into at most
+    defaultParallelism tasks; with more files than that, a task prunes
+    several files one at a time and the conjunction still holds across
+    them."""
+    from supersonic_spark.pipeline import EncodeConfig, decode_table, \
+        encode_table
+    from supersonic_spark.store import read
+    from supersonic_spark.store.layout import manifest_files
+    out = str(tmp_path / "t")
+    rows = _rows("a", 3000)
+    encode_table(spark, spark.createDataFrame(rows, _SCHEMA), out,
+                 EncodeConfig(n_partitions=12, bloom_cols=("cid",), **_CFG))
+    assert len(manifest_files(out)) > 2 * spark.sparkContext.defaultParallelism
+    pred = [("cid", ["a3", "a17", "a41", "zz"]), ("i", 200, 2500)]
+    preds, meta = read._normalize_predicates(pred), read.read_meta(out)
+    keep = read._pruned_chunks(spark, out, preds, meta)
+    assert keep and {(r["partition_id"], c) for r in
+                     read._pruned_chunks_df(spark, out, preds, meta)
+                     .collect() for c in r["wanted"]} \
+        == {(pid, cid) for pid, cs in keep.items() for cid in cs}
+    driver = sorted(tuple(r) for r in
+                    decode_table(spark, out, predicate=pred).collect())
+    monkeypatch.setattr(read, "_JOIN_PRUNE_CHUNKS", 0)
+    join = sorted(tuple(r) for r in
+                  decode_table(spark, out, predicate=pred).collect())
+    assert driver == join == sorted(
+        r for r in rows if r[0] in ("a3", "a17", "a41") and 200 <= r[1] <= 2500)
+    assert driver

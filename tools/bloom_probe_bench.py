@@ -7,8 +7,9 @@ ways:
 
   - scalar: the pre-round-5 per-row Python loop
     (base64 decode + any(_bloom_member(v, blob) for v in values))
-  - vectorized: bloom_probe_b64 — the shared probe inside
-    _bloom_filter_chunks: batched LUT gathers straight out of the base64
+  - vectorized: bloom_probe_b64 — the probe decode_table's chunk
+    pruning kernel (store.read._survivors) runs over the manifest rows a
+    zone map kept: batched LUT gathers straight out of the base64
     text (only the 4-char group each probe position touches is decoded),
     with early-exit on already-kept rows
 
@@ -65,8 +66,8 @@ def scalar_probe(blobs: list[str], values: list) -> np.ndarray:
 
 
 def vectorized_probe(arr: pa.Array, values: list) -> np.ndarray:
-    # in _bloom_filter_chunks the column arrives as Arrow already (the
-    # manifest scan's output batch) — the probe never sees Python strings
+    # in store.read._survivors the column arrives as Arrow already (read
+    # from the manifest files) — the probe never sees Python strings
     return bloom_probe_b64(arr, values)
 
 
