@@ -31,26 +31,21 @@ def pin_worker_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
-def run_tasks(spark, groups: list, fn, schema, arrange=None):
+def run_tasks(spark, groups: list, fn, schema):
     """The one way to build a task list: one Spark task per entry of
     `groups`, from spark.range(len(groups)) with the groups closed over
     (a task list built as an RDD of rows measured about twice the
-    scheduling cost). fn(group, *extra) yields the task's record
-    batches, where `extra` are the columns after `id` that
-    arrange(range_df) may add (decode's join-path pruning joins the
-    surviving chunk ids on). Every task pins the worker's Arrow threads
-    first. `groups` must not be empty. Returns the mapInArrow
-    DataFrame with `schema`."""
+    scheduling cost). fn(group) yields the task's record batches. Every
+    task pins the worker's Arrow threads first. `groups` must not be
+    empty. Returns the mapInArrow DataFrame with `schema`."""
     def run(batches):
         pin_worker_threads()
         for batch in batches:
-            for i, *extra in zip(*(c.to_pylist() for c in batch.columns)):
-                yield from fn(groups[i], *extra)
+            for i in batch.column(0).to_pylist():
+                yield from fn(groups[i])
 
-    frame = spark.range(len(groups), numPartitions=len(groups))
-    if arrange is not None:
-        frame = arrange(frame)
-    return frame.mapInArrow(run, schema=schema)
+    return (spark.range(len(groups), numPartitions=len(groups))
+            .mapInArrow(run, schema=schema))
 
 
 # --- calm-window probes (shared by bench.py and tools/scaling_bench.py) ----

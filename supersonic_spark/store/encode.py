@@ -67,9 +67,8 @@ class EncodeConfig:
     # unsorted column spans everything); a small per-(chunk, column)
     # bloom prunes equality predicates anywhere — the "fetch one user's
     # turns out of 10^12" path. Cost: at least _BLOOM_BITS/8 bytes per
-    # chunk per listed column in the manifest; membership is probed
-    # distributed (mapInArrow over the manifest), never driver-side blob
-    # collection.
+    # chunk per listed column in the manifest; the driver probes a
+    # manifest file's blobs only for the chunks its zone maps kept.
     bloom_cols: tuple[str, ...] = ()
 
     def __post_init__(self) -> None:

@@ -164,25 +164,20 @@ def first_meta(root: str) -> dict | None:
     return read_meta(os.path.dirname(found[0])) if found else None
 
 
-def _footer_rows(files) -> dict[str, int]:
-    """Row count of each manifest file (a path), from its parquet footer."""
-    return {f: pq.read_metadata(f).num_rows for f in sorted(files)}
-
-
 def _stamp_manifest(out_dir: str, meta: dict, fragments: list | set,
                     whole_chunks: bool = True) -> None:
     """Write meta.json with the manifest's row count, summed from the
     footers of `fragments` (names under out_dir/manifest), and its
-    column count, the schema width. decode_table picks the set-path vs
-    join-path pruning branch from them without a manifest job.
+    column count, the schema width: the manifest's size, recorded
+    without a manifest job.
 
     An encode writes one row per column of every chunk, so with
     whole_chunks a fragment whose rows do not divide by the width means
     a kernel skipped a column, and raises. Compaction passes False: its
     chunks from pre-evolution sources have fewer columns."""
     n_cols = len(meta["spark_schema"].get("fields", [])) or 1
-    rows = _footer_rows(os.path.join(manifest_dir(out_dir), n)
-                        for n in fragments)
+    rows = {p: pq.read_metadata(p).num_rows for p in
+            sorted(os.path.join(manifest_dir(out_dir), n) for n in fragments)}
     for path, n in rows.items():
         if whole_chunks and n % n_cols:
             raise RuntimeError(
@@ -251,7 +246,8 @@ def manifest_schema(files: list[str]) -> pa.Schema:
 def read_fragments(files: list[str], schema: pa.Schema,
                    columns: list[str] | None = None,
                    of_columns=None) -> pa.Table:
-    """Manifest rows of `files` as one Arrow table with `schema` (their
+    """Manifest rows of `files` (paths, or open pq.ParquetFile handles a
+    caller reads more than once) as one Arrow table with `schema` (their
     union, manifest_schema) projected to `columns` (None: all): a column
     a file lacks reads as null, typed as in fragments when no file has
     it. `of_columns` keeps only the rows describing those table columns.
@@ -261,7 +257,7 @@ def read_fragments(files: list[str], schema: pa.Schema,
                      .field(n) for n in names])
     parts = []
     for f in files:
-        pf = pq.ParquetFile(f)
+        pf = f if isinstance(f, pq.ParquetFile) else pq.ParquetFile(f)
         have = set(pf.schema_arrow.names)
         need = [n for n in names if n in have]
         if of_columns is not None and "column" not in need:
@@ -296,18 +292,6 @@ def read_manifest(spark: SparkSession, table: str,
         schema = MANIFEST_SCHEMA
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(manifest_dir(table))
-
-
-def manifest_chunks(table: str, meta: dict) -> int:
-    """Chunks in the table's manifest: the stamped row count over the
-    column count, or, for a manifest written before the size was
-    stamped, the rows summed from its file footers over the schema
-    width (0 without a manifest). Neither runs a Spark job."""
-    rows = meta.get("manifest_rows")
-    if rows is None:
-        rows = sum(_footer_rows(manifest_files(table)).values())
-    cols = meta.get("manifest_columns") or len(meta["spark_schema"]["fields"])
-    return rows // max(cols, 1)
 
 
 def _link_table(src: str, dst: str) -> None:

@@ -2,32 +2,34 @@
 decode kernel, decode_table, the metadata-only manifest_stats, and the
 integrity and round-trip audits.
 
-Pruning is one Arrow kernel over the manifest files (_prune_plans, then
-_survivors: zone-map overlap, then bloom probes). decode_table runs it
-on the driver, so planning a predicated read runs no Spark job; at
-extreme chunk counts it runs in tasks and the survivors join the decode
-task list instead of reaching the driver.
+Pruning is one Arrow kernel that decode_table runs on the driver, one
+manifest file at a time (_prune_plans, then _file_survivors: zone-map
+overlap, then bloom probes of the chunks the zone maps kept), so
+planning a predicated read runs no Spark job at any manifest size.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import math
 import zlib
 from typing import Iterator, NamedTuple
 from zoneinfo import ZoneInfo
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from ..codecs import decode_block, iter_block_spans
 from ..runtime import run_tasks
-from .layout import (_block_pid, has_manifest, list_blocks, manifest_chunks,
-                     manifest_files, manifest_schema, manifest_table,
-                     read_fragments, read_manifest, read_meta)
+from .layout import (_block_pid, has_manifest, list_blocks, manifest_files,
+                     manifest_schema, manifest_table, read_fragments,
+                     read_manifest, read_meta)
 from .stats import _bound_ns, bloom_probe_b64
 
 
@@ -132,6 +134,12 @@ def _prune_plans(predicates: list[tuple], meta: dict, manifest_columns,
             values = [lo] if lo == hi else []
         if isinstance(lo, (_dt.date, _dt.datetime)) and not ns_stats:
             continue
+        # Arrow's min_max zone maps skip NaN, while Spark orders NaN
+        # above every value: a NaN bound or member would prune the chunks
+        # of the NaN rows it matches, so only the residual filter applies
+        if any(isinstance(v, float) and math.isnan(v)
+               for v in (pred[1] if len(pred) == 2 else pred[1:])):
+            continue
         pred_tz = tz
         if pcol in ntz_cols and isinstance(lo, _dt.datetime):
             if lo.tzinfo is not None:
@@ -148,7 +156,7 @@ def _prune_plans(predicates: list[tuple], meta: dict, manifest_columns,
         lo, hi = _bound_ns(lo, -1, pred_tz), _bound_ns(hi, +1, pred_tz)
         if not is_str:
             # Spark compares the double zone maps against an int or ns
-            # bound as double (NaN handled in _survivors)
+            # bound as double (NaN zone maps ordered by _spark_ge)
             lo, hi = float(lo), float(hi)
         plans.append(_Plan(pcol, is_str, lo, hi,
                            values if bloomable else None))
@@ -167,155 +175,115 @@ def _spark_ge(a, b):
                       pc.or_(nan(a), pc.greater_equal(a, b)))
 
 
-def _survivors(tbl: pa.Table, plans: list[_Plan]) -> Iterator[pa.RecordBatch]:
-    """The prune kernel, run on the driver (set path) and in tasks (join
-    path): for each plan, in order, one batch of (pred_idx, partition_id,
-    chunk_id) for the chunks of `tbl` (manifest rows) it keeps. A chunk
-    without a zone map (null vmin or vmax) or without a bloom is kept:
-    pruning is only ever an optimization, never a correctness gate."""
-    for i, p in enumerate(plans):
-        t = tbl.filter(pc.equal(tbl.column("column"), p.column))
-        suffix = "str" if p.is_str else "num"
-        vmin, vmax = t.column(f"vmin_{suffix}"), t.column(f"vmax_{suffix}")
-        if p.is_str:
-            above = pc.greater_equal(vmax, p.lo)
-            below = pc.less_equal(vmin, p.hi)
-        else:
-            above = _spark_ge(vmax, p.lo)
-            below = _spark_ge(p.hi, vmin)
-        overlap = pc.fill_null(pc.and_(above, below), False)
-        t = t.filter(pc.or_(pc.or_(pc.is_null(vmin), pc.is_null(vmax)),
-                            overlap))
-        if p.bloom is not None:
-            t = t.filter(pa.array(bloom_probe_b64(t.column("bloom_b64"),
-                                                  p.bloom)))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([i] * t.num_rows, pa.int32()),
-             t.column("partition_id").combine_chunks().cast(pa.int32()),
-             t.column("chunk_id").combine_chunks().cast(pa.int32())],
-            ["pred_idx", "partition_id", "chunk_id"])
+_ZONE_COLUMNS = ["partition_id", "chunk_id", "column", "vmin_num",
+                 "vmax_num", "vmin_str", "vmax_str"]
 
 
-def _manifest_plans(spark: SparkSession, out_dir: str,
-                    predicates: list[tuple], meta: dict):
-    """(manifest files, their union schema, prune plans), or None when
-    there is no manifest or no predicate can use its stats (e.g.
-    datetime predicates on a pre-upgrade manifest): decode everything."""
-    if not has_manifest(out_dir):
-        return None
-    files = manifest_files(out_dir)
-    schema = manifest_schema(files)
-    plans = _prune_plans(predicates, meta, set(schema.names),
-                         _session_tz(spark))
-    return (files, schema, plans) if plans else None
-
-
-def _prune_files(files: list[str], schema: pa.Schema,
-                 plans: list[_Plan]) -> Iterator[pa.RecordBatch]:
-    """_survivors over the manifest rows of `files` that the plans read."""
-    cols = ["partition_id", "chunk_id", "column", "vmin_num", "vmax_num",
-            "vmin_str", "vmax_str"]
-    if any(p.bloom is not None for p in plans):
-        cols.append("bloom_b64")
-    tbl = read_fragments(files, schema, cols, {p.column for p in plans})
-    return _survivors(tbl, plans)
+def _file_survivors(path: str, schema: pa.Schema,
+                    plans: list[_Plan]) -> list[np.ndarray]:
+    """The prune kernel over one manifest file: for each plan, the
+    pid << 32 | cid keys of the file's chunks it keeps. Zone maps first;
+    the file's bloom blobs are read only when a bloom plan kept a chunk,
+    and probed only for the chunks it kept, so a read's cost follows the
+    zone maps' survivors, not the manifest's size. A chunk without a
+    zone map (null vmin or vmax) or without a bloom is kept: pruning is
+    only ever an optimization, never a correctness gate."""
+    of = {p.column for p in plans}
+    out = []
+    with pq.ParquetFile(path) as pf:        # one open for both reads
+        tbl = read_fragments([pf], schema, _ZONE_COLUMNS, of)
+        keys = ((tbl.column("partition_id").to_numpy().astype(np.int64)
+                 << 32) | tbl.column("chunk_id").to_numpy().astype(np.int64))
+        blooms = None
+        for p in plans:
+            suffix = "str" if p.is_str else "num"
+            vmin = tbl.column(f"vmin_{suffix}")
+            vmax = tbl.column(f"vmax_{suffix}")
+            if p.is_str:
+                above = pc.greater_equal(vmax, p.lo)
+                below = pc.less_equal(vmin, p.hi)
+            else:
+                above = _spark_ge(vmax, p.lo)
+                below = _spark_ge(p.hi, vmin)
+            overlap = pc.fill_null(pc.and_(above, below), False)
+            kept = pc.and_(pc.equal(tbl.column("column"), p.column),
+                           pc.or_(pc.or_(pc.is_null(vmin), pc.is_null(vmax)),
+                                  overlap))
+            rows = np.flatnonzero(kept.to_numpy(zero_copy_only=False))
+            if p.bloom is not None and len(rows):
+                if blooms is None:  # rows align: the same file and filter
+                    blooms = read_fragments([pf], schema, ["bloom_b64"],
+                                            of).column("bloom_b64")
+                rows = rows[bloom_probe_b64(blooms.take(rows), p.bloom)]
+            out.append(keys[rows])
+    return out
 
 
 def _pruned_chunks(spark: SparkSession, out_dir: str,
                    predicates: list[tuple],
                    meta: dict | None = None) -> dict[int, set] | None:
     """Chunks whose stats can satisfy EVERY predicate (conjunction):
-    {partition_id: set(chunk_id)}, planned on the driver from the
-    manifest files without a Spark job. None means no predicate could use
-    stats: decode everything; {} means stats rule out every chunk. `meta`
-    is the table's meta.json when the caller already read it."""
-    planned = _manifest_plans(spark, out_dir, predicates,
-                              read_meta(out_dir) if meta is None else meta)
-    if planned is None:
+    {partition_id: set(chunk_id)}, planned on the driver one manifest
+    file at a time, without a Spark job. None means no predicate could
+    use stats: decode everything; {} means stats rule out every chunk.
+    `meta` is the table's meta.json when the caller already read it."""
+    if not has_manifest(out_dir):
         return None
+    files = manifest_files(out_dir)
+    schema = manifest_schema(files)
+    plans = _prune_plans(predicates,
+                         read_meta(out_dir) if meta is None else meta,
+                         set(schema.names), _session_tz(spark))
+    if not plans:       # e.g. datetime bounds on a pre-upgrade manifest
+        return None
+    per_file = [_file_survivors(f, schema, plans) for f in files]
     # conjunction over (pid, cid) across all files: a manifest an older
     # encoder wrote can spread one partition over several files
-    both = set.intersection(*(
-        set(zip(b.column("partition_id").to_pylist(),
-                b.column("chunk_id").to_pylist()))
-        for b in _prune_files(*planned)))
+    both = (functools.reduce(np.intersect1d,
+                             map(np.concatenate, zip(*per_file)))
+            if per_file else np.empty(0, np.int64))
     keep: dict[int, set] = {}
-    for pid, cid in both:
-        keep.setdefault(pid, set()).add(cid)
+    for key in both.tolist():
+        keep.setdefault(key >> 32, set()).add(key & 0xFFFFFFFF)
     return keep
-
-
-def _pruned_chunks_df(spark: SparkSession, out_dir: str,
-                      predicates: list[tuple],
-                      meta: dict) -> DataFrame | None:
-    """JOIN-path twin of _pruned_chunks for EXTREME chunk counts: the
-    same kernel runs in tasks over the manifest files, so surviving ids
-    never reach the driver. A chunk every plan keeps survives, and the
-    survivors collapse to (partition_id int, wanted array<int>) rows the
-    decode task list joins on: a partition pruned to zero chunks never
-    schedules a task. None when stats are unusable (decode everything)."""
-    planned = _manifest_plans(spark, out_dir, predicates, meta)
-    if planned is None:
-        return None
-    files, schema, plans = planned
-    n = max(1, min(spark.sparkContext.defaultParallelism, len(files)))
-
-    def prune(group: list[str]) -> Iterator[pa.RecordBatch]:
-        # one file at a time: a task holds one fragment's rows, not its
-        # group's (the groupBy below conjoins plans across files)
-        for f in group:
-            yield from _prune_files([f], schema, plans)
-
-    surv = run_tasks(spark, [files[g::n] for g in range(n)], prune,
-                     "pred_idx int, partition_id int, chunk_id int")
-    return (surv.groupBy("partition_id", "chunk_id")
-            .agg(F.countDistinct("pred_idx").alias("n_plans"))
-            .filter(F.col("n_plans") == len(plans))
-            .groupBy("partition_id")
-            .agg(F.collect_set("chunk_id").alias("wanted")))
 
 
 def _decode_ranges(spark: SparkSession, out_dir: str, paths: list[str],
                    keep: dict[int, set] | None) -> list[tuple]:
-    """Decode tasks as (block path, first chunk id, end chunk id). Fewer
+    """Decode tasks as (block path, first chunk id, end chunk id, the
+    wanted chunk ids among them: a frozenset, or None for all). Fewer
     files than task slots (few big files after compaction, or a pruned
     read that survives in one file) would serialize decode on one task
     each, so their chunks split into ranges and every core gets work.
     Range tasks walk headers to their start (cheap) and whole-file reads
-    dedup through the OS page cache. With set-path pruning the ranges
-    cover only the surviving chunk ids; otherwise the per-file chunk
-    counts come from the manifest files (no Spark job)."""
+    dedup through the OS page cache. With pruning each task carries its
+    own surviving chunk ids; otherwise the per-file chunk counts come
+    from the manifest files (no Spark job)."""
     par = spark.sparkContext.defaultParallelism
-    whole = [(p, 0, 1 << 30) for p in paths]
-    if len(paths) >= par:
-        return whole
     if keep is not None:
         chunk_ids = {pid: sorted(cs) for pid, cs in keep.items()}
-    else:
+    elif len(paths) < par:
         n = (manifest_table(out_dir, ["partition_id", "chunk_id"])
              .group_by("partition_id").aggregate([("chunk_id", "max")]))
         chunk_ids = {pid: range(m + 1) for pid, m in
                      zip(n.column("partition_id").to_pylist(),
                          n.column("chunk_id_max").to_pylist())}
+    else:
+        return [(p, 0, 1 << 30, None) for p in paths]
     total = sum(len(chunk_ids.get(_block_pid(p), ())) for p in paths)
-    if not total:
-        return whole
-    step = max(1, total // max(2 * par, len(paths)))
+    step = (max(1, total // max(2 * par, len(paths))) if len(paths) < par
+            else 1 << 30)           # enough files: one task per file
     ranges = []
     for p in paths:
         ids = chunk_ids.get(_block_pid(p))
         if not ids:
-            ranges.append((p, 0, 1 << 30))
+            ranges.append((p, 0, 1 << 30, None))
             continue
         for s in range(0, len(ids), step):
             seg = ids[s:s + step]
-            ranges.append((p, seg[0], seg[-1] + 1))
+            ranges.append((p, seg[0], seg[-1] + 1,
+                           None if keep is None else frozenset(seg)))
     return ranges
-
-
-# decode_table prunes through the driver-side set path up to this many
-# chunks and through the survivor join above it
-_JOIN_PRUNE_CHUNKS = 200_000
 
 
 def _decode_blocks(buf: bytes, schema: StructType, predicates=(),
@@ -435,20 +403,10 @@ def decode_table(spark: SparkSession, out_dir: str,
                            f"{schema.names}")
         schema = StructType([f for f in schema.fields
                              if f.name in set(columns)])
-    # chunk pruning: up to _JOIN_PRUNE_CHUNKS estimated chunks the driver
-    # prunes the manifest files itself and the surviving ids are tiny sets
-    # (one closure, no Spark job); above it the same kernel runs in tasks
-    # and the survivor DF joins against the decode task list, so the
-    # driver never materializes O(#chunks) state
-    keep: dict[int, set] | None = None
-    wanted_df = None
-    if predicates:
-        # no Spark job on the hot path: the size is stamped at write time
-        # (or summed from the manifest's footers)
-        if manifest_chunks(out_dir, meta) > _JOIN_PRUNE_CHUNKS:
-            wanted_df = _pruned_chunks_df(spark, out_dir, predicates, meta)
-        else:
-            keep = _pruned_chunks(spark, out_dir, predicates, meta)
+    # chunk pruning, planned on the driver from the manifest files (no
+    # Spark job): None decodes everything
+    keep = _pruned_chunks(spark, out_dir, predicates, meta) \
+        if predicates else None
     paths = list_blocks(out_dir)
     if partitions is not None:
         # partition-subset decode (snapshot_diff's CDC path): only the
@@ -456,20 +414,11 @@ def decode_table(spark: SparkSession, out_dir: str,
         want_p = set(partitions)
         paths = [p for p in paths if _block_pid(p) in want_p]
     if keep is not None:
-        # set-path pruning: a block file with no surviving chunk is not
-        # scheduled at all
+        # a block file with no surviving chunk is not scheduled at all
         paths = [p for p in paths if keep.get(_block_pid(p))]
 
-    def decode(task, wanted_ids=None) -> Iterator[pa.RecordBatch]:
-        # task: (block path, first chunk id, end chunk id); join-path
-        # pruning passes the partition's surviving chunk ids, the set
-        # path closes over `keep`
-        path, lo_c, hi_c = task
-        if wanted_ids is not None:
-            wanted = set(wanted_ids)
-        else:
-            wanted = None if keep is None else keep.get(_block_pid(path),
-                                                        set())
+    def decode(task) -> Iterator[pa.RecordBatch]:
+        path, lo_c, hi_c, wanted = task         # one _decode_ranges entry
         with open(path, "rb") as f:
             buf = f.read()
         yield from _decode_blocks(buf, schema, predicates, lo_c, hi_c, wanted)
@@ -479,23 +428,8 @@ def decode_table(spark: SparkSession, out_dir: str,
         # pruned read runs no Spark job
         out = spark.createDataFrame([], schema).limit(0)
     else:
-        ranges = _decode_ranges(spark, out_dir, paths, keep)
-        arrange = None
-        if wanted_df is not None:
-            # distributed pruning: inner-join the task list against the
-            # surviving-chunk arrays on each task's partition id —
-            # fully-pruned partitions drop out of the task list here,
-            # before any task is scheduled. No forced broadcast: AQE
-            # picks one when the survivor side is small; at extreme
-            # chunk counts the arrays stay executor-side.
-            pids = ",".join(str(_block_pid(p)) for p, _lo, _hi in ranges)
-
-            def arrange(frame):
-                return (frame.withColumn("partition_id", F.expr(
-                            f"element_at(array({pids}), int(id) + 1)"))
-                        .join(wanted_df, "partition_id")
-                        .select("id", "wanted"))
-        out = run_tasks(spark, ranges, decode, schema, arrange)
+        out = run_tasks(spark, _decode_ranges(spark, out_dir, paths, keep),
+                        decode, schema)
     ntz = {f.name for f in schema.fields
            if f.dataType.typeName() == "timestamp_ntz"}
 

@@ -84,37 +84,28 @@ def _encode_fixture(spark, tmp_path, name, bloom=()):
     return src, out
 
 
-def test_join_prune_branch_matches_driver_path(spark, tmp_path,
-                                               monkeypatch):
-    """A zero _JOIN_PRUNE_CHUNKS forces the distributed survivor-join
-    path; results must match the driver-set path bit-for-bit, including
-    bloom point-lookup pruning."""
+def test_join_prune_branch_matches_driver_path(spark, tmp_path):
+    """A bloom IN-list lookup returns exactly the source's rows."""
     from supersonic_spark.pipeline import decode_table
-    from supersonic_spark.store import read
     src, out = _encode_fixture(spark, tmp_path, "join_prune",
                                bloom=("conv_id",))
     some = [r["conv_id"] for r in
             src.select("conv_id").distinct().limit(3).collect()]
     pred = ("conv_id", some)
-    a = decode_table(spark, out, predicate=pred)                  # driver
-    monkeypatch.setattr(read, "_JOIN_PRUNE_CHUNKS", 0)
-    b = decode_table(spark, out, predicate=pred)                  # join
+    a = decode_table(spark, out, predicate=pred)
     key = ["conv_id", "turn_idx"]
     rows_a = sorted(map(tuple, a.select(*key, "text").collect()))
-    rows_b = sorted(map(tuple, b.select(*key, "text").collect()))
-    assert rows_a == rows_b and len(rows_a) > 0
+    assert len(rows_a) > 0
     want = sorted(map(tuple, src.filter(F.col("conv_id").isin(some))
                       .select(*key, "text").collect()))
     assert rows_a == want
 
 
-def test_join_prune_range_predicate(spark, tmp_path, monkeypatch):
-    """Join path with a numeric range predicate (no blooms involved)."""
+def test_join_prune_range_predicate(spark, tmp_path):
+    """A numeric range predicate (no blooms involved)."""
     from supersonic_spark.pipeline import decode_table
-    from supersonic_spark.store import read
     src, out = _encode_fixture(spark, tmp_path, "join_prune_rng")
     pred = ("turn_idx", 0, 2)
-    monkeypatch.setattr(read, "_JOIN_PRUNE_CHUNKS", 0)
     b = decode_table(spark, out, predicate=pred)
     want = src.filter((F.col("turn_idx") >= 0) & (F.col("turn_idx") <= 2))
     assert b.count() == want.count() > 0

@@ -177,21 +177,6 @@ def test_recompaction_with_larger_groups_decodes_each_row_once(
     _live_files_agree(out)
 
 
-def test_manifest_chunks_without_stamp_reads_footers(spark, tmp_path):
-    from supersonic_spark.pipeline import EncodeConfig, encode_table
-    from supersonic_spark.store.layout import manifest_chunks, read_meta
-    out = str(tmp_path / "t")
-    man = encode_table(spark, spark.createDataFrame(_rows("a", 1000),
-                                                    _SCHEMA),
-                       out, EncodeConfig(n_partitions=4, **_CFG))
-    meta = read_meta(out)
-    n_chunks = man.select("partition_id", "chunk_id").distinct().count()
-    assert manifest_chunks(out, meta) == n_chunks
-    unstamped = {k: v for k, v in meta.items()
-                 if k not in ("manifest_rows", "manifest_columns")}
-    assert manifest_chunks(out, unstamped) == n_chunks
-
-
 # --- one bucket-id rule -----------------------------------------------------
 
 def test_upsert_into_an_empty_bucket_reencodes_one_file(spark, tmp_path):
@@ -390,7 +375,27 @@ def test_absent_key_lookup_runs_no_job(spark, lookup_table, key, pruned_by):
     assert (got, jobs) == ([], 0)
 
 
-# --- the driver set path, the join path and the parent's Spark filter agree
+def test_lookup_is_one_job_at_any_manifest_size(spark, lookup_table,
+                                                tmp_path):
+    """Planning does not depend on the manifest's recorded size: a table
+    stamped as holding 10^9 manifest rows still plans on the driver."""
+    from supersonic_spark.pipeline import decode_table
+    from supersonic_spark.store.layout import _write_meta, read_meta
+    src, rows = lookup_table
+    out = str(tmp_path / "big")
+    shutil.copytree(src, out)
+    _write_meta(out, dict(read_meta(out), manifest_rows=10 ** 9))
+    got, jobs, tasks = _run_counted(spark, lambda: decode_table(
+        spark, out, predicate=("cid", "a7", "a7")).collect())
+    assert (jobs, tasks) == (1, 1)
+    assert sorted(tuple(r) for r in got) == sorted(
+        r for r in rows if r[0] == "a7")
+    got, jobs, _ = _run_counted(spark, lambda: decode_table(
+        spark, out, predicate=("cid", "a25x", "a25x")).collect())
+    assert (got, jobs) == ([], 0)
+
+
+# --- the driver's pruning and the parent's Spark filter agree
 
 _BASE = dt.datetime(2024, 1, 1)
 _KEYS = [f"c{k:03d}" for k in range(60)]
@@ -501,6 +506,9 @@ def _oracle_chunks(spark, out, predicates, meta):
            if f["type"] == "timestamp_ntz"}
     keep = None
     for pred in predicates:
+        if any(isinstance(v, float) and math.isnan(v)
+               for v in (pred[1] if len(pred) == 2 else pred[1:])):
+            continue    # NaN bounds: Arrow's min_max zone maps skip NaN
         values = pred[1] if len(pred) == 2 else [pred[1]]
         lo, hi = (values[0], values[-1]) if len(pred) == 2 else pred[1:]
         if isinstance(lo, (dt.date, dt.datetime)) and not ns_stats:
@@ -536,30 +544,46 @@ def test_prune_paths_agree_with_the_spark_filter(spark, prune_tables, name,
                                                  drawn):
     from supersonic_spark.store.layout import read_meta
     from supersonic_spark.store.read import (_normalize_predicates,
-                                             _pruned_chunks,
-                                             _pruned_chunks_df)
+                                             _pruned_chunks)
     out = prune_tables[name]
     preds = _normalize_predicates(drawn)
     meta = read_meta(out)
     keep = _pruned_chunks(spark, out, preds, meta)
     driver = (None if keep is None else
               {(pid, cid) for pid, cs in keep.items() for cid in cs})
-    df = _pruned_chunks_df(spark, out, preds, meta)
-    join = (None if df is None else
-            {(r["partition_id"], c) for r in df.collect()
-             for c in r["wanted"]})
-    assert driver == join == _oracle_chunks(spark, out, preds, meta)
+    assert driver == _oracle_chunks(spark, out, preds, meta)
 
 
-def test_join_path_with_several_manifest_files_per_task(spark, tmp_path,
-                                                        monkeypatch):
-    """The join path groups the manifest files into at most
-    defaultParallelism tasks; with more files than that, a task prunes
-    several files one at a time and the conjunction still holds across
-    them."""
+def test_nan_bounds_keep_the_nan_rows(spark, tmp_path):
+    """Arrow's min_max zone maps skip NaN while Spark orders NaN above
+    every value, so a NaN bound or IN-list member matches NaN rows the
+    zone maps do not cover: such a predicate must not prune."""
     from supersonic_spark.pipeline import EncodeConfig, decode_table, \
         encode_table
-    from supersonic_spark.store import read
+    src = spark.range(600).select(
+        F.format_string("c%03d", F.col("id") % 60).alias("cid"),
+        F.col("id").cast("int").alias("i"),
+        F.when(F.col("id") % 3 == 0, F.lit(math.nan))
+        .otherwise(F.col("id") * 0.5).alias("f"))
+    out = str(tmp_path / "t")
+    encode_table(spark, src, out, EncodeConfig(n_partitions=2, **_CFG))
+    nan, f = math.nan, F.col("f")
+    for pred, cond in [(("f", nan, nan), (f >= nan) & (f <= nan)),
+                       (("f", [nan]), f.isin(nan)),
+                       (("f", 100.0, nan), (f >= 100.0) & (f <= nan))]:
+        got = sorted((r["cid"], r["i"]) for r in
+                     decode_table(spark, out, predicate=pred).collect())
+        want = sorted((r["cid"], r["i"]) for r in
+                      src.filter(cond).collect())
+        assert got == want and len(want) >= 200, pred
+
+
+def test_join_path_with_several_manifest_files_per_task(spark, tmp_path):
+    """A table of more manifest files than task slots: the driver prunes
+    them one file at a time, and the conjunction of an IN-list and a
+    range still holds across files."""
+    from supersonic_spark.pipeline import EncodeConfig, decode_table, \
+        encode_table
     from supersonic_spark.store.layout import manifest_files
     out = str(tmp_path / "t")
     rows = _rows("a", 3000)
@@ -567,17 +591,8 @@ def test_join_path_with_several_manifest_files_per_task(spark, tmp_path,
                  EncodeConfig(n_partitions=12, bloom_cols=("cid",), **_CFG))
     assert len(manifest_files(out)) > 2 * spark.sparkContext.defaultParallelism
     pred = [("cid", ["a3", "a17", "a41", "zz"]), ("i", 200, 2500)]
-    preds, meta = read._normalize_predicates(pred), read.read_meta(out)
-    keep = read._pruned_chunks(spark, out, preds, meta)
-    assert keep and {(r["partition_id"], c) for r in
-                     read._pruned_chunks_df(spark, out, preds, meta)
-                     .collect() for c in r["wanted"]} \
-        == {(pid, cid) for pid, cs in keep.items() for cid in cs}
     driver = sorted(tuple(r) for r in
                     decode_table(spark, out, predicate=pred).collect())
-    monkeypatch.setattr(read, "_JOIN_PRUNE_CHUNKS", 0)
-    join = sorted(tuple(r) for r in
-                  decode_table(spark, out, predicate=pred).collect())
-    assert driver == join == sorted(
+    assert driver == sorted(
         r for r in rows if r[0] in ("a3", "a17", "a41") and 200 <= r[1] <= 2500)
     assert driver
