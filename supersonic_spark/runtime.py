@@ -6,11 +6,25 @@ oversubscribes the box N-fold and *inverts* scaling (measured: encode at
 local[32] ran 3x slower than local[8] before pinning). Each mapInArrow
 kernel is already one task on one core, so intra-kernel parallelism must
 be 1. Call pin_worker_threads() first thing inside every worker kernel.
+
+pin_worker_threads() also stamps the process's zip importers. PySpark's
+worker calls importlib.invalidate_caches() at the start of every task
+(worker_util.setup_spark_files), and before Python 3.13 each
+zipimporter answers by re-reading its archive's whole directory: 16
+importers over pyspark.zip and py4j, 26,672 entries, 125-250 ms of every
+task on a 4-core Xeon VM. A stamped importer re-reads only when its
+archive's (inode, size, mtime) changed since its last re-read. The patch
+lives in the reused worker process, so its later tasks skip the re-reads,
+also tasks whose kernel never calls pin_worker_threads(); each extra task
+of a job then adds about 27 ms there, not 123 ms
+(BENCH/python_task_cost.json).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
 
 _PINNED = False
 
@@ -29,6 +43,35 @@ def pin_worker_threads() -> None:
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    _stamp_zip_importers()
+
+
+def _stamp_zip_importers() -> None:
+    """Make zipimporter.invalidate_caches skip the directory re-read
+    while the importer's archive keeps the (st_ino, st_size, st_mtime_ns)
+    it had at this importer's last re-read. A changed or missing archive,
+    or an importer not yet stamped (its first call after the patch), takes
+    the stdlib method. Python 3.13's method only drops the cached
+    directory, so it is left alone there. Idempotent."""
+    import zipimport
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches,
+                                               "__wrapped__"):
+        return
+    reread = cls.invalidate_caches
+
+    @functools.wraps(reread)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != self.__dict__.get("_dir_stamp"):
+            reread(self)
+        self._dir_stamp = stamp
+
+    cls.invalidate_caches = invalidate_caches
 
 
 def run_tasks(spark, groups: list, fn, schema):

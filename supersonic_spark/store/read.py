@@ -530,12 +530,19 @@ def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def roundtrip_mismatch_count(src: DataFrame, decoded: DataFrame,
                              keys: tuple[str, ...] = ("conv_id", "turn_idx"),
-                             value_col: str = "text") -> int:
+                             columns: tuple[str, ...] | None = None) -> int:
     """Distributed bit-identity check under stable key ordering: full outer
-    join on keys; count rows missing on either side or differing in value."""
+    join on keys; count rows missing on either side or differing in any of
+    `columns` (default: every non-key column of `src`). Rows compare by
+    xxhash64 over the columns plus their null flags, so NULL and an empty
+    string differ."""
     k = list(keys)
-    a = src.select(*k, F.col(value_col).alias("_va"))
-    b = decoded.select(*k, F.col(value_col).alias("_vb"))
-    j = a.join(b, on=k, how="full_outer")
-    bad = j.filter(~F.col("_va").eqNullSafe(F.col("_vb")))
-    return bad.count()
+    cols = [c for c in src.columns if c not in k] if columns is None \
+        else list(columns)
+
+    def row_hash(df, name):
+        return df.select(*k, F.xxhash64(*map(F.col, cols),
+                                        *map(F.isnull, cols)).alias(name))
+    j = row_hash(src, "_va").join(row_hash(decoded, "_vb"), on=k,
+                                  how="full_outer")
+    return j.filter(~F.col("_va").eqNullSafe(F.col("_vb"))).count()

@@ -57,8 +57,30 @@ def test_encode_decode_bit_identity(spark, small_df, tmp_path):
     dec = decode_table(spark, out)
     assert dec.count() == small_df.count()
     # bit-identity for every column, not just text
-    for col in ["text", "role", "tool", "ts"]:
-        assert roundtrip_mismatch_count(small_df, dec, value_col=col) == 0
+    assert roundtrip_mismatch_count(small_df, dec) == 0
+
+
+def test_roundtrip_mismatch_count_compares_every_column(spark):
+    """A row that differs only in ts, or only in tool (a value against
+    NULL), counts as a mismatch; a named subset compares only its
+    columns."""
+    import datetime as dt
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("c0", 0, "user", "hi", None, t0),
+            ("c0", 1, "tool", "ok", "grep", t0 + dt.timedelta(seconds=1)),
+            ("c1", 0, "user", "yo", None, t0)]
+    schema = "conv_id string, turn_idx int, role string, text string, " \
+             "tool string, ts timestamp"
+    src = spark.createDataFrame(rows, schema)
+    ts_off = spark.createDataFrame(
+        rows[:2] + [rows[2][:5] + (t0 + dt.timedelta(microseconds=1),)],
+        schema)
+    tool_off = spark.createDataFrame(
+        [rows[0][:4] + ("",) + rows[0][5:]] + rows[1:], schema)
+    assert roundtrip_mismatch_count(src, src) == 0
+    assert roundtrip_mismatch_count(src, ts_off) == 1
+    assert roundtrip_mismatch_count(src, tool_off) == 1
+    assert roundtrip_mismatch_count(src, ts_off, columns=("text",)) == 0
 
 
 def test_manifest_lineage(spark, small_df, tmp_path):

@@ -84,10 +84,10 @@ def _encode_fixture(spark, tmp_path, name, bloom=()):
     return src, out
 
 
-def test_join_prune_branch_matches_driver_path(spark, tmp_path):
+def test_driver_prune_bloom_in_list_returns_source_rows(spark, tmp_path):
     """A bloom IN-list lookup returns exactly the source's rows."""
     from supersonic_spark.pipeline import decode_table
-    src, out = _encode_fixture(spark, tmp_path, "join_prune",
+    src, out = _encode_fixture(spark, tmp_path, "driver_prune",
                                bloom=("conv_id",))
     some = [r["conv_id"] for r in
             src.select("conv_id").distinct().limit(3).collect()]
@@ -101,10 +101,10 @@ def test_join_prune_branch_matches_driver_path(spark, tmp_path):
     assert rows_a == want
 
 
-def test_join_prune_range_predicate(spark, tmp_path):
+def test_driver_prune_range_predicate(spark, tmp_path):
     """A numeric range predicate (no blooms involved)."""
     from supersonic_spark.pipeline import decode_table
-    src, out = _encode_fixture(spark, tmp_path, "join_prune_rng")
+    src, out = _encode_fixture(spark, tmp_path, "driver_prune_rng")
     pred = ("turn_idx", 0, 2)
     b = decode_table(spark, out, predicate=pred)
     want = src.filter((F.col("turn_idx") >= 0) & (F.col("turn_idx") <= 2))

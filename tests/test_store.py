@@ -578,7 +578,7 @@ def test_nan_bounds_keep_the_nan_rows(spark, tmp_path):
         assert got == want and len(want) >= 200, pred
 
 
-def test_join_path_with_several_manifest_files_per_task(spark, tmp_path):
+def test_driver_prune_with_several_manifest_files_per_task(spark, tmp_path):
     """A table of more manifest files than task slots: the driver prunes
     them one file at a time, and the conjunction of an IN-list and a
     range still holds across files."""
