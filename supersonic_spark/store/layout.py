@@ -18,7 +18,11 @@ after them, and unlinks everything else. A killed write never gets
 there, so its markers still resume.
 
 A bucket layout (bucketize_table) is a directory of exactly n_buckets
-parquet files, part-BBBBB-*.parquet, plus _buckets.json.
+parquet files, part-BBBBB-*.parquet, plus _buckets.json. Spark writes
+them, and a merge rewrites the ones it touches with pyarrow under the
+layout's Arrow schema (bucket_arrow_schema), each first under a hidden
+.part-BBBBB-<tag>-a<attempt>.parquet.tmp name (bucket_tmp) that no
+reader lists.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from .stats import MANIFEST_SCHEMA, _manifest_batch
@@ -250,11 +255,14 @@ def read_fragments(files: list[str], schema: pa.Schema,
     caller reads more than once) as one Arrow table with `schema` (their
     union, manifest_schema) projected to `columns` (None: all): a column
     a file lacks reads as null, typed as in fragments when no file has
-    it. `of_columns` keeps only the rows describing those table columns.
-    Runs on the driver and in tasks."""
+    it, and only a column whose file type differs is cast. `of_columns`
+    keeps only the rows describing those table columns. Runs on the
+    driver and in tasks."""
     names = schema.names if columns is None else list(columns)
     out = pa.schema([(schema if n in schema.names else _FRAGMENT_SCHEMA)
                      .field(n) for n in names])
+    if of_columns is not None:
+        of_columns = pa.array(list(of_columns), pa.string())
     parts = []
     for f in files:
         pf = f if isinstance(f, pq.ParquetFile) else pq.ParquetFile(f)
@@ -265,12 +273,11 @@ def read_fragments(files: list[str], schema: pa.Schema,
         tbl = pf.read(columns=need)
         if of_columns is not None:
             tbl = tbl.filter(pc.is_in(tbl.column("column"),
-                                      value_set=pa.array(list(of_columns),
-                                                         pa.string())))
-        parts.append(pa.table(
-            [tbl.column(n).cast(out.field(n).type) if n in have
-             else pa.nulls(tbl.num_rows, out.field(n).type) for n in names],
-            schema=out))
+                                      value_set=of_columns))
+        cols = [tbl.column(n) if n in have
+                else pa.nulls(tbl.num_rows, out.field(n).type) for n in names]
+        parts.append(pa.table([c if c.type == f.type else c.cast(f.type)
+                               for c, f in zip(cols, out)], schema=out))
     return pa.concat_tables(parts) if parts else out.empty_table()
 
 
@@ -336,6 +343,32 @@ def bucket_files(bucket_dir: str) -> dict[int, str]:
 
 def bucket_file(bucket_dir: str, b: int, tag: str) -> str:
     return os.path.join(bucket_dir, f"part-{b:05d}-{tag}.parquet")
+
+
+def bucket_tmp(bucket_dir: str, b: int, tag: str, attempt: int) -> str:
+    """The hidden name task attempt `attempt` writes bucket b's new file
+    under before it is installed as bucket_file(bucket_dir, b, tag):
+    Spark's reader skips dot-files, neither bucket_files nor
+    parquet_files lists it, and a retried or speculative attempt of the
+    same task never writes the same path."""
+    return os.path.join(bucket_dir,
+                        f".part-{b:05d}-{tag}-a{attempt}.parquet.tmp")
+
+
+def remove_bucket_tmps(bucket_dir: str, tag: str) -> None:
+    """Unlink every bucket_tmp file written under `tag`, by any attempt."""
+    for p in glob.glob(os.path.join(glob.escape(bucket_dir),
+                                    f".part-*-{tag}-a*.parquet.tmp")):
+        os.remove(p)
+
+
+def bucket_arrow_schema(schema: StructType) -> pa.Schema:
+    """The Arrow schema of a bucket file written with pyarrow: the
+    layout's Spark types as Spark's Arrow bridge maps them. TIMESTAMP is
+    timestamp[us, UTC], which parquet stores adjusted to UTC, so Spark
+    reads it back as TIMESTAMP and not TIMESTAMP_NTZ."""
+    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
+                      for f in schema.fields])
 
 
 def complete_buckets(bucket_dir: str, n: int) -> dict[int, str]:

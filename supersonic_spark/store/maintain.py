@@ -13,15 +13,18 @@ import uuid
 from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..runtime import run_tasks
+from ..runtime import pin_worker_threads, run_tasks
 from .layout import (_block_pid, _bucket_layout, _fragment_name,
                      _link_table, _partition_files, _write_bucket_meta,
-                     _write_fragment, bucket_file, bucket_files,
-                     complete_buckets, install_current, list_blocks,
-                     manifest_dir, parquet_files, read_manifest, read_meta,
+                     _write_fragment, bucket_arrow_schema, bucket_file,
+                     bucket_tmp, complete_buckets, install_current,
+                     list_blocks, manifest_dir, parquet_files,
+                     read_manifest, read_meta, remove_bucket_tmps,
                      snapshot_dir)
 from .read import decode_table
 from .stats import MANIFEST_SCHEMA
@@ -65,9 +68,10 @@ def upsert_bucketized(spark: SparkSession, updates: DataFrame,
     ONLY the rewritten files (per-file fingerprints; untouched buckets
     resume) — the incremental-maintenance path for a 10^12-turn
     transcript table, where an upsert touching k conversations costs
-    O(k bucket files), not a table rewrite. File replacement is
-    per-bucket atomic (tmp + rename), same semantics as compaction.
-    Runs as merge_bucketized with every row an upsert."""
+    O(k bucket files), not a table rewrite. Runs as merge_bucketized
+    with every row an upsert: only the update rows cross the JVM, and
+    each touched bucket file is rewritten by a pyarrow task and
+    installed by rename once every task succeeded."""
     return merge_bucketized(
         spark, updates.withColumn(_MERGE_OP, F.lit("upsert")), bucket_dir,
         op_col=_MERGE_OP)
@@ -92,7 +96,9 @@ def delete_bucketized(spark: SparkSession, keys: DataFrame,
     snapshot_table). At 10^12-turn scale this is the GDPR-erasure /
     retention path: deleting k conversations costs O(k bucket files),
     not a table rewrite. Runs as merge_bucketized with every key a
-    delete."""
+    delete: only the keys cross the JVM, and each touched bucket file is
+    streamed through one pyarrow task that drops their rows. A NULL key
+    deletes nothing, as in a left_anti join."""
     bmeta, schema = _bucket_layout(spark, bucket_dir)
     # merge reads table-shaped rows: the key plus NULL for every column
     rows = keys.select(*[
@@ -104,73 +110,133 @@ def delete_bucketized(spark: SparkSession, keys: DataFrame,
         op_col=_MERGE_OP)
 
 
-_MERGE_OP = "__merge_op"
+_MERGE_OP, _MERGE_BUCKET = "__merge_op", "__merge_bucket"
+# one row per rewritten bucket (bucket, tmp), or per unknown op (bad_op)
+_MERGE_REPORT = "bucket int, tmp string, bad_op string"
 
 
 def merge_bucketized(spark: SparkSession, changes: DataFrame,
                      bucket_dir: str, op_col: str = "_op") -> list[int]:
-    """Full MERGE INTO at bucket-file grain, one rewrite pass: `changes`
-    carries the table columns plus an op column with value 'upsert'
-    (replace the whole conversation, or insert it if absent) or
-    'delete' (remove the whole conversation; its other columns are
-    ignored). Returns the affected bucket ids.
+    """Full MERGE INTO at bucket-file grain: `changes` carries the table
+    columns plus an op column with value 'upsert' (replace the whole
+    conversation, or insert it if absent) or 'delete' (remove the whole
+    conversation; its other columns are ignored). Returns the affected
+    bucket ids: every bucket a change row routes to.
 
     Semantically MERGE WHEN MATCHED [UPDATE|DELETE] / WHEN NOT MATCHED
     INSERT, specialized to whole-conversation grain — the natural merge
     unit for a transcript table, where 'update' means 'the conversation
     continued / was redacted' and arrives as its full new row set.
 
-    upsert_bucketized and delete_bucketized are its one-op cases. One
-    pass: a bucket receiving both ops is read once, merged once,
-    installed once (tmp + rename, same atomicity as compaction), and the
-    plan is one small collect of the (op, bucket) pairs. Routing is the
-    shared pmod(murmur3, n) invariant, on the key type _buckets.json
-    records; emptied buckets keep an empty schema file so positional
-    bucket ids stay stable; only affected buckets are touched so a
-    k-conversation merge costs O(k bucket files) at 10^12-turn scale,
-    and the following encode_table_prebucketed run re-encodes only
-    those files.
+    Copy-on-write over the bucket layout, as Iceberg's MERGE rewrites
+    only the data files a change touches: every conversation sits in
+    exactly one bucket file, so only the change rows cross the JVM and
+    the table never does. Spark casts the change rows to the layout's
+    types, routes each to its bucket with the shared pmod(murmur3, n)
+    invariant (on the key type _buckets.json records: murmur3 differs
+    by byte width) and shuffles them alone by bucket into
+    min(n_buckets, defaultParallelism) tasks, so the rewrite is one wave
+    at any table size (a task whose partition holds no bucket writes
+    nothing). Each mapInArrow task, in pyarrow, checks its ops, streams
+    each of its buckets' old file a row group at a time, drops every row
+    whose key one of that bucket's change rows carries (left_anti
+    semantics: a NULL key matches nothing), appends the upserts and
+    writes the new file under a hidden temp name of its own task attempt
+    with the layout's Arrow schema. The driver installs the new files by
+    rename and unlinks the old ones only after every task succeeded; an
+    unknown op or a failed task raises with every bucket file untouched
+    and the temp files removed. A task Spark is still cancelling when
+    the merge raises can leave its temp file behind: no reader lists
+    it, and it is not part of the layout. Over change rows that need no
+    shuffle of their own, a merge is 2 Spark jobs (the change shuffle,
+    then the rewrite).
+
+    upsert_bucketized and delete_bucketized are its one-op cases. A
+    bucket receiving both ops is read once and written once. Emptied
+    buckets keep an empty schema file so positional bucket ids stay
+    stable; a k-conversation merge costs O(k bucket files) at
+    10^12-turn scale, and the following encode_table_prebucketed run
+    re-encodes only those files.
     """
     bmeta, schema = _bucket_layout(spark, bucket_dir)
     n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    changes = changes.withColumn(
-        conv_key, F.col(conv_key).cast(schema[conv_key].dataType))
-    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
-    # the whole plan in one job: every (op, bucket) pair
-    plan = changes.select(op_col, bid.alias("b")).distinct().collect()
-    bad = {r[0] for r in plan} - {"upsert", "delete"}
-    if bad:
-        raise ValueError(f"unknown merge op(s) {sorted(bad, key=str)}; "
-                         "expected 'upsert' or 'delete'")
-    upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
-    affected = sorted({r["b"] for r in plan})
-    if not affected:
-        return []
     # every bucket id has a file; a layout written before that rule held
     # is completed here, which shifts its files' positions once
     by_num = complete_buckets(bucket_dir, n)
-    # every key of either op leaves the old file; upserts re-enter below
-    touched_keys = changes.select(conv_key).distinct()
-    base = spark.read.schema(schema).parquet(*[by_num[b] for b in affected])
-    merged = (base.join(F.broadcast(touched_keys), conv_key, "left_anti")
-                  .unionByName(upserts.select(*base.columns)))
-    tmp = os.path.join(bucket_dir, f"_merge_tmp_{uuid.uuid4().hex[:8]}")
-    # same repartition -> partition i == bucket i == tmp part-{i:05d}
-    merged.repartition(n, F.col(conv_key)).write.parquet(tmp)
-    by_tmp = bucket_files(tmp)
+    arrow_schema = bucket_arrow_schema(schema)
     stamp = uuid.uuid4().hex[:8]
-    for b in affected:
-        new = bucket_file(bucket_dir, b, f"mrg{stamp}")
-        tf = by_tmp.get(b)
-        if tf is not None and pq.ParquetFile(tf).metadata.num_rows > 0:
-            os.replace(tf, new)
-        else:
-            # bucket fully deleted: keep an empty schema file so
-            # positional bucket ids stay stable
-            pq.write_table(pq.read_schema(by_num[b]).empty_table(), new)
-        os.remove(by_num[b])
-    shutil.rmtree(tmp, ignore_errors=True)
-    return affected
+
+    def rewrite(batches: Iterator[pa.RecordBatch]
+                ) -> Iterator[pa.RecordBatch]:
+        pin_worker_threads()
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        ops = tbl.column(_MERGE_OP)
+        # a NULL op is unknown too: is_in gives false for it
+        bad = pc.invert(pc.is_in(ops, pa.array(["upsert", "delete"])))
+        if pc.any(bad).as_py():
+            bad_ops = pc.unique(ops.filter(bad))
+            yield pa.record_batch({
+                "bucket": pa.nulls(len(bad_ops), pa.int32()),
+                "tmp": pa.nulls(len(bad_ops), pa.string()),
+                "bad_op": bad_ops})
+            return
+        names, buckets, tmps = arrow_schema.names, [], []
+        attempt = TaskContext.get().taskAttemptId()
+        for b in pc.unique(tbl.column(_MERGE_BUCKET)).to_pylist():
+            ch = tbl.filter(pc.equal(tbl.column(_MERGE_BUCKET), b))
+            ups = ch.filter(pc.equal(ch.column(_MERGE_OP), "upsert"))
+            keys = ch.column(conv_key).combine_chunks().cast(
+                arrow_schema.field(conv_key).type)
+            tmp = bucket_tmp(bucket_dir, b, stamp, attempt)
+            # Spark writes INT96 timestamps: read them as microseconds,
+            # whose range Spark's TIMESTAMP shares (nanoseconds overflow
+            # outside 1677-2262)
+            with pq.ParquetWriter(tmp, arrow_schema) as w, \
+                    pq.ParquetFile(by_num[b],
+                                   coerce_int96_timestamp_unit="us") as old:
+                for batch in old.iter_batches(columns=names):
+                    part = pa.Table.from_batches([batch]).select(
+                        names).cast(arrow_schema)
+                    part = part.filter(pc.invert(pc.is_in(
+                        part.column(conv_key), value_set=keys,
+                        skip_nulls=True)))
+                    if part.num_rows:
+                        w.write_table(part)
+                if ups.num_rows:
+                    w.write_table(ups.select(names).cast(arrow_schema))
+            buckets.append(b)
+            tmps.append(tmp)
+        yield pa.record_batch({"bucket": pa.array(buckets, pa.int32()),
+                               "tmp": pa.array(tmps, pa.string()),
+                               "bad_op": pa.nulls(len(buckets), pa.string())})
+
+    rows = changes.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name)
+          for f in schema.fields],
+        F.col(op_col).cast("string").alias(_MERGE_OP)).withColumn(
+        _MERGE_BUCKET, F.pmod(F.hash(F.col(conv_key)), F.lit(n)))
+    try:
+        report = (rows.repartition(
+                      min(n, spark.sparkContext.defaultParallelism),
+                      F.col(_MERGE_BUCKET))
+                  .mapInArrow(rewrite, _MERGE_REPORT).collect())
+        bad = {r["bad_op"] for r in report if r["bucket"] is None}
+        if bad:
+            raise ValueError(f"unknown merge op(s) {sorted(bad, key=str)}; "
+                             "expected 'upsert' or 'delete'")
+    except BaseException:
+        remove_bucket_tmps(bucket_dir, stamp)
+        raise
+    for r in report:
+        os.replace(r["tmp"], bucket_file(bucket_dir, r["bucket"],
+                                         f"mrg{stamp}"))
+        os.remove(by_num[r["bucket"]])
+    # what a losing speculative attempt wrote
+    remove_bucket_tmps(bucket_dir, stamp)
+    return sorted(r["bucket"] for r in report)
 
 
 def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,

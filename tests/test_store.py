@@ -596,3 +596,196 @@ def test_driver_prune_with_several_manifest_files_per_task(spark, tmp_path):
     assert driver == sorted(
         r for r in rows if r[0] in ("a3", "a17", "a41") and 200 <= r[1] <= 2500)
     assert driver
+
+
+# --- a merge rewrites only the touched bucket files -------------------------
+
+_MERGE_SCHEMA = "cid long, i int, text string, _op string"
+
+
+def _layout(spark, tmp_path, n_buckets=8, n_convs=40):
+    """A bucket layout of n_convs 3-turn conversations and {cid: bucket}."""
+    from supersonic_spark.pipeline import bucketize_table
+    rows = [(c, i, f"v{c}-{i}") for c in range(n_convs) for i in range(3)]
+    bdir = str(tmp_path / "b")
+    bucketize_table(spark, spark.createDataFrame(rows, _SCHEMA.replace(
+        "cid string", "cid long")), bdir, n_buckets=n_buckets, conv_key="cid")
+    bucket_of = {r["cid"]: r["b"] for r in spark.range(n_convs).select(
+        F.col("id").alias("cid"),
+        F.pmod(F.hash("id"), F.lit(n_buckets)).alias("b")).collect()}
+    return bdir, rows, bucket_of
+
+
+def _file_bytes(d: str) -> dict:
+    return {n: open(os.path.join(d, n), "rb").read()
+            for n in sorted(os.listdir(d))}
+
+
+@pytest.mark.parametrize("k", [1, 3, 8])
+def test_merge_is_two_jobs_and_one_wave_of_rewrites(spark, tmp_path, k):
+    """Only the change rows are shuffled: a merge touching k of 8 buckets
+    runs at most 2 jobs, one task reading the change rows and one wave
+    of at most min(8, defaultParallelism) rewriting bucket files."""
+    from supersonic_spark.pipeline import merge_bucketized
+    bdir, rows, bucket_of = _layout(spark, tmp_path)
+    first = {}
+    for c, b in sorted(bucket_of.items()):
+        first.setdefault(b, c)
+    assert len(first) == 8
+    convs = [first[b] for b in sorted(first)[:k]]
+    changes = spark.createDataFrame(
+        [(c, 0, "new", "upsert") for c in convs], _MERGE_SCHEMA).coalesce(1)
+    touched, jobs, tasks = _run_counted(
+        spark, lambda: merge_bucketized(spark, changes, bdir))
+    assert touched == sorted(bucket_of[c] for c in convs)
+    dp = spark.sparkContext.defaultParallelism
+    assert jobs <= 2 and tasks <= 1 + min(8, dp), (jobs, tasks)
+    got = sorted(tuple(r) for r in spark.read.parquet(bdir).collect())
+    assert got == sorted([r for r in rows if r[0] not in convs]
+                         + [(c, 0, "new") for c in convs])
+
+
+def test_empty_merge_rewrites_no_file(spark, tmp_path):
+    from supersonic_spark.pipeline import merge_bucketized
+    bdir, _rows, _b = _layout(spark, tmp_path)
+    before = {n: os.stat(os.path.join(bdir, n)).st_mtime_ns
+              for n in os.listdir(bdir)}
+    changes = spark.createDataFrame([], _MERGE_SCHEMA)
+    assert merge_bucketized(spark, changes, bdir) == []
+    assert {n: os.stat(os.path.join(bdir, n)).st_mtime_ns
+            for n in os.listdir(bdir)} == before
+
+
+_TS = dt.datetime(2024, 3, 1, 12, 30, 15, 123456)
+_TS_MIN = dt.datetime(1, 1, 2)     # the first day PySpark collects
+_TS_MAX = dt.datetime(9999, 12, 31, 23, 59, 59, 999999)
+_FIDELITY_SCHEMA = "k long, n int, s string, x string, ts timestamp"
+
+
+def _fidelity_rows(tag: str, keys, n: int = 2) -> list[tuple]:
+    """n turns per key; x is NULL on odd turns, ts has microseconds."""
+    return [(k, t, f"{tag}{k}-{t}", None if t % 2 else f"x{t}",
+             _TS + dt.timedelta(days=(k or 0), microseconds=7 * t + 1))
+            for k in keys for t in range(n)]
+
+
+def _merged(base: list, changes: list) -> list:
+    """Expected rows of a merge with Spark's left_anti NULL semantics:
+    a change row's key removes that key's base rows, a NULL key removes
+    nothing, and every upsert row is inserted."""
+    gone = {c[0] for c in changes if c[0] is not None}
+    return ([r for r in base if r[0] is None or r[0] not in gone]
+            + [c[:-1] for c in changes if c[-1] == "upsert"])
+
+
+def _same(got, want) -> bool:
+    return sorted(map(tuple, got), key=repr) == sorted(want, key=repr)
+
+
+def test_merged_bucket_files_keep_the_layout_schema_and_nulls(spark,
+                                                              tmp_path):
+    """Files the merge writes with pyarrow read back with the layout's
+    schema (TIMESTAMP, not TIMESTAMP_NTZ) beside Spark-written INT96
+    files; NULL keys keep left_anti semantics; a second merge,
+    rebucket_table and encode_table_prebucketed read the mixed layout."""
+    from supersonic_spark.pipeline import (EncodeConfig, bucketize_table,
+                                           decode_table,
+                                           encode_table_prebucketed,
+                                           merge_bucketized, rebucket_table)
+    from supersonic_spark.store.layout import _bucket_layout, bucket_files
+    n = 4
+    bucket_of = {r["k"]: r["b"] for r in spark.range(40).select(
+        F.col("id").alias("k"), F.pmod(F.hash("id"), F.lit(n)).alias("b"))
+        .collect()}
+    null_bucket = spark.range(1).select(F.pmod(F.hash(F.lit(None).cast(
+        "long")), F.lit(n))).first()[0]
+    # the first merge touches bucket 0 and the NULL-key bucket only
+    first = [k for k in range(40)
+             if bucket_of[k] in (0, null_bucket)][:3]
+    later = [k for k in range(40)
+             if bucket_of[k] not in (0, null_bucket)][:2]
+    assert len(first) == 3 and len(later) == 2
+    # a conversation the merges leave alone, in a bucket they rewrite,
+    # at both ends of TIMESTAMP's range (outside INT96's nanosecond one)
+    kept = next(k for k in range(40) if bucket_of[k] == 0
+                and k not in first)
+    base = [r[:4] + ((_TS_MIN, _TS_MAX)[r[1]],) if r[0] == kept else r
+            for r in _fidelity_rows("b", list(range(40)) + [None])]
+    bdir = str(tmp_path / "b")
+    bucketize_table(spark, spark.createDataFrame(base, _FIDELITY_SCHEMA),
+                    bdir, n_buckets=n, conv_key="k")
+    before = bucket_files(bdir)
+    _, schema = _bucket_layout(spark, bdir)
+
+    ops = _FIDELITY_SCHEMA + ", _op string"
+    ch1 = ([r + ("upsert",) for r in _fidelity_rows("u", first[:2], 3)]
+           + [(first[2], None, None, None, None, "delete"),
+              (None, 0, None, None, None, "delete"),
+              (None, 9, "null-key insert", None, _TS, "upsert")])
+    assert merge_bucketized(spark, spark.createDataFrame(ch1, ops),
+                            bdir) == sorted({0, null_bucket})
+    want = _merged(base, ch1)
+    after = bucket_files(bdir)
+    rewritten = {b for b in after if after[b] != before[b]}
+    assert rewritten == {0, null_bucket} != set(range(n))
+    assert spark.read.parquet(bdir).schema == schema
+    assert spark.read.parquet(after[0]).schema == schema
+    assert _same(spark.read.parquet(bdir).collect(), want)
+
+    ch2 = ([r + ("upsert",)
+            for r in _fidelity_rows("w", later[:1] + first[:1])]
+           + [(later[1], None, None, None, None, "delete")])
+    merge_bucketized(spark, spark.createDataFrame(ch2, ops), bdir)
+    want = _merged(want, ch2)
+    assert _same(spark.read.parquet(bdir).collect(), want)
+
+    rdir = rebucket_table(spark, bdir, str(tmp_path / "r"), factor=2)
+    assert _same(spark.read.parquet(rdir).collect(), want)
+    out = str(tmp_path / "enc")
+    encode_table_prebucketed(spark, bdir, out, EncodeConfig(
+        chunk_rows=16, conv_key="k", order_key="n", sort_keys=("k", "n")))
+    assert _same(decode_table(spark, out).select(*schema.names).collect(),
+                 want)
+
+
+def test_a_failed_merge_changes_no_bucket_file(spark, tmp_path,
+                                               monkeypatch):
+    """A rewrite task that raises after writing one bucket's new file
+    leaves every bucket file byte-identical and no temp file behind."""
+    import supersonic_spark.store.maintain as maintain
+    from supersonic_spark.pipeline import merge_bucketized
+    from supersonic_spark.store.layout import bucket_files, parquet_files
+    bdir, rows, bucket_of = _layout(spark, tmp_path)
+    convs = list({b: c for c, b in bucket_of.items()}.values())[:3]
+    before = _file_bytes(bdir)
+    real, calls = maintain.bucket_tmp, []
+
+    def failing_tmp(bucket_dir, b, *args):
+        calls.append(b)
+        if len(calls) == 2:
+            raise OSError("no space left on device")
+        return real(bucket_dir, b, *args)
+
+    monkeypatch.setattr(maintain, "bucket_tmp", failing_tmp)
+    changes = spark.createDataFrame(
+        [(c, 0, "new", "upsert") for c in convs], _MERGE_SCHEMA).coalesce(1)
+    with pytest.raises(Exception, match="no space left"):
+        merge_bucketized(spark, changes, bdir)
+    assert _file_bytes(bdir) == before
+    assert sorted(bucket_files(bdir).values()) == parquet_files(bdir)
+    assert len(parquet_files(bdir)) == 8
+    assert sorted(tuple(r) for r in spark.read.parquet(bdir).collect()) \
+        == sorted(rows)
+
+
+def test_merge_rejects_a_null_op(spark, tmp_path):
+    """A NULL op is an unknown op: the merge raises and rewrites no
+    bucket file."""
+    from supersonic_spark.pipeline import merge_bucketized
+    bdir, _rows, _b = _layout(spark, tmp_path)
+    before = _file_bytes(bdir)
+    changes = spark.createDataFrame([(1, 0, "new", "upsert"),
+                                     (2, 0, "new", None)], _MERGE_SCHEMA)
+    with pytest.raises(ValueError, match="unknown merge op"):
+        merge_bucketized(spark, changes, bdir)
+    assert _file_bytes(bdir) == before

@@ -22,6 +22,9 @@ import time
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from supersonic_spark.runtime import external_busy_cores  # noqa: E402
 
 
 def build_zip(dest: str) -> str:
@@ -45,7 +48,6 @@ def generate_input(n_convs: int, dest: str, bucketed: bool = False) -> str:
     out = os.path.join(dest, f"transcripts_c{n_convs}{suffix}")
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
-    sys.path.insert(0, REPO)
     from supersonic_spark.session import get_spark
     from supersonic_spark.datagen import generate_transcripts
     spark = get_spark(cores=os.cpu_count())
@@ -93,7 +95,6 @@ def run_once(zpath: str, input_dir: str, cores: int, run_id: int,
     raise RuntimeError(f"no result line; stderr tail: {proc.stderr[-2000:]}")
 
 
-from supersonic_spark.runtime import external_busy_cores  # noqa: E402
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-convs", type=int, default=33000)
