@@ -28,7 +28,6 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -40,10 +39,10 @@ from ..runtime import pin_worker_threads, run_tasks
 from ..selector import choose_codecs
 from .layout import (_bucket_layout, _commit_partition, _fragment_name,
                      _partition_files, _resumed, _write_meta,
-                     committed, install_current, parquet_files,
-                     read_manifest)
-from .stats import (MANIFEST_SCHEMA, STATS_VERSION, _BLOOM_BITS,
-                    _BLOOM_HASHES, _bloom_build, _zone_stats)
+                     bucket_arrow_schema, committed, install_current,
+                     parquet_files, read_bucket, read_manifest)
+from .stats import (STATS_VERSION, _BLOOM_BITS, _BLOOM_HASHES, _bloom_build,
+                    _zone_stats)
 
 
 @dataclass
@@ -195,6 +194,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                 buf = encode_block(chunk, codecs, entropy=entropy)
                 dt = time.perf_counter() - t0
                 out.write(buf)
+                crc = zlib.crc32(buf) & 0xFFFFFFFF
                 # actual per-frame codec incl. "+zstd" suffix where the
                 # outer stage was kept (it self-disables per frame)
                 applied = block_codec_report(buf)
@@ -210,7 +210,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                         "bytes_in": int(reference_column_size(col)),
                         "bytes_out": per_col_out[name],
                         "encode_sec": dt / len(chunk.schema.names),
-                        "crc32": zlib.crc32(buf) & 0xFFFFFFFF,
+                        "crc32": crc,
                         "resumed": False,
                         "vmin_num": zmin, "vmax_num": zmax,
                         "vmin_str": zmin_s, "vmax_str": zmax_s,
@@ -395,8 +395,7 @@ def _encode_tail(spark: SparkSession, out_dir: str, meta: dict,
     install_current(out_dir, meta, current)
     resumed = (~F.col("partition_id").isin(encoded) if encoded
                else F.lit(True))
-    return (read_manifest(spark, out_dir, MANIFEST_SCHEMA)
-            .withColumn("resumed", resumed))
+    return read_manifest(spark, out_dir).withColumn("resumed", resumed)
 
 
 def _pack_by_bytes(items: list, sizes: list[int], n_slots: int) -> list:
@@ -502,26 +501,13 @@ def encode_table_zordered(spark: SparkSession, df: DataFrame, out_dir: str,
         extra_meta={"zorder_keys": list(zorder_keys)})
 
 
-def _normalize_arrow_units(tbl: pa.Table) -> pa.Table:
-    """Cast non-µs timestamp columns (e.g. ns from INT96 parquet) to µs —
-    the unit Spark's Arrow transfer uses — so blocks encoded from a direct
-    pyarrow read are byte-compatible with the shuffle path's."""
-    fields, changed = [], False
-    for f in tbl.schema:
-        if pa.types.is_timestamp(f.type) and f.type.unit != "us":
-            fields.append(pa.field(f.name, pa.timestamp("us", f.type.tz)))
-            changed = True
-        else:
-            fields.append(f)
-    return tbl.cast(pa.schema(fields)) if changed else tbl
-
-
 def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                              out_dir: str, cfg: EncodeConfig | None = None,
                              fingerprint: str = "") -> DataFrame:
     """Shuffle-free encode over a PRE-BUCKETED parquet layout: each task
     encodes a group of bucket files; the kernel reads each file
-    in-process with pyarrow, sorts by sort_keys (Arrow C++ sort_indices),
+    in-process with pyarrow (layout.read_bucket, the layout's Arrow
+    schema), sorts by sort_keys (Arrow C++ sort_indices),
     and encodes — no JVM scan, no repartition exchange, no JVM->Python
     row transfer at all.
 
@@ -559,6 +545,7 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
         raise ValueError(f"no .parquet bucket files under {input_dir}")
     _, schema = _bucket_layout(spark, input_dir)
     _check_keys(cfg, schema.names)
+    arrow_schema = bucket_arrow_schema(schema)
     cfg_hash = cfg.config_hash(fingerprint)
     meta = _write_meta(out_dir, _encode_meta(
         schema, cfg, cfg_hash, fingerprint, len(paths), prebucketed=True))
@@ -583,20 +570,15 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                             spark.sparkContext.defaultParallelism)
 
     def encode_group(group) -> Iterator[pa.RecordBatch]:
-        def lazy_batches(path):
-            # generator: the parquet read happens only if the marker
-            # check inside _encode_partition_stream does NOT resume (a
-            # marker can appear after planning). Spark writes INT96
-            # timestamps that pyarrow reads as ns; normalize to the µs
-            # unit Spark's own Arrow bridge uses so decoded blocks
-            # round-trip through mapInArrow unchanged.
-            tbl = _normalize_arrow_units(pq.read_table(path))
-            yield from tbl.to_batches()
-
         done = []
         for pid, path, fp in group:
+            # lazy: the file is read only if the marker check inside
+            # _encode_partition_stream does NOT resume (a marker can
+            # appear after planning)
+            batches = (b for t in read_bucket(path, arrow_schema)
+                       for b in t.to_batches())
             encoded = _encode_partition_stream(
-                pid, lazy_batches(path), out_dir, fp, cfg, sort=True)
+                pid, batches, out_dir, fp, cfg, sort=True)
             done.append((pid, _fragment_name(pid, fp), encoded))
         yield _report(done)
 

@@ -23,6 +23,11 @@ them, and a merge rewrites the ones it touches with pyarrow under the
 layout's Arrow schema (bucket_arrow_schema), each first under a hidden
 .part-BBBBB-<tag>-a<attempt>.parquet.tmp name (bucket_tmp) that no
 reader lists.
+
+It is also the only module that reads either kind of file into Arrow:
+manifests through read_fragments, bucket files through read_bucket
+(write_bucket writes them). read_manifest, the one Spark read of a
+manifest, backs only the DataFrames the API returns.
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ import json
 import os
 import re
 import shutil
+from typing import Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -240,40 +246,64 @@ def manifest_files(table: str) -> list[str]:
             if n.endswith(".parquet") and not n.startswith((".", "_"))]
 
 
-def manifest_schema(files: list[str]) -> pa.Schema:
-    """The union of the files' Arrow schemas, read from their footers;
-    the fragment schema when there are no files."""
-    if not files:
-        return _FRAGMENT_SCHEMA
-    return pa.unify_schemas([pq.read_schema(f) for f in files])
+def manifest_footers(table: str) -> tuple[list, pa.Schema]:
+    """([(path, parquet footer)] of the table's manifest files, each
+    footer read once; the union of their Arrow schemas, or the fragment
+    schema when there are no files)."""
+    files = [(f, pq.read_metadata(f)) for f in manifest_files(table)]
+    return files, (pa.unify_schemas([md.schema.to_arrow_schema()
+                                     for _f, md in files])
+                   if files else _FRAGMENT_SCHEMA)
 
 
-def read_fragments(files: list[str], schema: pa.Schema,
+def open_fragments(files: list[tuple]) -> Iterator[pq.ParquetFile]:
+    """manifest_footers' files opened for read_fragments one at a time,
+    their footers not parsed again; each closes when the next opens."""
+    for f, md in files:
+        with pq.ParquetFile(f, metadata=md) as pf:
+            yield pf
+
+
+def _row_groups(md, pids) -> list[int]:
+    """Row groups of a manifest file (its footer) whose partition_id
+    statistics can hold one of `pids`."""
+    j = md.schema.names.index("partition_id")
+    stats = (md.row_group(i).column(j).statistics
+             for i in range(md.num_row_groups))
+    return [i for i, st in enumerate(stats)
+            if st is None or not st.has_min_max
+            or any(st.min <= p <= st.max for p in pids)]
+
+
+def read_fragments(files: Iterable[pq.ParquetFile], schema: pa.Schema,
                    columns: list[str] | None = None,
-                   of_columns=None) -> pa.Table:
-    """Manifest rows of `files` (paths, or open pq.ParquetFile handles a
-    caller reads more than once) as one Arrow table with `schema` (their
-    union, manifest_schema) projected to `columns` (None: all): a column
-    a file lacks reads as null, typed as in fragments when no file has
-    it, and only a column whose file type differs is cast. `of_columns`
-    keeps only the rows describing those table columns. Runs on the
-    driver and in tasks."""
+                   of_columns=None, partitions=None) -> pa.Table:
+    """The one manifest reader: the rows of open manifest `files`
+    (open_fragments) as one Arrow table with `schema` (their union,
+    manifest_footers) projected to `columns` (None: all). A column a
+    file lacks reads as null, typed as in fragments when no file has it,
+    and only a column whose file type differs is cast. `of_columns`
+    keeps only the rows describing those table columns, `partitions`
+    only those partition ids' rows, read from the row groups whose
+    statistics can hold them. Runs on the driver and in tasks."""
     names = schema.names if columns is None else list(columns)
     out = pa.schema([(schema if n in schema.names else _FRAGMENT_SCHEMA)
                      .field(n) for n in names])
+    keep = {}
     if of_columns is not None:
-        of_columns = pa.array(list(of_columns), pa.string())
+        keep["column"] = pa.array(list(of_columns), pa.string())
+    if partitions is not None:
+        keep["partition_id"] = pa.array(list(partitions), pa.int32())
     parts = []
-    for f in files:
-        pf = f if isinstance(f, pq.ParquetFile) else pq.ParquetFile(f)
-        have = set(pf.schema_arrow.names)
+    for pf in files:
+        have = set(pf.metadata.schema.names)
         need = [n for n in names if n in have]
-        if of_columns is not None and "column" not in need:
-            need.append("column")
-        tbl = pf.read(columns=need)
-        if of_columns is not None:
-            tbl = tbl.filter(pc.is_in(tbl.column("column"),
-                                      value_set=of_columns))
+        need += [k for k in keep if k not in need]
+        tbl = (pf.read(columns=need) if partitions is None else
+               pf.read_row_groups(_row_groups(pf.metadata, partitions),
+                                  columns=need))
+        for k, values in keep.items():
+            tbl = tbl.filter(pc.is_in(tbl.column(k), value_set=values))
         cols = [tbl.column(n) if n in have
                 else pa.nulls(tbl.num_rows, out.field(n).type) for n in names]
         parts.append(pa.table([c if c.type == f.type else c.cast(f.type)
@@ -282,23 +312,20 @@ def read_fragments(files: list[str], schema: pa.Schema,
 
 
 def manifest_table(table: str, columns: list[str] | None = None,
-                   of_columns=None) -> pa.Table:
-    """The driver-side manifest reader: the table's manifest rows as an
-    Arrow table, without a Spark job (read_fragments over every manifest
-    file). An empty or missing manifest/ gives an empty table."""
-    files = manifest_files(table)
-    return read_fragments(files, manifest_schema(files), columns, of_columns)
+                   of_columns=None, partitions=None) -> pa.Table:
+    """The table's manifest rows as an Arrow table, without a Spark job
+    (read_fragments over every manifest file). An empty or missing
+    manifest/ gives an empty table."""
+    files, schema = manifest_footers(table)
+    return read_fragments(open_fragments(files), schema, columns,
+                          of_columns, partitions)
 
 
-def read_manifest(spark: SparkSession, table: str,
-                  schema: StructType | None = None) -> DataFrame:
-    """The table's manifest as a DataFrame; `schema` skips inference,
-    which an empty manifest/ (an encoded empty input) cannot run, so it
-    reads with MANIFEST_SCHEMA."""
-    if schema is None and not manifest_files(table):
-        schema = MANIFEST_SCHEMA
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(manifest_dir(table))
+def read_manifest(spark: SparkSession, table: str) -> DataFrame:
+    """The table's manifest as a DataFrame with MANIFEST_SCHEMA (no
+    inference job; a column a file lacks reads as NULL), for the
+    DataFrames an encode, a compaction and manifest_stats return."""
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir(table))
 
 
 def _link_table(src: str, dst: str) -> None:
@@ -371,19 +398,41 @@ def bucket_arrow_schema(schema: StructType) -> pa.Schema:
                       for f in schema.fields])
 
 
-def complete_buckets(bucket_dir: str, n: int) -> dict[int, str]:
+def read_bucket(path: str, schema: pa.Schema) -> Iterator[pa.Table]:
+    """The one bucket-file reader: the file's rows a row group at a
+    time, as tables of `schema` (bucket_arrow_schema). Spark's INT96
+    timestamps read as microseconds, the unit and range of Spark's
+    TIMESTAMP (nanoseconds overflow outside 1677-2262)."""
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+        for i in range(pf.num_row_groups):
+            yield (pf.read_row_group(i, columns=schema.names)
+                   .select(schema.names).cast(schema))
+
+
+def write_bucket(path: str, schema: pa.Schema,
+                 tables: Iterable[pa.Table]) -> None:
+    """The one bucket-file writer: `tables`, each of `schema`
+    (bucket_arrow_schema), as one parquet file Spark reads back with the
+    layout's schema. No tables write an empty file."""
+    with pq.ParquetWriter(path, schema) as w:
+        for t in tables:
+            if t.num_rows:
+                w.write_table(t)
+
+
+def complete_buckets(bucket_dir: str, n: int,
+                     schema: StructType) -> dict[int, str]:
     """The one bucket-id rule: a layout holds exactly one file per bucket
     id below n, so a file's sorted position is its bucket id. Spark
     writes no file for an empty bucket other than bucket 0; each missing
-    one gets an empty file with the layout's schema here. Returns
-    bucket_files()."""
+    one gets an empty file with the layout's Arrow schema
+    (write_bucket). Returns bucket_files()."""
     files = bucket_files(bucket_dir)
-    missing = [b for b in range(n) if b not in files]
-    if missing and files:
-        empty = pq.read_schema(next(iter(files.values()))).empty_table()
-        for b in missing:
+    arrow_schema = bucket_arrow_schema(schema)
+    for b in range(n):
+        if b not in files:
             files[b] = bucket_file(bucket_dir, b, "empty")
-            pq.write_table(empty, files[b])
+            write_bucket(files[b], arrow_schema, ())
     return files
 
 

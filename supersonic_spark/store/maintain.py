@@ -6,6 +6,7 @@ changed-data capture, and block-file compaction.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
 import shutil
@@ -14,7 +15,6 @@ from typing import Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -23,11 +23,10 @@ from .layout import (_block_pid, _bucket_layout, _fragment_name,
                      _link_table, _partition_files, _write_bucket_meta,
                      _write_fragment, bucket_arrow_schema, bucket_file,
                      bucket_tmp, complete_buckets, install_current,
-                     list_blocks, manifest_dir, parquet_files,
-                     read_manifest, read_meta, remove_bucket_tmps,
-                     snapshot_dir)
+                     list_blocks, manifest_table, parquet_files,
+                     read_bucket, read_manifest, read_meta,
+                     remove_bucket_tmps, snapshot_dir, write_bucket)
 from .read import decode_table
-from .stats import MANIFEST_SCHEMA
 
 
 def bucketize_table(spark: SparkSession, df: DataFrame, dest_dir: str,
@@ -46,7 +45,7 @@ def bucketize_table(spark: SparkSession, df: DataFrame, dest_dir: str,
     encodes need no inference job."""
     (df.repartition(n_buckets, F.col(conv_key))
        .write.mode("overwrite").parquet(dest_dir))
-    complete_buckets(dest_dir, n_buckets)
+    complete_buckets(dest_dir, n_buckets, df.schema)
     _write_bucket_meta(dest_dir, n_buckets, conv_key, df.schema)
     return dest_dir
 
@@ -162,7 +161,7 @@ def merge_bucketized(spark: SparkSession, changes: DataFrame,
     n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
     # every bucket id has a file; a layout written before that rule held
     # is completed here, which shifts its files' positions once
-    by_num = complete_buckets(bucket_dir, n)
+    by_num = complete_buckets(bucket_dir, n, schema)
     arrow_schema = bucket_arrow_schema(schema)
     stamp = uuid.uuid4().hex[:8]
 
@@ -183,7 +182,7 @@ def merge_bucketized(spark: SparkSession, changes: DataFrame,
                 "tmp": pa.nulls(len(bad_ops), pa.string()),
                 "bad_op": bad_ops})
             return
-        names, buckets, tmps = arrow_schema.names, [], []
+        buckets, tmps = [], []
         attempt = TaskContext.get().taskAttemptId()
         for b in pc.unique(tbl.column(_MERGE_BUCKET)).to_pylist():
             ch = tbl.filter(pc.equal(tbl.column(_MERGE_BUCKET), b))
@@ -191,22 +190,12 @@ def merge_bucketized(spark: SparkSession, changes: DataFrame,
             keys = ch.column(conv_key).combine_chunks().cast(
                 arrow_schema.field(conv_key).type)
             tmp = bucket_tmp(bucket_dir, b, stamp, attempt)
-            # Spark writes INT96 timestamps: read them as microseconds,
-            # whose range Spark's TIMESTAMP shares (nanoseconds overflow
-            # outside 1677-2262)
-            with pq.ParquetWriter(tmp, arrow_schema) as w, \
-                    pq.ParquetFile(by_num[b],
-                                   coerce_int96_timestamp_unit="us") as old:
-                for batch in old.iter_batches(columns=names):
-                    part = pa.Table.from_batches([batch]).select(
-                        names).cast(arrow_schema)
-                    part = part.filter(pc.invert(pc.is_in(
+            kept = (part.filter(pc.invert(pc.is_in(
                         part.column(conv_key), value_set=keys,
                         skip_nulls=True)))
-                    if part.num_rows:
-                        w.write_table(part)
-                if ups.num_rows:
-                    w.write_table(ups.select(names).cast(arrow_schema))
+                    for part in read_bucket(by_num[b], arrow_schema))
+            write_bucket(tmp, arrow_schema, itertools.chain(
+                kept, [ups.select(arrow_schema.names).cast(arrow_schema)]))
             buckets.append(b)
             tmps.append(tmp)
         yield pa.record_batch({"bucket": pa.array(buckets, pa.int32()),
@@ -260,7 +249,9 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
 
     Mirrors bucketize_table's layout contract: files named
     part-{id:05d}-*.parquet, one per bucket id, so ids are positional in
-    sorted order; an empty new bucket gets an empty file."""
+    sorted order; an empty new bucket gets an empty file, and one the
+    write left in pieces is joined into one file with the layout's Arrow
+    schema (layout.read_bucket, layout.write_bucket)."""
     if factor < 2 or int(factor) != factor:
         raise ValueError(f"factor must be an integer >= 2, got {factor}")
     bmeta, schema = _bucket_layout(spark, bucket_dir)
@@ -272,6 +263,7 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
     (df.withColumn("__nb", F.pmod(F.hash(F.col(conv_key)), F.lit(m)))
        .write.partitionBy("__nb").parquet(tmp))
     stamp = uuid.uuid4().hex[:8]
+    arrow_schema = bucket_arrow_schema(schema)
     for d in os.listdir(tmp):
         if not d.startswith("__nb="):
             continue
@@ -280,13 +272,12 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
         if len(files) == 1:
             os.replace(files[0], dest)
         elif files:
-            # an input file larger than maxPartitionBytes was split
-            # across tasks, so this new bucket arrived in pieces —
-            # concatenate row groups (no decode of column data)
-            pq.write_table(pa.concat_tables([pq.read_table(p)
-                                             for p in files]), dest)
+            # arrived in pieces: an input file split across tasks, or
+            # spark.sql.files.maxRecordsPerFile
+            write_bucket(dest, arrow_schema, (
+                t for p in files for t in read_bucket(p, arrow_schema)))
     shutil.rmtree(tmp, ignore_errors=True)
-    complete_buckets(dest_dir, m)
+    complete_buckets(dest_dir, m, schema)
     _write_bucket_meta(dest_dir, m, conv_key, schema)
     return dest_dir
 
@@ -351,9 +342,10 @@ def snapshot_diff(spark: SparkSession, out_dir: str, tag: str,
     ('delete') — an UPDATE appears as delete+insert, the standard CDC
     decomposition.
 
-    Scale path: the two manifests are joined chunk-by-chunk on
-    (partition_id, chunk_id) and a partition whose every chunk CRC
-    matches is skipped ENTIRELY — neither side's block file is read.
+    Scale path: the driver compares the two manifests' (partition_id,
+    chunk_id, crc32) sets (layout.manifest_table, so the call runs no
+    Spark job), and a partition whose every chunk CRC matches is skipped
+    ENTIRELY — neither side's block file is read.
     Under bucketized upserts/deletes only the touched buckets re-encode
     (new CRCs), so CDC cost is O(changed buckets), not O(table):
     consuming the changes of a k-conversation merge into a 10^12-turn
@@ -368,18 +360,14 @@ def snapshot_diff(spark: SparkSession, out_dir: str, tag: str,
     snap = snapshot_dir(out_dir, tag)
     if not os.path.isdir(snap):
         raise ValueError(f"no snapshot {tag!r} under {out_dir}")
-    live_man = (read_manifest(spark, out_dir)
-                .select("partition_id", "chunk_id", "crc32").distinct())
-    snap_man = (read_manifest(spark, snap)
-                .select("partition_id", "chunk_id",
-                        F.col("crc32").alias("crc32_s")).distinct())
-    joined = live_man.join(snap_man, ["partition_id", "chunk_id"], "full")
-    changed = (joined.filter(F.col("crc32").isNull()
-                             | F.col("crc32_s").isNull()
-                             | (F.col("crc32") != F.col("crc32_s")))
-               .select("partition_id").distinct())
-    # one id per changed partition: bounded by #buckets, tiny collect
-    parts = sorted(r["partition_id"] for r in changed.collect())
+    keys = ["partition_id", "chunk_id", "crc32"]
+    live_man, snap_man = (manifest_table(t, keys) for t in (out_dir, snap))
+    # a partition changed where one side has a (chunk, crc) the other
+    # lacks; one id per changed partition, bounded by #buckets
+    changed = pa.concat_tables([
+        live_man.join(snap_man, keys, join_type="left anti"),
+        snap_man.join(live_man, keys, join_type="left anti")])
+    parts = sorted(pc.unique(changed.column("partition_id")).to_pylist())
     live = decode_table(spark, out_dir, partitions=parts)
     old = decode_table(spark, snap, partitions=parts)
     for f in live.schema.fields:            # align evolved columns
@@ -410,8 +398,9 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     merged table reads through decode_table like any encode_table
     output. One Spark job: a task per output file concatenates its
     group's blocks and writes the group's manifest fragment from the
-    sources' manifest rows (fragment or older Spark-written manifests,
-    read with pyarrow); the driver handles O(#files) metadata only.
+    sources' manifest rows (layout.manifest_table: the union schema, and
+    only row groups that can hold the group's partitions); the driver
+    handles O(#files) metadata only.
     Like every encode it ends in layout.install_current, so a
     re-compaction into the same out_dir leaves only its own files."""
     metas = [read_meta(d) for d in src_dirs]
@@ -469,9 +458,7 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
         by_src: dict[tuple, list] = {}
         for d in dict.fromkeys(d for d, _pid, _p in srcs):
             pids = [pid for sd, pid, _p in srcs if sd == d]
-            tbl = pq.read_table(manifest_dir(d),
-                                filters=[("partition_id", "in", pids)])
-            for r in tbl.to_pylist():
+            for r in manifest_table(d, partitions=pids).to_pylist():
                 by_src.setdefault((d, r["partition_id"]), []).append(r)
         rows, off = [], 0
         for d, pid, _p in srcs:
@@ -488,4 +475,4 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     install_current(out_dir, meta,
                     [_fragment_name(gid, fp) for gid in range(len(groups))],
                     whole_chunks=False)
-    return read_manifest(spark, out_dir, MANIFEST_SCHEMA)
+    return read_manifest(spark, out_dir)

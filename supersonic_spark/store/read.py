@@ -20,16 +20,15 @@ from zoneinfo import ZoneInfo
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from ..codecs import decode_block, iter_block_spans
 from ..runtime import run_tasks
-from .layout import (_block_pid, has_manifest, list_blocks, manifest_files,
-                     manifest_schema, manifest_table, read_fragments,
-                     read_manifest, read_meta)
+from .layout import (_block_pid, has_manifest, list_blocks,
+                     manifest_footers, manifest_table, open_fragments,
+                     read_fragments, read_manifest, read_meta)
 from .stats import _bound_ns, bloom_probe_b64
 
 
@@ -179,43 +178,43 @@ _ZONE_COLUMNS = ["partition_id", "chunk_id", "column", "vmin_num",
                  "vmax_num", "vmin_str", "vmax_str"]
 
 
-def _file_survivors(path: str, schema: pa.Schema,
+def _file_survivors(pf, schema: pa.Schema,
                     plans: list[_Plan]) -> list[np.ndarray]:
-    """The prune kernel over one manifest file: for each plan, the
-    pid << 32 | cid keys of the file's chunks it keeps. Zone maps first;
-    the file's bloom blobs are read only when a bloom plan kept a chunk,
-    and probed only for the chunks it kept, so a read's cost follows the
-    zone maps' survivors, not the manifest's size. A chunk without a
-    zone map (null vmin or vmax) or without a bloom is kept: pruning is
-    only ever an optimization, never a correctness gate."""
+    """The prune kernel over one open manifest file (layout's
+    open_fragments): for each plan, the pid << 32 | cid keys of the
+    file's chunks it keeps. Zone maps first; the file's bloom blobs
+    are read only when a bloom plan kept a chunk, and probed only for
+    the chunks it kept, so a read's cost follows the zone maps'
+    survivors, not the manifest's size. A chunk without a zone map (null
+    vmin or vmax) or without a bloom is kept: pruning is only ever an
+    optimization, never a correctness gate."""
     of = {p.column for p in plans}
     out = []
-    with pq.ParquetFile(path) as pf:        # one open for both reads
-        tbl = read_fragments([pf], schema, _ZONE_COLUMNS, of)
-        keys = ((tbl.column("partition_id").to_numpy().astype(np.int64)
-                 << 32) | tbl.column("chunk_id").to_numpy().astype(np.int64))
-        blooms = None
-        for p in plans:
-            suffix = "str" if p.is_str else "num"
-            vmin = tbl.column(f"vmin_{suffix}")
-            vmax = tbl.column(f"vmax_{suffix}")
-            if p.is_str:
-                above = pc.greater_equal(vmax, p.lo)
-                below = pc.less_equal(vmin, p.hi)
-            else:
-                above = _spark_ge(vmax, p.lo)
-                below = _spark_ge(p.hi, vmin)
-            overlap = pc.fill_null(pc.and_(above, below), False)
-            kept = pc.and_(pc.equal(tbl.column("column"), p.column),
-                           pc.or_(pc.or_(pc.is_null(vmin), pc.is_null(vmax)),
-                                  overlap))
-            rows = np.flatnonzero(kept.to_numpy(zero_copy_only=False))
-            if p.bloom is not None and len(rows):
-                if blooms is None:  # rows align: the same file and filter
-                    blooms = read_fragments([pf], schema, ["bloom_b64"],
-                                            of).column("bloom_b64")
-                rows = rows[bloom_probe_b64(blooms.take(rows), p.bloom)]
-            out.append(keys[rows])
+    tbl = read_fragments([pf], schema, _ZONE_COLUMNS, of)
+    keys = ((tbl.column("partition_id").to_numpy().astype(np.int64)
+             << 32) | tbl.column("chunk_id").to_numpy().astype(np.int64))
+    blooms = None
+    for p in plans:
+        suffix = "str" if p.is_str else "num"
+        vmin = tbl.column(f"vmin_{suffix}")
+        vmax = tbl.column(f"vmax_{suffix}")
+        if p.is_str:
+            above = pc.greater_equal(vmax, p.lo)
+            below = pc.less_equal(vmin, p.hi)
+        else:
+            above = _spark_ge(vmax, p.lo)
+            below = _spark_ge(p.hi, vmin)
+        overlap = pc.fill_null(pc.and_(above, below), False)
+        kept = pc.and_(pc.equal(tbl.column("column"), p.column),
+                       pc.or_(pc.or_(pc.is_null(vmin), pc.is_null(vmax)),
+                              overlap))
+        rows = np.flatnonzero(kept.to_numpy(zero_copy_only=False))
+        if p.bloom is not None and len(rows):
+            if blooms is None:  # rows align: the same file and filter
+                blooms = read_fragments([pf], schema, ["bloom_b64"],
+                                        of).column("bloom_b64")
+            rows = rows[bloom_probe_b64(blooms.take(rows), p.bloom)]
+        out.append(keys[rows])
     return out
 
 
@@ -224,19 +223,23 @@ def _pruned_chunks(spark: SparkSession, out_dir: str,
                    meta: dict | None = None) -> dict[int, set] | None:
     """Chunks whose stats can satisfy EVERY predicate (conjunction):
     {partition_id: set(chunk_id)}, planned on the driver one manifest
-    file at a time, without a Spark job. None means no predicate could
-    use stats: decode everything; {} means stats rule out every chunk.
-    `meta` is the table's meta.json when the caller already read it."""
+    file at a time, without a Spark job, each footer read once. None
+    means no predicate could use stats: decode everything; {} means stats
+    rule out every chunk. `meta` is the table's meta.json when the caller
+    already read it. Only a datetime or date bound asks Spark its tz."""
     if not has_manifest(out_dir):
         return None
-    files = manifest_files(out_dir)
-    schema = manifest_schema(files)
+    files, schema = manifest_footers(out_dir)
+    dated = any(isinstance(v, _dt.date) for p in predicates
+                for v in (p[1] if len(p) == 2 else p[1:]))
     plans = _prune_plans(predicates,
                          read_meta(out_dir) if meta is None else meta,
-                         set(schema.names), _session_tz(spark))
+                         set(schema.names),
+                         _session_tz(spark) if dated else None)
     if not plans:       # e.g. datetime bounds on a pre-upgrade manifest
         return None
-    per_file = [_file_survivors(f, schema, plans) for f in files]
+    per_file = [_file_survivors(pf, schema, plans)
+                for pf in open_fragments(files)]
     # conjunction over (pid, cid) across all files: a manifest an older
     # encoder wrote can spread one partition over several files
     both = (functools.reduce(np.intersect1d,
@@ -474,15 +477,12 @@ def manifest_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     ns-since-epoch. Whole-table only: stats of a FILTERED read must go
     through decode_table (pruned chunk supersets would overcount)."""
     man = read_manifest(spark, out_dir)
-    has_sum = "vsum_int" in man.columns
-    vsum = (F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
-                   F.sum("vsum_int"))
-            if has_sum else F.lit(None).cast("long"))
-    n_nulls = (F.sum("n_nulls") if "n_nulls" in man.columns
-               else F.lit(None).cast("long"))
+    # a column no manifest file has reads as NULL: a NULL sum and count
+    vsum = F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
+                  F.sum("vsum_int"))
     return (man.groupBy("column")
             .agg(F.sum("n_rows").alias("n_rows"),
-                 n_nulls.alias("n_nulls"),
+                 F.sum("n_nulls").alias("n_nulls"),
                  F.min("vmin_num").alias("min_num"),
                  F.max("vmax_num").alias("max_num"),
                  F.min("vmin_str").alias("min_str"),
@@ -492,40 +492,53 @@ def manifest_stats(spark: SparkSession, out_dir: str) -> DataFrame:
                 F.col("n_nulls"), F.lit(0))))
 
 
+_AUDIT = ("partition_id int, chunk_id int, crc_expected long, "
+          "crc_actual long, ok boolean")
+
+
 def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
     """Integrity audit: recompute each chunk's crc32 from the block files
     and compare against the lineage manifest. Returns a DataFrame of
-    (partition_id, chunk_id, ok, crc_actual, crc_expected); corrupt,
-    truncated or missing chunks have ok = false (the walk stops at the
-    first bad block header, which reports crc -1). Distributed: one task
-    per block file."""
-    expected = (read_manifest(spark, out_dir)
-                .select("partition_id", "chunk_id", "crc32").distinct())
-    paths = list_blocks(out_dir)
+    (partition_id, chunk_id, crc_expected, crc_actual, ok), the full
+    outer match of both; corrupt, truncated or missing chunks have ok =
+    false (the walk stops at the first bad block header, which reports
+    crc -1). One Spark job: a task per partition gets its block file
+    (None when missing) and its crcs from layout.manifest_table."""
+    keys = ["partition_id", "chunk_id", "crc32"]
+    man = manifest_table(out_dir, keys).group_by(keys).aggregate([])
+    expected: dict[int, list] = {}
+    for pid, cid, crc in zip(*(man.column(k).to_pylist() for k in keys)):
+        expected.setdefault(pid, []).append((cid, crc))
+    blocks = {_block_pid(p): p for p in list_blocks(out_dir)}
+    tasks = [(pid, blocks.get(pid), expected.get(pid, []))
+             for pid in sorted(expected.keys() | blocks.keys())]
 
-    def scan(path) -> Iterator[pa.RecordBatch]:
-        with open(path, "rb") as f:
-            buf = f.read()
+    def audit(task) -> Iterator[pa.RecordBatch]:
+        pid, path, want = task
         crcs = []
-        try:
-            for off, span in iter_block_spans(buf):
-                crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
-        except ValueError:   # bad magic or truncated: flag and stop
-            crcs.append(-1)
+        if path is not None:
+            with open(path, "rb") as f:
+                buf = f.read()
+            try:
+                for off, span in iter_block_spans(buf):
+                    crcs.append(zlib.crc32(buf[off:off + span]) & 0xFFFFFFFF)
+            except ValueError:   # bad magic or truncated: flag and stop
+                crcs.append(-1)
+        rows = [(cid, crc, crcs[cid] if cid < len(crcs) else None)
+                for cid, crc in want]
+        seen = {cid for cid, _crc in want}
+        rows += [(cid, None, a) for cid, a in enumerate(crcs)
+                 if cid not in seen]
+        cids, want_crcs, got = zip(*rows) if rows else ((), (), ())
         yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([_block_pid(path)] * len(crcs),
-                                     pa.int32()),
-            "chunk_id": pa.array(range(len(crcs)), pa.int32()),
-            "crc_actual": pa.array(crcs, pa.int64()),
-        })
+            "partition_id": pa.array([pid] * len(rows), pa.int32()),
+            "chunk_id": pa.array(cids, pa.int32()),
+            "crc_expected": pa.array(want_crcs, pa.int64()),
+            "crc_actual": pa.array(got, pa.int64()),
+            "ok": pa.array([a == e for _c, e, a in rows], pa.bool_())})
 
-    report = "partition_id int, chunk_id int, crc_actual long"
-    actual = (run_tasks(spark, paths, scan, report) if paths
-              else spark.createDataFrame([], report))
-    joined = expected.withColumnRenamed("crc32", "crc_expected") \
-        .join(actual, ["partition_id", "chunk_id"], "full_outer")
-    return joined.withColumn(
-        "ok", F.col("crc_actual").eqNullSafe(F.col("crc_expected")))
+    return (run_tasks(spark, tasks, audit, _AUDIT) if tasks
+            else spark.createDataFrame([], _AUDIT))
 
 
 def roundtrip_mismatch_count(src: DataFrame, decoded: DataFrame,

@@ -101,6 +101,19 @@ def test_only_layout_spells_on_disk_names():
     assert hits == []
 
 
+def test_only_layout_reads_bucket_files_and_manifests():
+    """encode.py and maintain.py read and write bucket files and
+    manifests through layout's readers, never with pyarrow.parquet."""
+    for mod in ("encode", "maintain"):
+        tree = ast.parse(open(os.path.join(PKG, "store", f"{mod}.py")).read())
+        imported = ({a.name for n in ast.walk(tree)
+                     if isinstance(n, ast.Import) for a in n.names}
+                    | {f"{n.module}.{a.name}" for n in ast.walk(tree)
+                       if isinstance(n, ast.ImportFrom) for a in n.names})
+        assert not [m for m in imported
+                    if m.startswith("pyarrow.parquet")], mod
+
+
 # --- every write leaves only its live files --------------------------------
 
 def _rows(tag: str, n: int) -> list[tuple]:
@@ -272,6 +285,57 @@ def test_readers_of_an_empty_table_return_nothing(spark, empty_table, call,
     assert getattr(pipeline, call)(spark, empty_table, **kwargs).count() == 0
 
 
+def test_snapshot_diff_call_runs_no_job(spark, tmp_path):
+    """The changed partitions come from the two manifests' files on the
+    driver; only the returned DataFrame's action runs Spark jobs."""
+    from supersonic_spark.pipeline import (EncodeConfig, encode_table,
+                                           snapshot_diff, snapshot_table)
+    out = str(tmp_path / "t")
+    cfg = EncodeConfig(n_partitions=4, **_CFG)
+    a = _rows("a", 1000)
+    b = a[:-1] + [a[-1][:2] + ("changed",)]
+    encode_table(spark, spark.createDataFrame(a, _SCHEMA), out, cfg,
+                 fingerprint="a")
+    snapshot_table(out, "v1")
+    encode_table(spark, spark.createDataFrame(b, _SCHEMA), out, cfg,
+                 fingerprint="b")
+    diff, jobs, _ = _run_counted(spark,
+                                 lambda: snapshot_diff(spark, out, "v1"))
+    assert jobs == 0
+    assert sorted((r["change_type"], r["cid"], r["i"], r["text"])
+                  for r in diff.collect()) == [("delete", *a[-1]),
+                                               ("insert", *b[-1])]
+
+
+def test_validate_blocks_is_one_job_and_flags_a_missing_block_file(
+        spark, tmp_path):
+    from supersonic_spark.pipeline import (EncodeConfig, encode_table,
+                                           validate_blocks)
+    from supersonic_spark.store.layout import (_block_pid, list_blocks,
+                                               manifest_table)
+    out = str(tmp_path / "t")
+    encode_table(spark, spark.createDataFrame(_rows("a", 1000), _SCHEMA),
+                 out, EncodeConfig(n_partitions=4, **_CFG))
+    audit, jobs, _ = _run_counted(
+        spark, lambda: validate_blocks(spark, out).collect())
+    assert jobs == 1
+    assert audit and all(r["ok"] for r in audit)
+    assert list(audit[0].asDict()) == ["partition_id", "chunk_id",
+                                       "crc_expected", "crc_actual", "ok"]
+    gone = list_blocks(out)[0]
+    os.remove(gone)
+    pid = _block_pid(gone)
+    man = manifest_table(out, ["partition_id", "chunk_id"], {"cid"})
+    chunks = sorted(c for p, c in zip(man.column("partition_id").to_pylist(),
+                                      man.column("chunk_id").to_pylist())
+                    if p == pid)
+    bad = [r for r in validate_blocks(spark, out).collect() if not r["ok"]]
+    assert sorted(r["chunk_id"] for r in bad) == chunks != []
+    assert {r["partition_id"] for r in bad} == {pid}
+    assert all(r["crc_actual"] is None and r["crc_expected"] is not None
+               for r in bad)
+
+
 def test_manifest_table_reads_every_manifest_shape(spark, tmp_path):
     from supersonic_spark.pipeline import (MANIFEST_SCHEMA, EncodeConfig,
                                            encode_table)
@@ -307,6 +371,41 @@ def test_manifest_table_reads_every_manifest_shape(spark, tmp_path):
     empty = manifest_table(str(tmp_path / "empty"))
     assert empty.num_rows == 0
     assert empty.schema.names == [f.name for f in MANIFEST_SCHEMA.fields]
+
+
+def test_compaction_keeps_columns_older_manifest_files_lack(spark,
+                                                          tmp_path):
+    """A source manifest an older encoder wrote as Spark part files, the
+    first of which lacks vmin_str: the compacted manifest keeps vmin_str
+    for every chunk that had it, and the rows decode."""
+    from supersonic_spark.pipeline import (EncodeConfig, compact_blocks,
+                                           encode_table)
+    from supersonic_spark.store.layout import (manifest_dir, manifest_table,
+                                               parquet_files)
+    src, out = str(tmp_path / "src"), str(tmp_path / "compacted")
+    rows = _rows("a", 1000)
+    encode_table(spark, spark.createDataFrame(rows, _SCHEMA), src,
+                 EncodeConfig(n_partitions=4, **_CFG))
+    zones = manifest_table(src, ["partition_id", "vmin_str"], {"cid"})
+    full = spark.read.parquet(manifest_dir(src)).cache()
+    full.count()
+    shutil.rmtree(manifest_dir(src))
+    os.makedirs(manifest_dir(src))
+    # the file without vmin_str sorts first
+    for i, part in enumerate([full.filter("partition_id < 2").drop("vmin_str"),
+                              full.filter("partition_id >= 2")]):
+        tmp = str(tmp_path / f"part{i}")
+        part.coalesce(1).write.parquet(tmp)
+        os.rename(parquet_files(tmp)[0], os.path.join(
+            manifest_dir(src), f"part-{i:05d}-old.snappy.parquet"))
+    full.unpersist()
+    compact_blocks(spark, [src], out, group_size=8)
+    want = sorted(v for pid, v in zip(zones.column("partition_id").to_pylist(),
+                                      zones.column("vmin_str").to_pylist())
+                  if pid >= 2)
+    got = manifest_table(out, ["vmin_str"], {"cid"}).column("vmin_str")
+    assert len(want) > 0 and sorted(got.drop_null().to_pylist()) == want
+    assert _decoded(spark, out) == sorted(rows)
 
 
 def test_unpredicated_read_of_a_compacted_table_plans_without_a_job(
@@ -687,7 +786,9 @@ def test_merged_bucket_files_keep_the_layout_schema_and_nulls(spark,
     """Files the merge writes with pyarrow read back with the layout's
     schema (TIMESTAMP, not TIMESTAMP_NTZ) beside Spark-written INT96
     files; NULL keys keep left_anti semantics; a second merge,
-    rebucket_table and encode_table_prebucketed read the mixed layout."""
+    rebucket_table and encode_table_prebucketed read the mixed layout,
+    timestamps outside INT96's nanosecond range included, in rewritten
+    and in untouched bucket files alike."""
     from supersonic_spark.pipeline import (EncodeConfig, bucketize_table,
                                            decode_table,
                                            encode_table_prebucketed,
@@ -702,14 +803,18 @@ def test_merged_bucket_files_keep_the_layout_schema_and_nulls(spark,
     # the first merge touches bucket 0 and the NULL-key bucket only
     first = [k for k in range(40)
              if bucket_of[k] in (0, null_bucket)][:3]
-    later = [k for k in range(40)
-             if bucket_of[k] not in (0, null_bucket)][:2]
+    free = sorted(set(range(n)) - {0, null_bucket})
+    later = [k for k in range(40) if bucket_of[k] == free[0]][:2]
     assert len(first) == 3 and len(later) == 2
-    # a conversation the merges leave alone, in a bucket they rewrite,
-    # at both ends of TIMESTAMP's range (outside INT96's nanosecond one)
+    # conversations the merges leave alone, one in a bucket they rewrite
+    # and one in a bucket no merge touches (it stays Spark-written
+    # INT96), at both ends of TIMESTAMP's range (outside INT96's
+    # nanosecond one)
     kept = next(k for k in range(40) if bucket_of[k] == 0
                 and k not in first)
-    base = [r[:4] + ((_TS_MIN, _TS_MAX)[r[1]],) if r[0] == kept else r
+    untouched = next(k for k in range(40) if bucket_of[k] == free[1])
+    base = [r[:4] + ((_TS_MIN, _TS_MAX)[r[1]],)
+            if r[0] in (kept, untouched) else r
             for r in _fidelity_rows("b", list(range(40)) + [None])]
     bdir = str(tmp_path / "b")
     bucketize_table(spark, spark.createDataFrame(base, _FIDELITY_SCHEMA),
@@ -739,13 +844,17 @@ def test_merged_bucket_files_keep_the_layout_schema_and_nulls(spark,
     want = _merged(want, ch2)
     assert _same(spark.read.parquet(bdir).collect(), want)
 
+    assert bucket_files(bdir)[free[1]] == before[free[1]]
+
     rdir = rebucket_table(spark, bdir, str(tmp_path / "r"), factor=2)
     assert _same(spark.read.parquet(rdir).collect(), want)
     out = str(tmp_path / "enc")
     encode_table_prebucketed(spark, bdir, out, EncodeConfig(
         chunk_rows=16, conv_key="k", order_key="n", sort_keys=("k", "n")))
-    assert _same(decode_table(spark, out).select(*schema.names).collect(),
-                 want)
+    got = decode_table(spark, out).select(*schema.names).collect()
+    assert _same(got, want)
+    assert sorted(r["ts"] for r in got if r["k"] == untouched) \
+        == [_TS_MIN, _TS_MAX]
 
 
 def test_a_failed_merge_changes_no_bucket_file(spark, tmp_path,
@@ -789,3 +898,25 @@ def test_merge_rejects_a_null_op(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown merge op"):
         merge_bucketized(spark, changes, bdir)
     assert _file_bytes(bdir) == before
+
+
+def test_rebucket_joins_a_bucket_written_in_pieces(spark, tmp_path):
+    """A new bucket that arrives in several files (here: at most two
+    records per file) is joined into one file Spark reads back with the
+    schema _buckets.json records, timestamps included."""
+    from supersonic_spark.pipeline import bucketize_table, rebucket_table
+    from supersonic_spark.store.layout import _bucket_layout, bucket_files
+    rows = _fidelity_rows("r", range(12), n=3)
+    bdir, rdir = str(tmp_path / "b"), str(tmp_path / "r")
+    bucketize_table(spark, spark.createDataFrame(rows, _FIDELITY_SCHEMA),
+                    bdir, n_buckets=2, conv_key="k")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try:
+        rebucket_table(spark, bdir, rdir, factor=2)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert sorted(bucket_files(rdir)) == [0, 1, 2, 3]
+    _, schema = _bucket_layout(spark, rdir)
+    back = spark.read.parquet(rdir)
+    assert back.schema == schema
+    assert _same(back.collect(), rows)
