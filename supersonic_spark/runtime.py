@@ -16,8 +16,10 @@ task on a 4-core Xeon VM. A stamped importer re-reads only when its
 archive's (inode, size, mtime) changed since its last re-read. The patch
 lives in the reused worker process, so its later tasks skip the re-reads,
 also tasks whose kernel never calls pin_worker_threads(); each extra task
-of a job then adds about 27 ms there, not 123 ms
-(BENCH/python_task_cost.json).
+of a job then adds about 24 ms there over loopback TCP, not 123 ms
+(BENCH/python_task_cost.json), and about 12 ms over get_spark's Unix
+socket worker channel, which also removes a 41 ms wait for every task's
+first input batch (BENCH/python_task_phases.json).
 """
 
 from __future__ import annotations

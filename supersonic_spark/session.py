@@ -6,9 +6,51 @@ identical apart from core count (scaling-efficiency evidence).
 
 from __future__ import annotations
 
+import atexit
+import logging
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# Spark 4.1 fails every Python task when spark.python.unix.domain.socket.dir
+# is longer than 61 characters: a socket "<dir>/.<uuid4>.sock" adds 43 bytes
+# and must fit AF_UNIX's 107-byte path
+_SOCKET_DIR_MAX = 61
+
+
+def worker_channel_conf(*bases: str) -> dict[str, str]:
+    """Spark conf that puts the JVM<->Python worker channel on Unix domain
+    sockets in a fresh private directory (mkdtemp: mode 0700), removed at
+    interpreter exit.
+
+    Over loopback TCP, the worker waits about 41 ms for its first input
+    batch in every task (Nagle meeting the delayed ACK: neither side sets
+    TCP_NODELAY); over a Unix socket it waits under 1 ms
+    (BENCH/python_task_phases.json). In this mode PySpark drops the auth
+    secret TCP uses, so the directory's mode is the access control; and
+    Spark's default directory, java.io.tmpdir, keeps stale socket files.
+    The directory goes in the first of `bases` (default: the tempfile
+    directory, then /tmp) where its path is short enough for Spark
+    (_SOCKET_DIR_MAX); where none is, a warning is logged and {} keeps
+    Spark's TCP default."""
+    bases = bases or (tempfile.gettempdir(), "/tmp")
+    for base in bases:
+        try:
+            path = tempfile.mkdtemp(prefix="sscodec-uds-", dir=base)
+        except OSError:             # missing or not writable
+            continue
+        if len(os.fsencode(path)) <= _SOCKET_DIR_MAX:
+            atexit.register(shutil.rmtree, path, True)
+            return {"spark.python.unix.domain.socket.enabled": "true",
+                    "spark.python.unix.domain.socket.dir": path}
+        os.rmdir(path)
+    logging.getLogger(__name__).warning(
+        "no socket directory of at most %d characters under %s; Python "
+        "workers keep loopback TCP", _SOCKET_DIR_MAX, ", ".join(bases))
+    return {}
 
 
 def get_spark(cores: int | None = None,
@@ -21,6 +63,10 @@ def get_spark(cores: int | None = None,
     reference's 8192-row file chunks / 1024-row cursor batches
     (file_io.cc:71, cursor.h:133), sized larger because Arrow transfer
     amortizes better at 64k.
+
+    A call that builds a new SparkContext also gives it a private
+    directory for the worker channel's Unix sockets
+    (worker_channel_conf); getOrCreate reuses a running one as it is.
     """
     # local-mode Python workers inherit the driver env: pin per-worker BLAS
     # threads to 1 so N workers don't run N*cpu_count() threads (see runtime.py)
@@ -67,6 +113,8 @@ def get_spark(cores: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
+    if SparkContext._active_spark_context is None:
+        builder = builder.config(map=worker_channel_conf())
     # escape hatch for deployment-specific tuning without code edits:
     # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overrides any of the above
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")

@@ -334,13 +334,14 @@ def expire_snapshots(out_dir: str, keep: list[str] | tuple = ()) -> list[str]:
     return gone
 
 
-def snapshot_diff(spark: SparkSession, out_dir: str, tag: str,
-                  key_cols: list[str] | None = None) -> DataFrame:
+def snapshot_diff(spark: SparkSession, out_dir: str, tag: str) -> DataFrame:
     """Changed-data capture between a snapshot and the live table:
     returns the row-level diff as the live rows not in the snapshot
     (change_type='insert') plus the snapshot rows no longer live
     ('delete') — an UPDATE appears as delete+insert, the standard CDC
-    decomposition.
+    decomposition. Rows compare whole (exceptAll over every column), so
+    a changed value in any column is a change; no key columns are
+    involved.
 
     Scale path: the driver compares the two manifests' (partition_id,
     chunk_id, crc32) sets (layout.manifest_table, so the call runs no

@@ -25,6 +25,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from supersonic_spark.runtime import external_busy_cores  # noqa: E402
+from supersonic_spark.session import worker_channel_conf  # noqa: E402
 
 
 def build_zip(dest: str) -> str:
@@ -69,8 +70,11 @@ def run_once(zpath: str, input_dir: str, cores: int, run_id: int,
     taskset pinning is what makes single-box cluster-size emulation honest:
     an unpinned local[2] JVM leaks GC/shuffle/IO threads onto free cores
     (~2.7 effective CPUs measured), deflating apparent scaling efficiency.
+    The worker channel is get_spark's: Unix sockets in a private directory
+    (removed when this process exits).
     """
     out = tempfile.mkdtemp(prefix=f"ssenc_scale_{cores}_")
+    channel = worker_channel_conf()
     cmd = [
         "taskset", "-c", f"0-{cores - 1}",
         "spark-submit", "--master", f"local[{cores}]",
@@ -78,6 +82,7 @@ def run_once(zpath: str, input_dir: str, cores: int, run_id: int,
         "--conf", "spark.sql.adaptive.enabled=true",
         "--conf", "spark.driver.memory=16g",
         "--conf", "spark.ui.enabled=false",
+        *(a for k, v in channel.items() for a in ("--conf", f"{k}={v}")),
         "--py-files", zpath,
         os.path.join(REPO, "tools", "encode_job.py"),
         "--input", input_dir, "--out", out,
