@@ -4,10 +4,11 @@ prebucketed path, their shared partition kernel and their shared tail.
 Shuffle encode: repartition by (conv_id, salt) — salting splits skewed
 mega-conversations — sort within partitions by the sort keys, then a
 mapInArrow kernel encodes 64k-row chunks per column (selector-chosen codec)
-into block files, emitting lineage/metrics manifest rows and per-partition
-checkpoint markers so a killed job resumes without re-encoding completed
-partitions. Every encode ends in _encode_tail, which installs what it
-wrote as the table's live files.
+into block files and writes each partition's lineage/metrics manifest
+rows as a manifest fragment. The fragment commits its partition, so a
+killed job resumes without re-encoding completed partitions. Every
+encode ends in _encode_tail, which installs what it wrote as the
+table's live files and writes meta.json, the table's commit.
 
 At 100 TB scale the only shuffle is the single repartition by
 (xxhash64(conv_id), salt); the salt is row-local, so skew needs no
@@ -37,10 +38,10 @@ from ..codecs import (block_codec_report, block_column_sizes, encode_block,
 from ..codecs.framing import validate_entropy
 from ..runtime import pin_worker_threads, run_tasks
 from ..selector import choose_codecs
-from .layout import (_bucket_layout, _commit_partition, _fragment_name,
-                     _partition_files, _resumed, _write_meta,
-                     bucket_arrow_schema, committed, install_current,
-                     parquet_files, read_bucket, read_manifest)
+from .layout import (_bucket_layout, _fragment_name, _partition_files,
+                     _resumed, _write_fragment, bucket_arrow_schema,
+                     install_current, parquet_files, read_bucket,
+                     read_manifest)
 from .stats import (STATS_VERSION, _BLOOM_BITS, _BLOOM_HASHES, _bloom_build,
                     _zone_stats)
 
@@ -76,7 +77,7 @@ class EncodeConfig:
     def config_hash(self, fingerprint: str) -> str:
         blob = json.dumps({
             # retired knobs, pinned to their last defaults so the hash
-            # (and every resume marker keyed by it) stays byte-stable
+            # (and every fragment named by it) stays byte-stable
             "sort_in_kernel": False,
             "fixed_width_shuffle_key": True,
             "skew_precount": False,
@@ -86,7 +87,7 @@ class EncodeConfig:
             "codec_overrides": sorted(self.codec_overrides.items()),
             "entropy": self.entropy,
             "bloom": [list(self.bloom_cols), 16384, 5],  # retired: bits, k
-            # resume markers carry manifest rows (incl. bloom blobs);
+            # resumed fragments carry manifest rows (incl. bloom blobs);
             # a stats-contract bump must invalidate them or a resume
             # would restore old-format stats under a new-version meta
             "stats_version": STATS_VERSION,
@@ -149,17 +150,17 @@ def _prefetched(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
 def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                              out_dir: str, cfg_hash: str, cfg: EncodeConfig,
                              sort: bool = False) -> bool:
-    """Encode one partition's batch stream into one block file, its
-    manifest fragment (manifest/part-NNNNN.<cfg_hash>.parquet) and its
-    resume marker, in that order: the marker commits the other two.
-    Returns False when the marker already existed (resumed, nothing
-    encoded). Shared by the shuffle path (_encoder: pid = Spark
-    partition, rows arrive sorted) and the pre-bucketed path
-    (encode_table_prebucketed: pid = bucket-file index, sort=True: the
-    whole file is sorted here by cfg.sort_keys)."""
+    """Encode one partition's batch stream into one block file, then its
+    manifest fragment (manifest/part-NNNNN.<cfg_hash>.parquet): the
+    fragment commits the block file. Returns False when the fragment
+    already existed (resumed, nothing encoded). Shared by the shuffle
+    path (_encoder: pid = Spark partition, rows arrive sorted) and the
+    pre-bucketed path (encode_table_prebucketed: pid = bucket-file
+    index, sort=True: the whole file is sorted here by cfg.sort_keys,
+    then chunked by the same loop)."""
     chunk_rows, entropy = cfg.chunk_rows, cfg.entropy
-    blk_path, fragment, marker = _partition_files(out_dir, pid, cfg_hash)
-    if _resumed(fragment, marker):
+    blk_path, fragment = _partition_files(out_dir, pid, cfg_hash)
+    if _resumed(fragment):
         return False
     tmp_path = blk_path + f".tmp.{cfg_hash}"
 
@@ -180,14 +181,9 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
             nonlocal chunk_id
             for off in range(0, tbl.num_rows, chunk_rows):
                 chunk = tbl.slice(off, chunk_rows)
-                if chunk.num_rows == 0:
-                    continue
                 t0 = time.perf_counter()
-                eff_overrides = dict(cfg.codec_overrides)
-                for name, codec in sticky.items():
-                    if name not in eff_overrides:
-                        eff_overrides[name] = codec
-                codecs = choose_codecs(chunk, eff_overrides, entropy=entropy)
+                codecs = choose_codecs(
+                    chunk, {**sticky, **cfg.codec_overrides}, entropy=entropy)
                 for name, codec in codecs.items():
                     if codec not in _DATA_DEPENDENT:
                         sticky[name] = codec
@@ -215,34 +211,30 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                         "vmin_num": zmin, "vmax_num": zmax,
                         "vmin_str": zmin_s, "vmax_str": zmax_s,
                         "vsum_int": zsum, "n_nulls": znulls,
-                        # base64 string: JSON-safe in resume markers
+                        # base64 string, as older resume markers hold it
                         "bloom_b64": (_bloom_build(col, _BLOOM_BITS,
                                                    _BLOOM_HASHES)
                                       if name in cfg.bloom_cols else None),
                     })
                 chunk_id += 1
 
-        if sort:
-            # buffer the whole bucket file, one C++ sort, then chunk
-            buffered = list(batches)
-            if buffered:
-                tbl = pa.Table.from_batches(buffered)
-                del buffered
-                tbl = tbl.sort_by([(k, "ascending") for k in cfg.sort_keys])
-                flush(tbl)
-        else:
-            for batch in batches:
-                pending.append(batch)
-                pending_rows += batch.num_rows
-                if pending_rows >= chunk_rows:
-                    tbl = pa.Table.from_batches(pending)
-                    full = (tbl.num_rows // chunk_rows) * chunk_rows
-                    flush(tbl.slice(0, full))
-                    rest = tbl.slice(full)
-                    pending = rest.to_batches() if rest.num_rows else []
-                    pending_rows = rest.num_rows
-            if pending_rows:
-                flush(pa.Table.from_batches(pending))
+        if sort:   # buffer the whole bucket file for one C++ sort
+            batches = list(batches)
+            if batches:
+                batches = (pa.Table.from_batches(batches).sort_by(
+                    [(k, "ascending") for k in cfg.sort_keys]).to_batches())
+        for batch in batches:
+            pending.append(batch)
+            pending_rows += batch.num_rows
+            if pending_rows >= chunk_rows:
+                tbl = pa.Table.from_batches(pending)
+                full = (tbl.num_rows // chunk_rows) * chunk_rows
+                flush(tbl.slice(0, full))
+                rest = tbl.slice(full)
+                pending = rest.to_batches() if rest.num_rows else []
+                pending_rows = rest.num_rows
+        if pending_rows:
+            flush(pa.Table.from_batches(pending))
 
     if chunk_id == 0:
         os.remove(tmp_path)  # skip empty partitions (reference rejects
@@ -256,7 +248,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
             os.remove(blk_path)
     else:
         os.replace(tmp_path, blk_path)
-    _commit_partition(fragment, marker, manifest_rows)
+    _write_fragment(fragment, manifest_rows)
     return True
 
 
@@ -343,13 +335,13 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
                      arranged: DataFrame, out_dir: str, cfg: EncodeConfig,
                      fingerprint: str,
                      extra_meta: dict | None = None) -> DataFrame:
-    """Shuffle-path encode: write meta.json, run the chunking/codec kernel
-    over an already-arranged DataFrame (caller controls partitioning and
-    within-partition order), then the shared encode tail."""
+    """Shuffle-path encode: run the chunking/codec kernel over an
+    already-arranged DataFrame (caller controls partitioning and
+    within-partition order), then the shared encode tail, which writes
+    the meta dict built here as meta.json."""
     cfg_hash = cfg.config_hash(fingerprint)
-    meta = _write_meta(out_dir, _encode_meta(
-        df.schema, cfg, cfg_hash, fingerprint, cfg.n_partitions,
-        **(extra_meta or {})))
+    meta = _encode_meta(df.schema, cfg, cfg_hash, fingerprint,
+                        cfg.n_partitions, **(extra_meta or {}))
     tasks = arranged.mapInArrow(_encoder(out_dir, cfg_hash, cfg),
                                 schema=_REPORT_SCHEMA)
     return _encode_tail(spark, out_dir, meta, tasks)
@@ -382,10 +374,11 @@ def _encode_tail(spark: SparkSession, out_dir: str, meta: dict,
     _encode_partition_stream and _REPORT_SCHEMA), then installs the
     current fragments as the table's live set (layout.install_current):
     the ones the tasks reported plus `resumed_fragments`, the fragments
-    of partitions the driver did not schedule. Every other fragment,
-    block file and marker goes, and the manifest's size is stamped into
-    meta.json. The driver handles O(#partitions) names and footers and
-    never manifest rows: at scale the manifest is a big table.
+    of partitions the driver did not schedule. Every other fragment and
+    block file goes, and meta.json, written once with the manifest's
+    size stamped in, commits the table. The driver handles
+    O(#partitions) names and footers and never manifest rows: at scale
+    the manifest is a big table.
 
     Returns the manifest read with MANIFEST_SCHEMA (no inference job);
     `resumed` is true for every partition this call did not encode."""
@@ -523,19 +516,19 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     would already have. Blocks, manifest, zone maps and blooms are
     byte-compatible with decode_table.
 
-    The driver plans the tasks. Checkpoint/resume is per bucket file (the
-    same markers as the shuffle path): a file whose marker and manifest
-    fragment both exist is not scheduled at all, so a fully resumed call
-    runs no Spark job for the encode. The remaining files are packed into
-    at most defaultParallelism tasks, balanced by file bytes, which keeps
-    the per-task fixed cost to one wave however many files there are. A
+    The driver plans the tasks. Resume is per bucket file (the same
+    commit as the shuffle path): a file whose manifest fragment exists
+    is not scheduled at all, so a fully resumed call runs no Spark job
+    for the encode. The remaining files are packed into at most
+    defaultParallelism tasks, balanced by file bytes, which keeps the
+    per-task fixed cost to one wave however many files there are. A
     task killed partway through its group leaves the files it finished
     committed; a re-run schedules only the rest.
 
-    Each file's resume marker is keyed by (config, file name, size,
-    mtime) — INCREMENTAL ENCODE: when the bucketed table grows,
-    re-running encodes only the new/changed bucket files and resumes
-    every untouched one. Assumes an append-only layout (existing files
+    Each file's fragment is keyed by (config, file name, size, mtime) —
+    INCREMENTAL ENCODE: when the bucketed table grows, re-running
+    encodes only the new/changed bucket files and resumes every
+    untouched one. Assumes an append-only layout (existing files
     keep their sorted position; new files sort after them, as Spark
     part-file naming does) — if files are renamed or reordered, use a
     fresh out_dir."""
@@ -547,8 +540,8 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     _check_keys(cfg, schema.names)
     arrow_schema = bucket_arrow_schema(schema)
     cfg_hash = cfg.config_hash(fingerprint)
-    meta = _write_meta(out_dir, _encode_meta(
-        schema, cfg, cfg_hash, fingerprint, len(paths), prebucketed=True))
+    meta = _encode_meta(schema, cfg, cfg_hash, fingerprint, len(paths),
+                        prebucketed=True)
 
     stats = [os.stat(p) for p in paths]
     # nanosecond mtime: a bucket file rewritten within the same second
@@ -558,10 +551,9 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                        f"{st.st_mtime_ns}".encode()).hexdigest()[:12]
            for p, st in zip(paths, stats)]
 
-    done = committed(out_dir)
     resumed, todo, todo_sizes = [], [], []
     for pid, (path, fp) in enumerate(zip(paths, fps)):
-        if _fragment_name(pid, fp) in done:
+        if _resumed(_partition_files(out_dir, pid, fp)[1]):
             resumed.append(_fragment_name(pid, fp))
         else:
             todo.append((pid, path, fp))
@@ -572,8 +564,8 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     def encode_group(group) -> Iterator[pa.RecordBatch]:
         done = []
         for pid, path, fp in group:
-            # lazy: the file is read only if the marker check inside
-            # _encode_partition_stream does NOT resume (a marker can
+            # lazy: the file is read only if the fragment check inside
+            # _encode_partition_stream does NOT resume (a fragment can
             # appear after planning)
             batches = (b for t in read_bucket(path, arrow_schema)
                        for b in t.to_batches())

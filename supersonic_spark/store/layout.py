@@ -7,15 +7,21 @@ A block table (the output of an encode or a compaction) is a directory:
     meta.json                          schema, config, stamped manifest size
     blocks/part-NNNNN.ssb              one block file per partition
     manifest/part-NNNNN.<fp>.parquet   that partition's manifest rows
-    checkpoints/part-NNNNN.<fp>.json   its resume marker (the same rows)
     snapshots/<tag>/                   hardlinked copies (snapshot_table)
+
+A partition is committed when its manifest fragment exists (a task
+writes its block file, then renames the fragment into place), and a
+table when install_current writes meta.json (temp file, then rename),
+once per encode or compaction. A killed first write leaves no
+meta.json; a killed re-write leaves the previous one unchanged.
 
 A file is live when the current manifest names it, as in Iceberg, where
 a data file is live only if metadata names it. Every successful write
 ends in install_current, which keeps the fragments that write produced
-or resumed, the block files of their partitions and the markers named
-after them, and unlinks everything else. A killed write never gets
-there, so its markers still resume.
+or resumed and the block files of their partitions, and unlinks
+everything else. A killed write never gets there, so its fragments still
+resume. checkpoints/ holds the JSON resume markers of tables written
+before fragments existed: _resumed rebuilds a missing fragment from one.
 
 A bucket layout (bucketize_table) is a directory of exactly n_buckets
 parquet files, part-BBBBB-*.parquet, plus _buckets.json. Spark writes
@@ -27,7 +33,7 @@ reader lists.
 It is also the only module that reads either kind of file into Arrow:
 manifests through read_fragments, bucket files through read_bucket
 (write_bucket writes them). read_manifest, the one Spark read of a
-manifest, backs only the DataFrames the API returns.
+manifest, backs only the DataFrames an encode and a compaction return.
 """
 
 from __future__ import annotations
@@ -89,57 +95,42 @@ def _fragment_name(pid: int, fp: str) -> str:
     return f"part-{pid:05d}.{fp}.parquet"
 
 
-def _marker_of(fragment: str) -> str:
-    """The resume marker named after a fragment (same pid and fp)."""
-    return fragment.rsplit(".", 1)[0] + ".json"
-
-
-def _partition_files(table: str, pid: int, fp: str) -> tuple[str, str, str]:
-    """(block file, manifest fragment, resume marker) paths of partition
-    pid written under fingerprint fp. The block and manifest directories
-    exist afterwards."""
+def _partition_files(table: str, pid: int, fp: str) -> tuple[str, str]:
+    """(block file, manifest fragment) paths of partition pid written
+    under fingerprint fp. The block and manifest directories exist
+    afterwards."""
     for d in (blocks_dir(table), manifest_dir(table)):
         os.makedirs(d, exist_ok=True)
     return (os.path.join(blocks_dir(table), _block_name(pid)),
-            os.path.join(manifest_dir(table), _fragment_name(pid, fp)),
-            os.path.join(checkpoints_dir(table),
-                         _marker_of(_fragment_name(pid, fp))))
+            os.path.join(manifest_dir(table), _fragment_name(pid, fp)))
 
 
 def _write_fragment(path: str, rows: list[dict]) -> None:
     """One partition's manifest rows as one parquet file, installed by
-    rename from a hidden temp name (Spark's reader skips dot-files)."""
+    rename from a hidden temp name (Spark's reader skips dot-files). The
+    rename commits the partition."""
     d, name = os.path.split(path)
     tmp = os.path.join(d, f".{name}.tmp")
     pq.write_table(pa.Table.from_batches([_manifest_batch(rows)]), tmp)
     os.replace(tmp, path)
 
 
-def _commit_partition(fragment: str, marker: str, rows: list[dict]) -> None:
-    """Install a partition's manifest fragment, then its resume marker
-    (the same rows as JSON). The marker commits the block file and the
-    fragment."""
-    _write_fragment(fragment, rows)
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rows, f)
-    os.replace(tmp, marker)
-
-
-def _resumed(fragment: str, marker: str) -> bool:
-    """Whether the partition's marker exists (its block file and fragment
-    are committed). A marker written before manifest fragments existed
-    (an older encoder wrote the manifest as one Spark job) gets its
-    fragment rebuilt from the rows it carries, all flagged resumed."""
+def _resumed(fragment: str) -> bool:
+    """Whether the partition's fragment exists (its block file is
+    committed). A table written before fragments existed has only the
+    resume marker checkpoints/part-NNNNN.<fp>.json, which holds the same
+    rows as JSON: the fragment is rebuilt from it, every row flagged
+    resumed. This is the only reader of checkpoints/."""
+    if os.path.exists(fragment):
+        return True
+    mdir, name = os.path.split(fragment)
+    marker = os.path.join(checkpoints_dir(os.path.dirname(mdir)),
+                          name.rsplit(".", 1)[0] + ".json")
     if not os.path.exists(marker):
         return False
-    if not os.path.exists(fragment):
-        with open(marker) as f:
-            rows = json.load(f)
-        for r in rows:
-            r["resumed"] = True
-        _write_fragment(fragment, rows)
+    with open(marker) as f:
+        _write_fragment(fragment, [dict(r, resumed=True)
+                                   for r in json.load(f)])
     return True
 
 
@@ -147,19 +138,14 @@ def _listing(d: str) -> set[str]:
     return set(os.listdir(d)) if os.path.isdir(d) else set()
 
 
-def committed(table: str) -> set[str]:
-    """Names of the fragments whose resume marker exists: partitions a
-    re-run does not schedule."""
-    markers = _listing(checkpoints_dir(table))
-    return {f for f in _listing(manifest_dir(table))
-            if _marker_of(f) in markers}
-
-
-def _write_meta(out_dir: str, meta: dict) -> dict:
+def _write_meta(out_dir: str, meta: dict) -> None:
+    """Write meta.json through a temp file and a rename, so a reader
+    sees the old file or the new one, never a torn one."""
     os.makedirs(out_dir, exist_ok=True)
-    with open(meta_path(out_dir), "w") as f:
+    tmp = meta_path(out_dir) + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(meta, f, indent=1)
-    return meta
+    os.replace(tmp, meta_path(out_dir))
 
 
 def read_meta(table: str) -> dict:
@@ -175,46 +161,37 @@ def first_meta(root: str) -> dict | None:
     return read_meta(os.path.dirname(found[0])) if found else None
 
 
-def _stamp_manifest(out_dir: str, meta: dict, fragments: list | set,
-                    whole_chunks: bool = True) -> None:
-    """Write meta.json with the manifest's row count, summed from the
-    footers of `fragments` (names under out_dir/manifest), and its
-    column count, the schema width: the manifest's size, recorded
-    without a manifest job.
-
-    An encode writes one row per column of every chunk, so with
-    whole_chunks a fragment whose rows do not divide by the width means
-    a kernel skipped a column, and raises. Compaction passes False: its
-    chunks from pre-evolution sources have fewer columns."""
-    n_cols = len(meta["spark_schema"].get("fields", [])) or 1
-    rows = {p: pq.read_metadata(p).num_rows for p in
-            sorted(os.path.join(manifest_dir(out_dir), n) for n in fragments)}
-    for path, n in rows.items():
-        if whole_chunks and n % n_cols:
-            raise RuntimeError(
-                f"manifest fragment {os.path.basename(path)} holds {n} "
-                f"rows, not a multiple of the {n_cols} encoded columns")
-    meta["manifest_rows"] = sum(rows.values())
-    meta["manifest_columns"] = n_cols
-    _write_meta(out_dir, meta)
-
-
 def install_current(table: str, meta: dict, fragments,
                     whole_chunks: bool = True) -> None:
     """The last step of every successful encode and compaction: make
-    `fragments` (names under manifest/) the table's live set, then stamp
-    the manifest size into meta.json (_stamp_manifest).
+    `fragments` (names under manifest/) the table's live set, then commit
+    the table by writing `meta` as meta.json, its one write, with the
+    manifest's size stamped in without a manifest job: the row count
+    summed from the fragments' footers, and the column count, the schema
+    width.
 
-    Afterwards manifest/ holds exactly `fragments`, blocks/ holds only
-    the block files of their partitions, and checkpoints/ holds only the
-    markers named after them. Everything else goes: superseded fragments
-    and a manifest an older encoder wrote, block files of partitions the
-    write no longer has, markers of other configs, leftover temp files.
-    Unlinking leaves hardlinked snapshots their bytes."""
+    Afterwards manifest/ holds exactly `fragments` and blocks/ holds only
+    the block files of their partitions. Everything else goes: superseded
+    fragments and a manifest an older encoder wrote, block files of
+    partitions the write no longer has, leftover temp files, and
+    checkpoints/. Unlinking leaves hardlinked snapshots their bytes.
+
+    An encode writes one row per column of every chunk, so with
+    whole_chunks a fragment whose rows do not divide by the width means
+    a kernel skipped a column, and raises before anything is unlinked.
+    Compaction passes False: its chunks from pre-evolution sources have
+    fewer columns."""
     live = set(fragments)
+    n_cols = len(meta["spark_schema"].get("fields", [])) or 1
+    rows = {n: pq.read_metadata(os.path.join(manifest_dir(table), n)).num_rows
+            for n in sorted(live)}
+    for name, n in rows.items():
+        if whole_chunks and n % n_cols:
+            raise RuntimeError(f"manifest fragment {name} holds {n} rows, "
+                               f"not a multiple of the {n_cols} encoded "
+                               "columns")
     keep = {manifest_dir(table): live,
-            blocks_dir(table): {_block_name(_block_pid(f)) for f in live},
-            checkpoints_dir(table): {_marker_of(f) for f in live}}
+            blocks_dir(table): {_block_name(_block_pid(f)) for f in live}}
     for d, names in keep.items():
         for name in _listing(d) - names:
             p = os.path.join(d, name)
@@ -222,8 +199,10 @@ def install_current(table: str, meta: dict, fragments,
                 shutil.rmtree(p)
             else:
                 os.remove(p)
+    shutil.rmtree(checkpoints_dir(table), ignore_errors=True)
     os.makedirs(manifest_dir(table), exist_ok=True)
-    _stamp_manifest(table, meta, live, whole_chunks)
+    _write_meta(table, dict(meta, manifest_rows=sum(rows.values()),
+                            manifest_columns=n_cols))
 
 
 def list_blocks(table: str) -> list[str]:
@@ -324,7 +303,7 @@ def manifest_table(table: str, columns: list[str] | None = None,
 def read_manifest(spark: SparkSession, table: str) -> DataFrame:
     """The table's manifest as a DataFrame with MANIFEST_SCHEMA (no
     inference job; a column a file lacks reads as NULL), for the
-    DataFrames an encode, a compaction and manifest_stats return."""
+    DataFrames an encode and a compaction return."""
     return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir(table))
 
 

@@ -88,7 +88,7 @@ def delete_bucketized(spark: SparkSession, keys: DataFrame,
     exactly one file (layout.complete_buckets), because bucket ids are
     positional in encode_table_prebucketed's sorted path list, so
     dropping a file would shift every later bucket's partition id and
-    invalidate their resume markers. The following
+    invalidate their manifest fragments. The following
     encode_table_prebucketed run re-encodes only the rewritten files;
     an emptied bucket encodes to zero chunks and its stale block file is
     unlinked (hardlinked snapshots keep the old bytes — see
@@ -448,7 +448,7 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
 
     def concat(task) -> Iterator[pa.RecordBatch]:
         gid, srcs = task
-        dst, fragment, _marker = _partition_files(out_dir, gid, fp)
+        dst, fragment = _partition_files(out_dir, gid, fp)
         tmp = dst + ".tmp"
         with open(tmp, "wb") as out:
             for _d, _pid, p in srcs:

@@ -28,7 +28,7 @@ from ..codecs import decode_block, iter_block_spans
 from ..runtime import run_tasks
 from .layout import (_block_pid, has_manifest, list_blocks,
                      manifest_footers, manifest_table, open_fragments,
-                     read_fragments, read_manifest, read_meta)
+                     read_fragments, read_meta)
 from .stats import _bound_ns, bloom_probe_b64
 
 
@@ -461,35 +461,61 @@ def decode_table(spark: SparkSession, out_dir: str,
     return out
 
 
+# manifest_stats' aggregates, by output name; _by_column names each after
+# what it folds, so the same aggregation folds the per-file partials
+_STATS_READ = ["column", "n_rows", "n_nulls", "vmin_num", "vmax_num",
+               "vmin_str", "vmax_str", "vsum_int"]
+_STATS = {"n_rows": "sum", "n_nulls": "sum", "min_num": "min",
+          "max_num": "max", "min_str": "min", "max_str": "max",
+          "sum_int": "sum", "no_sum": "sum"}
+_STATS_SCHEMA = pa.schema(
+    [("column", pa.string()), ("n_rows", pa.int64()), ("n_nulls", pa.int64()),
+     ("min_num", pa.float64()), ("max_num", pa.float64()),
+     ("min_str", pa.string()), ("max_str", pa.string()),
+     ("sum_int", pa.int64()), ("n_values", pa.int64())])
+
+
+def _by_column(tbl: pa.Table) -> pa.Table:
+    out = tbl.group_by("column").aggregate(list(_STATS.items()))
+    return out.rename_columns([n.rsplit("_", 1)[0] for n in out.column_names])
+
+
 def manifest_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """METADATA-ONLY aggregation: per-column COUNT / COUNT(col) / MIN /
     MAX / SUM computed purely from the manifest — zero block payloads
     touched. The Iceberg/Snowflake stats-only query path: at 10^12 turns
     a `SELECT count(*), min(ts), max(ts), sum(n_tokens)` costs one
-    manifest scan, not a table decode.
+    manifest scan, not a table decode. The scan runs on the driver, one
+    manifest file at a time, into a local DataFrame: no Spark job.
 
     Exactness: counts are exact (n_rows/n_nulls per chunk); SUM is exact
     for integer/boolean columns (per-chunk int64 sums, NULL when any
-    chunk lacked one — overflow, float column, or pre-upgrade manifest);
+    chunk lacked one — overflow, float column, or pre-upgrade manifest —
+    or when the total overflows int64);
     MIN/MAX come from the zone maps, exact for numerics up to 2^53
     (conservatively widened beyond — consumers needing certainty beyond
     that must decode), string bounds exact. Timestamp bounds are in
     ns-since-epoch. Whole-table only: stats of a FILTERED read must go
     through decode_table (pruned chunk supersets would overcount)."""
-    man = read_manifest(spark, out_dir)
-    # a column no manifest file has reads as NULL: a NULL sum and count
-    vsum = F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
-                  F.sum("vsum_int"))
-    return (man.groupBy("column")
-            .agg(F.sum("n_rows").alias("n_rows"),
-                 F.sum("n_nulls").alias("n_nulls"),
-                 F.min("vmin_num").alias("min_num"),
-                 F.max("vmax_num").alias("max_num"),
-                 F.min("vmin_str").alias("min_str"),
-                 F.max("vmax_str").alias("max_str"),
-                 vsum.alias("sum_int"))
-            .withColumn("n_values", F.col("n_rows") - F.coalesce(
-                F.col("n_nulls"), F.lit(0))))
+    files, schema = manifest_footers(out_dir)
+    parts = []
+    for pf in open_fragments(files):
+        # a column no manifest file has reads as NULL: a NULL sum and count
+        man = read_fragments([pf], schema, _STATS_READ).rename_columns(
+            _STATS_SCHEMA.names[:-1])
+        vsum = man.column("sum_int")
+        parts.append(_by_column(   # exact sums: int64 partials as decimals
+            man.drop_columns("sum_int")
+            .append_column("sum_int", vsum.cast(pa.decimal128(38, 0)))
+            .append_column("no_sum", pc.is_null(vsum).cast(pa.int64()))))
+    rows = _by_column(pa.concat_tables(parts)).to_pylist() if parts else []
+    for r in rows:
+        total = r["sum_int"]
+        r["sum_int"] = (int(total) if not r.pop("no_sum")
+                        and -2 ** 63 <= total < 2 ** 63 else None)
+        r["n_values"] = r["n_rows"] - (r["n_nulls"] or 0)
+    # from an Arrow table: a local relation, collected without a job
+    return spark.createDataFrame(pa.Table.from_pylist(rows, _STATS_SCHEMA))
 
 
 _AUDIT = ("partition_id int, chunk_id int, crc_expected long, "

@@ -57,7 +57,7 @@ def test_fully_resumed_prebucketed_runs_no_tasks(spark, tmp_path):
 
 def test_killed_group_reencodes_only_the_unfinished_file(spark, tmp_path):
     """A task killed partway through its packed group leaves its later
-    files without marker and block: only those re-encode, to the same
+    files without fragment and block: only those re-encode, to the same
     bytes, and every other block is untouched."""
     from supersonic_spark.pipeline import (EncodeConfig, decode_table,
                                            encode_table_prebucketed)
@@ -65,15 +65,15 @@ def test_killed_group_reencodes_only_the_unfinished_file(spark, tmp_path):
     out = str(tmp_path / "enc")
     cfg = EncodeConfig(chunk_rows=512)
     encode_table_prebucketed(spark, bdir, out, cfg)
-    blk, ckpt = os.path.join(out, "blocks"), os.path.join(out, "checkpoints")
+    blk, mdir = os.path.join(out, "blocks"), os.path.join(out, "manifest")
     before = {}
     for name in sorted(os.listdir(blk)):
         with open(os.path.join(blk, name), "rb") as f:
             before[name] = f.read()
     os.remove(os.path.join(blk, "part-00003.ssb"))
-    for m in os.listdir(ckpt):
+    for m in os.listdir(mdir):
         if m.startswith("part-00003."):
-            os.remove(os.path.join(ckpt, m))
+            os.remove(os.path.join(mdir, m))
 
     man = encode_table_prebucketed(spark, bdir, out, cfg)
     fresh = {r["partition_id"] for r in
@@ -122,6 +122,21 @@ def test_manifest_after_merge_holds_only_current_fragments(spark, tmp_path):
     assert _same_rows(decode_table(spark, out), expected)
 
 
+def _write_markers(out: str) -> list[str]:
+    """Give an encoded table the resume markers older encoders wrote:
+    each fragment's rows as JSON, checkpoints/part-NNNNN.<fp>.json.
+    Returns the marker names."""
+    from supersonic_spark.store.layout import checkpoints_dir, manifest_dir
+    os.makedirs(checkpoints_dir(out))
+    names = []
+    for frag in sorted(os.listdir(manifest_dir(out))):
+        names.append(frag.rsplit(".", 1)[0] + ".json")
+        rows = pq.read_table(os.path.join(manifest_dir(out), frag)).to_pylist()
+        with open(os.path.join(checkpoints_dir(out), names[-1]), "w") as f:
+            json.dump(rows, f)
+    return names
+
+
 def test_markers_without_fragments_rebuild_the_manifest(spark, tmp_path):
     """A table whose manifest an older encoder wrote as one Spark job
     (markers, no fragments) still resumes: the marker rows become the
@@ -132,6 +147,7 @@ def test_markers_without_fragments_rebuild_the_manifest(spark, tmp_path):
     out = str(tmp_path / "enc")
     cfg = EncodeConfig(chunk_rows=512)
     encode_table_prebucketed(spark, bdir, out, cfg)
+    assert len(_write_markers(out)) == 6
     mdir = os.path.join(out, "manifest")
     cols = ["partition_id", "chunk_id", "column", "crc32", "bytes_out"]
     want = sorted(tuple(r) for r in
@@ -148,6 +164,39 @@ def test_markers_without_fragments_rebuild_the_manifest(spark, tmp_path):
     assert sorted(tuple(r) for r in man.select(*cols).collect()) == want
     assert all(n.endswith(".parquet") and not n.startswith("part-00000-")
                for n in os.listdir(mdir))
+    assert not os.path.exists(os.path.join(out, "checkpoints"))
+    assert _same_rows(decode_table(spark, out), src)
+
+
+def test_table_with_fragments_and_markers_resumes_and_drops_markers(
+        spark, tmp_path):
+    """A table written when every partition had a fragment and a resume
+    marker resumes every partition from its fragment, keeps its block
+    bytes, and loses its checkpoints/ at the install."""
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table_prebucketed)
+    src, bdir = _bucketed(spark, tmp_path)
+    out = str(tmp_path / "enc")
+    cfg = EncodeConfig(chunk_rows=512)
+    encode_table_prebucketed(spark, bdir, out, cfg)
+    assert len(_write_markers(out)) == 6
+    blk = os.path.join(out, "blocks")
+    before = {}
+    for name in sorted(os.listdir(blk)):
+        with open(os.path.join(blk, name), "rb") as f:
+            before[name] = f.read()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("legacy-resume", "resume a table with markers")
+    man = encode_table_prebucketed(spark, bdir, out, cfg)
+    sc.setJobGroup("legacy-check", "checks")
+    assert _group_tasks(spark, "legacy-resume") == 0
+    assert man.count() > 0 and man.filter(~F.col("resumed")).count() == 0
+    assert not os.path.exists(os.path.join(out, "checkpoints"))
+    assert sorted(os.listdir(blk)) == sorted(before)
+    for name, data in before.items():
+        with open(os.path.join(blk, name), "rb") as f:
+            assert f.read() == data, name
     assert _same_rows(decode_table(spark, out), src)
 
 

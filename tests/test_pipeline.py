@@ -11,6 +11,7 @@ import tempfile
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from supersonic_spark.datagen import (generate_conv_batch,
@@ -95,9 +96,15 @@ def test_manifest_lineage(spark, small_df, tmp_path):
     total_in = sum(r.bytes_in for r in rows)
     total_out = sum(r.bytes_out for r in rows)
     assert total_out < total_in, "compressed must beat reference layout"
-    # lineage: every non-empty partition has a checkpoint marker
-    markers = os.listdir(os.path.join(out, "checkpoints"))
-    assert len(markers) == cfg.n_partitions
+    # lineage: every partition has one manifest fragment, and the
+    # fragments holding rows are those of the non-empty partitions
+    mdir = os.path.join(out, "manifest")
+    frags = sorted(os.listdir(mdir))
+    assert [int(f[5:10]) for f in frags] == list(range(cfg.n_partitions))
+    assert {int(f[5:10]) for f in frags
+            if pq.read_metadata(os.path.join(mdir, f)).num_rows} == {
+        r.partition_id for r in rows}
+    assert not os.path.exists(os.path.join(out, "checkpoints"))
 
 
 def test_checkpoint_resume(spark, small_df, tmp_path):
@@ -122,15 +129,15 @@ def test_checkpoint_resume(spark, small_df, tmp_path):
 
 
 def test_partial_resume_after_simulated_kill(spark, small_df, tmp_path):
-    """Delete some checkpoints (simulating a killed job) -> only those
-    partitions re-encode; result still bit-identical."""
+    """Delete some manifest fragments (simulating a killed job) -> only
+    those partitions re-encode; result still bit-identical."""
     out = str(tmp_path / "enc4")
     cfg = EncodeConfig(n_partitions=6, chunk_rows=4096,
                        salt_threshold=1000, salt_block=512)
     encode_table(spark, small_df, out, cfg, fingerprint="t4")
-    ckpts = sorted(os.listdir(os.path.join(out, "checkpoints")))
-    for victim in ckpts[:2]:
-        os.remove(os.path.join(out, "checkpoints", victim))
+    frags = sorted(os.listdir(os.path.join(out, "manifest")))
+    for victim in frags[:2]:
+        os.remove(os.path.join(out, "manifest", victim))
     man = encode_table(spark, small_df, out, cfg, fingerprint="t4")
     fresh = man.filter(~F.col("resumed")).select("partition_id").distinct().count()
     resumed = man.filter(F.col("resumed")).select("partition_id").distinct().count()

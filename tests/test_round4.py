@@ -205,7 +205,7 @@ def test_bloom_roundtrip_membership():
 def test_prebucketed_encode_roundtrip_and_resume(spark, tmp_path):
     """Shuffle-free encode over a bucketize_table layout: bit-identical
     round-trip vs the source, and a second run resumes from the per-file
-    checkpoint markers instead of re-encoding."""
+    manifest fragments instead of re-encoding."""
     from supersonic_spark.datagen import generate_transcripts
     from supersonic_spark.pipeline import (EncodeConfig, bucketize_table,
                                            decode_table,

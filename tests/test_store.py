@@ -133,9 +133,7 @@ def _live_files_agree(out: str) -> None:
     frags = os.listdir(manifest_dir(out))
     pids = {_block_pid(f) for f in frags}
     assert {_block_pid(b) for b in os.listdir(blocks_dir(out))} <= pids
-    if os.path.isdir(checkpoints_dir(out)):
-        assert ({m.rsplit(".", 1)[0] for m in os.listdir(checkpoints_dir(out))}
-                <= {f.rsplit(".", 1)[0] for f in frags})
+    assert not os.path.exists(checkpoints_dir(out))
 
 
 def test_reencode_with_fewer_partitions_decodes_only_the_new_rows(
@@ -188,6 +186,56 @@ def test_recompaction_with_larger_groups_decodes_each_row_once(
     n_src = sum(len(list_blocks(d)) for d in srcs)
     assert len(list_blocks(out)) == -(-n_src // 8)
     _live_files_agree(out)
+
+
+def test_install_current_commits_the_table(spark, tmp_path, monkeypatch):
+    """meta.json is written once per encode, by install_current: an
+    encode killed before it leaves no meta.json on a new table (decode
+    raises) and the previous meta.json byte for byte on an old one. No
+    encode writes a resume marker."""
+    import supersonic_spark.store.encode as encode
+    import supersonic_spark.store.layout as layout
+    from supersonic_spark.pipeline import (EncodeConfig, bucketize_table,
+                                           decode_table, encode_table,
+                                           encode_table_prebucketed)
+
+    def killed(*_a, **_k):
+        raise RuntimeError("killed before install")
+
+    def encode_killed(*args, **kwargs):
+        with monkeypatch.context() as m:
+            m.setattr(encode, "install_current", killed)
+            with pytest.raises(RuntimeError, match="killed"):
+                encode_table(*args, **kwargs)
+
+    out = str(tmp_path / "t")
+    cfg = EncodeConfig(n_partitions=4, **_CFG)
+    a = spark.createDataFrame(_rows("a", 1000), _SCHEMA)
+    encode_killed(spark, a, out, cfg, fingerprint="a")
+    assert layout.list_blocks(out)                 # the tasks ran
+    assert not os.path.exists(layout.meta_path(out))
+    assert not os.path.exists(layout.checkpoints_dir(out))
+    with pytest.raises(FileNotFoundError):
+        decode_table(spark, out)
+
+    writes = []
+    real_write_meta = layout._write_meta
+    monkeypatch.setattr(layout, "_write_meta",
+                        lambda *args: writes.append(args[0])
+                        or real_write_meta(*args))
+    encode_table(spark, a, out, cfg, fingerprint="a")
+    bdir, pb_out = str(tmp_path / "b"), str(tmp_path / "pb")
+    bucketize_table(spark, a, bdir, n_buckets=4, conv_key="cid")
+    encode_table_prebucketed(spark, bdir, pb_out, cfg)
+    assert writes == [out, pb_out]
+    with open(layout.meta_path(out), "rb") as f:
+        before = f.read()
+    encode_killed(spark, spark.createDataFrame(_rows("b", 500), _SCHEMA),
+                  out, cfg, fingerprint="b")
+    with open(layout.meta_path(out), "rb") as f:
+        assert f.read() == before
+    assert not os.path.exists(layout.checkpoints_dir(out))
+    assert not os.path.exists(layout.checkpoints_dir(pb_out))
 
 
 # --- one bucket-id rule -----------------------------------------------------
@@ -334,6 +382,49 @@ def test_validate_blocks_is_one_job_and_flags_a_missing_block_file(
     assert {r["partition_id"] for r in bad} == {pid}
     assert all(r["crc_actual"] is None and r["crc_expected"] is not None
                for r in bad)
+
+
+def test_manifest_stats_runs_no_job_and_matches_the_spark_aggregate(
+        spark, tmp_path):
+    """manifest_stats folds the manifest on the driver: collecting it
+    runs no Spark job, and it equals the Spark aggregate over the same
+    manifest (NULL sum when a chunk lacks one, n_values from n_nulls)."""
+    from supersonic_spark.pipeline import (EncodeConfig, encode_table,
+                                           manifest_stats)
+    from supersonic_spark.store.layout import read_manifest
+    base = dt.datetime(2024, 1, 1)
+    rows = [(f"c{i % 7}", i, None if i % 4 else f"t{i % 11}",
+             None if i < 300 else (i * 37) % 1000 - 500, i / 7.0,
+             i % 5 == 0, base + dt.timedelta(seconds=i))
+            for i in range(1500)]
+    schema = ("cid string, i int, text string, v long, f double, "
+              "b boolean, ts timestamp")
+    out = str(tmp_path / "t")
+    encode_table(spark, spark.createDataFrame(rows, schema), out,
+                 EncodeConfig(n_partitions=3, **_CFG))
+    stats, jobs, _ = _run_counted(
+        spark, lambda: manifest_stats(spark, out).collect())
+    assert jobs == 0
+    man = read_manifest(spark, out)
+    vsum = F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
+                  F.sum("vsum_int"))
+    want = (man.groupBy("column")
+            .agg(F.sum("n_rows").alias("n_rows"),
+                 F.sum("n_nulls").alias("n_nulls"),
+                 F.min("vmin_num").alias("min_num"),
+                 F.max("vmax_num").alias("max_num"),
+                 F.min("vmin_str").alias("min_str"),
+                 F.max("vmax_str").alias("max_str"),
+                 vsum.alias("sum_int"))
+            .withColumn("n_values", F.col("n_rows") - F.coalesce(
+                F.col("n_nulls"), F.lit(0))))
+    assert manifest_stats(spark, out).schema == want.schema
+    assert sorted(map(tuple, stats)) == sorted(map(tuple, want.collect()))
+    by_col = {r["column"]: r for r in stats}
+    assert len(by_col) == 7
+    assert by_col["v"]["sum_int"] == sum(r[3] for r in rows if r[3])
+    assert by_col["v"]["n_values"] == 1200
+    assert by_col["f"]["sum_int"] is None
 
 
 def test_manifest_table_reads_every_manifest_shape(spark, tmp_path):
