@@ -1,7 +1,11 @@
 """SparkSession factory tuned for the encode pipeline.
 
-Single place for configs so bench runs at two parallelism levels are
-identical apart from core count (scaling-efficiency evidence).
+spark_conf is the one definition of every Spark setting: get_spark and
+tools/scaling_bench.py's spark-submit runs both use it, so runs at two
+parallelism levels differ only in core count (scaling evidence). Only
+this module reads the environment. On a cluster reading TB-scale inputs,
+SPARK_GRAFT_EXTRA_CONF="spark.sql.files.maxPartitionBytes=512m" (512m-1g)
+keeps map tasks large and the shuffle block count low (guide §2.2/§6).
 """
 
 from __future__ import annotations
@@ -53,49 +57,28 @@ def worker_channel_conf(*bases: str) -> dict[str, str]:
     return {}
 
 
-def get_spark(cores: int | None = None,
-              shuffle_partitions: int | None = None,
-              app_name: str = "supersonic_spark",
-              arrow_batch_rows: int = 65536) -> SparkSession:
-    """local[cores] session with AQE + Arrow enabled.
-
-    arrow_batch_rows is the mapInArrow batch cap — the analogue of the
-    reference's 8192-row file chunks / 1024-row cursor batches
-    (file_io.cc:71, cursor.h:133), sized larger because Arrow transfer
-    amortizes better at 64k.
-
-    A call that builds a new SparkContext also gives it a private
-    directory for the worker channel's Unix sockets
-    (worker_channel_conf); getOrCreate reuses a running one as it is.
-    """
-    # local-mode Python workers inherit the driver env: pin per-worker BLAS
-    # threads to 1 so N workers don't run N*cpu_count() threads (see runtime.py)
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
-                "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 8)
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+def spark_conf(cores: int) -> dict[str, str]:
+    """Every Spark setting of a local[cores] session but the master and
+    the worker channel; SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" is applied
+    last, so deployment-specific tuning overrides any key."""
+    conf = {
+        "spark.app.name": "supersonic_spark",
+        "spark.sql.shuffle.partitions": str(max(2 * cores, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # mapInArrow batch cap — the analogue of the reference's 8192-row
+        # file chunks / 1024-row cursor batches (file_io.cc:71,
+        # cursor.h:133), sized larger because Arrow transfer amortizes
+        # better at 64k
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
         # Scan split size (guide §6): the local testdata is a handful of
         # single-digit-row-group files, so the 128m default caps scan
         # parallelism at 1-2 tasks on a 32-core box (131 MB lineitem = 2
         # tasks; a 349 MB many-small-file dir ≈ 7 tasks after the 4m
         # open-cost packing). 16m splits every available row group /
-        # file apart. Scale-dependent: on a real cluster reading TB-scale
-        # inputs, set SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g so map
-        # tasks stay large and the shuffle block count stays low
-        # (guide §2.2/§6).
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        # file apart (cluster scale: see the module docstring).
+        "spark.sql.files.maxPartitionBytes": "16m",
         # Join strategy (guide §3.1): keep Spark's 10m broadcast default
         # (measured: raising it to 64m broadcast-built a 1.5M-row orders
         # relation serially — 1.51 s vs 0.83 s for the shuffled hash
@@ -104,22 +87,36 @@ def get_spark(cores: int | None = None,
         # both sort passes. AQE additionally rewrites SMJ->SHJ when
         # every post-shuffle partition fits under the local-map
         # threshold.
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "10m"))
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "128m"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
-    if SparkContext._active_spark_context is None:
-        builder = builder.config(map=worker_channel_conf())
-    # escape hatch for deployment-specific tuning without code edits:
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overrides any of the above
+        "spark.sql.autoBroadcastJoinThreshold": "10m",
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "128m",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+    }
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in filter(None, extra.split(";")):
         k, _, v = pair.partition("=")
         if k and v:
-            builder = builder.config(k.strip(), v.strip())
-    return builder.getOrCreate()
+            conf[k.strip()] = v.strip()
+    return conf
+
+
+def get_spark(cores: int | None = None) -> SparkSession:
+    """local[cores] session (default SPARK_GRAFT_CPUS, else the CPU
+    count) with spark_conf(cores). A call that builds a new SparkContext
+    also gives it a private directory for the worker channel's Unix
+    sockets (worker_channel_conf, which SPARK_GRAFT_EXTRA_CONF overrides
+    too); getOrCreate reuses a running one as it is."""
+    # local-mode Python workers inherit the driver env: pin per-worker BLAS
+    # threads to 1 so N workers don't run N*cpu_count() threads (see runtime.py)
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
+                "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
+        os.environ.setdefault(var, "1")
+    if cores is None:
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    conf = spark_conf(cores)
+    if SparkContext._active_spark_context is None:
+        conf = {**worker_channel_conf(), **conf}
+    return (SparkSession.builder.master(f"local[{cores}]")
+            .config(map=conf).getOrCreate())

@@ -25,7 +25,7 @@ import queue
 import threading
 import time
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 import pyarrow as pa
@@ -35,7 +35,6 @@ from pyspark.sql.types import StructType
 
 from ..codecs import (block_codec_report, block_column_sizes, encode_block,
                       reference_column_size)
-from ..codecs.framing import validate_entropy
 from ..runtime import pin_worker_threads, run_tasks
 from ..selector import choose_codecs
 from .layout import (_bucket_layout, _fragment_name, _partition_files,
@@ -44,6 +43,13 @@ from .layout import (_bucket_layout, _fragment_name, _partition_files,
                      read_manifest)
 from .stats import (STATS_VERSION, _BLOOM_BITS, _BLOOM_HASHES, _bloom_build,
                     _zone_stats)
+
+
+# outer compression stage over codec payloads, kept per frame only where
+# it shrinks >=10%; optional in the codecs, always lz4 in the encode
+# pipeline: measured ~16% fewer bytes/turn at zero throughput cost (the
+# saved block I/O pays for it), where zstd trades ~5% throughput for ~17.5%
+_ENTROPY = "lz4"
 
 
 @dataclass
@@ -55,13 +61,6 @@ class EncodeConfig:
     sort_keys: tuple[str, ...] = ("conv_id", "turn_idx")
     conv_key: str = "conv_id"
     order_key: str = "turn_idx"
-    codec_overrides: dict[str, str] = field(default_factory=dict)
-    # general-compression outer stage over codec payloads (Parquet-style
-    # encoding+compression layering), kept per frame only where it shrinks
-    # >=10%. Default lz4: measured ~16% fewer bytes/turn at zero throughput
-    # cost (the saved block I/O pays for the compressor); "zstd" trades ~5%
-    # throughput for ~17.5%; None = lightweight codecs only.
-    entropy: str | None = "lz4"
     # bloom-filter chunk stats for point lookups on NON-sort columns.
     # Zone maps only prune on sorted/clustered columns (min/max of an
     # unsorted column spans everything); a small per-(chunk, column)
@@ -71,9 +70,6 @@ class EncodeConfig:
     # manifest file's blobs only for the chunks its zone maps kept.
     bloom_cols: tuple[str, ...] = ()
 
-    def __post_init__(self) -> None:
-        validate_entropy(self.entropy)  # fail at config time, not in tasks
-
     def config_hash(self, fingerprint: str) -> str:
         blob = json.dumps({
             # retired knobs, pinned to their last defaults so the hash
@@ -81,11 +77,11 @@ class EncodeConfig:
             "sort_in_kernel": False,
             "fixed_width_shuffle_key": True,
             "skew_precount": False,
+            "codec_overrides": [],
+            "entropy": "lz4",
             "n_partitions": self.n_partitions, "chunk_rows": self.chunk_rows,
             "salt_threshold": self.salt_threshold, "salt_block": self.salt_block,
             "sort_keys": list(self.sort_keys),
-            "codec_overrides": sorted(self.codec_overrides.items()),
-            "entropy": self.entropy,
             "bloom": [list(self.bloom_cols), 16384, 5],  # retired: bits, k
             # resumed fragments carry manifest rows (incl. bloom blobs);
             # a stats-contract bump must invalidate them or a resume
@@ -158,7 +154,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
     pre-bucketed path (encode_table_prebucketed: pid = bucket-file
     index, sort=True: the whole file is sorted here by cfg.sort_keys,
     then chunked by the same loop)."""
-    chunk_rows, entropy = cfg.chunk_rows, cfg.entropy
+    chunk_rows = cfg.chunk_rows
     blk_path, fragment = _partition_files(out_dir, pid, cfg_hash)
     if _resumed(fragment):
         return False
@@ -182,12 +178,11 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
             for off in range(0, tbl.num_rows, chunk_rows):
                 chunk = tbl.slice(off, chunk_rows)
                 t0 = time.perf_counter()
-                codecs = choose_codecs(
-                    chunk, {**sticky, **cfg.codec_overrides}, entropy=entropy)
+                codecs = choose_codecs(chunk, sticky, entropy=_ENTROPY)
                 for name, codec in codecs.items():
                     if codec not in _DATA_DEPENDENT:
                         sticky[name] = codec
-                buf = encode_block(chunk, codecs, entropy=entropy)
+                buf = encode_block(chunk, codecs, entropy=_ENTROPY)
                 dt = time.perf_counter() - t0
                 out.write(buf)
                 crc = zlib.crc32(buf) & 0xFFFFFFFF
@@ -488,9 +483,12 @@ def encode_table_zordered(spark: SparkSession, df: DataFrame, out_dir: str,
                   .repartitionByRange(cfg.n_partitions, F.col("_z"))
                   .sortWithinPartitions("_z")
                   .drop("_z"))
+    # never resumed: the range cut comes from a sample seeded by the RDD
+    # id, so a token of this call's own keeps a killed call's cut out
     return _encode_arranged(
         spark, df, arranged, out_dir, cfg,
-        fingerprint=f"{fingerprint}|zorder:{','.join(zorder_keys)}",
+        fingerprint=(f"{fingerprint}|zorder:{','.join(zorder_keys)}"
+                     f"|call:{os.urandom(8).hex()}"),
         extra_meta={"zorder_keys": list(zorder_keys)})
 
 

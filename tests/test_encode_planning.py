@@ -290,3 +290,19 @@ def test_default_config_hash_is_pinned():
     tables encoded before stay resumable."""
     from supersonic_spark.pipeline import EncodeConfig
     assert EncodeConfig().config_hash("fp") == "9b570d3af25a"
+
+
+@pytest.mark.parametrize("kwargs, plain, bench", [
+    ({}, "28e1b78aae93", "d17da40990d4"),
+    ({"n_partitions": 4}, "bbe9afe7239d", "004fedf6a6da"),
+    ({"n_partitions": 4, "chunk_rows": 8192, "bloom_cols": ("conv_id",)},
+     "d92ccf3fdf00", "5d30dd9305da"),
+])
+def test_config_hash_keeps_the_values_of_tables_written_before(kwargs, plain,
+                                                               bench):
+    """codec_overrides and entropy left EncodeConfig as the literals
+    config_hash pins, so fragment names (and resume) stay valid."""
+    from supersonic_spark.pipeline import EncodeConfig
+    cfg = EncodeConfig(**kwargs)
+    assert (cfg.config_hash(""), cfg.config_hash("bench-0.1")) \
+        == (plain, bench)

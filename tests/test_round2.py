@@ -115,14 +115,6 @@ def test_framing_v2_and_entropy_validation():
         C.decode_column(bytes(frame))
 
 
-def test_encode_config_rejects_bad_entropy():
-    from supersonic_spark.pipeline import EncodeConfig
-    with pytest.raises(ValueError):
-        EncodeConfig(entropy="snappy")
-    EncodeConfig(entropy=None)
-    EncodeConfig(entropy="zstd")
-
-
 def test_float_rle_selector_reachable():
     from supersonic_spark.selector import choose_codec, column_stats
     import supersonic_spark.codecs as C

@@ -1,12 +1,14 @@
-"""supersonic_spark.runtime and the worker channel of session.get_spark:
-pin_worker_threads() stamps the process's zip importers, so
-importlib.invalidate_caches() re-reads a zip's directory only when the
-archive changed since that importer's last read (PySpark's worker calls
-it at the start of every task); Python workers talk to the JVM over Unix
-sockets in a private directory."""
+"""supersonic_spark.runtime and session: pin_worker_threads() stamps the
+process's zip importers, so importlib.invalidate_caches() re-reads a
+zip's directory only when the archive changed since that importer's last
+read (PySpark's worker calls it at the start of every task); Python
+workers talk to the JVM over Unix sockets in a private directory; every
+Spark setting comes from session.spark_conf, and only session.py reads
+the environment."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import shutil
@@ -18,8 +20,12 @@ import zipfile
 import zipimport
 
 import pyarrow as pa
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
 
 from supersonic_spark import runtime, session
+
+PKG = os.path.dirname(os.path.abspath(session.__file__))
 
 
 def test_stamped_zip_importer_rereads_only_a_changed_archive(tmp_path,
@@ -167,8 +173,7 @@ def test_worker_sockets_live_in_a_private_directory(spark, monkeypatch):
     made = []
     monkeypatch.setattr(session, "worker_channel_conf",
                         lambda *bases: made.append(bases) or {})
-    assert session.get_spark(cores=4, shuffle_partitions=8) \
-        .sparkContext is spark.sparkContext
+    assert session.get_spark(cores=4).sparkContext is spark.sparkContext
     assert made == []
     assert spark.range(4, numPartitions=2).mapInArrow(
         lambda batches: batches, "id long").count() == 4
@@ -204,3 +209,89 @@ def test_socket_dir_too_long_for_spark_keeps_tcp(tmp_path, caplog):
     finally:
         shutil.rmtree(short_base)
     assert list(long_base.iterdir()) == []
+
+
+# the settings get_spark built before spark_conf defined them, at cores=4
+# with no SPARK_DRIVER_MEMORY or SPARK_GRAFT_EXTRA_CONF
+_SETTINGS_AT_4_CORES = {
+    "spark.app.name": "supersonic_spark",
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    "spark.sql.files.maxPartitionBytes": "16m",
+    "spark.sql.autoBroadcastJoinThreshold": "10m",
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "128m",
+    "spark.driver.memory": "16g",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.ui.enabled": "false",
+}
+_CHANNEL = {"spark.python.unix.domain.socket.enabled": "true",
+            "spark.python.unix.domain.socket.dir": "/nonexistent/uds"}
+
+
+def _new_context_options(monkeypatch, cores: int) -> dict:
+    """No JVM: what get_spark would hand a new SparkContext."""
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    monkeypatch.setattr(session, "worker_channel_conf",
+                        lambda *bases: dict(_CHANNEL))
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: dict(self._options))
+    return session.get_spark(cores=cores)
+
+
+def test_spark_conf_keeps_every_get_spark_setting(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    assert session.spark_conf(4) == _SETTINGS_AT_4_CORES
+    assert session.spark_conf(16)["spark.sql.shuffle.partitions"] == "32"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "1g")
+    assert session.spark_conf(4)["spark.driver.memory"] == "1g"
+    assert _new_context_options(monkeypatch, 4) == {
+        "spark.master": "local[4]", **_CHANNEL, **session.spark_conf(4)}
+
+
+def test_extra_conf_overrides_every_setting_and_the_worker_channel(
+        monkeypatch):
+    keys = [*_SETTINGS_AT_4_CORES, *_CHANNEL]
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", ";".join(
+        f" {k} = v{i}" for i, k in enumerate(keys)) + ";;no-value=")
+    want = {k: f"v{i}" for i, k in enumerate(keys)}
+    assert session.spark_conf(4) == want
+    assert _new_context_options(monkeypatch, 4) == {
+        "spark.master": "local[4]", **want}
+
+
+def _env_reads(tree) -> list[int]:
+    """Lines that read the environment: os.environ.get(...),
+    os.getenv(...) and os.environ[...] loads (setdefault writes pass)."""
+    def environ(n):
+        return ((isinstance(n, ast.Attribute) and n.attr == "environ")
+                or (isinstance(n, ast.Name) and n.id == "environ"))
+    return [n.lineno for n in ast.walk(tree)
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "get" and environ(n.func.value))
+            or (isinstance(n, ast.Attribute) and n.attr == "getenv")
+            or (isinstance(n, ast.Name) and n.id == "getenv")
+            or (isinstance(n, ast.Subscript) and environ(n.value)
+                and isinstance(n.ctx, ast.Load))]
+
+
+def test_only_session_reads_the_environment():
+    """A new knob goes through session.spark_conf, not an environment
+    variable read somewhere in the package."""
+    hits, seen = [], 0
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            if not name.endswith(".py"):
+                continue
+            lines = _env_reads(ast.parse(open(path).read()))
+            if path == session.__file__:
+                seen = len(lines)
+            else:
+                hits += [(path, line) for line in lines]
+    assert hits == []
+    assert seen == 3     # SPARK_GRAFT_CPUS, SPARK_DRIVER_MEMORY, EXTRA_CONF

@@ -238,6 +238,37 @@ def test_install_current_commits_the_table(spark, tmp_path, monkeypatch):
     assert not os.path.exists(layout.checkpoints_dir(pb_out))
 
 
+def test_rerun_of_a_killed_zorder_encode_decodes_the_source(spark, tmp_path):
+    """repartitionByRange cuts from a sample Spark seeds with the RDD id,
+    so a re-run after other jobs cuts differently: a z-order encode
+    never resumes, and the re-run's install drops the killed call's
+    partitions instead of mixing two cuts."""
+    from supersonic_spark.datagen import generate_transcripts
+    from supersonic_spark.pipeline import (EncodeConfig, decode_table,
+                                           encode_table_zordered)
+    from supersonic_spark.store.layout import (_block_pid, blocks_dir,
+                                               manifest_dir)
+    src = generate_transcripts(spark, n_convs=1500, seed=11)
+    out = str(tmp_path / "z")
+    cfg = EncodeConfig(n_partitions=4, chunk_rows=512)
+    keys = ("turn_idx", "ts")
+    encode_table_zordered(spark, src, out, cfg, zorder_keys=keys)
+    for pid in (1, 2):      # a kill before these partitions committed
+        for d in (blocks_dir(out), manifest_dir(out)):
+            for f in os.listdir(d):
+                if _block_pid(f) == pid:
+                    os.remove(os.path.join(d, f))
+    for n in range(3, 8):
+        spark.range(n).count()
+    man = encode_table_zordered(spark, src, out, cfg, zorder_keys=keys)
+    cols = ["conv_id", "turn_idx"]
+    got = decode_table(spark, out).select(*cols)
+    assert (got.count(), got.exceptAll(src.select(*cols)).count()) \
+        == (src.count(), 0)
+    assert man.filter(F.col("resumed")).count() == 0
+    _live_files_agree(out)
+
+
 # --- one bucket-id rule -----------------------------------------------------
 
 def test_upsert_into_an_empty_bucket_reencodes_one_file(spark, tmp_path):

@@ -2,7 +2,7 @@
 
 Run:
   spark-submit --master local[N] --py-files supersonic_spark.zip \
-      tools/encode_job.py --input DIR --out DIR [--resume] [--fingerprint F]
+      tools/encode_job.py --input DIR --out DIR [--fingerprint F]
 
 Prints one JSON line with wall-clock, turns/sec, bytes in/out.
 This is the job the scaling-efficiency evidence runs at two parallelism
@@ -40,12 +40,9 @@ def main():
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession, functions as F
-    # 64k-row Arrow transfer batches (same as session.get_spark): the
-    # spark-submit default of 10k quadruples JVM<->Python IPC round-trips
-    # in the encode kernel's hot path
-    spark = (SparkSession.builder
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
-             .getOrCreate())
+    # every setting comes from spark-submit's --conf flags, which
+    # tools/scaling_bench.py takes from session.spark_conf
+    spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 

@@ -25,7 +25,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from supersonic_spark.runtime import external_busy_cores  # noqa: E402
-from supersonic_spark.session import worker_channel_conf  # noqa: E402
+from supersonic_spark.session import (spark_conf,  # noqa: E402
+                                      worker_channel_conf)
 
 
 def build_zip(dest: str) -> str:
@@ -70,19 +71,16 @@ def run_once(zpath: str, input_dir: str, cores: int, run_id: int,
     taskset pinning is what makes single-box cluster-size emulation honest:
     an unpinned local[2] JVM leaks GC/shuffle/IO threads onto free cores
     (~2.7 effective CPUs measured), deflating apparent scaling efficiency.
-    The worker channel is get_spark's: Unix sockets in a private directory
-    (removed when this process exits).
+    The settings are get_spark's: spark_conf(cores), and its worker
+    channel on Unix sockets in a private directory (removed when this
+    process exits).
     """
     out = tempfile.mkdtemp(prefix=f"ssenc_scale_{cores}_")
-    channel = worker_channel_conf()
+    conf = {**worker_channel_conf(), **spark_conf(cores)}
     cmd = [
         "taskset", "-c", f"0-{cores - 1}",
         "spark-submit", "--master", f"local[{cores}]",
-        "--conf", f"spark.sql.shuffle.partitions={2*cores}",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.driver.memory=16g",
-        "--conf", "spark.ui.enabled=false",
-        *(a for k, v in channel.items() for a in ("--conf", f"{k}={v}")),
+        *(a for k, v in conf.items() for a in ("--conf", f"{k}={v}")),
         "--py-files", zpath,
         os.path.join(REPO, "tools", "encode_job.py"),
         "--input", input_dir, "--out", out,
@@ -156,6 +154,9 @@ def main():
         "median_pair_efficiency": round(statistics.median(pair_effs), 3),
         "bytes_per_turn": results[args.high][0]["bytes_per_turn"],
         "compression_ratio": results[args.high][0]["compression_ratio"],
+        # what each level ran with (the socket directory, new per run, aside)
+        "conf": {str(c): {"spark.master": f"local[{c}]", **spark_conf(c)}
+                 for c in (args.low, args.high)},
     }
     # min-time estimator: interference (hypervisor steal / neighbors) only
     # ever slows a run down, so best-of-N per level is the cleanest
